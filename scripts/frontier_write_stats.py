@@ -58,14 +58,15 @@ def _count(table, round_, path):
     elif table.startswith("hosts"):
         hosts_bytes[round_] = hosts_bytes.get(round_, 0) + du(path)
 
-def write_round(self, df, table, round_, partition_by=None):
-    p = _orig_round(self, df, table, round_, partition_by)
+def write_round(self, df, table, round_):
+    p = _orig_round(self, df, table, round_)
     _count(table, round_, p)
     return p
 
-def write_gen(self, df, table, round_, partition_by=None):
-    p = _orig_gen(self, df, table, round_, partition_by)
-    _count(table, round_, p)
+def write_gen(self, df, table, round_):
+    p = _orig_gen(self, df, table, round_)
+    if p is not None:
+        _count(table, round_, p)
     return p
 
 SnapshotStore.write_round = write_round

@@ -149,7 +149,8 @@ def main() -> None:
         .withColumn("parent_depth", F.lit(0))
         .limit(7)
     )
-    exact_plan = _fmt(eng._exact_new(need_exact, -1, [0, 3]))
+    seen_all = eng.store.read_log(spark, "url_seen", -1)
+    exact_plan = _fmt(eng._exact_new(need_exact, seen_all, [0, 3]))
     sections.append(
         (
             "crawl_seen_exact_tier",

@@ -57,9 +57,11 @@ def main() -> None:
     recorded: list[tuple[int, list[int]]] = []
     orig = CrawlEngine._exact_new
 
-    def recording(self, need_exact, prev, exact_buckets):
-        recorded.append((prev, list(exact_buckets)))
-        return orig(self, need_exact, prev, exact_buckets)
+    def recording(self, need_exact, seen_all, exact_buckets):
+        # rounds run 0, 1, ... in order: the k-th call reads url_seen as of
+        # committed round k - 1
+        recorded.append((len(recorded) - 1, list(exact_buckets)))
+        return orig(self, need_exact, seen_all, exact_buckets)
 
     CrawlEngine._exact_new = recording
     try:

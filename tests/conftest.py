@@ -7,6 +7,7 @@ the bench harness (bench.py) exercises the larger scales.
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -27,6 +28,9 @@ TEST_CFG = CrawlConfig(
 
 @pytest.fixture(scope="session")
 def spark():
+    # test inputs are small: a bounded driver heap keeps this JVM's footprint
+    # down while the parallelism and spark-submit tests start JVMs of their own
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     s = get_spark(
         app_name="tcs-tests",
         cores=8,

@@ -38,6 +38,12 @@ VARIANTS = {
         TEST_CFG, frontier_band_rounds=1, compact_every=2, max_log_gens=2,
         max_rounds=7,
     ),
+    # the benchmark's compaction shape: a minor merge, then a major merge
+    # at every later compaction (one generation cap), each written straight
+    # from the prior slice and the round's own rows
+    "major_every_compaction": dataclasses.replace(
+        TEST_CFG, compact_every=2, max_log_gens=1, max_rounds=6,
+    ),
 }
 
 

@@ -10,7 +10,10 @@
 from __future__ import annotations
 
 import collections
+import dataclasses
 import os
+
+import pytest
 
 from tests.conftest import TEST_CFG
 from twitter_crawler_spark.crawl.engine import CrawlEngine
@@ -167,15 +170,122 @@ def test_read_rounds_skips_schema_less_empty_dirs(spark, tmp_path_factory):
     from twitter_crawler_spark.crawl.state import SnapshotStore
 
     st = SnapshotStore(str(tmp_path_factory.mktemp("state") / "s"))
-    empty = spark.range(0).selectExpr("id as url", "id % 4 as bucket")
-    st.write_round(empty, "docs", 3, ("bucket",))
-    st.write_round(empty, "docs", 4, ("bucket",))
+    empty = _docs_rows(spark, 0)
+    st.write_round(empty, "docs", 3)
+    st.write_round(empty, "docs", 4)
     assert st.read_rounds(spark, "docs", 4) is None
     assert st.read_log(spark, "docs", 4) is None
     # a mixed tail (one quiet round, one data-bearing) still unions fine
-    st.write_round(
-        spark.range(2).selectExpr("id as url", "id % 4 as bucket"),
-        "docs", 5, ("bucket",),
-    )
+    st.write_round(_docs_rows(spark, 2), "docs", 5)
     got = st.read_rounds(spark, "docs", 5)
     assert got is not None and got.count() == 2
+
+
+def _docs_rows(spark, n: int):
+    """``n`` rows in the declared ``docs`` schema."""
+    return spark.range(n).selectExpr(
+        "cast(id as string) as url", "0 as round", "'t' as text",
+        "'h' as text_sha256", "cast(id % 4 as int) as bucket",
+    )
+
+
+# the benchmark's merge shape: a minor merge at round 1, a major one at
+# round 3 (max_log_gens=1), ordinary rounds 0, 2 and 4
+MERGE_CFG = dataclasses.replace(TEST_CFG, compact_every=2, max_log_gens=1)
+MERGE_ROUNDS = 5
+COMPACTED = ("url_seen", "docs", "edges")
+
+
+@pytest.fixture(scope="module")
+def merge_oneshot(spark, fixture_dir, tmp_path_factory):
+    state = str(tmp_path_factory.mktemp("merge") / "oneshot")
+    eng = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    eng.run(max_rounds=MERGE_ROUNDS)
+    return eng
+
+
+def test_uncommitted_merge_round_resumes(spark, fixture_dir, tmp_path_factory,
+                                         merge_oneshot):
+    """A merge round writes each compacted log's generation straight from
+    the prior slice ∪ its own rows: no ``r=<r>`` dir for url_seen/docs/edges.
+    If it dies before its commit, its ``gen=<r>`` dirs are crash debris that
+    the resume discards, and the resumed crawl equals the one-shot crawl."""
+    state = str(tmp_path_factory.mktemp("merge") / "crashed")
+    CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=1)
+
+    eng = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    commit = eng.store.commit
+
+    def commit_unless_merge(round_, info=None, state=None):
+        if round_ == 1:
+            raise RuntimeError("crash before the merge round's commit")
+        commit(round_, info, state)
+
+    eng.store.commit = commit_unless_merge
+    with pytest.raises(RuntimeError, match="merge round"):
+        eng.run(max_rounds=2)
+    assert eng.store.committed_round() == 0
+    for tbl in COMPACTED:
+        dirs = os.listdir(os.path.join(state, tbl))
+        assert "gen=1" in dirs and "r=1" not in dirs, (tbl, sorted(dirs))
+        assert eng.store.log_gens(tbl) == []
+
+    resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    removed = resumed.store.clean_uncommitted()
+    assert {f"{tbl}/gen=1" for tbl in COMPACTED} <= set(removed)
+    for tbl in COMPACTED:
+        assert "gen=1" not in os.listdir(os.path.join(state, tbl))
+    resumed.run(max_rounds=MERGE_ROUNDS)
+
+    one = merge_oneshot
+    assert _trace(resumed) == _trace(one)
+    for view in ("url_seen", "edges", "docs"):
+        got = sorted(tuple(r) for r in getattr(resumed, view)().collect())
+        want = sorted(tuple(r) for r in getattr(one, view)().collect())
+        assert got == want, view
+    # the major merge at round 3 left one generation per compacted log
+    for tbl in COMPACTED:
+        assert resumed.store.log_gens(tbl) == one.store.log_gens(tbl) == [3]
+
+
+def test_state_reads_launch_no_jobs(spark, merge_oneshot):
+    """Every state read passes its table's declared schema, so building the
+    round's views of a committed snapshot — generations, tail rounds,
+    sidecar logs and both bases — launches no Spark job (a schema-less
+    parquet read runs one footer-inference job per call)."""
+    eng = merge_oneshot
+    st, prev = eng.store, eng.store.committed_round()
+    assert st.log_gens("url_seen") and st._round_dirs("frontier_ins"), \
+        "the snapshot holds generations and sidecar logs"
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job() -> int:
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    j0 = last_job()
+    for tbl in ("url_seen", "docs", "edges", "crawl_log", "round_metrics"):
+        assert st.read_log(spark, tbl, prev) is not None
+    for tbl in ("frontier_ins", "frontier_del", "frontier_gains",
+                "hosts_touch", "hosts_new"):
+        assert st.read_rounds(spark, tbl, prev, drop_r=False) is not None
+    eng._frontier_live(prev)
+    eng._frontier_live(prev, due_band=0)
+    eng._hosts_live(prev)
+    eng._pages()
+    assert last_job() == j0
+
+
+def test_empty_compacted_log_registers_no_generation(spark, fixture_dir,
+                                                     tmp_path_factory):
+    """A language filter that matches no page leaves docs and edges empty:
+    the merge round's generation write for them produces no data files, so
+    no generation is listed and no gen dir is left behind — while url_seen
+    (the seeds) still folds into its generation."""
+    cfg = dataclasses.replace(TEST_CFG, lang_filter="zz", compact_every=1)
+    state = str(tmp_path_factory.mktemp("merge") / "empty")
+    eng = CrawlEngine(spark, fixture_dir, state, cfg)
+    eng.run(max_rounds=1)
+    assert eng.store.state("log_gens") == {"url_seen": [0]}
+    for tbl in ("docs", "edges"):
+        troot = os.path.join(state, tbl)
+        assert not os.path.isdir(troot) or not os.listdir(troot), os.listdir(troot)

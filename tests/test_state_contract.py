@@ -1,0 +1,77 @@
+"""The snapshot store's declared-schema contract (crawl/state.py,
+schemas.STORE_TABLES): a write whose schema drifts from the declaration
+raises before any file is written, a dir whose layout lacks a declared
+partition column raises instead of reading that column back as nulls, and
+a generation write that produced no data files leaves nothing behind."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from twitter_crawler_spark.crawl.state import SnapshotStore
+
+
+def _evictions(spark, round_expr: str = "cast(1 as int)"):
+    return spark.range(3).selectExpr("cast(id as string) as url", f"{round_expr} as round")
+
+
+def test_write_schema_drift_raises(spark, tmp_path):
+    st = SnapshotStore(str(tmp_path / "s"))
+    st.write_round(_evictions(spark), "evictions", 1)
+    assert st.read_rounds(spark, "evictions", 1).count() == 3
+    drifted = {
+        "wrong type": _evictions(spark, "id"),
+        "missing column": spark.range(3).selectExpr("cast(id as string) as url"),
+        "extra column": _evictions(spark).selectExpr("*", "1 as extra"),
+        "reordered": _evictions(spark).select("round", "url"),
+    }
+    for why, df in drifted.items():
+        with pytest.raises(ValueError, match="declared"):
+            st.write_round(df, "evictions", 2)
+        assert not os.path.exists(st.round_dir("evictions", 2)), why
+    with pytest.raises(ValueError, match="declared"):
+        st.write_gen(_evictions(spark, "id"), "evictions", 2)
+    # a partition column is declared with its type too
+    seen = spark.range(4).selectExpr(
+        "id as url_hash", "cast(id as string) as url", "0 as first_round",
+        "id % 2 as bucket",
+    )
+    with pytest.raises(ValueError, match="declared"):
+        st.write_round(seen, "url_seen", 0)
+    st.write_round(seen.withColumn("bucket", seen.bucket.cast("int")), "url_seen", 0)
+    assert st.read_log(spark, "url_seen", 0).count() == 4
+
+
+def test_legacy_layout_raises(spark, tmp_path):
+    """An ``edges`` round dir from before the src_bucket layout: its files
+    sit at the top of the round dir, so a declared-schema read would return
+    ``src_bucket`` as nulls. Every read path refuses it instead."""
+    st = SnapshotStore(str(tmp_path / "s"))
+    legacy = spark.range(3).selectExpr(
+        "cast(id as string) as src_url", "'d' as dst_url", "'a' as anchor",
+        "0 as round", "0L as ts", "cast(id % 2 as int) as src_bucket",
+    )
+    legacy.write.parquet(st.round_dir("edges", 0))
+    with pytest.raises(ValueError, match="src_bucket"):
+        st.read_rounds(spark, "edges", 0)
+    with pytest.raises(ValueError, match="src_bucket"):
+        st.read_log(spark, "edges", 0)
+    # the same rows in the declared layout read back whole
+    st.write_round(legacy, "edges", 1)
+    got = st.read_rounds(spark, "edges", 1, min_round=1).collect()
+    assert sorted(r.src_bucket for r in got) == [0, 0, 1]
+
+
+def test_empty_generation_leaves_nothing(spark, tmp_path):
+    st = SnapshotStore(str(tmp_path / "s"))
+    empty = spark.range(0).selectExpr(
+        "id as url_hash", "cast(id as string) as url", "0 as first_round",
+        "cast(id as int) as bucket",
+    )
+    assert st.write_gen(empty, "url_seen", 4) is None
+    assert not os.path.exists(st.gen_dir("url_seen", 4))
+    assert st.write_gen(empty.union(spark.range(1).selectExpr(
+        "id as url_hash", "'u' as url", "0 as first_round", "cast(id as int) as bucket",
+    )), "url_seen", 5) == st.gen_dir("url_seen", 5)

@@ -17,13 +17,19 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
              base — the live view is base ∪ ins ∖ del with gains folded
              at read, and the due scan partition-prunes to due
              next_fetch_ts bands                                          F1/F3/F4/A15
-  compact  = every K rounds fold the sidecars into a fresh banded base
-             and fold url_seen/docs/edges round tails into leveled
-             generation dirs — minor folds are O(batch·K); a major merge
-             (every max_log_gens folds, LSM size-tiering) is the only
-             O(history) rewrite (Iceberg rewrite_data_files analog)
+  compact  = every K rounds the round writes a fresh banded frontier base
+             and hosts base in place of its sidecar deltas, and folds
+             url_seen/docs/edges (prior slice ∪ the round's own rows) into
+             leveled generation dirs — minor folds are O(batch·K); a major
+             merge (every max_log_gens folds, LSM size-tiering) is the only
+             O(history) rewrite (Iceberg rewrite_data_files analog). These
+             writes share the round's one concurrent write pool: a merge
+             round has a single write phase, like any other round
   commit   = parquet round dirs + versioned bloom sidecars + atomic
              manifest replace (Iceberg snapshot analog)                   C1/C4
+
+State reads pass the declared schemas (schemas.STORE_TABLES, PAGES_LAYOUT),
+so building a round's views of the snapshot launches no Spark job.
 
 Determinism invariant: crawl order is a pure function of the data — the
 popped batch is totally ordered by ``(depth, -score, url)`` (integer OPIC
@@ -69,6 +75,16 @@ def _tlog(label: str, t0: float) -> float:
     if _TIMING:
         print(f"    [timing] {label}: {now - t0:.2f}s", flush=True)
     return now
+
+
+# Python's whitespace (``str.isspace``, all of it in the BMP) as a Java regex
+# class: seed lines are stripped exactly as the oracle's ``line.strip()``
+# strips them. ``F.trim`` strips only spaces, which would keep tab padding
+# and let a whitespace-only line pass the non-blank filter.
+_WS = "[" + "".join(
+    f"\\u{i:04x}" for i in range(0x10000) if chr(i).isspace()
+) + "]"
+_STRIP = rf"\A{_WS}+|{_WS}+\z"
 
 
 def _host_col(url):
@@ -152,9 +168,11 @@ class CrawlEngine:
         """pages with partition column ``bucket`` (from the dir layout) and the
         logical-seconds timestamp. Column pruning: ``text`` is NEVER read by
         the crawl (the engine extracts its own; reading the golden column
-        would both cheat and double I/O)."""
+        would both cheat and double I/O). The declared schema spares the
+        footer-inference job."""
         return (
-            self.spark.read.option("basePath", self.pages_path)
+            self.spark.read.schema(schemas.PAGES_LAYOUT)
+            .option("basePath", self.pages_path)
             .parquet(self.pages_path)
             .select(
                 "url",
@@ -214,6 +232,12 @@ class CrawlEngine:
         scan partition-prunes instead of reading the full 10^10-row state."""
         return F.expr(f"{col} div {self.cfg.band_ticks}").cast("int")
 
+    def _seen_bucket(self, name: str = "bucket"):
+        """url_seen/docs/edges layout column: url_hash % seen_partitions."""
+        return (
+            F.pmod("url_hash", F.lit(self.cfg.seen_partitions)).cast("int").alias(name)
+        )
+
     def _frontier_live(self, prev: int, due_band: int | None = None) -> DataFrame:
         """Merge-on-read live frontier as of committed round ``prev``:
         banded base ∪ frontier_ins appends, minus frontier_del keys (the
@@ -247,9 +271,8 @@ class CrawlEngine:
         far too big to broadcast — deliberately unhinted always."""
         st, s = self.store, self.spark
         g = int(st.state("frontier_base_round"))
-        base = s.read.option(
-            "basePath", os.path.join(st.root, "frontier")
-        ).parquet(st.round_dir("frontier", g))
+        # every base row has all gains <= g folded in: its watermark is g
+        base = st.read_state(s, "frontier", g).withColumn("r", F.lit(g))
         ins = st.read_rounds(s, "frontier_ins", prev, min_round=g + 1, drop_r=False)
         rows = base if ins is None else base.unionByName(ins)
         if due_band is not None:
@@ -257,7 +280,7 @@ class CrawlEngine:
         rows = rows.withColumnRenamed("r", "_gthrough").drop("band")
         dels = st.read_rounds(s, "frontier_del", prev, min_round=g + 1)
         if dels is not None:
-            if int(st.state("frontier_del_rows", 0)) <= self.cfg.broadcast_del_rows_max:
+            if self._broadcast_dels():
                 dels = F.broadcast(dels)
             rows = rows.join(dels, ["url", "attempt"], "left_anti")
         gains = st.read_rounds(s, "frontier_gains", prev, min_round=g + 1, drop_r=False)
@@ -283,6 +306,14 @@ class CrawlEngine:
             )
         return rows.select(*[f.name for f in schemas.FRONTIER.fields])
 
+    def _broadcast_dels(self) -> bool:
+        """The delete-log size gate of ``_frontier_live``. A manifest that
+        lacks ``frontier_del_rows`` (written before the count existed)
+        reads as over the cap: the join stays unhinted rather than
+        broadcasting a log of unknown size."""
+        n = self.store.state("frontier_del_rows")
+        return n is not None and int(n) <= self.cfg.broadcast_del_rows_max
+
     def _hosts_live(self, prev: int) -> DataFrame:
         """Merge-on-read live hosts table as of committed round ``prev`` —
         the same treatment the frontier got, applied to the second-largest
@@ -302,7 +333,7 @@ class CrawlEngine:
         is anti-joined against the live view at append time (insert-once)."""
         st, s = self.store, self.spark
         g = int(st.state("hosts_base_round", st.state("frontier_base_round")))
-        rows = s.read.parquet(st.round_dir("hosts", g))
+        rows = st.read_state(s, "hosts", g)
         news = st.read_rounds(s, "hosts_new", prev, min_round=g + 1)
         if news is not None:
             rows = rows.unionByName(news)
@@ -336,10 +367,10 @@ class CrawlEngine:
         (robots-filtered), hosts from the politeness table, url_seen =
         scheduled seeds, fresh bloom shards + manifest bucket map."""
         cfg, s = self.cfg, self.spark
-        # executor-parallel seed ingest (S1): text lines → trimmed non-blank
+        # executor-parallel seed ingest (S1): text lines → stripped non-blank
         # urls; at 10^7 seeds this is a distributed scan, never a driver list
         raw = s.read.text(self.seeds_path).select(
-            F.trim(F.col("value")).alias("url")
+            F.regexp_replace("value", _STRIP, "").alias("url")
         ).where(F.col("url") != "")
         self._n_seed_lines = raw.count()
         seeds = raw.distinct()
@@ -367,14 +398,11 @@ class CrawlEngine:
         # layout SURVEY.md §4 custom item 1 specifies
         seen = fr.select(
             "url_hash", "url", F.lit(-1).alias("first_round"),
-            F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("bucket"),
+            self._seen_bucket(),
         )
-        self.store.write_round(
-            fr.withColumn("band", self._band()), "frontier", -1,
-            partition_by=("band",),
-        )
+        self.store.write_round(fr.withColumn("band", self._band()), "frontier", -1)
         self.store.write_round(hosts, "hosts", -1)
-        self.store.write_round(seen, "url_seen", -1, partition_by=("bucket",))
+        self.store.write_round(seen, "url_seen", -1)
         bloom_map: dict[str, int] = {}
         bloom_load: dict[str, list] = {}
         if self.use_filters:
@@ -529,7 +557,7 @@ class CrawlEngine:
     # ------------------------------------------------------------------ exact tier
 
     def _exact_new(
-        self, need_exact: DataFrame, prev: int, exact_buckets: list[int]
+        self, need_exact: DataFrame, seen_all: DataFrame, exact_buckets: list[int]
     ) -> DataFrame:
         """Final dedup arbiter (D1-D4 exact tier): anti-join the doubly-
         positive candidate slice against ``url_seen``, PRUNED to the buckets
@@ -537,8 +565,9 @@ class CrawlEngine:
         ``bucket = url_hash % seen_partitions``, so the filter reaches the
         scan as a PartitionFilter (plan-audited) — at the 10^10-URL design
         point the bloom/cuckoo tiers leave a few thousand candidates and this
-        scan touches only their buckets' files, never the full seen table."""
-        seen_all = self.store.read_log(self.spark, "url_seen", prev)
+        scan touches only their buckets' files, never the full seen table.
+        ``seen_all`` is the round's url_seen view as of the committed round;
+        a merge round folds the same view into its generation."""
         if not exact_buckets:
             seen_scan = seen_all.where(F.lit(False))
         elif len(exact_buckets) >= self.cfg.seen_partitions:
@@ -679,7 +708,7 @@ class CrawlEngine:
             "anchor",
             F.lit(r).alias("round"),
             F.lit(t_r).cast("long").alias("ts"),
-            F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("src_bucket"),
+            self._seen_bucket("src_bucket"),
         )
         # docs is laid out bucketed by url_hash % seen_partitions exactly like
         # url_seen, so this first-fetch anti-join prunes to the buckets the
@@ -710,7 +739,7 @@ class CrawlEngine:
                 F.lit(r).alias("round"),
                 "text",
                 F.sha2(F.encode("text", "UTF-8"), 256).alias("text_sha256"),
-                F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("bucket"),
+                self._seen_bucket(),
             )
         )
 
@@ -776,7 +805,8 @@ class CrawlEngine:
         ok = flagged.where("allowed").drop("allowed")
         fast_new = ok.where("seen_flag < 2").drop("seen_flag")
         need_exact = ok.where("seen_flag = 2").drop("seen_flag")
-        exact_new = self._exact_new(need_exact, prev, exact_buckets)
+        seen_all = self.store.read_log(s, "url_seen", prev)
+        exact_new = self._exact_new(need_exact, seen_all, exact_buckets)
         new_urls = fast_new.unionByName(exact_new).localCheckpoint()
         # one job: total + per-seen-partition new-url counts (metrics reuse)
         part = F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("partition_id")
@@ -875,12 +905,101 @@ class CrawlEngine:
             .withColumn("last_fetch_round", F.lit(None).cast("int"))
         )
 
+        # ---- compaction (Iceberg rewrite_data_files analog) -------------------
+        # every compact_every rounds the round writes fresh bases instead of
+        # its sidecar deltas, and folds url_seen/docs/edges into generation
+        # dirs, so sidecar broadcast size, dir listings and dead-row carry
+        # stay O(K) — amortized cost 1/K of a full rewrite per round. The
+        # folds are written in the same concurrent pool as every other
+        # output: a merge round is one write phase, and its own url_seen/
+        # docs/edges rows go straight into the generation, never through an
+        # r=<r> dir read back.
+        st = self.store
+        seen_new = new_base.select(
+            "url_hash", "url", F.lit(r).alias("first_round"), self._seen_bucket(),
+        )
+        log_gens = {k: list(v) for k, v in st.state("log_gens", {}).items()}
+        merges: dict[str, tuple[bool, DataFrame]] = {}
+        if compact:
+            # frontier: the live view as of prev, minus this round's pops,
+            # plus its gains, plus its inserts
+            f_base = (
+                self._frontier_live(prev)
+                .join(F.broadcast(dels_df), ["url", "attempt"], "left_anti")
+                .join(gains_u, "url", "left")
+                .withColumn(
+                    "score",
+                    (F.col("score") + F.coalesce("gain", F.lit(0))).cast("long"),
+                )
+                .drop("gain")
+                .select(*[f.name for f in schemas.FRONTIER.fields])
+                .unionByName(ins_rows)
+            )
+            # hosts: the live view (as of prev) + this round's delta; the
+            # sidecar logs truncate with it
+            h_base = (
+                hosts.join(
+                    hosts_touch.withColumn("_lfr", F.lit(r)), "host", "left"
+                )
+                .withColumn(
+                    "last_fetch_round",
+                    F.coalesce(F.col("_lfr"), F.col("last_fetch_round")),
+                )
+                .drop("_lfr")
+                .unionByName(hosts_new)
+            )
+            writes = [
+                (f_base.withColumn("band", self._band()), "frontier"),
+                (h_base, "hosts"),
+            ]
+            # leveled compaction of the append-only logs: MINOR folds only
+            # the tail rounds since the newest generation (O(batch·K) bytes;
+            # the 10^10-row url_seen history is NOT rewritten every K
+            # rounds), MAJOR (once max_log_gens generations accumulate)
+            # merges them into one — the LSM size-tiering trade: the
+            # O(total) rewrite is amortized over max_log_gens*compact_every
+            # rounds while reads union ≤ max_log_gens+K dirs. The round's
+            # url_seen and docs views are the major merge's prior slice.
+            views = {"url_seen": seen_all, "docs": docs_all}
+            for tbl, delta in (("url_seen", seen_new), ("docs", docs_new),
+                               ("edges", edges_new)):
+                gens = log_gens.get(tbl, [])
+                major = len(gens) + 1 > cfg.max_log_gens
+                if major:
+                    prior = views[tbl] if tbl in views else st.read_log(s, tbl, prev)
+                else:
+                    prior = st.read_rounds(
+                        s, tbl, prev, min_round=(gens[-1] + 1) if gens else None,
+                    )
+                merges[tbl] = (major, delta if prior is None else prior.unionByName(delta))
+        else:
+            # the O(batch) delta — the whole per-round write
+            writes = [
+                (seen_new, "url_seen"),
+                (edges_new, "edges"),
+                (docs_new, "docs"),
+                (dels_df, "frontier_del"),
+                (ins_rows.withColumn("band", self._band()), "frontier_ins"),
+                (gains_u, "frontier_gains"),
+                (hosts_touch, "hosts_touch"),
+                (hosts_new, "hosts_new"),
+            ]
+        writes += [
+            (
+                popped.select(
+                    F.lit(r).alias("round"), "seq", "url", "host",
+                    "depth", "score", "attempt",
+                ),
+                "crawl_log",
+            ),
+            (evictions, "evictions"),
+        ]
+
         # ---- write round outputs + bloom update + remaining stats, all jobs
         # over materialized checkpoints → submitted CONCURRENTLY from driver
         # threads (Spark schedules independent jobs in parallel; wall time is
         # the max, not the sum — the analog of parallel Iceberg table appends
         # before one snapshot commit)
-        st = self.store
 
         def _bloom_task():
             # per-bucket shard versioning: only buckets with new urls get a
@@ -889,10 +1008,7 @@ class CrawlEngine:
             if n_new:
                 upd = make_seen_update_fn(bucket_paths, st.bloom_dir(r), cfg)
                 return (
-                    new_base.select(
-                        "url_hash",
-                        F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("bucket"),
-                    )
+                    seen_new.select("url_hash", "bucket")
                     .groupBy("bucket")
                     .applyInPandas(upd, SHARD_STATS_SCHEMA)
                     .collect()
@@ -914,44 +1030,16 @@ class CrawlEngine:
             }
 
         with ThreadPoolExecutor(max_workers=10) as pool:
-            futs = [
-                pool.submit(
-                    st.write_round,
-                    new_base.select(
-                        "url_hash", "url", F.lit(r).alias("first_round"),
-                        F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("bucket"),
-                    ),
-                    "url_seen", r, ("bucket",),
-                ),
-                pool.submit(st.write_round, edges_new, "edges", r, ("src_bucket",)),
-                pool.submit(st.write_round, docs_new, "docs", r, ("bucket",)),
-                pool.submit(
-                    st.write_round,
-                    popped.select(
-                        F.lit(r).alias("round"), "seq", "url", "host",
-                        "depth", "score", "attempt",
-                    ),
-                    "crawl_log", r,
-                ),
-                pool.submit(st.write_round, evictions, "evictions", r),
-            ]
-            if not compact:
-                # the O(batch) delta — the whole per-round frontier + hosts write
-                futs += [
-                    pool.submit(st.write_round, dels_df, "frontier_del", r),
-                    pool.submit(
-                        st.write_round,
-                        ins_rows.withColumn("band", self._band()),
-                        "frontier_ins", r, ("band",),
-                    ),
-                    pool.submit(st.write_round, gains_u, "frontier_gains", r),
-                    pool.submit(st.write_round, hosts_touch, "hosts_touch", r),
-                    pool.submit(st.write_round, hosts_new, "hosts_new", r),
-                ]
+            futs = [pool.submit(st.write_round, df, tbl, r) for df, tbl in writes]
+            gen_futs = {
+                tbl: pool.submit(st.write_gen, src, tbl, r)
+                for tbl, (_major, src) in merges.items()
+            }
             fut_bloom = pool.submit(_bloom_task) if self.use_filters else None
             fut_stats = pool.submit(_pop_stats_task)
             for f in futs:
                 f.result()
+            gen_paths = {tbl: f.result() for tbl, f in gen_futs.items()}
             pop_stats = fut_stats.result()
             bloom_rows = fut_bloom.result() if fut_bloom is not None else []
         # fold this round's shard stats into the manifest's occupancy map —
@@ -971,94 +1059,45 @@ class CrawlEngine:
             n_reinserted = sum(int(row["reinsertable"]) for row in pop_stats.values())
         n_ins = n_reinserted + n_new * sched_mult
         frontier_n = int(st.state("frontier_count")) - n_popped + n_ins
+        # delete-log row count since the frontier base — the arithmetic
+        # input to the size-gated broadcast in _frontier_live (each popped
+        # (url, attempt) key appears in the log exactly once); compaction
+        # truncates the log, so the counter resets with it, and a count
+        # missing from an older manifest stays unknown until then
+        del_rows = st.state("frontier_del_rows")
         new_state: dict = {
             "frontier_count": frontier_n,
-            # delete-log row count since the frontier base — the arithmetic
-            # input to the size-gated broadcast in _frontier_live (each
-            # popped (url, attempt) key appears in the log exactly once);
-            # compaction truncates the log, so the counter resets with it
             "frontier_del_rows": 0 if compact
-            else int(st.state("frontier_del_rows", 0)) + n_popped,
+            else None if del_rows is None else int(del_rows) + n_popped,
         }
         _t = _tlog("writes_parallel", _t)
 
-        # ---- compaction (Iceberg rewrite_data_files analog) -------------------
-        # every compact_every rounds: fold the sidecar logs into a fresh
-        # banded base and merge the loop-read logs into one generation dir,
-        # so sidecar broadcast size, dir listings and dead-row carry stay
-        # O(K) — amortized cost 1/K of a full rewrite per round
+        major_done: list[str] = []
         if compact:
-            pending = self._frontier_live(prev).join(
-                F.broadcast(dels_df), ["url", "attempt"], "left_anti"
-            )
-            f_base = (
-                pending.join(gains_u, "url", "left")
-                .withColumn(
-                    "score",
-                    (F.col("score") + F.coalesce("gain", F.lit(0))).cast("long"),
-                )
-                .drop("gain")
-                .select(*[f.name for f in schemas.FRONTIER.fields])
-                .unionByName(ins_rows)
-            )
-            st.write_round(
-                f_base.withColumn("band", self._band()), "frontier", r,
-                partition_by=("band",),
-            )
-            # hosts: fold the live view (as of prev) + this round's delta
-            # into a fresh base; the sidecar logs truncate with it
-            h_base = (
-                hosts.join(
-                    hosts_touch.withColumn("_lfr", F.lit(r)), "host", "left"
-                )
-                .withColumn(
-                    "last_fetch_round",
-                    F.coalesce(F.col("_lfr"), F.col("last_fetch_round")),
-                )
-                .drop("_lfr")
-                .unionByName(hosts_new)
-            )
-            st.write_round(h_base, "hosts", r)
-            # leveled compaction of the append-only logs: MINOR folds only
-            # the tail rounds since the newest generation (O(batch·K) bytes;
-            # the 10^10-row url_seen history is NOT rewritten every K
-            # rounds), MAJOR (once max_log_gens generations accumulate)
-            # merges them into one — the LSM size-tiering trade: the
-            # O(total) rewrite is amortized over max_log_gens*compact_every
-            # rounds while reads union ≤ max_log_gens+K dirs
-            log_gens = {k: list(v) for k, v in st.state("log_gens", {}).items()}
-            major_done: list[str] = []
-            for tbl, pby in (("url_seen", ("bucket",)), ("docs", ("bucket",)),
-                             ("edges", ("src_bucket",))):
-                gens = log_gens.get(tbl, [])
-                if len(gens) + 1 > cfg.max_log_gens:
-                    merged = st.read_log(s, tbl, r)
-                    if merged is not None:
-                        st.write_gen(merged, tbl, r, partition_by=pby)
-                        log_gens[tbl] = [r]
-                        major_done.append(tbl)
-                else:
-                    tail = st.read_rounds(
-                        s, tbl, r,
-                        min_round=(gens[-1] + 1) if gens else None,
-                    )
-                    if tail is not None:
-                        st.write_gen(tail, tbl, r, partition_by=pby)
-                        log_gens[tbl] = gens + [r]
+            # a generation is listed only if its write produced data files
+            for tbl, path in gen_paths.items():
+                if path is None:
+                    continue
+                major = merges[tbl][0]
+                log_gens[tbl] = [r] if major else log_gens.get(tbl, []) + [r]
+                if major:
+                    major_done.append(tbl)
             new_state["frontier_base_round"] = r
             new_state["hosts_base_round"] = r
             new_state["log_gens"] = log_gens
             # ---- bloom capacity policy (VERDICT r4 #2): a bucket whose
             # lifetime-insert load n/m crossed bloom_max_load — or whose
             # cuckoo overflowed — is REBUILT here from the authoritative
-            # url_seen table (bucket-pruned scan of rows compaction touches
-            # anyway) with doubled geometry. A bloom cannot grow in place
-            # (bit positions are hash-mod-m), so growth = exact rebuild at
-            # the compaction commit, the same atomic point that rewrites the
-            # frontier base; geometry doubles each rebuild, so a bucket is
-            # rebuilt O(log n) times over the whole crawl. The saturation
-            # check is pure driver arithmetic over the manifest's occupancy
-            # map — no shard I/O unless a rebuild actually fires.
+            # url_seen rows (the round's view as of prev ∪ its new rows,
+            # bucket-pruned; no second listing) with doubled geometry. A
+            # bloom cannot grow in place (bit positions are hash-mod-m), so
+            # growth = exact rebuild at the compaction commit, the same
+            # atomic point that rewrites the frontier base; geometry doubles
+            # each rebuild, so a bucket is rebuilt O(log n) times over the
+            # whole crawl. It runs after the write pool because it needs the
+            # post-update occupancy. The saturation check is pure driver
+            # arithmetic over the manifest's occupancy map — no shard I/O
+            # unless a rebuild actually fires.
             if self.use_filters and cfg.bloom_autogrow:
                 sat_geom = {
                     b: grown_geometry(n, cfg)
@@ -1068,7 +1107,7 @@ class CrawlEngine:
                 if sat_geom:
                     rebuild = make_shard_rebuild_fn(st.bloom_dir(r), sat_geom, cfg)
                     rebuilt = (
-                        st.read_log(s, "url_seen", r)
+                        seen_all.unionByName(seen_new)
                         .where(F.col("bucket").isin(sorted(sat_geom)))
                         .select("url_hash", "bucket")
                         .groupBy("bucket")
@@ -1081,7 +1120,7 @@ class CrawlEngine:
                             int(row["n_total"]), int(row["m_bits"]),
                             bool(row["overflowed"]),
                         ]
-            _t = _tlog("compaction", _t)
+                _t = _tlog("bloom_rebuild", _t)
 
         # bloom manifest map: buckets whose shard this round replaced
         bloom_touch = [int(row["bucket"]) for row in bloom_rows]

@@ -30,6 +30,18 @@ the same *semantics* on plain parquet + an atomically-replaced JSON manifest:
   size-tiering). Listings stay O(rounds-since-compaction + #generations) and
   the O(total-history) rewrite is amortized over
   ``max_log_gens × compact_every`` rounds;
+* a merge round is **single-phase**: it writes each compacted log's new
+  generation straight from the prior slice ∪ the round's own delta, and the
+  new frontier and hosts bases, concurrently with its other writes — it
+  never writes an ``r=<k>`` dir for a compacted log only to read it back.
+  A generation whose write produced no data files is removed instead of
+  being listed in ``log_gens``;
+* every table has a **declared schema** (``schemas.STORE_TABLES``: data
+  columns plus the layout's partition columns). Writes compare the
+  DataFrame's analyzed schema with it on the driver and raise on drift;
+  reads pass it to the parquet reader, so building a state view launches
+  no footer-inference job, and a dir whose layout lacks a declared
+  partition column raises instead of reading that column back as nulls;
 * the bloom/cuckoo sidecar for each bucket is resolved through the
   manifest's ``bloom_map`` (bucket → newest committed round that wrote that
   bucket's shard) — O(1) per bucket, no newest-first filesystem probing;
@@ -59,7 +71,8 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from twitter_crawler_spark import schemas
 
 STATE_TABLES = ("frontier", "hosts")
 LOG_TABLES = (
@@ -71,13 +84,37 @@ LOG_TABLES = (
 COMPACTED_LOGS = ("url_seen", "docs", "edges")
 
 
-def _has_data_files(path: str) -> bool:
+def _has_data_files(path: str, partition_cols: tuple[str, ...] = ()) -> bool:
     """True if any non-metadata file (not ``_SUCCESS``/``.crc``) exists under
-    ``path`` — i.e. the parquet dir actually carries rows + schema."""
-    for _root, _dirs, files in os.walk(path):
+    ``path`` — i.e. the parquet dir actually carries rows. Raises if that
+    file does not sit under one ``<col>=<v>`` dir per partition column, in
+    order: such a dir (e.g. an ``edges`` round written before it gained its
+    ``src_bucket`` layout) would read the missing column back as nulls."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
         if any(not f.startswith(("_", ".")) for f in files):
+            rel = os.path.relpath(root, path)
+            got = [] if rel == "." else [d.split("=", 1)[0] for d in rel.split(os.sep)]
+            if got != list(partition_cols):
+                raise ValueError(
+                    f"{path} is laid out by {got}, but its table declares the "
+                    f"partition columns {list(partition_cols)}"
+                )
             return True
     return False
+
+
+def _check_schema(df: DataFrame, table: str) -> None:
+    """Raise unless ``df``'s analyzed schema has the table's declared column
+    names and types, in order (nullability aside). Analysis runs on the
+    driver only — no job."""
+    want = schemas.store_schema(table)
+    got = [(f.name, f.dataType) for f in df.schema.fields]
+    if got != [(f.name, f.dataType) for f in want.fields]:
+        raise ValueError(
+            f"{table}: the written schema {df.schema.simpleString()} differs "
+            f"from the declared {want.simpleString()}"
+        )
 
 
 class SnapshotStore:
@@ -181,14 +218,9 @@ class SnapshotStore:
 
     # --- write ------------------------------------------------------------
 
-    def write_round(
-        self,
-        df: DataFrame,
-        table: str,
-        round_: int,
-        partition_by: tuple[str, ...] | None = None,
-    ) -> str:
-        path = self.round_dir(table, round_)
+    def _write(self, df: DataFrame, table: str, path: str) -> None:
+        _check_schema(df, table)
+        partition_by = schemas.STORE_TABLES[table][1]
         if partition_by:
             # hash-distribute on the partition columns before the write
             # (Iceberg write.distribution-mode=hash analog): without it every
@@ -196,35 +228,47 @@ class SnapshotStore:
             # design point (10^3 executors × 512 buckets) that is ~10^5-10^6
             # files per round dir, a metadata-layer killer. One tiny extra
             # shuffle (AQE coalesces it) caps files at ~1 per partition value.
+            # A MAJOR merge rewrites the whole log, exactly where stray
+            # per-task files multiply most.
             df = df.repartition(*partition_by)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
+
+    def write_round(self, df: DataFrame, table: str, round_: int) -> str:
+        """Write round ``round_``'s rows of ``table`` (invisible until the
+        round commits); the layout comes from the table's declaration."""
+        path = self.round_dir(table, round_)
+        self._write(df, table, path)
         return path
 
-    def write_gen(
-        self,
-        df: DataFrame,
-        table: str,
-        round_: int,
-        partition_by: tuple[str, ...] | None = None,
-    ) -> str:
+    def write_gen(self, df: DataFrame, table: str, round_: int) -> str | None:
         """Write a compaction generation dir. A minor compaction's generation
         holds only the round tail it folded; a major one holds the full
-        merge — which is which is recorded by the manifest's ``log_gens``."""
+        merge — which is which is recorded by the manifest's ``log_gens``.
+        Returns None, leaving no dir behind, if the write produced no data
+        files: an empty generation is never listed."""
         path = self.gen_dir(table, round_)
-        if partition_by:
-            # same hash distribution as write_round — a MAJOR merge rewrites
-            # the whole log, exactly where stray per-task files multiply most
-            df = df.repartition(*partition_by)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
-        return path
+        self._write(df, table, path)
+        if _has_data_files(path, schemas.STORE_TABLES[table][1]):
+            return path
+        shutil.rmtree(path)
+        return None
 
     # --- read -------------------------------------------------------------
+
+    def _read(
+        self, spark: SparkSession, table: str, paths: list[str], base: str,
+        with_round: bool,
+    ) -> DataFrame:
+        """Parquet scan of ``paths`` under the table's declared schema — no
+        footer-inference job."""
+        return (
+            spark.read.schema(schemas.store_schema(table, with_round))
+            .option("basePath", base)
+            .parquet(*paths)
+        )
 
     def _round_dirs(self, table: str) -> list[tuple[int, str]]:
         troot = os.path.join(self.root, table)
@@ -248,24 +292,20 @@ class SnapshotStore:
         (partition column ``r`` from the layout). The caller bounds
         ``min_round`` (e.g. to the frontier base round) so the scan lists and
         reads O(rounds-since-compaction) dirs, never the full history."""
-        root = os.path.join(self.root, table)
+        parts = schemas.STORE_TABLES[table][1]
         dirs = [
             p for k, p in self._round_dirs(table)
             if k <= upto_round and (min_round is None or k >= min_round)
         ]
         # A zero-row PARTITIONED write leaves a round dir holding only
-        # _SUCCESS (no part file, hence no schema): on a long crawl a table
-        # can go quiet for a whole compaction window (e.g. docs once
-        # first-fetches dry up), making every listed dir schema-less and
-        # crashing inference. Data-bearing dirs carry the schema for the
-        # union, so empty ones are skippable outright.
-        dirs = [p for p in dirs if _has_data_files(p)]
+        # _SUCCESS (no part file): on a long crawl a table can go quiet for
+        # a whole compaction window (e.g. docs once first-fetches dry up),
+        # making every listed dir empty. They hold no rows, so they are
+        # skipped outright, and a tail of only such dirs reads as None.
+        dirs = [p for p in dirs if _has_data_files(p, parts)]
         if not dirs:
             return None
-        df = spark.read.option("basePath", root).parquet(*dirs)
-        df = df.filter(F.col("r") <= upto_round)
-        if min_round is not None:
-            df = df.filter(F.col("r") >= min_round)
+        df = self._read(spark, table, dirs, os.path.join(self.root, table), True)
         return df.drop("r") if drop_r else df
 
     def log_gens(self, table: str) -> list[int]:
@@ -285,7 +325,8 @@ class SnapshotStore:
         parts = []
         for g in gens:
             gdir = self.gen_dir(table, g)
-            parts.append(spark.read.option("basePath", gdir).parquet(gdir))
+            _has_data_files(gdir, schemas.STORE_TABLES[table][1])
+            parts.append(self._read(spark, table, [gdir], gdir, False))
         tail = self.read_rounds(
             spark, table, upto_round,
             min_round=(gens[-1] + 1) if gens else None,
@@ -300,7 +341,11 @@ class SnapshotStore:
         return df
 
     def read_state(self, spark: SparkSession, table: str, round_: int) -> DataFrame:
-        return spark.read.parquet(self.round_dir(table, round_))
+        """A base snapshot (``frontier``/``hosts`` at ``round_``), without
+        the ``r`` column."""
+        path = self.round_dir(table, round_)
+        _has_data_files(path, schemas.STORE_TABLES[table][1])
+        return self._read(spark, table, [path], path, False)
 
     # --- GC (post-commit, idempotent) -------------------------------------
 

@@ -1059,8 +1059,7 @@ def sql_decontaminate(d: str) -> str:
     own grams — far larger relative to the corpus than real eval suites —
     so the BroadcastHashJoin the plan audit pins is asserted at fixture
     scale; at the design point the broadcast property comes from the eval
-    suite's absolute size, plus a bloom pre-filter built from the benchmark
-    grams in front of the join. Output: EVERY training doc (docs shorter
+    suite's absolute size. Output: EVERY training doc (docs shorter
     than {DECON_N} tokens carry no gram, so n_grams=0 and keep=1) with its
     gram count, distinct contaminated-gram count, and the keep verdict."""
     toks = E.tokens("text", d)

@@ -4,6 +4,11 @@ The reference is schema-less (ad-hoc Neo4j property bags, Redis strings —
 storages/GraphStorage.scala:88-115, storages/RedisFutureStorage.scala:61);
 this engine is schema-first. ``pages`` is authoritative from
 BASELINE.json.input_hint.
+
+``STORE_TABLES`` declares every snapshot-store table together with the
+partition columns of its directory layout; ``store_schema`` is the schema a
+write must match and a read passes to the parquet reader, so no state read
+runs a footer-inference job.
 """
 
 from __future__ import annotations
@@ -125,6 +130,33 @@ ROUND_METRICS = StructType(
     ]
 )
 
+# popped (url, attempt) keys: the frontier's equality-delete log
+FRONTIER_DEL = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("attempt", IntegerType(), False),
+    ]
+)
+
+# per-round OPIC cash owed to a url, folded into ``score`` at read time
+FRONTIER_GAINS = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("gain", LongType(), False),
+    ]
+)
+
+# hosts fetched in a round; the round dir's ``r`` is their last_fetch_round
+HOSTS_TOUCH = StructType([StructField("host", StringType(), False)])
+
+# urls evicted as unproductive revisits
+EVICTIONS = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("round", IntegerType(), False),
+    ]
+)
+
 REDIRECTS = StructType(
     [
         StructField("short_url", StringType(), False),
@@ -147,3 +179,43 @@ POLITENESS = StructType(
         StructField("crawl_delay_rounds", IntegerType(), False),
     ]
 )
+
+
+def _with_partition(schema: StructType, *cols: str) -> StructType:
+    """``schema`` plus integer partition columns appended at the end (the
+    layout's directory values — ``band=3``, ``bucket=5`` — read back as int)."""
+    return StructType(
+        list(schema.fields) + [StructField(c, IntegerType(), False) for c in cols]
+    )
+
+
+# the pages input with its ``bucket=<b>`` layout column
+PAGES_LAYOUT = _with_partition(PAGES, "bucket")
+
+# snapshot-store table → (schema, partition columns of one round or
+# generation dir). The schema lists the data columns, then the partition
+# columns, in the order the engine writes them; ``hosts_new`` rows are
+# ordinary hosts rows.
+STORE_TABLES: dict[str, tuple[StructType, tuple[str, ...]]] = {
+    "frontier": (_with_partition(FRONTIER, "band"), ("band",)),
+    "frontier_ins": (_with_partition(FRONTIER, "band"), ("band",)),
+    "frontier_del": (FRONTIER_DEL, ()),
+    "frontier_gains": (FRONTIER_GAINS, ()),
+    "hosts": (HOSTS, ()),
+    "hosts_new": (HOSTS, ()),
+    "hosts_touch": (HOSTS_TOUCH, ()),
+    "url_seen": (_with_partition(URL_SEEN, "bucket"), ("bucket",)),
+    "docs": (_with_partition(DOCS, "bucket"), ("bucket",)),
+    "edges": (EDGES, ("src_bucket",)),
+    "crawl_log": (CRAWL_LOG, ()),
+    "evictions": (EVICTIONS, ()),
+    "round_metrics": (ROUND_METRICS, ()),
+}
+
+
+def store_schema(table: str, with_round: bool = False) -> StructType:
+    """Declared schema of a snapshot-store table; ``with_round`` appends the
+    ``r`` partition column that a read of ``<table>/r=<k>`` dirs (base path
+    ``<table>``) carries."""
+    schema = STORE_TABLES[table][0]
+    return _with_partition(schema, "r") if with_round else schema

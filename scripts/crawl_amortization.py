@@ -1,9 +1,10 @@
 """Crawl fixed-cost amortization curve (VERDICT r2 item 7).
 
 The design claim: a crawl round costs a roughly fixed number of driver
-seconds (~20 Spark jobs — pop window, fetch join, 3-tier dedup, 7 parallel
-table writes), so scheduling throughput RISES with fixture size as those
-fixed seconds amortize over more per-round work — at the 10^10-URL design
+seconds (68-72 Spark jobs per round on the bench fixture, counted with
+statusTracker — pop window, fetch join, 3-tier dedup, 7 parallel table
+writes), so scheduling throughput RISES with fixture size as those fixed
+seconds amortize over more per-round work — at the 10^10-URL design
 point they are noise. This script measures the trend: the bench crawl at
 increasing TCS_BENCH_PAGES, best-of-R walls each (interleaved across sizes
 so a throttle burst poisons a pass, not a size), reporting

@@ -1,7 +1,8 @@
 """Frontier write-amplification receipt (VERDICT r3 items 2 & 8).
 
 The merge-on-read frontier claims: a round writes O(batch) frontier bytes
-(ins/del/gains sidecars), not O(frontier) (the legacy full rewrite). This
+(ins/gains sidecars; its deletes are its crawl_log rows, which both modes
+write alike), not O(frontier) (the legacy full rewrite). This
 script measures it directly: the SAME bench crawl runs in
 
 * ``full`` mode — ``compact_every=1``: every round folds the sidecars into a
@@ -10,8 +11,7 @@ script measures it directly: the SAME bench crawl runs in
   (the steady-state write path between compactions).
 
 Each child counts the bytes of every ``frontier*`` table write at write time
-(before any GC), per round, plus wall; ``hosts*`` writes are counted the same
-way (the hosts table got the identical merge-on-read treatment in round 4). The ratio delta/full is the
+(before any GC), per round, plus wall. The ratio delta/full is the
 write-amplification saving; at the 10^10-URL design point the full rewrite
 is ~1 TB/round for a 0.001% delta, so the ratio is the whole story.
 
@@ -47,7 +47,6 @@ def du(path):
     return total
 
 frontier_bytes = {{}}  # round -> bytes written to frontier* tables
-hosts_bytes = {{}}     # round -> bytes written to hosts* tables
 
 _orig_round = SnapshotStore.write_round
 _orig_gen = SnapshotStore.write_gen
@@ -55,8 +54,6 @@ _orig_gen = SnapshotStore.write_gen
 def _count(table, round_, path):
     if table.startswith("frontier"):
         frontier_bytes[round_] = frontier_bytes.get(round_, 0) + du(path)
-    elif table.startswith("hosts"):
-        hosts_bytes[round_] = hosts_bytes.get(round_, 0) + du(path)
 
 def write_round(self, df, table, round_):
     p = _orig_round(self, df, table, round_)
@@ -82,15 +79,12 @@ t0 = time.time(); eng.run(); wall = time.time() - t0
 live = eng.frontier_live().count()
 shutil.rmtree(state, ignore_errors=True)
 per_round = [frontier_bytes.get(k, 0) for k in range(-1, rounds)]
-h_per_round = [hosts_bytes.get(k, 0) for k in range(-1, rounds)]
 print(json.dumps({{
     "wall_s": round(wall, 2),
     "frontier_rows_live": live,
     "frontier_bytes_per_round": per_round,
     "frontier_bytes_total": sum(per_round),
     "steady_rounds_bytes": sum(per_round[2:]),  # skip init + round 0 warm-up
-    "hosts_bytes_per_round": h_per_round,
-    "hosts_steady_rounds_bytes": sum(h_per_round[2:]),
 }}))
 """
 
@@ -121,16 +115,11 @@ def main() -> None:
         delta["steady_rounds_bytes"] / full["steady_rounds_bytes"]
         if full["steady_rounds_bytes"] else None
     )
-    h_ratio = (
-        delta["hosts_steady_rounds_bytes"] / full["hosts_steady_rounds_bytes"]
-        if full.get("hosts_steady_rounds_bytes") else None
-    )
     section = {
         "pages": pages, "rounds": rounds, "cores": cores,
         "full_rewrite_per_round": full,
         "merge_on_read_delta": delta,
         "steady_delta_over_full_bytes": round(ratio, 4) if ratio else None,
-        "hosts_steady_delta_over_full_bytes": round(h_ratio, 4) if h_ratio else None,
     }
     print(json.dumps(section))
     path = os.path.join(REPO, "BENCH_SCALING.json")

@@ -14,7 +14,7 @@ snapshot — also exercising resume 50x across 12 minor + 2 size-tiered major
 compaction boundaries), and after each commit the script samples:
 
   * files/dirs under every state table (url_seen, docs, edges, frontier_*,
-    hosts_*, crawl_log, ...) and under the bloom sidecar root;
+    crawl_log, ...) and under the bloom sidecar root;
   * len(store.bloom_paths()) — the per-task probe map (must stay = #buckets);
   * manifest size in bytes.
 
@@ -65,11 +65,12 @@ LONG_CFG = CrawlConfig(
 
 # Tables the ROUND LOOP re-reads every round — the ones whose listing/probe
 # cost must stay flat. crawl_log / evictions / round_metrics are append-only
-# OUTPUT logs (the Iceberg fast-append analog): the loop never lists them,
-# so their dir count growing with rounds is expected and harmless.
+# OUTPUT logs (the Iceberg fast-append analog) that are never compacted, so
+# their dir count grows with rounds; the loop probes and reads only the
+# last max(compact_every, D) crawl_log round dirs (delete keys since the
+# frontier base, the host crawl-delay window) and never lists the log.
 LOOP_READ_TABLES = (
-    "frontier", "frontier_ins", "frontier_del", "frontier_gains",
-    "hosts", "hosts_new", "hosts_touch", "url_seen", "docs", "bloom",
+    "frontier", "frontier_ins", "frontier_gains", "url_seen", "docs", "bloom",
 )
 
 

@@ -130,10 +130,9 @@ def main() -> None:
 
     # 3. the pop dataflow: every window MUST be partitioned. Audits the REAL
     # engine methods, with dummy offsets standing in for the per-round
-    # collected counts.
-    hosts_df = eng.store.read_state(spark, "hosts", -1)
+    # collected counts (no round has run, so no host is held back).
     pop_flow = eng._attach_seq(
-        eng._pop_ranged(eng._pop_survivors(frontier, hosts_df, 3600, 1)),
+        eng._pop_ranged(eng._pop_survivors(frontier, None, 3600, 1)),
         {0: 0},
     )
     sections.append(
@@ -176,19 +175,20 @@ def main() -> None:
         )
     )
 
-    # 6. the merge-on-read hosts live view: resolved from the base + the
-    # O(batch) hosts_touch/hosts_new sidecar logs — no full-table groupBy
-    # (the last-writer-wins fold is a join against the aggregated TOUCH log,
-    # which is tiny), no window at all. Run one real round first so the
-    # sidecar logs exist and the audited plan is the merged shape.
-    eng.run(max_rounds=1)
-    hosts_plan = _fmt(eng._hosts_live(eng.store.committed_round()))
+    # 6. the host crawl-delay gate: each host's last fetch round is
+    # max(round) over the last D-1 crawl_log rounds (D the longest crawl
+    # delay). The crawl_log scan must read only host and round, and the
+    # aggregate needs no window and no cartesian product. Run two real
+    # rounds first so the window holds crawl_log dirs.
+    assert eng.max_delay >= 2, "the audit fixture has a host with delay > 1"
+    eng.run(max_rounds=2)
+    gate_plan = _fmt(eng._recent_fetches(eng.store.committed_round() + 1))
     sections.append(
         (
-            "crawl_hosts_live",
-            hosts_plan,
-            [r"hosts_touch", r"hosts_new"],
-            [UNPARTITIONED_WINDOW, "CartesianProduct"],
+            "crawl_host_gate",
+            gate_plan,
+            [r"ReadSchema: struct<round:int,host:string>"],
+            ["Window", "CartesianProduct"],
             {},
         )
     )

@@ -18,9 +18,9 @@ Two workloads:
   measures.
 * **crawl** (secondary): the full iterative engine on a generated fixture
   (TCS_SCALE_PAGES pages, default 20000). At sandbox scale this is
-  driver-fixed-cost bound (each round is ~20 Spark jobs over small data),
-  so its efficiency UNDERSTATES cluster behaviour; reported for
-  completeness.
+  driver-fixed-cost bound (each round is 68-72 Spark jobs over small data
+  on the bench fixture, counted with statusTracker), so its efficiency
+  UNDERSTATES cluster behaviour; reported for completeness.
 
 Writes BENCH_SCALING.json and prints one JSON line.
 """

@@ -11,6 +11,7 @@ import pytest
 from tests.conftest import TEST_CFG
 from twitter_crawler_spark.config import CrawlConfig
 from twitter_crawler_spark.crawl.engine import CrawlEngine
+from twitter_crawler_spark.crawl.state import RETIRED_TABLES
 from twitter_crawler_spark.oracle.frontier_oracle import FrontierOracle
 
 VARIANTS = {
@@ -53,8 +54,14 @@ def _assert_bounded_listing(eng: CrawlEngine, cfg: CrawlConfig) -> None:
     max_log_gens G) — independent of how many rounds ran. This is the
     listing/probe-cost contract behind scripts/long_crawl_stats.py's 50-round
     receipt, pinned here on every compacting test run for free (pure
-    filesystem asserts; crawl_log/evictions/round_metrics are append-only
-    OUTPUT logs the loop never lists, so they are exempt by design)."""
+    filesystem asserts). The loop also reads crawl_log — the frontier's
+    delete keys since the base and the host crawl-delay window — probing
+    at most max(K, D) of its round dirs (D the longest crawl delay) and
+    never listing the table; crawl_log,
+    evictions and round_metrics are append-only OUTPUT logs that are never
+    compacted, so their dir counts are exempt by design. The tables that
+    crawl_log replaced (frontier_del, hosts, hosts_new, hosts_touch) are
+    never written."""
     import os
 
     st = eng.store
@@ -66,12 +73,12 @@ def _assert_bounded_listing(eng: CrawlEngine, cfg: CrawlConfig) -> None:
     def round_dirs(tbl: str) -> list[int]:
         return [k for k, _ in st._round_dirs(tbl)]
 
-    # base tables: exactly the one base snapshot dir survives GC
+    # base table: exactly the one base snapshot dir survives GC
     assert round_dirs("frontier") == [base]
-    assert round_dirs("hosts") == [int(st.state("hosts_base_round"))]
+    for tbl in RETIRED_TABLES:
+        assert not os.path.exists(os.path.join(st.root, tbl)), tbl
     # sidecar logs: only rounds after the base fold
-    for tbl in ("frontier_ins", "frontier_del", "frontier_gains",
-                "hosts_new", "hosts_touch"):
+    for tbl in ("frontier_ins", "frontier_gains"):
         rs = round_dirs(tbl)
         assert len(rs) <= since_base and all(k > base for k in rs), (tbl, rs)
     # leveled logs: <= G generation dirs + the tail rounds since the newest

@@ -203,8 +203,10 @@ def test_edges_scan_prunes_on_src_bucket(engine):
 
 
 def test_frontier_del_rows_tracks_pops(engine):
-    """The size-gated frontier_del broadcast relies on the manifest's
-    arithmetic delete-log row count: with no compaction in this run
-    (compact_every > max_rounds) it must equal total pops."""
+    """The size-gated broadcast of the frontier's delete keys counts them
+    from the manifest history's per-round ``popped`` values: with no
+    compaction in this run (compact_every > max_rounds) the count must
+    equal total pops, i.e. every crawl_log row."""
     m = engine.round_metrics().where("partition_id = -1").toPandas()
-    assert int(engine.store.state("frontier_del_rows")) == int(m.fetched.sum()) > 0
+    assert engine.store.state("frontier_base_round") == -1
+    assert engine._del_rows() == int(m.fetched.sum()) == engine.crawl_log().count() > 0

@@ -11,8 +11,12 @@ from __future__ import annotations
 
 import collections
 import dataclasses
+import json
 import os
+import re
+import shutil
 
+import pandas as pd
 import pytest
 
 from tests.conftest import TEST_CFG
@@ -135,32 +139,6 @@ def test_uncommitted_debris_discarded(spark, fixture_dir, tmp_path_factory):
     assert not os.path.exists(os.path.join(orphan, "part-junk.parquet"))
 
 
-def test_hosts_merge_on_read_equals_fold(spark, fixture_dir, tmp_path_factory):
-    """The hosts live view must be layout-independent: a pure sidecar-log run
-    (compact_every=0, never folds) and a per-round-fold run (compact_every=1,
-    the legacy full-rewrite write pattern) must expose identical hosts rows —
-    the merge-on-read resolution (base ∪ hosts_new, last-writer-wins touch
-    fold) is exactly equivalent to rewriting the table every round."""
-    import dataclasses
-
-    cfg_logs = dataclasses.replace(TEST_CFG, compact_every=0)
-    cfg_fold = dataclasses.replace(TEST_CFG, compact_every=1)
-    s1 = str(tmp_path_factory.mktemp("hosts") / "logs")
-    s2 = str(tmp_path_factory.mktemp("hosts") / "fold")
-    e1 = CrawlEngine(spark, fixture_dir, s1, cfg_logs)
-    e1.run(max_rounds=4)
-    e2 = CrawlEngine(spark, fixture_dir, s2, cfg_fold)
-    e2.run(max_rounds=4)
-    cols = ["host", "budget_per_round", "crawl_delay_rounds", "last_fetch_round"]
-    h1 = sorted(tuple(r[c] for c in cols) for r in e1.hosts_live().collect())
-    h2 = sorted(tuple(r[c] for c in cols) for r in e2.hosts_live().collect())
-    assert h1 == h2
-    # and the log run really did stay on the delta path: no hosts base was
-    # rewritten after init
-    assert sorted(os.listdir(os.path.join(s1, "hosts"))) == ["r=-1"]
-    assert os.path.isdir(os.path.join(s1, "hosts_touch"))
-
-
 def test_read_rounds_skips_schema_less_empty_dirs(spark, tmp_path_factory):
     """A zero-row PARTITIONED write leaves a round dir with only _SUCCESS —
     no part file, no schema. On a long crawl a table goes quiet for a whole
@@ -251,8 +229,9 @@ def test_uncommitted_merge_round_resumes(spark, fixture_dir, tmp_path_factory,
 def test_state_reads_launch_no_jobs(spark, merge_oneshot):
     """Every state read passes its table's declared schema, so building the
     round's views of a committed snapshot — generations, tail rounds,
-    sidecar logs and both bases — launches no Spark job (a schema-less
-    parquet read runs one footer-inference job per call)."""
+    sidecar logs, the frontier base and the host crawl-delay view —
+    launches no Spark job (a schema-less parquet read runs one
+    footer-inference job per call)."""
     eng = merge_oneshot
     st, prev = eng.store, eng.store.committed_round()
     assert st.log_gens("url_seen") and st._round_dirs("frontier_ins"), \
@@ -265,12 +244,11 @@ def test_state_reads_launch_no_jobs(spark, merge_oneshot):
     j0 = last_job()
     for tbl in ("url_seen", "docs", "edges", "crawl_log", "round_metrics"):
         assert st.read_log(spark, tbl, prev) is not None
-    for tbl in ("frontier_ins", "frontier_del", "frontier_gains",
-                "hosts_touch", "hosts_new"):
+    for tbl in ("frontier_ins", "frontier_gains", "crawl_log"):
         assert st.read_rounds(spark, tbl, prev, drop_r=False) is not None
     eng._frontier_live(prev)
     eng._frontier_live(prev, due_band=0)
-    eng._hosts_live(prev)
+    assert eng._recent_fetches(prev + 1) is not None
     eng._pages()
     assert last_job() == j0
 
@@ -289,3 +267,83 @@ def test_empty_compacted_log_registers_no_generation(spark, fixture_dir,
     for tbl in ("docs", "edges"):
         troot = os.path.join(state, tbl)
         assert not os.path.isdir(troot) or not os.listdir(troot), os.listdir(troot)
+
+
+def _log_rounds(files) -> set[int]:
+    """The crawl_log round dirs that a plan's input files lie in."""
+    out = set()
+    for f in files:
+        m = re.search(r"/crawl_log/r=(-?\d+)/", f)
+        assert m, f
+        out.add(int(m.group(1)))
+    return out
+
+
+def test_host_gate_reads_only_delay_window(spark, fixture_dir, tmp_path,
+                                           merge_oneshot, monkeypatch):
+    """A host's last fetch round only matters while it can still hold the
+    host back: r >= last_fetch_round + delay with delay <= D, the longest
+    crawl delay (3 in the test fixture). So the host view of round r reads
+    the crawl_log dirs r-D+1 … r-1 and no older one, whatever compaction
+    did; with every delay 1 it reads no crawl_log dir at all. crawl_log is
+    never compacted, so neither the host view nor the frontier's delete
+    keys may list its root: they probe their round dirs by number."""
+    eng = merge_oneshot
+    r = eng.store.committed_round() + 1
+    assert eng.max_delay == 3 and r > 3
+    log_root = os.path.join(eng.store.root, "crawl_log")
+    real_listdir = os.listdir
+
+    def listdir(path="."):
+        assert os.path.abspath(path) != os.path.abspath(log_root), \
+            "listed the whole crawl_log"
+        return real_listdir(path)
+
+    monkeypatch.setattr(os, "listdir", listdir)
+    files = eng._recent_fetches(r).inputFiles()
+    eng._frontier_live(r - 1)
+    monkeypatch.undo()
+    assert _log_rounds(files) == set(range(r - eng.max_delay + 1, r))
+
+    fx = str(tmp_path / "fx")
+    shutil.copytree(fixture_dir, fx)
+    pol_path = os.path.join(fx, "politeness.parquet")
+    pol = pd.read_parquet(pol_path)
+    pol["crawl_delay_rounds"] = pol["crawl_delay_rounds"].clip(upper=1)
+    pol.to_parquet(pol_path, index=False)
+    ones = CrawlEngine(spark, fx, eng.store.root, MERGE_CFG)
+    assert ones.max_delay == 1 and ones._recent_fetches(r) is None
+
+
+def test_pre_crawl_log_layout_resumes(spark, fixture_dir, tmp_path,
+                                      merge_oneshot):
+    """A state dir written while the frontier delete log and the hosts
+    table still existed resumes unchanged: crawl_log holds every pop since
+    round 0, and the leftover frontier_del/hosts* dirs and manifest keys
+    are never read (their rows here would block every host and delete
+    every frontier key)."""
+    state = str(tmp_path / "legacy")
+    CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=3)
+    eng = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    hosts = sorted({row.host for row in eng.crawl_log().collect()})
+    legacy = {
+        "hosts/r=1": pd.DataFrame({
+            "host": hosts, "budget_per_round": 0, "crawl_delay_rounds": 99,
+            "last_fetch_round": 2,
+        }),
+        "hosts_new/r=2": pd.DataFrame({"host": hosts}),
+        "hosts_touch/r=2": pd.DataFrame({"host": hosts}),
+        "frontier_del/r=2": eng.frontier_live().select("url", "attempt").toPandas(),
+    }
+    for d, pdf in legacy.items():
+        os.makedirs(os.path.join(state, d))
+        pdf.to_parquet(os.path.join(state, d, "part-0.parquet"), index=False)
+    m = eng.store.manifest()
+    m["state"].update(hosts_base_round=1, frontier_del_rows=0)
+    with open(eng.store._manifest_path, "w") as f:
+        json.dump(m, f)
+
+    eng.run(max_rounds=MERGE_ROUNDS)
+    assert _trace(eng) == _trace(merge_oneshot)
+    for d in legacy:
+        assert os.listdir(os.path.join(state, d)) == ["part-0.parquet"], d

@@ -1,10 +1,10 @@
 """Real-world inputs either match the oracle or fail loudly: a seeds file
-with CRLF endings, padded and blank lines, and a manifest written before
-``frontier_del_rows`` existed."""
+with CRLF endings, padded and blank lines; and the size gate on the
+frontier's delete keys at its boundaries."""
 
 from __future__ import annotations
 
-import json
+import dataclasses
 import shutil
 
 from tests.conftest import TEST_CFG
@@ -48,25 +48,20 @@ def _hinted(df) -> bool:
     return "strategy=broadcast" in df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_missing_del_rows_count_is_over_the_cap(spark, fixture_dir, tmp_path):
-    """The frontier_del broadcast is size-gated on the manifest's row count.
-    A manifest without the count (written before it existed) must leave the
-    join unhinted, never force-broadcast a delete log of unknown size, and
-    the count stays unknown until a compaction truncates the log."""
+def test_del_rows_gate_boundaries(spark, fixture_dir, tmp_path):
+    """The delete keys (crawl_log rows since the frontier base) broadcast
+    into the live-frontier anti-join only while their count, summed from
+    the manifest history, is at most ``broadcast_del_rows_max``: 0 keys
+    means no anti-join at all, a count at the cap is hinted, one over it is
+    not."""
     eng = CrawlEngine(spark, fixture_dir, str(tmp_path / "s"), TEST_CFG)
+    eng.init_state()
+    assert eng._del_rows() == 0
+    plan = eng._frontier_live(-1)._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftAnti" not in plan
     eng.run(max_rounds=2)
-    st, cap = eng.store, TEST_CFG.broadcast_del_rows_max
-    m = st.manifest()
-    assert st.state("frontier_del_rows") > 0 and _hinted(eng._frontier_live(1))
-    for rows, hinted in ((0, True), (cap, True), (cap + 1, False), (None, False)):
-        m["state"].pop("frontier_del_rows", None)
-        if rows is not None:
-            m["state"]["frontier_del_rows"] = rows
-        with open(st._manifest_path, "w") as f:
-            json.dump(m, f)
-        assert eng._broadcast_dels() is hinted, rows
-        assert _hinted(eng._frontier_live(1)) is hinted, rows
-    # a round on the legacy manifest keeps the count unknown
-    eng.run(max_rounds=3)
-    assert st.committed_round() == 2 and "frontier_del_rows" in st.manifest()["state"]
-    assert st.state("frontier_del_rows") is None and not _hinted(eng._frontier_live(2))
+    n = eng._del_rows()
+    assert n == eng.crawl_log().count() > 0
+    for cap, hinted in ((n, True), (n - 1, False), (0, False)):
+        eng.cfg = dataclasses.replace(TEST_CFG, broadcast_del_rows_max=cap)
+        assert _hinted(eng._frontier_live(1)) is hinted, cap

@@ -102,19 +102,21 @@ class CrawlConfig:
     # frontier merge-on-read layout (Iceberg delete-file analog): the banded
     # base is partitioned by band = next_fetch_ts div (round_tick *
     # frontier_band_rounds) so the due scan partition-prunes to due bands; a
-    # round appends ins/del/gains sidecar logs instead of rewriting the
-    # frontier (a full rewrite per round is ~1 TB of parquet writes per
-    # 0.001% delta at the 10^10-URL design point)
+    # round appends ins/gains sidecar logs (its crawl_log rows are the
+    # deletes) instead of rewriting the frontier (a full rewrite per round
+    # is ~1 TB of parquet writes per 0.001% delta at the 10^10-URL design
+    # point)
     frontier_band_rounds: int = 4
     # fold the sidecar logs into a fresh banded base and merge the
     # url_seen/docs/edges round dirs into one generation every K committed
     # rounds (0 disables compaction); bounds sidecar-resolution and
     # listing costs to O(K), amortized rewrite cost to 1/K per round
     compact_every: int = 8
-    # frontier_del broadcast gate: the delete log broadcasts into the live-
-    # frontier anti-join only while its manifest-tracked row count (reset at
-    # compaction) is at or below this bound (~2M rows x ~50 B/key ≈ 100 MB,
-    # the practical ceiling); beyond it the join is unhinted and AQE decides
+    # delete-key broadcast gate: the popped (url, attempt) keys since the
+    # frontier base (crawl_log rounds; their count is the manifest's popped
+    # sum) broadcast into the live-frontier anti-join only while they number
+    # at most this bound (~2M rows x ~50 B/key ≈ 100 MB, the practical
+    # ceiling); beyond it the join is unhinted and AQE decides
     broadcast_del_rows_max: int = 2_000_000
     # leveled compaction for the append-only logs (url_seen/docs/edges): a
     # MINOR compaction folds only the K-round tail into a NEW generation dir

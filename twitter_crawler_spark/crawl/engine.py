@@ -4,29 +4,37 @@ round, replacing the reference's actor/thread topology
 
 Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
 
-  due      = frontier ⋉ hosts   (next_fetch_ts ≤ t_r, crawl-delay gate)   F2/F7
+  due      = frontier ⋈ politeness ⋈ recent fetches (next_fetch_ts ≤ t_r,
+             crawl-delay gate; a host's last fetch round is max(round) over
+             the crawl_log rounds r-D+1 … r-1, D the largest delay)      F2/F7
   popped   = salted two-stage per-host budget window + global total order F5/F8
   fetched  = pages ⋈ broadcast(popped) with bucket partition pruning and
              the cursor predicate pushed to the parquet scan              J9/F12/S2
   links    = mapInPandas outlink extraction → canonicalize → redirects    P3/P8
   new      = robots longest-prefix filter → bloom → cuckoo → exact
              anti-join vs url_seen                                        D1-D4
-  frontier' = merge-on-read delta: popped keys → frontier_del (equality-
-             delete files), reinserted ∪ new → frontier_ins (banded),
-             OPIC cash → frontier_gains; NO rewrite of the 10^10-row
-             base — the live view is base ∪ ins ∖ del with gains folded
-             at read, and the due scan partition-prunes to due
-             next_fetch_ts bands                                          F1/F3/F4/A15
+  frontier' = merge-on-read delta: reinserted ∪ new → frontier_ins
+             (banded), OPIC cash → frontier_gains; the round's crawl_log
+             rows are its equality deletes (popped (url, attempt) keys).
+             NO rewrite of the 10^10-row base — the live view is
+             base ∪ ins ∖ crawl_log keys with gains folded at read, and the
+             due scan partition-prunes to due next_fetch_ts bands       F1/F3/F4/A15
   compact  = every K rounds the round writes a fresh banded frontier base
-             and hosts base in place of its sidecar deltas, and folds
-             url_seen/docs/edges (prior slice ∪ the round's own rows) into
-             leveled generation dirs — minor folds are O(batch·K); a major
-             merge (every max_log_gens folds, LSM size-tiering) is the only
-             O(history) rewrite (Iceberg rewrite_data_files analog). These
-             writes share the round's one concurrent write pool: a merge
-             round has a single write phase, like any other round
+             in place of its sidecar deltas, and folds url_seen/docs/edges
+             (prior slice ∪ the round's own rows) into leveled generation
+             dirs — minor folds are O(batch·K); a major merge (every
+             max_log_gens folds, LSM size-tiering) is the only O(history)
+             rewrite (Iceberg rewrite_data_files analog). These writes share
+             the round's one concurrent write pool: a merge round has a
+             single write phase, like any other round
   commit   = parquet round dirs + versioned bloom sidecars + atomic
              manifest replace (Iceberg snapshot analog)                   C1/C4
+
+crawl_log is the one record of what a round popped: the frontier's delete
+log and the host crawl-delay gate are both read from it, so no other table
+records a pop. A state dir written before that (with ``frontier_del`` and
+``hosts*`` dirs) resumes unchanged, because crawl_log holds every pop since
+round 0; those leftover dirs are never read again.
 
 State reads pass the declared schemas (schemas.STORE_TABLES, PAGES_LAYOUT),
 so building a round's views of the snapshot launches no Spark job.
@@ -65,17 +73,6 @@ from twitter_crawler_spark.functions.hashing import murmur3_64_udf
 from twitter_crawler_spark.functions.html import decode_html, extract_links
 from twitter_crawler_spark.functions.urls import canonicalize_udf
 from twitter_crawler_spark.session import local_df
-
-_TIMING = os.environ.get("TCS_TIMING", "") == "1"
-
-
-def _tlog(label: str, t0: float) -> float:
-    """Stage-timing probe (enabled via TCS_TIMING=1); returns now."""
-    now = time.time()
-    if _TIMING:
-        print(f"    [timing] {label}: {now - t0:.2f}s", flush=True)
-    return now
-
 
 # Python's whitespace (``str.isspace``, all of it in the BMP) as a Java regex
 # class: seed lines are stripped exactly as the oracle's ``line.strip()``
@@ -158,6 +155,11 @@ class CrawlEngine:
         self.redirects = s.read.parquet(os.path.join(fx, "redirects.parquet")).cache()
         self.robots = s.read.parquet(os.path.join(fx, "robots.parquet")).cache()
         self.politeness = s.read.parquet(os.path.join(fx, "politeness.parquet")).cache()
+        # D, the longest crawl delay any host can have: a fetch more than
+        # D-1 rounds old can no longer hold a host back, so the crawl-delay
+        # gate reads only the last D-1 crawl_log rounds
+        pol_max = self.politeness.agg(F.max("crawl_delay_rounds")).first()[0]
+        self.max_delay = max(self.cfg.default_crawl_delay, pol_max or 0)
         # seeds stay a PATH, not a driver list: init reads them with
         # spark.read.text so a 10^7-line seed file (the design-point hint)
         # is parsed executor-parallel instead of materializing through the
@@ -240,10 +242,10 @@ class CrawlEngine:
 
     def _frontier_live(self, prev: int, due_band: int | None = None) -> DataFrame:
         """Merge-on-read live frontier as of committed round ``prev``:
-        banded base ∪ frontier_ins appends, minus frontier_del keys (the
-        popped (url, attempt) rows — equality-delete semantics; a key is
-        inserted at most once and deleted at most once, since attempts only
-        grow per url), with pending OPIC gains folded into ``score``.
+        banded base ∪ frontier_ins appends, minus the (url, attempt) keys of
+        the crawl_log rounds after the base (equality-delete semantics; a
+        key is inserted at most once and popped at most once, since attempts
+        only grow per url), with pending OPIC gains folded into ``score``.
 
         Gains fold: a row written at round k has all gains ≤ k applied (the
         writer folds that round's gains in), so its pending cash is the sum
@@ -253,12 +255,11 @@ class CrawlEngine:
         per-url struct list folded by a JVM higher-order function.
 
         Join-side choices: the DELETE keys are O(batch x compact_every) by
-        construction (each popped (url, attempt) appears once), and the
-        manifest maintains that row count arithmetically
-        (``frontier_del_rows``: += n_popped per round, reset at
-        compaction) — so the broadcast decision is a SIZE-GATED hint, not
-        a blind one (VERDICT r4 #2): below
-        ``CrawlConfig.broadcast_del_rows_max`` the log broadcasts (hinted
+        construction (each popped (url, attempt) appears once), and their
+        count is the manifest's per-round ``popped`` sum since the base
+        (``_del_rows``) — so the broadcast decision is a SIZE-GATED hint,
+        not a blind one (VERDICT r4 #2): up to
+        ``CrawlConfig.broadcast_del_rows_max`` the keys broadcast (hinted
         — skipping the due-slice shuffle AQE's demote-to-broadcast path
         would still materialize map-side, measured ~1 s/round at the
         bench fixture); above it the join is left unhinted and the worst
@@ -278,9 +279,10 @@ class CrawlEngine:
         if due_band is not None:
             rows = rows.where(F.col("band") <= due_band)
         rows = rows.withColumnRenamed("r", "_gthrough").drop("band")
-        dels = st.read_rounds(s, "frontier_del", prev, min_round=g + 1)
-        if dels is not None:
-            if self._broadcast_dels():
+        pops = st.read_rounds(s, "crawl_log", prev, min_round=g + 1)
+        if pops is not None:
+            dels = pops.select("url", "attempt")
+            if self._del_rows() <= self.cfg.broadcast_del_rows_max:
                 dels = F.broadcast(dels)
             rows = rows.join(dels, ["url", "attempt"], "left_anti")
         gains = st.read_rounds(s, "frontier_gains", prev, min_round=g + 1, drop_r=False)
@@ -306,55 +308,27 @@ class CrawlEngine:
             )
         return rows.select(*[f.name for f in schemas.FRONTIER.fields])
 
-    def _broadcast_dels(self) -> bool:
-        """The delete-log size gate of ``_frontier_live``. A manifest that
-        lacks ``frontier_del_rows`` (written before the count existed)
-        reads as over the cap: the join stays unhinted rather than
-        broadcasting a log of unknown size."""
-        n = self.store.state("frontier_del_rows")
-        return n is not None and int(n) <= self.cfg.broadcast_del_rows_max
+    def _del_rows(self) -> int:
+        """Delete keys since the frontier base: the rows the committed
+        rounds after it popped, summed from the manifest history (every
+        round since round 0 records its ``popped`` count)."""
+        m = self.store.manifest()
+        g = int(m["state"]["frontier_base_round"])
+        return sum(h["popped"] for h in m["history"] if h["round"] > g)
 
-    def _hosts_live(self, prev: int) -> DataFrame:
-        """Merge-on-read live hosts table as of committed round ``prev`` —
-        the same treatment the frontier got, applied to the second-largest
-        state table (O(#hosts) ~ 10^8 rows at the design point): a base
-        snapshot (``hosts/r=<g>``) plus two per-round O(batch) sidecar logs,
-        ``hosts_new`` (insert-once rows for hosts first discovered that
-        round, with politeness defaults) and ``hosts_touch`` (keys of hosts
-        fetched that round; the partition column ``r`` is the value). A
-        round writes only its delta instead of rewriting all 10^8 rows to
-        bump ``last_fetch_round`` on the ~10^4 hosts it actually touched.
-
-        Resolution is last-writer-wins without a full-table groupBy:
-        ``last_fetch_round`` is monotone (touch rounds > g by construction,
-        base values ≤ g), so a left join against the aggregated touch log
-        (tiny → AQE broadcasts it) and a coalesce reproduce the rewrite
-        exactly. Inserts never collide with base rows because ``hosts_new``
-        is anti-joined against the live view at append time (insert-once)."""
-        st, s = self.store, self.spark
-        g = int(st.state("hosts_base_round", st.state("frontier_base_round")))
-        rows = st.read_state(s, "hosts", g)
-        news = st.read_rounds(s, "hosts_new", prev, min_round=g + 1)
-        if news is not None:
-            rows = rows.unionByName(news)
-        touch = st.read_rounds(
-            s, "hosts_touch", prev, min_round=g + 1, drop_r=False
+    def _recent_fetches(self, r: int) -> DataFrame | None:
+        """``(host, last_fetch_round)`` for the hosts whose last fetch can
+        still hold them back at round r. The gate is
+        ``r >= last_fetch_round + delay`` with ``delay <= D``
+        (``max_delay``), so a fetch before round r-D+1 never blocks and
+        only the crawl_log rounds r-D+1 … r-1 are read; with D ≤ 1 that
+        range is empty, and the result is None."""
+        log = self.store.read_rounds(
+            self.spark, "crawl_log", r - 1, min_round=r - self.max_delay + 1
         )
-        if touch is not None:
-            latest = touch.groupBy("host").agg(F.max("r").alias("_lfr"))
-            rows = (
-                rows.join(latest, "host", "left")
-                .withColumn(
-                    "last_fetch_round",
-                    F.coalesce(F.col("_lfr").cast("int"), F.col("last_fetch_round")),
-                )
-                .drop("_lfr")
-            )
-        return rows
-
-    def hosts_live(self) -> DataFrame:
-        """Public live-hosts view at the committed snapshot."""
-        return self._hosts_live(self.store.committed_round())
+        if log is None:
+            return None
+        return log.groupBy("host").agg(F.max("round").alias("last_fetch_round"))
 
     def frontier_live(self) -> DataFrame:
         """Public live-frontier view at the committed snapshot."""
@@ -364,8 +338,8 @@ class CrawlEngine:
 
     def init_state(self) -> None:
         """Round -1 snapshot: banded frontier base from seeds
-        (robots-filtered), hosts from the politeness table, url_seen =
-        scheduled seeds, fresh bloom shards + manifest bucket map."""
+        (robots-filtered), url_seen = scheduled seeds, fresh bloom shards +
+        manifest bucket map."""
         cfg, s = self.cfg, self.spark
         # executor-parallel seed ingest (S1): text lines → stripped non-blank
         # urls; at 10^7 seeds this is a distributed scan, never a driver list
@@ -391,7 +365,6 @@ class CrawlEngine:
             *[F.col(f.name).cast(f.dataType) for f in schemas.FRONTIER.fields]
         ).cache()
         n0 = fr.count()
-        hosts = self.politeness.withColumn("last_fetch_round", F.lit(None).cast("int"))
         # url_seen is laid out bucketed by url_hash % seen_partitions (like
         # pages) so the exact dedup tier partition-prunes to candidate buckets
         # instead of scanning the whole seen table every round — the SPJ
@@ -401,7 +374,6 @@ class CrawlEngine:
             self._seen_bucket(),
         )
         self.store.write_round(fr.withColumn("band", self._band()), "frontier", -1)
-        self.store.write_round(hosts, "hosts", -1)
         self.store.write_round(seen, "url_seen", -1)
         bloom_map: dict[str, int] = {}
         bloom_load: dict[str, list] = {}
@@ -423,9 +395,7 @@ class CrawlEngine:
             {"seeds": self._n_seed_lines},
             state={
                 "frontier_base_round": -1,
-                "hosts_base_round": -1,
                 "frontier_count": n0,
-                "frontier_del_rows": 0,
                 "log_gens": {},
                 "bloom_map": bloom_map,
                 "bloom_load": bloom_load,
@@ -458,16 +428,25 @@ class CrawlEngine:
     def _order_cols() -> list:
         return [F.col("depth").asc(), F.col("score").desc(), F.col("url").asc()]
 
-    def _pop_survivors(self, frontier: DataFrame, hosts: DataFrame, t_r: int, r: int) -> DataFrame:
+    def _pop_survivors(
+        self, frontier: DataFrame, recent: DataFrame | None, t_r: int, r: int
+    ) -> DataFrame:
         """Due filter + crawl-delay gate + salted per-host budget window.
+        Budgets and delays come from the politeness table (config defaults
+        for hosts absent from it), last fetch rounds from ``recent``
+        (``_recent_fetches``; None: no host is held back).
 
         Hot-host skew: stage 1 ranks inside (host, salt) slices so no single
         task sorts a whole hot domain; stage 2 re-ranks the ≤ salt*budget
         survivors per host — result is identical to a direct per-host top-k."""
         cfg = self.cfg
+        due = frontier.join(self.politeness, "host", "left")
+        if recent is None:
+            due = due.withColumn("last_fetch_round", F.lit(None).cast("int"))
+        else:
+            due = due.join(recent, "host", "left")
         due = (
-            frontier.join(hosts, "host", "left")
-            .withColumn("budget", F.coalesce("budget_per_round", F.lit(cfg.default_budget)))
+            due.withColumn("budget", F.coalesce("budget_per_round", F.lit(cfg.default_budget)))
             .withColumn("delay", F.coalesce("crawl_delay_rounds", F.lit(cfg.default_crawl_delay)))
             .where(
                 (F.col("next_fetch_ts") <= t_r)
@@ -598,11 +577,10 @@ class CrawlEngine:
         # The due scan partition-prunes to bands ≤ t_r div band_ticks —
         # future-scheduled bands are never read.
         due_live = self._frontier_live(prev, due_band=t_r // cfg.band_ticks)
-        hosts = self._hosts_live(prev).localCheckpoint()
-        _t = time.time()
+        recent = self._recent_fetches(r)
 
         # ---- pop: due filter + crawl-delay + salted per-host budget window ----
-        survivors = self._pop_survivors(due_live, hosts, t_r, r)
+        survivors = self._pop_survivors(due_live, recent, t_r, r)
         # The checkpoint pins the sampled range partitioning so the offsets
         # collected below can never disagree with the window's partitions
         # (and cuts lineage: the batch is consumed by five downstream stages;
@@ -623,7 +601,6 @@ class CrawlEngine:
             acc += pid_totals[pid]
         popped = self._attach_seq(ranged, offsets).localCheckpoint()
         bucket_counts = [row for row in pb_counts]
-        _t = _tlog("pop", _t)
 
         # ---- fetch join: bucket partition pruning + broadcast of the batch ----
         lang_ok = F.lit(True) if cfg.lang_filter is None else (F.col("lang") == cfg.lang_filter)
@@ -650,7 +627,6 @@ class CrawlEngine:
             F.max("ts_logical").alias("new_cursor"),
             F.max_by("html", "ts_logical").alias("latest_html"),
         ).localCheckpoint()
-        _t = _tlog("fetch_join", _t)
 
         # ---- outlink extraction (one fused Arrow pass) + canonicalize --------
         def _extract(it):
@@ -689,7 +665,6 @@ class CrawlEngine:
             .agg(F.min("anchor").alias("anchor"))
             .localCheckpoint()  # one Arrow extraction pass, many consumers
         )
-        _t = _tlog("extract", _t)
 
         # ---- edges + docs appends --------------------------------------------
         # edges is laid out bucketed by src_bucket = murmur3_64(src_url) %
@@ -817,7 +792,6 @@ class CrawlEngine:
             ).collect()
         }
         n_new = sum(new_stats.values())
-        _t = _tlog("seen_tiers", _t)
         n_dupes = n_candidates - n_blocked - n_new
 
         new_base = new_urls.select(
@@ -865,8 +839,8 @@ class CrawlEngine:
         )
 
         # ---- frontier delta (merge-on-read) ----------------------------------------
-        # The round never rewrites the frontier base: popped keys become
-        # equality-delete rows (on (url, attempt) — under fan-out, popping
+        # The round never rewrites the frontier base: its crawl_log rows are
+        # the equality deletes (on (url, attempt) — under fan-out, popping
         # one copy must not remove the url's other scheduled copies), the
         # reinserted + new rows become banded inserts, and the OPIC cash
         # becomes a gains-log append. Rows written here fold this round's
@@ -881,39 +855,22 @@ class CrawlEngine:
             .drop("gain")
             .select(*[f.name for f in schemas.FRONTIER.fields])
         )
-        dels_df = popped.select("url", "attempt")
         # frontier size is maintained arithmetically in the manifest — no
         # O(frontier) count job: inserts = reinsertable survivors (from the
         # fused pop-stats agg below) + scheduled copies of new urls
         sched_mult = cfg.max_attempts if cfg.fanout_revisits else 1
         base_round = int(self.store.state("frontier_base_round"))
         compact = cfg.compact_every > 0 and (r - base_round) >= cfg.compact_every
-        _t = _tlog("frontier_delta", _t)
-
-        # ---- hosts delta (merge-on-read) --------------------------------------------
-        # The round never rewrites the hosts table: fetched host keys become
-        # a hosts_touch append (last-writer-wins on the monotone
-        # last_fetch_round), first-seen hosts become a hosts_new append with
-        # politeness defaults (insert-once: the anti-join is against the
-        # live view, so a host row is appended exactly one round).
-        hosts_touch = popped.select("host").distinct()
-        hosts_new = (
-            new_base.select("host").distinct()
-            .join(hosts.select("host"), "host", "left_anti")
-            .withColumn("budget_per_round", F.lit(cfg.default_budget))
-            .withColumn("crawl_delay_rounds", F.lit(cfg.default_crawl_delay))
-            .withColumn("last_fetch_round", F.lit(None).cast("int"))
-        )
 
         # ---- compaction (Iceberg rewrite_data_files analog) -------------------
-        # every compact_every rounds the round writes fresh bases instead of
-        # its sidecar deltas, and folds url_seen/docs/edges into generation
-        # dirs, so sidecar broadcast size, dir listings and dead-row carry
-        # stay O(K) — amortized cost 1/K of a full rewrite per round. The
-        # folds are written in the same concurrent pool as every other
-        # output: a merge round is one write phase, and its own url_seen/
-        # docs/edges rows go straight into the generation, never through an
-        # r=<r> dir read back.
+        # every compact_every rounds the round writes a fresh frontier base
+        # instead of its sidecar deltas, and folds url_seen/docs/edges into
+        # generation dirs, so sidecar broadcast size, dir listings and
+        # dead-row carry stay O(K) — amortized cost 1/K of a full rewrite per
+        # round. The folds are written in the same concurrent pool as every
+        # other output: a merge round is one write phase, and its own
+        # url_seen/docs/edges rows go straight into the generation, never
+        # through an r=<r> dir read back.
         st = self.store
         seen_new = new_base.select(
             "url_hash", "url", F.lit(r).alias("first_round"), self._seen_bucket(),
@@ -925,7 +882,10 @@ class CrawlEngine:
             # plus its gains, plus its inserts
             f_base = (
                 self._frontier_live(prev)
-                .join(F.broadcast(dels_df), ["url", "attempt"], "left_anti")
+                .join(
+                    F.broadcast(popped.select("url", "attempt")),
+                    ["url", "attempt"], "left_anti",
+                )
                 .join(gains_u, "url", "left")
                 .withColumn(
                     "score",
@@ -935,23 +895,7 @@ class CrawlEngine:
                 .select(*[f.name for f in schemas.FRONTIER.fields])
                 .unionByName(ins_rows)
             )
-            # hosts: the live view (as of prev) + this round's delta; the
-            # sidecar logs truncate with it
-            h_base = (
-                hosts.join(
-                    hosts_touch.withColumn("_lfr", F.lit(r)), "host", "left"
-                )
-                .withColumn(
-                    "last_fetch_round",
-                    F.coalesce(F.col("_lfr"), F.col("last_fetch_round")),
-                )
-                .drop("_lfr")
-                .unionByName(hosts_new)
-            )
-            writes = [
-                (f_base.withColumn("band", self._band()), "frontier"),
-                (h_base, "hosts"),
-            ]
+            writes = [(f_base.withColumn("band", self._band()), "frontier")]
             # leveled compaction of the append-only logs: MINOR folds only
             # the tail rounds since the newest generation (O(batch·K) bytes;
             # the 10^10-row url_seen history is NOT rewritten every K
@@ -978,11 +922,8 @@ class CrawlEngine:
                 (seen_new, "url_seen"),
                 (edges_new, "edges"),
                 (docs_new, "docs"),
-                (dels_df, "frontier_del"),
                 (ins_rows.withColumn("band", self._band()), "frontier_ins"),
                 (gains_u, "frontier_gains"),
-                (hosts_touch, "hosts_touch"),
-                (hosts_new, "hosts_new"),
             ]
         writes += [
             (
@@ -1059,18 +1000,7 @@ class CrawlEngine:
             n_reinserted = sum(int(row["reinsertable"]) for row in pop_stats.values())
         n_ins = n_reinserted + n_new * sched_mult
         frontier_n = int(st.state("frontier_count")) - n_popped + n_ins
-        # delete-log row count since the frontier base — the arithmetic
-        # input to the size-gated broadcast in _frontier_live (each popped
-        # (url, attempt) key appears in the log exactly once); compaction
-        # truncates the log, so the counter resets with it, and a count
-        # missing from an older manifest stays unknown until then
-        del_rows = st.state("frontier_del_rows")
-        new_state: dict = {
-            "frontier_count": frontier_n,
-            "frontier_del_rows": 0 if compact
-            else None if del_rows is None else int(del_rows) + n_popped,
-        }
-        _t = _tlog("writes_parallel", _t)
+        new_state: dict = {"frontier_count": frontier_n}
 
         major_done: list[str] = []
         if compact:
@@ -1083,7 +1013,6 @@ class CrawlEngine:
                 if major:
                     major_done.append(tbl)
             new_state["frontier_base_round"] = r
-            new_state["hosts_base_round"] = r
             new_state["log_gens"] = log_gens
             # ---- bloom capacity policy (VERDICT r4 #2): a bucket whose
             # lifetime-insert load n/m crossed bloom_max_load — or whose
@@ -1120,7 +1049,6 @@ class CrawlEngine:
                             int(row["n_total"]), int(row["m_bits"]),
                             bool(row["overflowed"]),
                         ]
-                _t = _tlog("bloom_rebuild", _t)
 
         # bloom manifest map: buckets whose shard this round replaced
         bloom_touch = [int(row["bucket"]) for row in bloom_rows]
@@ -1171,9 +1099,7 @@ class CrawlEngine:
         # construction — local_df plans a LocalTableScan (no Python workers
         # at action time) and the coalesce keeps it to one part file
         metrics_df = local_df(self.spark, rows, schemas.ROUND_METRICS).coalesce(1)
-        _t = _tlog("metrics_assemble", _t)
         st.write_round(metrics_df, "round_metrics", r)
-        _t = _tlog("metrics", _t)
 
         # ---- atomic snapshot commit ---------------------------------------------------
         st.commit(
@@ -1193,10 +1119,7 @@ class CrawlEngine:
             st.gc_bloom(superseded)
         if compact:
             st.gc_rounds_below("frontier", r)
-            st.gc_rounds_below("hosts", r)
-            for tbl in ("frontier_ins", "frontier_del", "frontier_gains",
-                        "hosts_touch", "hosts_new",
-                        "url_seen", "docs", "edges"):
+            for tbl in ("frontier_ins", "frontier_gains", "url_seen", "docs", "edges"):
                 st.gc_rounds_below(tbl, r + 1)
             # generation dirs are GC'd only after a MAJOR merge supersedes
             # them; minor compactions leave prior generations live
@@ -1207,7 +1130,7 @@ class CrawlEngine:
         # storage accumulate across a long crawl
         for df in (
             ranged, popped, fetched, res, outlinks, flagged, new_urls,
-            popped_res, hosts,
+            popped_res,
         ):
             df.unpersist()
         return frontier_n

@@ -15,10 +15,12 @@ the same *semantics* on plain parquet + an atomically-replaced JSON manifest:
 * the **frontier is merge-on-read** (the Iceberg MERGE / delete-file
   analog): a banded base (``frontier/r=<g>/band=<B>`` where band =
   next_fetch_ts div band_ticks) plus per-round sidecar logs —
-  ``frontier_ins`` (inserted rows, banded), ``frontier_del`` (popped
-  (url, attempt) keys ≡ equality-delete files), ``frontier_gains`` (pending
-  OPIC cash). A round writes only its O(batch) delta; the live view is
-  base ∪ ins ∖ del with gains folded at read time. Periodic compaction
+  ``frontier_ins`` (inserted rows, banded) and ``frontier_gains`` (pending
+  OPIC cash). The equality deletes are the popped (url, attempt) keys of
+  the ``crawl_log`` rounds after the base: crawl_log is the one record of
+  a round's pops, so no separate delete log is written. A round writes
+  only its O(batch) delta; the live view is base ∪ ins ∖ crawl_log keys
+  with gains folded at read time. Periodic compaction
   (``CrawlConfig.compact_every``) rewrites the base and truncates the logs,
   exactly Iceberg's rewrite_data_files maintenance action;
 * append-only logs that the round loop reads (``url_seen``, ``docs``,
@@ -32,7 +34,7 @@ the same *semantics* on plain parquet + an atomically-replaced JSON manifest:
   ``max_log_gens × compact_every`` rounds;
 * a merge round is **single-phase**: it writes each compacted log's new
   generation straight from the prior slice ∪ the round's own delta, and the
-  new frontier and hosts bases, concurrently with its other writes — it
+  new frontier base, concurrently with its other writes — it
   never writes an ``r=<k>`` dir for a compacted log only to read it back.
   A generation whose write produced no data files is removed instead of
   being listed in ``log_gens``;
@@ -45,18 +47,16 @@ the same *semantics* on plain parquet + an atomically-replaced JSON manifest:
 * the bloom/cuckoo sidecar for each bucket is resolved through the
   manifest's ``bloom_map`` (bucket → newest committed round that wrote that
   bucket's shard) — O(1) per bucket, no newest-first filesystem probing;
-* ``hosts`` is merge-on-read too (O(#hosts) ~ 10^8 rows at the design
-  point): a base snapshot plus per-round ``hosts_new`` (insert-once rows)
-  and ``hosts_touch`` (fetched host keys; last-writer-wins on the monotone
-  ``last_fetch_round``) sidecar logs, folded into a fresh base by the same
-  periodic compaction. The READ side of hosts stays a full scan per round
-  (the pop path joins budgets/delays to the due slice, and new-host
-  discovery anti-joins against host keys) — deliberately: the scan is
-  O(#hosts), 10^2-10^3 x smaller than the frontier, carries no per-round
-  write amplification, and cannot be key-pruned because the due slice's
-  host set is dense in any hash-bucket layout. The costs that scale with
-  crawl LENGTH (writes, listings, shard probes) are the ones made O(batch)
-  or O(1) above.
+* **host state is derived, not stored**: budgets and delays are the
+  static politeness input, and a host's last fetch round is ``max(round)``
+  over the ``crawl_log`` rounds that can still gate the round (the last
+  D-1, D the longest crawl delay), read at pop time. A round writes
+  nothing for its hosts;
+* a state dir written when the frontier delete log (``frontier_del``) and
+  the hosts table (``hosts``, ``hosts_new``, ``hosts_touch``) still existed
+  resumes unchanged: ``crawl_log`` holds every pop since round 0, and those
+  dirs (and the manifest's ``hosts_base_round`` / ``frontier_del_rows``
+  keys) are never read again — dead bytes.
 
 On a real cluster this class is swapped for ``spark.table("cat.db.t")`` +
 Iceberg ``MERGE INTO`` / snapshot IDs; the engine only touches this
@@ -74,6 +74,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from twitter_crawler_spark import schemas
 
+# Every table a state dir can hold. The RETIRED ones are written by no
+# round any more (crawl_log is the one record of a round's pops, and host
+# state is derived from it), but a state dir from before that change still
+# holds them, so recovery clears their uncommitted rounds like any other
+# table's; perfbench/metrics.py also names a per-table write time after
+# every table listed here (0 for a retired one).
+RETIRED_TABLES = ("hosts", "frontier_del", "hosts_touch", "hosts_new")
 STATE_TABLES = ("frontier", "hosts")
 LOG_TABLES = (
     "url_seen", "edges", "docs", "crawl_log", "round_metrics", "evictions",
@@ -290,13 +297,18 @@ class SnapshotStore:
     ) -> DataFrame | None:
         """Union of per-round appends with ``min_round <= r <= upto_round``
         (partition column ``r`` from the layout). The caller bounds
-        ``min_round`` (e.g. to the frontier base round) so the scan lists and
-        reads O(rounds-since-compaction) dirs, never the full history."""
+        ``min_round`` (e.g. to the frontier base round) so the scan probes
+        and reads O(upto_round - min_round) dirs and never lists the table,
+        whose history (crawl_log's) may be the whole crawl."""
         parts = schemas.STORE_TABLES[table][1]
-        dirs = [
-            p for k, p in self._round_dirs(table)
-            if k <= upto_round and (min_round is None or k >= min_round)
-        ]
+        if min_round is None:
+            dirs = [p for k, p in self._round_dirs(table) if k <= upto_round]
+        else:
+            dirs = [
+                p for p in (self.round_dir(table, k)
+                            for k in range(min_round, upto_round + 1))
+                if os.path.isdir(p)
+            ]
         # A zero-row PARTITIONED write leaves a round dir holding only
         # _SUCCESS (no part file): on a long crawl a table can go quiet for
         # a whole compaction window (e.g. docs once first-fetches dry up),
@@ -341,8 +353,8 @@ class SnapshotStore:
         return df
 
     def read_state(self, spark: SparkSession, table: str, round_: int) -> DataFrame:
-        """A base snapshot (``frontier``/``hosts`` at ``round_``), without
-        the ``r`` column."""
+        """A base snapshot (``frontier`` at ``round_``), without the ``r``
+        column."""
         path = self.round_dir(table, round_)
         _has_data_files(path, schemas.STORE_TABLES[table][1])
         return self._read(spark, table, [path], path, False)

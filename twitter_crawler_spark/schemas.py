@@ -87,18 +87,9 @@ DOCS = StructType(
     ]
 )
 
-# per-host politeness state (threads/RedisRetweetsThread.scala:20-25 analog)
-HOSTS = StructType(
-    [
-        StructField("host", StringType(), False),
-        StructField("budget_per_round", IntegerType(), False),
-        StructField("crawl_delay_rounds", IntegerType(), False),
-        StructField("last_fetch_round", IntegerType()),
-    ]
-)
-
 # the golden crawl-order trace (implicit zset pop order,
-# RedisFutureStorage.scala:50,94)
+# RedisFutureStorage.scala:50,94) and the one record of a round's pops: the
+# frontier's equality-delete keys and the hosts' last fetch rounds
 CRAWL_LOG = StructType(
     [
         StructField("round", IntegerType(), False),
@@ -130,14 +121,6 @@ ROUND_METRICS = StructType(
     ]
 )
 
-# popped (url, attempt) keys: the frontier's equality-delete log
-FRONTIER_DEL = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("attempt", IntegerType(), False),
-    ]
-)
-
 # per-round OPIC cash owed to a url, folded into ``score`` at read time
 FRONTIER_GAINS = StructType(
     [
@@ -145,9 +128,6 @@ FRONTIER_GAINS = StructType(
         StructField("gain", LongType(), False),
     ]
 )
-
-# hosts fetched in a round; the round dir's ``r`` is their last_fetch_round
-HOSTS_TOUCH = StructType([StructField("host", StringType(), False)])
 
 # urls evicted as unproductive revisits
 EVICTIONS = StructType(
@@ -172,6 +152,7 @@ ROBOTS = StructType(
     ]
 )
 
+# per-host politeness input (threads/RedisRetweetsThread.scala:20-25 analog)
 POLITENESS = StructType(
     [
         StructField("host", StringType(), False),
@@ -194,16 +175,11 @@ PAGES_LAYOUT = _with_partition(PAGES, "bucket")
 
 # snapshot-store table → (schema, partition columns of one round or
 # generation dir). The schema lists the data columns, then the partition
-# columns, in the order the engine writes them; ``hosts_new`` rows are
-# ordinary hosts rows.
+# columns, in the order the engine writes them.
 STORE_TABLES: dict[str, tuple[StructType, tuple[str, ...]]] = {
     "frontier": (_with_partition(FRONTIER, "band"), ("band",)),
     "frontier_ins": (_with_partition(FRONTIER, "band"), ("band",)),
-    "frontier_del": (FRONTIER_DEL, ()),
     "frontier_gains": (FRONTIER_GAINS, ()),
-    "hosts": (HOSTS, ()),
-    "hosts_new": (HOSTS, ()),
-    "hosts_touch": (HOSTS_TOUCH, ()),
     "url_seen": (_with_partition(URL_SEEN, "bucket"), ("bucket",)),
     "docs": (_with_partition(DOCS, "bucket"), ("bucket",)),
     "edges": (EDGES, ("src_bucket",)),

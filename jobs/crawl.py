@@ -36,7 +36,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--no-evict", action="store_true",
                    help="disable unproductive-url eviction")
     p.add_argument("--no-filters", action="store_true",
-                   help="exact-only dedup (skip bloom/cuckoo tiers)")
+                   help="exact-only dedup (skip the bloom tier)")
     p.add_argument("--shuffle-partitions", type=int, default=None,
                    help="fixed shuffle partition count (size to the data, "
                         "not the executor count)")

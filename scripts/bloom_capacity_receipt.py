@@ -1,16 +1,16 @@
 """Saturation receipt for the bloom-shard capacity policy (VERDICT r4 #2).
 
 Runs the SAME crawl twice on one fixture with deliberately tiny shard
-geometry (1024-bit blooms, 256-bucket cuckoos — ~128-key bloom capacity at
-bloom_max_load=0.125), once with ``bloom_autogrow=False`` (the pre-round-5
+geometry (1024-bit blooms — ~128-key capacity at bloom_max_load=0.125),
+once with ``bloom_autogrow=False`` (the pre-round-5
 fixed-geometry behavior) and once with the policy on. Records, per round:
 
 * measured bloom FP rate on genuinely-new urls (1 − bloom_negative/new:
   the fraction of new urls the saturated bloom wrongly claimed to have
-  seen, each of which costs a cuckoo probe + possibly an exact-join row);
-* exact-tier candidate share (1 − (bloom_negative+cuckoo_rejected) /
-  (new+dupes)): the slice of candidates the pruning tiers failed to
-  classify, which must pay the url_seen anti-join;
+  seen, each of which costs an exact-join row);
+* exact-tier candidate share (1 − bloom_negative / (new+dupes)): the
+  slice of candidates the bloom tier failed to classify, which must pay
+  the url_seen anti-join;
 * final per-bucket geometry and rebuild count under the policy.
 
 Correctness invariant checked: the two runs' work counters (fetched / new /
@@ -33,7 +33,6 @@ from twitter_crawler_spark.session import get_spark
 
 TINY = dict(
     bloom_bits_per_partition=1 << 10,
-    cuckoo_buckets_per_partition=1 << 8,
     seen_partitions=8,
     compact_every=3,
     max_rounds=12,
@@ -53,14 +52,14 @@ def run(spark, fx: str, state: str, autogrow: bool) -> dict:
     per_round = []
     for m in rows:
         new, dupes = int(m["new_urls"]), int(m["dupes"])
-        bn, cr = int(m["bloom_negative"]), int(m["cuckoo_rejected"])
+        bn = int(m["bloom_negative"])
         per_round.append(
             {
                 "round": int(m["round"]),
                 "new": new,
                 "dupes": dupes,
                 "bloom_fp_on_new": round(1 - bn / new, 4) if new else None,
-                "exact_tier_share": round(1 - (bn + cr) / (new + dupes), 4)
+                "exact_tier_share": round(1 - bn / (new + dupes), 4)
                 if new + dupes
                 else None,
             }
@@ -76,7 +75,7 @@ def run(spark, fx: str, state: str, autogrow: bool) -> dict:
         "totals": totals,
         "per_round": per_round,
         "final_geometry": {
-            b: {"n": v[0], "m_bits": v[1], "overflowed": v[2]}
+            b: {"n": v[0], "m_bits": v[1]}
             for b, v in sorted(load.items(), key=lambda kv: int(kv[0]))
         },
         "buckets_grown": sum(1 for v in load.values() if int(v[1]) > base_bits),

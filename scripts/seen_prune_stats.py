@@ -1,20 +1,22 @@
 """Quantify the exact-tier url_seen partition pruning (BASELINE.md receipt).
 
 Runs the bench-fixture crawl with ``CrawlEngine._exact_new`` wrapped to
-record, per round, which buckets the doubly-bloom/cuckoo-positive candidate
-slice occupies, then compares on-disk url_seen bytes the pruned scan touches
+record, per round, which buckets the bloom-positive candidate slice
+occupies, then compares on-disk url_seen bytes the pruned scan touches
 (candidate buckets only, across committed round dirs) vs a full-table scan
 (all buckets — what the pre-round-3 code read every round).
 
 At sandbox scale (16 buckets, dense candidates) the ratio is bounded by
-#occupied-buckets/16; the design-point win is that at 10^10 urls with the
-bloom tier passing only a few thousand candidates the pruned scan touches
-O(candidates) buckets out of 10^4-10^5, not the whole table.
+#occupied-buckets/16. The bloom-positive slice is every true duplicate plus
+the bloom's false positives (on the bench crawl it equals the round's
+duplicates), so the design-point win holds only while a round's candidates
+occupy fewer buckets than there are: then the pruned scan touches those
+buckets out of 10^4-10^5, not the whole table.
 
 Run: python scripts/seen_prune_stats.py [n_pages] [rounds] [seen_partitions]
 (the default P=16 is dense at sandbox scale — every bucket occupied, ratio
 1.0; pass a larger P to see the pruning engage as buckets outnumber the
-per-round flag-2 candidate count, the regime the 100 TB layout targets)
+per-round bloom-positive candidate count, the regime the 100 TB layout targets)
 """
 
 from __future__ import annotations

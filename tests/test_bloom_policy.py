@@ -29,7 +29,6 @@ TINY = dict(
     host_salt=4,
     compact_every=2,
     bloom_bits_per_partition=64,       # 8-key capacity at max_load=1/8
-    cuckoo_buckets_per_partition=1 << 6,
 )
 
 

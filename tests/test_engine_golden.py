@@ -86,7 +86,7 @@ def test_lineage_present(engine):
 
 
 def test_filterless_path_identical(spark, fixture_dir, tmp_path_factory, engine):
-    """bloom/cuckoo prefilter tiers must be semantics-free: the pure exact
+    """The bloom prefilter tier must be semantics-free: the pure exact
     anti-join path yields the identical crawl (SURVEY.md §5.4)."""
     state = str(tmp_path_factory.mktemp("state_nf") / "s")
     eng2 = CrawlEngine(spark, fixture_dir, state, TEST_CFG, use_filters=False)

@@ -2,7 +2,7 @@
 
 The 64-bit url hash must be stable across Spark versions and identical
 between the engine (numpy kernel inside a pandas UDF) and the pure-Python
-oracle — it keys the seen-set sharding, the bloom/cuckoo sidecars and the
+oracle — it keys the seen-set sharding, the bloom sidecars and the
 pages bucket layout (SURVEY.md §1.2).
 """
 

@@ -347,3 +347,45 @@ def test_pre_crawl_log_layout_resumes(spark, fixture_dir, tmp_path,
     assert _trace(eng) == _trace(merge_oneshot)
     for d in legacy:
         assert os.listdir(os.path.join(state, d)) == ["part-0.parquet"], d
+
+
+def test_cuckoo_era_state_resumes(spark, fixture_dir, tmp_path, merge_oneshot):
+    """A state dir written while the URL-seen test still had its cuckoo
+    tier resumes unchanged: its shard files carry a ``cuckoo`` array and a
+    6-element meta, and its manifest's ``bloom_load`` holds [n, m, ov]
+    triples, one of them with ov (the cuckoo overflow flag) set. The resume
+    reads both, ignores ov, and equals the one-shot crawl."""
+    import numpy as np
+
+    state = str(tmp_path / "cuckoo_era")
+    CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=3)
+    st = CrawlEngine(spark, fixture_dir, state, MERGE_CFG).store
+    paths = st.bloom_paths()
+    assert paths, "the crawl wrote bloom shards"
+    ov_bucket = min(paths)
+    for b, p in paths.items():
+        with np.load(p) as z:
+            m, k, n_added = (int(x) for x in z["meta"])
+            bits = z["bits"]
+        np.savez_compressed(
+            p, bits=bits, cuckoo=np.zeros((1 << 12, 4), np.uint16),
+            meta=np.array([m, k, 1 << 12, 4, int(b == ov_bucket), n_added]),
+        )
+    man = st.manifest()
+    man["state"]["bloom_load"] = {
+        b: [n, m, int(b) == ov_bucket]
+        for b, (n, m) in man["state"]["bloom_load"].items()
+    }
+    with open(st._manifest_path, "w") as f:
+        json.dump(man, f)
+
+    resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    resumed.run(max_rounds=MERGE_ROUNDS)
+    one = merge_oneshot
+    assert _trace(resumed) == _trace(one)
+    for view in ("url_seen", "edges", "docs"):
+        got = sorted(tuple(r) for r in getattr(resumed, view)().collect())
+        want = sorted(tuple(r) for r in getattr(one, view)().collect())
+        assert got == want, view
+    # the occupancy map is rewritten as [n, m] pairs
+    assert resumed.store.state("bloom_load") == one.store.state("bloom_load")

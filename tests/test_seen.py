@@ -1,9 +1,7 @@
-"""SeenShard (bloom + cuckoo) invariants.
+"""SeenShard (bloom) invariants.
 
-The contract for the three-tier URL-seen test (SURVEY.md §2.3):
+The contract for the two-tier URL-seen test (SURVEY.md §2.3):
 * bloom: NO false negatives ever; false positives allowed;
-* cuckoo: no false negatives while inserts succeed; overflow flags the shard
-  and makes it claim "maybe present" for everything (safe);
 * the exact anti-join tier (exercised in the engine tests) is the arbiter.
 """
 
@@ -14,17 +12,16 @@ import numpy as np
 from twitter_crawler_spark.crawl.seen import SeenShard, make_seen_check_fn, shard_path
 
 
-def _shard(bits=1 << 14, cb=1 << 10):
-    return SeenShard(bits, 4, cb, 4)
+def _shard(bits=1 << 14):
+    return SeenShard(bits, 4)
 
 
 def test_bloom_no_false_negatives():
     rng = np.random.default_rng(1)
     added = rng.integers(-(2**62), 2**62, 5000, dtype=np.int64)
-    sh = _shard(bits=1 << 17, cb=1 << 12)
+    sh = _shard(bits=1 << 17)
     sh.add(added)
     assert sh.bloom_contains(added).all()
-    assert sh.cuckoo_contains(added).all() or sh.overflowed
 
 
 def test_bloom_false_positive_rate_bounded():
@@ -32,36 +29,11 @@ def test_bloom_false_positive_rate_bounded():
     added = rng.integers(-(2**62), 2**62, 2000, dtype=np.int64)
     probe = rng.integers(-(2**62), 2**62, 20000, dtype=np.int64)
     probe = np.setdiff1d(probe, added)
-    sh = _shard(bits=1 << 17, cb=1 << 12)
+    sh = _shard(bits=1 << 17)
     sh.add(added)
     fp = sh.bloom_contains(probe).mean()
     # m/n ≈ 65, k=4 → theoretical fp ~ 1e-5; allow slack
     assert fp < 0.01, fp
-
-
-def test_cuckoo_rejects_most_bloom_positives():
-    rng = np.random.default_rng(3)
-    added = rng.integers(-(2**62), 2**62, 1000, dtype=np.int64)
-    probe = rng.integers(-(2**62), 2**62, 5000, dtype=np.int64)
-    probe = np.setdiff1d(probe, added)
-    sh = _shard(bits=1 << 10, cb=1 << 12)  # deliberately tiny bloom → many FPs
-    sh.add(added)
-    pos = probe[sh.bloom_contains(probe)]
-    if len(pos):
-        ver = sh.cuckoo_contains(pos)
-        # 16-bit fingerprints, 2 buckets × 4 slots → FP ~ 8/2^16
-        assert ver.mean() < 0.01
-
-
-def test_overflow_is_safe_not_wrong():
-    rng = np.random.default_rng(4)
-    added = rng.integers(-(2**62), 2**62, 4000, dtype=np.int64)
-    sh = _shard(bits=1 << 14, cb=1 << 6)  # 256 slots « 4000 keys → overflow
-    sh.add(added)
-    assert sh.overflowed
-    # overflowed shard must answer "maybe present" for everything
-    assert sh.cuckoo_contains(added).all()
-    assert sh.cuckoo_contains(np.array([123456789], dtype=np.int64)).all()
 
 
 def test_save_load_roundtrip(tmp_path):
@@ -73,8 +45,7 @@ def test_save_load_roundtrip(tmp_path):
     sh.save(p)
     back = SeenShard.load(p)
     assert (back.bits == sh.bits).all()
-    assert (back.cuckoo == sh.cuckoo).all()
-    assert back.overflowed == sh.overflowed
+    assert (back.m, back.k, back.n_added) == (sh.m, sh.k, sh.n_added)
 
 
 def test_check_fn_classification(tmp_path):
@@ -82,7 +53,7 @@ def test_check_fn_classification(tmp_path):
 
     rng = np.random.default_rng(6)
     added = rng.integers(-(2**62), 2**62, 300, dtype=np.int64)
-    sh = _shard(bits=1 << 17, cb=1 << 12)
+    sh = _shard(bits=1 << 17)
     sh.add(added)
     d = str(tmp_path)
     sh.save(shard_path(d, 3))
@@ -98,49 +69,52 @@ def test_check_fn_classification(tmp_path):
     out = check(pdf)
     seen_part = out.iloc[: len(added)]
     new_part = out.iloc[len(added):]
-    # every truly-seen hash must be routed to the exact tier (flag 2)
-    assert (seen_part["seen_flag"] == 2).all()
-    # almost all fresh hashes short-circuit as definitely-new (flag 0/1)
-    assert (new_part["seen_flag"] < 2).mean() > 0.99
+    # every truly-seen hash must be routed to the exact tier
+    assert seen_part["maybe_seen"].all()
+    # almost all fresh hashes short-circuit as definitely-new
+    assert (~new_part["maybe_seen"]).mean() > 0.99
+    # a bucket with no shard yet: everything is definitely new
+    assert not check(pdf.assign(bucket=4))["maybe_seen"].any()
 
 
 def test_n_added_persists_and_legacy_load(tmp_path):
     """The capacity policy's occupancy counter survives save/load, and
-    pre-round-5 shard files (5-element meta, no n_added) still load."""
+    legacy shard files still load: those that also carry a cuckoo array
+    with a 6-element meta [m, k, cuckoo buckets, cuckoo slots, overflowed,
+    n_added], and the oldest ones whose 5-element meta has no n_added."""
     rng = np.random.default_rng(5)
+    keys = rng.integers(-(2**62), 2**62, 1234, dtype=np.int64)
     sh = _shard()
-    sh.add(rng.integers(-(2**62), 2**62, 1234, dtype=np.int64))
+    sh.add(keys)
     assert sh.n_added == 1234
     p = str(tmp_path / "bucket=0.npz")
     sh.save(p)
     back = SeenShard.load(p)
     assert back.n_added == 1234 and back.m == sh.m
-    # legacy file: strip n_added from meta
-    z = np.load(p)
-    legacy = str(tmp_path / "legacy.npz")
-    np.savez_compressed(legacy, bits=z["bits"], cuckoo=z["cuckoo"],
-                        meta=z["meta"][:5])
-    old = SeenShard.load(legacy)
-    assert old.n_added == 0
-    assert old.bloom_contains(np.array([1, 2], np.int64)).dtype == bool
+    cuckoo = np.ones((1 << 10, 4), np.uint16)
+    for meta, n_added in (([sh.m, sh.k, 1 << 10, 4, 1, 1234], 1234),
+                          ([sh.m, sh.k, 1 << 10, 4, 1], 0)):
+        legacy = str(tmp_path / f"legacy{len(meta)}.npz")
+        np.savez_compressed(legacy, bits=sh.bits, cuckoo=cuckoo,
+                            meta=np.array(meta))
+        old = SeenShard.load(legacy)
+        assert (old.m, old.k, old.n_added) == (sh.m, sh.k, n_added)
+        assert old.bloom_contains(keys).all()
 
 
 def test_grown_geometry_doubles_until_headroom():
     from twitter_crawler_spark.config import CrawlConfig
     from twitter_crawler_spark.crawl.seen import grown_geometry
 
-    cfg = CrawlConfig(bloom_bits_per_partition=1 << 10,
-                      cuckoo_buckets_per_partition=1 << 8)
-    m, cb = grown_geometry(50, cfg)
-    assert (m, cb) == (1 << 10, 1 << 8)  # under load: unchanged
-    m, cb = grown_geometry(500, cfg)
-    # 500 keys: load ≤ max_load/2 = 1/16 needs m ≥ 8000 → 8192; cuckoo
-    # load ≤ 0.5 needs cb*cs ≥ 1000 → cb = 256 (256*4 = 1024 ≥ 1000)
-    assert m == 1 << 13 and cb == 1 << 8
+    cfg = CrawlConfig(bloom_bits_per_partition=1 << 10)
+    assert grown_geometry(50, cfg) == 1 << 10  # under load: unchanged
+    m = grown_geometry(500, cfg)
+    # 500 keys: load ≤ max_load/2 = 1/16 needs m ≥ 8000 → 8192
+    assert m == 1 << 13
     assert 500 <= (cfg.bloom_max_load / 2) * m
     # geometry is monotone in n and always a power-of-two multiple
-    m2, cb2 = grown_geometry(5000, cfg)
-    assert m2 > m and cb2 > cb and m2 % (1 << 10) == 0
+    m2 = grown_geometry(5000, cfg)
+    assert m2 > m and m2 % (1 << 10) == 0
 
 
 def test_rebuild_fn_restores_fp_rate(tmp_path):
@@ -158,10 +132,8 @@ def test_rebuild_fn_restores_fp_rate(tmp_path):
 
     rng = np.random.default_rng(11)
     keys = np.unique(rng.integers(-(2**62), 2**62, 2000, dtype=np.int64))
-    cfg = CrawlConfig(bloom_bits_per_partition=1 << 10,
-                      cuckoo_buckets_per_partition=1 << 8)
-    small = SeenShard(cfg.bloom_bits_per_partition, cfg.bloom_num_hashes,
-                      cfg.cuckoo_buckets_per_partition, cfg.cuckoo_slots)
+    cfg = CrawlConfig(bloom_bits_per_partition=1 << 10)
+    small = SeenShard(cfg.bloom_bits_per_partition, cfg.bloom_num_hashes)
     small.add(keys)
     probe = np.unique(rng.integers(-(2**62), 2**62, 20000, dtype=np.int64))
     probe = probe[~np.isin(probe, keys)]
@@ -173,7 +145,7 @@ def test_rebuild_fn_restores_fp_rate(tmp_path):
     stats = rebuild(pd.DataFrame({"bucket": 7, "url_hash": keys}))
     assert int(stats["n_total"].iloc[0]) == len(keys)
     grown = SeenShard.load(shard_path(str(tmp_path), 7))
-    assert grown.m == geom[7][0] and grown.n_added == len(keys)
+    assert grown.m == geom[7] and grown.n_added == len(keys)
     assert grown.bloom_contains(keys).all()  # still no false negatives
     fp_grown = grown.bloom_contains(probe).mean()
     assert fp_grown < 0.05 < fp_small

@@ -9,8 +9,8 @@ Lucene index), re-imagined per BASELINE.json's north rule as:
 * a ``frontier`` DataFrame with priority (depth, host-budget, OPIC-style score),
   revisit intervals, attempt caps and unproductive-URL eviction
   (reference: storages/RedisFutureStorage.scala),
-* a partitioned bloom-filter + cuckoo-verification + exact-anti-join URL-seen
-  set (reference: jedis.hexists / Lucene isNew dedup),
+* a partitioned bloom-filter + exact-anti-join URL-seen set (reference:
+  jedis.hexists / Lucene isNew dedup),
 * per-host politeness budgets + robots.txt longest-prefix rules with a
   salted-host repartition for hot-domain skew,
 * vectorized Arrow/pandas UDFs for canonicalization, murmur3 hashing and

@@ -68,26 +68,25 @@ class CrawlConfig:
     default_crawl_delay: int = 1
     # stop after this many rounds even if the frontier is non-empty
     max_rounds: int = 50
-    # URL-seen sharding: bloom/cuckoo sidecars are partitioned by
+    # URL-seen sharding: bloom sidecars are partitioned by
     # murmur3_64(url) % seen_partitions (SURVEY.md §2.3 D1)
     seen_partitions: int = 16
     bloom_bits_per_partition: int = 1 << 17
     bloom_num_hashes: int = 4
-    # cuckoo verification shard (fingerprint bits / bucket geometry)
-    cuckoo_buckets_per_partition: int = 1 << 12
-    cuckoo_slots: int = 4
     # bloom capacity policy: a shard whose lifetime-insert load n/m exceeds
     # bloom_max_load (FP ≈ (1−e^{−k·n/m})^k ≈ 2.4% at load 1/8, k=4) is
     # REBUILT at the next compaction commit from the authoritative url_seen
     # table with doubled geometry (see seen.grown_geometry) — without this a
-    # fixed-geometry shard saturates on a long crawl and the bloom/cuckoo
-    # pruning tiers silently stop paying (everything falls through to the
-    # exact anti-join: correct, but the design claim dies). False freezes
+    # fixed-geometry shard saturates on a long crawl and the bloom tier
+    # silently stops paying (everything falls through to the exact
+    # anti-join: correct, but the design claim dies). False freezes
     # geometry (the pre-round-5 behavior; the saturation receipt uses it).
     bloom_autogrow: bool = True
     bloom_max_load: float = 0.125
-    # cuckoo occupancy ceiling after a rebuild (kick-free headroom; 4-slot
-    # cuckoo filters run fine to ~0.95 but rebuilds should not land near it)
+    # Inert: the URL-seen test has no cuckoo tier any more, and nothing
+    # reads these two fields. They are kept only because the benchmark's
+    # crawl_compact config (perfbench/crawl.py) still sets them.
+    cuckoo_buckets_per_partition: int = 1 << 12
     cuckoo_target_load: float = 0.5
     # salting factor for the hot-host politeness window (SURVEY.md §2.4 skew note)
     host_salt: int = 8

@@ -11,8 +11,8 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
   fetched  = pages ⋈ broadcast(popped) with bucket partition pruning and
              the cursor predicate pushed to the parquet scan              J9/F12/S2
   links    = mapInPandas outlink extraction → canonicalize → redirects    P3/P8
-  new      = robots longest-prefix filter → bloom → cuckoo → exact
-             anti-join vs url_seen                                        D1-D4
+  new      = robots longest-prefix filter → bloom → exact anti-join vs
+             url_seen (bloom-negative candidates are new)                D1-D4
   frontier' = merge-on-read delta: reinserted ∪ new → frontier_ins
              (banded), OPIC cash → frontier_gains; the round's crawl_log
              rows are its equality deletes (popped (url, attempt) keys).
@@ -89,7 +89,7 @@ def _host_col(url):
 
 
 def require_shared_state(master: str, state_dir: str, declared_shared: bool) -> None:
-    """The snapshot store + bloom/cuckoo sidecars are filesystem paths written
+    """The snapshot store + bloom sidecars are filesystem paths written
     from EXECUTOR tasks (seen.py applyInPandas shards, state.py manifest). On
     a multi-node cluster that path must be a shared mount (NFS/Lustre/fuse) —
     otherwise shards written on one executor are invisible to the others and
@@ -100,7 +100,7 @@ def require_shared_state(master: str, state_dir: str, declared_shared: bool) -> 
         return
     raise RuntimeError(
         f"master {master!r} is distributed but state dir {state_dir!r} was "
-        "not declared to be on a shared filesystem; bloom/cuckoo sidecars and "
+        "not declared to be on a shared filesystem; bloom sidecars and "
         "the snapshot manifest are plain file I/O from executor tasks, so a "
         "node-local path silently loses dedup state. Pass --shared-state "
         "(jobs/crawl.py) or set TCS_STATE_SHARED=1 once the path is on a "
@@ -119,7 +119,6 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
-        assert len(self.cfg.intervals) >= self.cfg.max_attempts
         self.fx = fixture_dir
         require_shared_state(
             spark.sparkContext.master, state_dir,
@@ -386,8 +385,7 @@ class CrawlEngine:
             )
             bloom_map = {str(int(row["bucket"])): -1 for row in shard_rows}
             bloom_load = {
-                str(int(row["bucket"])):
-                    [int(row["n_total"]), int(row["m_bits"]), bool(row["overflowed"])]
+                str(int(row["bucket"])): [int(row["n_total"]), int(row["m_bits"])]
                 for row in shard_rows
             }
         self.store.commit(
@@ -538,13 +536,15 @@ class CrawlEngine:
     def _exact_new(
         self, need_exact: DataFrame, seen_all: DataFrame, exact_buckets: list[int]
     ) -> DataFrame:
-        """Final dedup arbiter (D1-D4 exact tier): anti-join the doubly-
+        """Final dedup arbiter (D1-D4 exact tier): anti-join the bloom-
         positive candidate slice against ``url_seen``, PRUNED to the buckets
         that slice actually occupies. ``url_seen`` is written partitioned by
         ``bucket = url_hash % seen_partitions``, so the filter reaches the
-        scan as a PartitionFilter (plan-audited) — at the 10^10-URL design
-        point the bloom/cuckoo tiers leave a few thousand candidates and this
-        scan touches only their buckets' files, never the full seen table.
+        scan as a PartitionFilter (plan-audited) and the scan reads only the
+        files of those buckets, never the full seen table. The slice is not
+        a small residue: it is every true duplicate plus the bloom's false
+        positives — on the 8k bench crawl it equals the round's duplicates,
+        about half of the allowed candidates.
         ``seen_all`` is the round's url_seen view as of the committed round;
         a merge round folds the same view into its generation."""
         if not exact_buckets:
@@ -600,12 +600,11 @@ class CrawlEngine:
             offsets[pid] = acc
             acc += pid_totals[pid]
         popped = self._attach_seq(ranged, offsets).localCheckpoint()
-        bucket_counts = [row for row in pb_counts]
 
         # ---- fetch join: bucket partition pruning + broadcast of the batch ----
         lang_ok = F.lit(True) if cfg.lang_filter is None else (F.col("lang") == cfg.lang_filter)
         if n_popped:
-            buckets = sorted({int(row["_b"]) for row in bucket_counts})
+            buckets = sorted({int(row["_b"]) for row in pb_counts})
             fetched = (
                 self._pages()
                 .where(F.col("bucket").isin(buckets))
@@ -731,7 +730,7 @@ class CrawlEngine:
         # ---- candidate scheduling: ONE fused aggregation computes, per distinct
         # candidate url, both the min parent depth and the winning robots rule —
         # robots evaluation rides the dedup shuffle of the outlink set, then the
-        # bloom/cuckoo flags are attached in the same pass before a single
+        # bloom flag is attached in the same pass before a single
         # materialization. Fewer passes over the candidate set is exactly what
         # matters at 10^10 candidates/round.
         cand0 = outlinks.join(
@@ -756,30 +755,26 @@ class CrawlEngine:
             flagged = cand.groupBy("bucket").applyInPandas(
                 check,
                 "dst string, parent_depth int, allowed boolean,"
-                " url_hash long, bucket int, seen_flag int",
+                " url_hash long, bucket int, maybe_seen boolean",
             ).localCheckpoint()
         else:
-            flagged = cand.withColumn("seen_flag", F.lit(2)).localCheckpoint()
-        # one job: candidate/robots/bloom/cuckoo counters off the checkpoint,
-        # per bucket — the bucket list of the flag-2 slice drives partition
-        # pruning of the exact-tier seen scan below
-        stats = flagged.groupBy("allowed", "seen_flag", "bucket").count().collect()
+            flagged = cand.withColumn("maybe_seen", F.lit(True)).localCheckpoint()
+        # one job: candidate/robots/bloom counters off the checkpoint, per
+        # bucket — the bucket list of the bloom-positive slice drives
+        # partition pruning of the exact-tier seen scan below
+        stats = flagged.groupBy("allowed", "maybe_seen", "bucket").count().collect()
         n_candidates = sum(int(row["count"]) for row in stats)
         n_blocked = sum(int(row["count"]) for row in stats if not row["allowed"])
         n_bloom_neg = sum(
             int(row["count"]) for row in stats
-            if row["allowed"] and row["seen_flag"] == 0 and self.use_filters
-        )
-        n_cuckoo_rej = sum(
-            int(row["count"]) for row in stats
-            if row["allowed"] and row["seen_flag"] == 1 and self.use_filters
+            if row["allowed"] and not row["maybe_seen"]
         )
         exact_buckets = sorted(
-            {int(row["bucket"]) for row in stats if row["allowed"] and row["seen_flag"] == 2}
+            {int(row["bucket"]) for row in stats if row["allowed"] and row["maybe_seen"]}
         )
         ok = flagged.where("allowed").drop("allowed")
-        fast_new = ok.where("seen_flag < 2").drop("seen_flag")
-        need_exact = ok.where("seen_flag = 2").drop("seen_flag")
+        fast_new = ok.where(~F.col("maybe_seen")).drop("maybe_seen")
+        need_exact = ok.where("maybe_seen").drop("maybe_seen")
         seen_all = self.store.read_log(s, "url_seen", prev)
         exact_new = self._exact_new(need_exact, seen_all, exact_buckets)
         new_urls = fast_new.unionByName(exact_new).localCheckpoint()
@@ -983,16 +978,15 @@ class CrawlEngine:
             gen_paths = {tbl: f.result() for tbl, f in gen_futs.items()}
             pop_stats = fut_stats.result()
             bloom_rows = fut_bloom.result() if fut_bloom is not None else []
-        # fold this round's shard stats into the manifest's occupancy map —
-        # driver arithmetic only; the capacity policy below never loads a
-        # shard on the driver
+        # fold this round's shard stats into the manifest's occupancy map
+        # (bucket → [n, m]) — driver arithmetic only; the capacity policy
+        # below never loads a shard on the driver. An older state dir holds
+        # [n, m, ov] triples; ov, its cuckoo-overflow flag, is dropped.
         bloom_load = {
-            int(k): list(v) for k, v in (st.state("bloom_load", {}) or {}).items()
+            int(k): v[:2] for k, v in (st.state("bloom_load", {}) or {}).items()
         }
         for row in bloom_rows:
-            bloom_load[int(row["bucket"])] = [
-                int(row["n_total"]), int(row["m_bits"]), bool(row["overflowed"]),
-            ]
+            bloom_load[int(row["bucket"])] = [int(row["n_total"]), int(row["m_bits"])]
         n_evicted = sum(int(row["evicted"]) for row in pop_stats.values())
         if cfg.crawl_once or cfg.fanout_revisits:
             n_reinserted = 0
@@ -1015,23 +1009,22 @@ class CrawlEngine:
             new_state["frontier_base_round"] = r
             new_state["log_gens"] = log_gens
             # ---- bloom capacity policy (VERDICT r4 #2): a bucket whose
-            # lifetime-insert load n/m crossed bloom_max_load — or whose
-            # cuckoo overflowed — is REBUILT here from the authoritative
-            # url_seen rows (the round's view as of prev ∪ its new rows,
-            # bucket-pruned; no second listing) with doubled geometry. A
-            # bloom cannot grow in place (bit positions are hash-mod-m), so
-            # growth = exact rebuild at the compaction commit, the same
-            # atomic point that rewrites the frontier base; geometry doubles
-            # each rebuild, so a bucket is rebuilt O(log n) times over the
-            # whole crawl. It runs after the write pool because it needs the
-            # post-update occupancy. The saturation check is pure driver
-            # arithmetic over the manifest's occupancy map — no shard I/O
-            # unless a rebuild actually fires.
+            # lifetime-insert load n/m crossed bloom_max_load is REBUILT
+            # here from the authoritative url_seen rows (the round's view as
+            # of prev ∪ its new rows, bucket-pruned; no second listing) with
+            # doubled geometry. A bloom cannot grow in place (bit positions
+            # are hash-mod-m), so growth = exact rebuild at the compaction
+            # commit, the same atomic point that rewrites the frontier base;
+            # geometry doubles each rebuild, so a bucket is rebuilt O(log n)
+            # times over the whole crawl. It runs after the write pool
+            # because it needs the post-update occupancy. The saturation
+            # check is pure driver arithmetic over the manifest's occupancy
+            # map — no shard I/O unless a rebuild actually fires.
             if self.use_filters and cfg.bloom_autogrow:
                 sat_geom = {
                     b: grown_geometry(n, cfg)
-                    for b, (n, m, ov) in bloom_load.items()
-                    if ov or n > cfg.bloom_max_load * m
+                    for b, (n, m) in bloom_load.items()
+                    if n > cfg.bloom_max_load * m
                 }
                 if sat_geom:
                     rebuild = make_shard_rebuild_fn(st.bloom_dir(r), sat_geom, cfg)
@@ -1046,8 +1039,7 @@ class CrawlEngine:
                     bloom_rows = list(bloom_rows) + rebuilt
                     for row in rebuilt:
                         bloom_load[int(row["bucket"])] = [
-                            int(row["n_total"]), int(row["m_bits"]),
-                            bool(row["overflowed"]),
+                            int(row["n_total"]), int(row["m_bits"])
                         ]
 
         # bloom manifest map: buckets whose shard this round replaced
@@ -1091,7 +1083,8 @@ class CrawlEngine:
         rows.append(
             (
                 r, -1, n_popped, total_hits, total_results,
-                n_new, n_dupes, n_blocked, n_evicted, n_bloom_neg, n_cuckoo_rej,
+                n_new, n_dupes, n_blocked, n_evicted, n_bloom_neg,
+                0,  # cuckoo_rejected: no cuckoo tier (schemas.ROUND_METRICS)
                 wall_ms, lineage,
             )
         )

@@ -44,7 +44,7 @@ the same *semantics* on plain parquet + an atomically-replaced JSON manifest:
   reads pass it to the parquet reader, so building a state view launches
   no footer-inference job, and a dir whose layout lacks a declared
   partition column raises instead of reading that column back as nulls;
-* the bloom/cuckoo sidecar for each bucket is resolved through the
+* the bloom sidecar for each bucket is resolved through the
   manifest's ``bloom_map`` (bucket → newest committed round that wrote that
   bucket's shard) — O(1) per bucket, no newest-first filesystem probing;
 * **host state is derived, not stored**: budgets and delays are the
@@ -204,7 +204,7 @@ class SnapshotStore:
 
     def gc_bloom(self, superseded: dict[int, int]) -> int:
         """Delete shard files that a newly COMMITTED round replaced (the old
-        shard is a strict subset — bloom/cuckoo adds are monotone). Keeps the
+        shard is a strict subset — bloom adds are monotone). Keeps the
         sidecar tree at O(#buckets) files for the whole crawl. Idempotent and
         crash-safe: only dead files are touched, after the commit."""
         from twitter_crawler_spark.crawl.seen import shard_path

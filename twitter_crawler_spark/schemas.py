@@ -54,7 +54,7 @@ FRONTIER = StructType(
 )
 
 # replaces jedis.hexists / Lucene isNew (RedisFutureStorage.scala:29;
-# GraphStorage.scala:136-141); bloom/cuckoo sidecars shard by url_hash % P
+# GraphStorage.scala:136-141); bloom sidecars shard by url_hash % P
 URL_SEEN = StructType(
     [
         StructField("url_hash", LongType(), False),
@@ -115,6 +115,8 @@ ROUND_METRICS = StructType(
         StructField("robots_blocked", LongType(), False),
         StructField("evicted", LongType(), False),
         StructField("bloom_negative", LongType(), False),
+        # always 0: the URL-seen test has no cuckoo tier any more; the
+        # column stays because the benchmark (perfbench/crawl.py) reads it
         StructField("cuckoo_rejected", LongType(), False),
         StructField("wall_ms", LongType(), False),
         StructField("lineage", StringType()),

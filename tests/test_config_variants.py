@@ -22,12 +22,11 @@ VARIANTS = {
     # intervals, pop-once, no reinsert; enough rounds to reach the 2nd
     # interval (1h = 1 round tick) and exercise the per-round url dedup
     "fanout": dataclasses.replace(TEST_CFG, fanout_revisits=True, max_rounds=5),
-    # partitioning geometry must never leak into results: different range
-    # partitioning for the pop-order assignment, different host salt and
-    # seen shards, same oracle (the oracle has no notion of partitions)
+    # partitioning geometry must never leak into results: different host
+    # salt and seen shards, same oracle (the oracle has no notion of
+    # partitions)
     "alt_geometry": dataclasses.replace(
-        TEST_CFG, seq_range_partitions=3, host_salt=2, seen_partitions=4,
-        max_rounds=4,
+        TEST_CFG, host_salt=2, seen_partitions=4, max_rounds=4,
     ),
     # merge-on-read layout geometry: one band per round tick (finest
     # pruning), compaction every 2 rounds, and a 2-generation cap so the

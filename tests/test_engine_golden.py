@@ -97,3 +97,20 @@ def test_filterless_path_identical(spark, fixture_dir, tmp_path_factory, engine)
     seen_a = {r.url for r in engine.url_seen().collect()}
     seen_b = {r.url for r in eng2.url_seen().collect()}
     assert seen_a == seen_b
+
+
+def test_init_state_leaves_nothing_cached(spark, fixture_dir, tmp_path):
+    """init_state caches the seed frontier while it writes round -1; once it
+    returns, nothing it cached is still held in executor storage (in a
+    long-lived session every engine would otherwise pin another copy)."""
+    eng = CrawlEngine(spark, fixture_dir, str(tmp_path / "s"), TEST_CFG)
+    jsc = spark.sparkContext._jsc
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    # the engine's static inputs stay cached for its lifetime: build them now
+    for df in (eng.redirects, eng.robots, eng.politeness):
+        df.count()
+    entries, rdds = cache.numCachedEntries(), set(jsc.getPersistentRDDs().keySet())
+    eng.init_state()
+    assert eng.store.committed_round() == -1
+    assert cache.numCachedEntries() == entries
+    assert set(jsc.getPersistentRDDs().keySet()) == rdds

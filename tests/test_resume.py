@@ -321,12 +321,27 @@ def test_pre_crawl_log_layout_resumes(spark, fixture_dir, tmp_path,
     table still existed resumes unchanged: crawl_log holds every pop since
     round 0, and the leftover frontier_del/hosts* dirs and manifest keys
     are never read (their rows here would block every host and delete
-    every frontier key)."""
+    every frontier key). Its crawl_log dirs also stored each pop's ``seq``:
+    the read ignores that column, and the derived one equals it."""
+    from twitter_crawler_spark.oracle.frontier_oracle import FrontierOracle
+
     state = str(tmp_path / "legacy")
     CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=3)
     eng = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
     hosts = sorted({row.host for row in eng.crawl_log().collect()})
+    # the crawl_log rows of rounds 0-2 as that layout stored them, seq
+    # second (an engine of that era wrote exactly the oracle's crawl order)
+    stored = pd.DataFrame(
+        FrontierOracle(fixture_dir, MERGE_CFG).run(max_rounds=3).crawl_order
+    ).astype({"round": "int32", "seq": "int32", "depth": "int32",
+              "score": "int64", "attempt": "int32"})
+    assert sorted(stored["round"].unique()) == [0, 1, 2]
     legacy = {
+        f"crawl_log/r={k}": rows for k, rows in stored.groupby("round")
+    }
+    for d in legacy:
+        shutil.rmtree(os.path.join(state, d))
+    legacy.update({
         "hosts/r=1": pd.DataFrame({
             "host": hosts, "budget_per_round": 0, "crawl_delay_rounds": 99,
             "last_fetch_round": 2,
@@ -334,7 +349,7 @@ def test_pre_crawl_log_layout_resumes(spark, fixture_dir, tmp_path,
         "hosts_new/r=2": pd.DataFrame({"host": hosts}),
         "hosts_touch/r=2": pd.DataFrame({"host": hosts}),
         "frontier_del/r=2": eng.frontier_live().select("url", "attempt").toPandas(),
-    }
+    })
     for d, pdf in legacy.items():
         os.makedirs(os.path.join(state, d))
         pdf.to_parquet(os.path.join(state, d, "part-0.parquet"), index=False)
@@ -345,6 +360,9 @@ def test_pre_crawl_log_layout_resumes(spark, fixture_dir, tmp_path,
 
     eng.run(max_rounds=MERGE_ROUNDS)
     assert _trace(eng) == _trace(merge_oneshot)
+    assert [t for t in _trace(eng) if t[0] <= 2] == [
+        (int(k), int(q), u) for k, q, u in stored[["round", "seq", "url"]].values
+    ]
     for d in legacy:
         assert os.listdir(os.path.join(state, d)) == ["part-0.parquet"], d
 

@@ -94,10 +94,6 @@ class CrawlConfig:
     # bucket = murmur3_64(url) % pages_buckets subdirectories so the fetch join
     # prunes partitions (Iceberg bucket-partition analog)
     pages_buckets: int = 16
-    # parallelism of the global pop-order assignment: the popped batch is
-    # range-partitioned on the priority key and ranked per range partition
-    # (+ driver offsets) instead of through one single-partition window
-    seq_range_partitions: int = 16
     # frontier merge-on-read layout (Iceberg delete-file analog): the banded
     # base is partitioned by band = next_fetch_ts div (round_tick *
     # frontier_band_rounds) so the due scan partition-prunes to due bands; a

@@ -7,7 +7,8 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
   due      = frontier ⋈ politeness ⋈ recent fetches (next_fetch_ts ≤ t_r,
              crawl-delay gate; a host's last fetch round is max(round) over
              the crawl_log rounds r-D+1 … r-1, D the largest delay)      F2/F7
-  popped   = salted two-stage per-host budget window + global total order F5/F8
+  popped   = salted two-stage per-host budget window; the crawl order
+             (depth, -score, url) is derived on read by crawl_log()     F5/F8
   fetched  = pages ⋈ broadcast(popped) with bucket partition pruning and
              the cursor predicate pushed to the parquet scan              J9/F12/S2
   links    = mapInPandas outlink extraction → canonicalize → redirects    P3/P8
@@ -39,9 +40,10 @@ round 0; those leftover dirs are never read again.
 State reads pass the declared schemas (schemas.STORE_TABLES, PAGES_LAYOUT),
 so building a round's views of the snapshot launches no Spark job.
 
-Determinism invariant: crawl order is a pure function of the data — the
-popped batch is totally ordered by ``(depth, -score, url)`` (integer OPIC
-cash → no float summation-order ambiguity), never by partitioning. The pure-
+Determinism invariant: crawl order is a pure function of the data — a
+round's pops are totally ordered by ``(depth, -score, url)`` (integer OPIC
+cash → no float summation-order ambiguity), never by partitioning; the pop
+itself assigns no order, and crawl_log() derives each pop's ``seq``. The pure-
 Python oracle (oracle/frontier_oracle.py) replays identical semantics; pytest
 asserts exact equality of crawl_order / url_seen / edges / text_sha /
 evictions.
@@ -399,6 +401,7 @@ class CrawlEngine:
                 "bloom_load": bloom_load,
             },
         )
+        fr.unpersist()
 
     # ------------------------------------------------------------------ run
 
@@ -420,10 +423,12 @@ class CrawlEngine:
         return summary
 
     # ------------------------------------------------------------------ pop
-    # (factored so scripts/plan_audit.py can audit the real dataflow)
+    # (factored so scripts/plan_audit.py audits the real pop dataflow and
+    # the crawl_log() view that derives its order)
 
     @staticmethod
     def _order_cols() -> list:
+        """The pop priority: a total order (url breaks every tie)."""
         return [F.col("depth").asc(), F.col("score").desc(), F.col("url").asc()]
 
     def _pop_survivors(
@@ -436,7 +441,10 @@ class CrawlEngine:
 
         Hot-host skew: stage 1 ranks inside (host, salt) slices so no single
         task sorts a whole hot domain; stage 2 re-ranks the ≤ salt*budget
-        survivors per host — result is identical to a direct per-host top-k."""
+        survivors per host — result is identical to a direct per-host top-k.
+        Returns the popped rows in the frontier schema, unordered: the pop
+        takes every survivor (no global batch cap), so the round's crawl
+        order is only ever derived on read (``crawl_log``)."""
         cfg = self.cfg
         due = frontier.join(self.politeness, "host", "left")
         if recent is None:
@@ -472,42 +480,7 @@ class CrawlEngine:
             .where(F.col("rk1") <= F.col("budget"))
             .withColumn("rk2", F.row_number().over(w2))
             .where(F.col("rk2") <= F.col("budget"))
-            .drop("rk1", "rk2")
-        )
-
-    def _pop_ranged(self, survivors: DataFrame) -> DataFrame:
-        """Range-shuffle the batch on the priority key and tag each row with
-        its physical range partition (_pid) + pages bucket (_b) + url_seen/
-        docs bucket (_sb). First half of the global pop-order assignment —
-        see ``_attach_seq``."""
-        cfg = self.cfg
-        return (
-            survivors.repartitionByRange(cfg.seq_range_partitions, *self._order_cols())
-            .withColumn("_pid", F.spark_partition_id())
-            .withColumn("_b", F.pmod("url_hash", F.lit(cfg.pages_buckets)))
-            .withColumn("_sb", F.pmod("url_hash", F.lit(cfg.seen_partitions)))
-        )
-
-    def _attach_seq(self, ranged: DataFrame, offsets: dict[int, int]) -> DataFrame:
-        """Global total order → seq, WITHOUT a single-partition window (the
-        10^10-frontier scale killer): rank inside each range partition in
-        parallel, then add the driver-computed partition offsets. The priority
-        key is a total order (url tie-break), so the result is identical to a
-        global row_number no matter where the sampled range boundaries fall."""
-        if offsets:
-            off_expr = F.element_at(
-                F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-                F.col("_pid"),
-            )
-        else:
-            off_expr = F.lit(0)
-        w_pid = Window.partitionBy("_pid").orderBy(*self._order_cols())
-        return (
-            ranged.withColumn("seq", F.row_number().over(w_pid) - 1 + off_expr)
-            .select(
-                "url", "url_hash", "host", "depth", "score", "attempt",
-                "next_fetch_ts", "last_cursor", "src_round", "seq",
-            )
+            .select(*[f.name for f in schemas.FRONTIER.fields])
         )
 
     # ------------------------------------------------------------------ schedule
@@ -580,26 +553,19 @@ class CrawlEngine:
         recent = self._recent_fetches(r)
 
         # ---- pop: due filter + crawl-delay + salted per-host budget window ----
-        survivors = self._pop_survivors(due_live, recent, t_r, r)
-        # The checkpoint pins the sampled range partitioning so the offsets
-        # collected below can never disagree with the window's partitions
-        # (and cuts lineage: the batch is consumed by five downstream stages;
-        # durability comes from the snapshot store, not from this).
-        ranged = self._pop_ranged(survivors).localCheckpoint()
-        # one job: per-(range-partition, page-bucket, seen-bucket) counts →
-        # batch size, the bucket lists for fetch-join AND docs-anti-join
-        # partition pruning, AND the seq offsets, all from one tiny collect
-        pb_counts = ranged.groupBy("_pid", "_b", "_sb").count().collect()
+        # The batch is tagged with its pages bucket (_b) and url_seen/docs
+        # bucket (_sb) and checkpointed: it is consumed by five downstream
+        # stages (durability comes from the snapshot store, not from this).
+        popped = (
+            self._pop_survivors(due_live, recent, t_r, r)
+            .withColumn("_b", F.pmod("url_hash", F.lit(cfg.pages_buckets)))
+            .withColumn("_sb", F.pmod("url_hash", F.lit(cfg.seen_partitions)))
+            .localCheckpoint()
+        )
+        # one job: per-(page-bucket, seen-bucket) counts → batch size and the
+        # bucket lists for fetch-join AND docs-anti-join partition pruning
+        pb_counts = popped.groupBy("_b", "_sb").count().collect()
         n_popped = sum(int(row["count"]) for row in pb_counts)
-        pid_totals: dict[int, int] = {}
-        for row in pb_counts:
-            pid_totals[int(row["_pid"])] = pid_totals.get(int(row["_pid"]), 0) + int(row["count"])
-        offsets: dict[int, int] = {}
-        acc = 0
-        for pid in sorted(pid_totals):
-            offsets[pid] = acc
-            acc += pid_totals[pid]
-        popped = self._attach_seq(ranged, offsets).localCheckpoint()
 
         # ---- fetch join: bucket partition pruning + broadcast of the batch ----
         lang_ok = F.lit(True) if cfg.lang_filter is None else (F.col("lang") == cfg.lang_filter)
@@ -620,11 +586,18 @@ class CrawlEngine:
         else:
             fetched = local_df(s, [], "url string, ts_logical long, html binary")
 
-        # per-url fetch result: count, cursor, latest snapshot html
+        # per popped url its fetch result: count, cursor, latest snapshot html
+        # (null for a url that fetched nothing). One checkpoint serves the
+        # docs append, the reinsert/evict split and the pop stats.
         res = fetched.groupBy("url").agg(
             F.count("*").alias("n_results"),
             F.max("ts_logical").alias("new_cursor"),
             F.max_by("html", "ts_logical").alias("latest_html"),
+        )
+        popped_res = (
+            popped.join(res, "url", "left")
+            .withColumn("n_results", F.coalesce("n_results", F.lit(0)))
+            .withColumn("new_cursor", F.coalesce("new_cursor", "last_cursor"))
         ).localCheckpoint()
 
         # ---- outlink extraction (one fused Arrow pass) + canonicalize --------
@@ -689,14 +662,14 @@ class CrawlEngine:
         # popped batch occupies instead of shuffling the whole append-only
         # docs log every round (the largest log at the design point)
         docs_all = self.store.read_log(s, "docs", prev)
-        first_fetch = res
+        first_fetch = popped_res.where(F.col("n_results") > 0)
         if docs_all is not None:
             pop_buckets = sorted({int(row["_sb"]) for row in pb_counts})
             if pop_buckets and len(pop_buckets) < cfg.seen_partitions:
                 docs_scan = docs_all.where(F.col("bucket").isin(pop_buckets))
             else:
                 docs_scan = docs_all
-            first_fetch = res.join(docs_scan.select("url"), "url", "left_anti")
+            first_fetch = first_fetch.join(docs_scan.select("url"), "url", "left_anti")
         docs_new = (
             first_fetch.withColumn("html_str", F.decode("latest_html", "UTF-8"))
             .withColumn(
@@ -707,7 +680,6 @@ class CrawlEngine:
                     )
                 ),
             )
-            .join(F.broadcast(popped.select("url", "url_hash")), "url")
             .select(
                 "url",
                 F.lit(r).alias("round"),
@@ -801,11 +773,6 @@ class CrawlEngine:
         new_rows = self._schedule_rows(new_base, t_r)
 
         # ---- reinsert / evict / retire ------------------------------------------
-        popped_res = (
-            popped.join(res.select("url", "n_results", "new_cursor"), "url", "left")
-            .withColumn("n_results", F.coalesce("n_results", F.lit(0)))
-            .withColumn("new_cursor", F.coalesce("new_cursor", "last_cursor"))
-        ).localCheckpoint()
         evict_cond = (
             (F.col("n_results") == 0)
             & (F.col("attempt") >= 1)
@@ -923,7 +890,7 @@ class CrawlEngine:
         writes += [
             (
                 popped.select(
-                    F.lit(r).alias("round"), "seq", "url", "host",
+                    F.lit(r).alias("round"), "url", "host",
                     "depth", "score", "attempt",
                 ),
                 "crawl_log",
@@ -1121,18 +1088,26 @@ class CrawlEngine:
         # free this round's localCheckpoint blocks eagerly — durability lives
         # in the snapshot store; relying on GC/ContextCleaner lets executor
         # storage accumulate across a long crawl
-        for df in (
-            ranged, popped, fetched, res, outlinks, flagged, new_urls,
-            popped_res,
-        ):
+        for df in (popped, fetched, popped_res, outlinks, flagged, new_urls):
             df.unpersist()
         return frontier_n
 
     # ------------------------------------------------------------------ outputs
 
     def crawl_log(self) -> DataFrame:
-        return self.store.read_log(
+        """Every committed pop as ``(round, seq, url, host, depth, score,
+        attempt)``. ``seq`` is the pop's rank in the round's total order
+        ``(depth, -score, url)``, derived here rather than stored: the
+        window is partitioned by round, so each round sorts only its own
+        batch. A crawl_log dir that still stores a ``seq`` column reads the
+        same, since the declared schema leaves that column out."""
+        log = self.store.read_log(
             self.spark, "crawl_log", self.store.committed_round()
+        )
+        w = Window.partitionBy("round").orderBy(*self._order_cols())
+        return log.select(
+            "round", (F.row_number().over(w) - 1).alias("seq"),
+            "url", "host", "depth", "score", "attempt",
         )
 
     def url_seen(self) -> DataFrame:

@@ -48,14 +48,19 @@ def _b(j: int) -> int:
 
 
 def tokens(col: str, d: str) -> str:
-    """Lowercased alnum tokens of a text column (array<string>)."""
+    """Lowercased ASCII alnum tokens of a text column (array<string>).
+
+    Non-ASCII characters become separators BEFORE lowercasing: the engines
+    lowercase some of them differently (Spark turns U+0130 'İ' into 'i' plus
+    a combining dot, DuckDB into a bare 'i'), so lowercasing first would
+    split such a word into two tokens in Spark and one in DuckDB."""
     if d == "spark":
         return (
-            f"filter(split(regexp_replace(lower({col}), '[^a-z0-9]+', ' '), ' '),"
+            f"filter(split(lower(regexp_replace({col}, '[^A-Za-z0-9]+', ' ')), ' '),"
             f" t -> t != '')"
         )
     return (
-        f"list_filter(string_split(regexp_replace(lower({col}), '[^a-z0-9]+', ' ', 'g'),"
+        f"list_filter(string_split(lower(regexp_replace({col}, '[^A-Za-z0-9]+', ' ', 'g')),"
         f" ' '), t -> t != '')"
     )
 
@@ -97,14 +102,18 @@ def first_k(arr: str, k: str, d: str) -> str:
 
 
 def seq(lo: str | int, hi: str | int, d: str) -> str:
-    """Inclusive integer range as an array/list."""
+    """Inclusive integer range as an array/list; empty when hi < lo (Spark's
+    ``sequence`` would count down instead, e.g. [1, 0] for an empty
+    string's ``seq(1, length(s))``)."""
     if d == "spark":
-        return f"sequence({lo}, {hi})"
+        return f"(case when {hi} >= {lo} then sequence({lo}, {hi}) else array() end)"
     return f"generate_series({lo}, {hi})"
 
 
 def char_codes(s: str, d: str) -> str:
-    """Array of byte codes (ascii of each character) of a string expr."""
+    """Array of the code points of a string expr, one per character
+    (``ascii`` of a one-character substring is its code point in both
+    engines, non-BMP characters included)."""
     lam = f"i -> cast(ascii(substring({s}, i, 1)) as bigint)"
     return transform(seq(1, f"length({s})", d), lam, d)
 

@@ -89,11 +89,13 @@ DOCS = StructType(
 
 # the golden crawl-order trace (implicit zset pop order,
 # RedisFutureStorage.scala:50,94) and the one record of a round's pops: the
-# frontier's equality-delete keys and the hosts' last fetch rounds
+# frontier's equality-delete keys and the hosts' last fetch rounds. The pop
+# order ``seq`` is not stored: CrawlEngine.crawl_log() derives it on read as
+# the rank of (depth, -score, url) within the round. Dirs written when it
+# was stored still read, since a read takes only the declared columns.
 CRAWL_LOG = StructType(
     [
         StructField("round", IntegerType(), False),
-        StructField("seq", IntegerType(), False),
         StructField("url", StringType(), False),
         StructField("host", StringType(), False),
         StructField("depth", IntegerType(), False),

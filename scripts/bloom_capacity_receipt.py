@@ -2,8 +2,8 @@
 
 Runs the SAME crawl twice on one fixture with deliberately tiny shard
 geometry (1024-bit blooms — ~128-key capacity at bloom_max_load=0.125),
-once with ``bloom_autogrow=False`` (the pre-round-5
-fixed-geometry behavior) and once with the policy on. Records, per round:
+once with ``bloom_max_load=math.inf`` (fixed geometry: no shard is ever
+rebuilt) and once with the policy on. Records, per round:
 
 * measured bloom FP rate on genuinely-new urls (1 − bloom_negative/new:
   the fraction of new urls the saturated bloom wrongly claimed to have
@@ -23,6 +23,7 @@ Writes BLOOM_CAPACITY.json. Usage: python scripts/bloom_capacity_receipt.py
 from __future__ import annotations
 
 import json
+import math
 import shutil
 import tempfile
 
@@ -40,7 +41,7 @@ TINY = dict(
 
 
 def run(spark, fx: str, state: str, autogrow: bool) -> dict:
-    cfg = CrawlConfig(bloom_autogrow=autogrow, **TINY)
+    cfg = CrawlConfig(**TINY) if autogrow else CrawlConfig(bloom_max_load=math.inf, **TINY)
     eng = CrawlEngine(spark, fx, state, cfg)
     eng.run()
     rows = (

@@ -5,9 +5,9 @@ bloom_capacity_receipt.py → BLOOM_CAPACITY.json) runs at bench scale; here
 the pytest-scale contract:
 
 * outcome invariance — a crawl with deliberately tiny shards produces the
-  SAME url_seen / crawl_log under fixed geometry and under autogrow (shard
-  geometry moves where a dup is caught, never the outcome: the exact tier
-  arbitrates);
+  SAME url_seen / crawl_log under fixed geometry (``bloom_max_load=inf``)
+  and under autogrow (shard geometry moves where a dup is caught, never the
+  outcome: the exact tier arbitrates);
 * the policy actually fires — at least one bucket's bloom grows beyond the
   configured base bits, and the manifest's occupancy map tracks it;
 * resume crosses a rebuild boundary — a second engine instance picking up
@@ -16,6 +16,8 @@ the pytest-scale contract:
 """
 
 from __future__ import annotations
+
+import math
 
 import pytest
 
@@ -54,10 +56,10 @@ def tiny_fixture(tmp_path_factory):
 def test_autogrow_preserves_goldens_and_fires(spark, tiny_fixture, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("bp_state"))
     fixed = CrawlEngine(spark, tiny_fixture, f"{base}/fixed",
-                        CrawlConfig(bloom_autogrow=False, **TINY))
+                        CrawlConfig(bloom_max_load=math.inf, **TINY))
     fixed.run()
     grown = CrawlEngine(spark, tiny_fixture, f"{base}/grown",
-                        CrawlConfig(bloom_autogrow=True, **TINY))
+                        CrawlConfig(**TINY))
     grown.run()
     assert _goldens(fixed) == _goldens(grown)
     load = grown.store.state("bloom_load", {})
@@ -72,7 +74,7 @@ def test_autogrow_preserves_goldens_and_fires(spark, tiny_fixture, tmp_path_fact
 
 def test_resume_across_rebuild_boundary(spark, tiny_fixture, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("bp_resume"))
-    cfg = CrawlConfig(bloom_autogrow=True, **TINY)
+    cfg = CrawlConfig(**TINY)
     single = CrawlEngine(spark, tiny_fixture, f"{base}/single", cfg)
     single.run()
 

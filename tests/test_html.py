@@ -22,6 +22,11 @@ HTML = [
     "<p>no links here</p>",
     '<a href="a.html">rel</a><a href="//c.com/p">proto</a>',
     "",
+    # non-ASCII whitespace: Python's \s and str.strip() take these, Java's
+    # ASCII \s and F.trim do not
+    "<p>a\xa0b</p>",
+    "<p>\u3000x y z\u3000</p>",
+    "<b>t</b>\x85",
 ]
 
 
@@ -38,6 +43,18 @@ def test_text_vectorized_matches_scalar():
     got = list(extract_text(pd.Series(HTML)))
     want = [extract_text_scalar(h) for h in HTML]
     assert got == want
+
+
+def test_engine_text_expression_matches_scalar(spark):
+    """The engine's Spark text column equals the oracle's scalar extraction."""
+    from pyspark.sql import functions as F
+
+    from twitter_crawler_spark.crawl.engine import text_col
+
+    df = spark.createDataFrame([(i, h) for i, h in enumerate(HTML)], "i int, html string")
+    got = [r.text for r in df.select("i", text_col(F.col("html")).alias("text"))
+           .orderBy("i").collect()]
+    assert got == [extract_text_scalar(h) for h in HTML]
 
 
 def test_fixture_text_byte_identical(fixture_dir):

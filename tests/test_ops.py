@@ -653,3 +653,38 @@ def test_gram_ops_survive_long_documents(spark):
             f"{name} took {wall:.0f}s on 64x20k-char docs — a long-document "
             "trap (per-element regex or carried-wide-row explode) is back"
         )
+
+
+def test_text_normalization_agrees_on_multibyte(spark):
+    """The corpus ops that normalize case agree between Spark and DuckDB on
+    text with U+0130 'İ', which the engines lowercase differently (Spark:
+    'i' plus a combining dot; DuckDB: a bare 'i'). Two near-duplicates give
+    dedup_ngram_jaccard a candidate pair to score."""
+    import duckdb
+
+    from twitter_crawler_spark.ops.corpus import (
+        sql_dedup_ngram_jaccard,
+        sql_doc_fingerprint,
+        sql_lm_perplexity,
+        sql_token_count,
+    )
+
+    base = " ".join(f"İstanbul w{i} KELVİN" for i in range(30))
+    pdf = pd.DataFrame({
+        "doc_id": [0, 1, 2, 3],
+        "text": [base, base + " Ankara", "İİ İstanbul 9İ", "plain ascii Text 42"],
+    })
+    spark.createDataFrame(pdf, "doc_id long, text string").createOrReplaceTempView("documents")
+    with duckdb.connect() as con:
+        con.register("documents", pdf)
+        for sql in (sql_dedup_ngram_jaccard, sql_doc_fingerprint,
+                    sql_lm_perplexity, sql_token_count):
+            got = spark.sql(sql("spark")).toPandas()
+            want = con.execute(sql("duckdb")).fetchdf()
+            assert len(want), sql.__name__
+            key = list(want.columns)
+            pd.testing.assert_frame_equal(
+                got.sort_values(key).reset_index(drop=True),
+                want.sort_values(key).reset_index(drop=True),
+                check_dtype=False, atol=1e-6, rtol=0, obj=sql.__name__,
+            )

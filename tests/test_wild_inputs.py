@@ -7,6 +7,8 @@ from __future__ import annotations
 import dataclasses
 import shutil
 
+import pandas as pd
+
 from tests.conftest import TEST_CFG
 from twitter_crawler_spark.crawl.engine import CrawlEngine
 from twitter_crawler_spark.oracle.frontier_oracle import FrontierOracle
@@ -15,21 +17,33 @@ from twitter_crawler_spark.oracle.frontier_oracle import FrontierOracle
 def test_seed_whitespace_matches_oracle(spark, fixture_dir, tmp_path):
     """Seed lines are stripped as the oracle's ``line.strip()`` strips them:
     CRLF endings, tab- and \\x0b-padded lines, whitespace-only lines and
-    duplicates that differ only in whitespace."""
+    duplicates that differ only in whitespace. A bare-host seed (no path,
+    with and without a port) has robots path ``/``, so a host that
+    disallows ``/`` blocks it."""
     fx = str(tmp_path / "fx")
     shutil.copytree(fixture_dir, fx)
     with open(f"{fx}/seeds.txt") as f:
         urls = [line.strip() for line in f if line.strip()]
     assert len(urls) >= 4
+    closed = ["closed.example", "closed.example:8080"]
+    robots = pd.read_parquet(f"{fx}/robots.parquet")
+    robots = pd.concat(
+        [robots, pd.DataFrame({"host": closed, "prefix": "/", "allow": False})],
+        ignore_index=True,
+    )
+    robots.to_parquet(f"{fx}/robots.parquet", index=False)
     lines = [
         f"\t{urls[0]}\t", "   ", f"{urls[1]} ", "\t", f"\x0b{urls[0]}",
         f" {urls[2]}\x1f", "\x0c \x0b", *urls[3:], f"{urls[1]}\t\t",
+        f"http://{closed[0]}", f"https://{closed[1]}",
     ]
     with open(f"{fx}/seeds.txt", "w", newline="") as f:
         f.write("\r\n".join(lines) + "\r\n")
 
     oracle = FrontierOracle(fx, TEST_CFG)
-    assert len(oracle.seeds) == len(urls) + 2  # two whitespace-only duplicates
+    # two whitespace-only duplicates and the two bare-host seeds
+    assert len(oracle.seeds) == len(urls) + 4
+    assert not any(oracle.allowed(u) for u in oracle.seeds[-2:])
     eng = CrawlEngine(spark, fx, str(tmp_path / "s"), TEST_CFG)
     eng.init_state()
     assert eng.store.manifest()["history"][0]["seeds"] == len(oracle.seeds)

@@ -79,9 +79,8 @@ class CrawlConfig:
     # table with doubled geometry (see seen.grown_geometry) — without this a
     # fixed-geometry shard saturates on a long crawl and the bloom tier
     # silently stops paying (everything falls through to the exact
-    # anti-join: correct, but the design claim dies). False freezes
-    # geometry (the pre-round-5 behavior; the saturation receipt uses it).
-    bloom_autogrow: bool = True
+    # anti-join: correct, but the design claim dies). math.inf freezes the
+    # geometry (the saturation receipt's fixed-geometry run uses it).
     bloom_max_load: float = 0.125
     # Inert: the URL-seen test has no cuckoo tier any more, and nothing
     # reads these two fields. They are kept only because the benchmark's
@@ -134,10 +133,6 @@ class CrawlConfig:
             )
 
     @property
-    def default_host_policy(self) -> tuple[int, int]:
-        return (self.default_budget, self.default_crawl_delay)
-
-    @property
     def band_ticks(self) -> int:
         """Width of one frontier next_fetch_ts band in logical seconds."""
         return self.round_tick * self.frontier_band_rounds
@@ -146,12 +141,10 @@ class CrawlConfig:
 # epoch base for mapping logical seconds <-> warc_ts timestamps in fixtures
 EPOCH_BASE = 1_600_000_000  # 2020-09-13T12:26:40Z, arbitrary fixed instant
 
-# frontier priority: ORDER BY (depth ASC, score DESC, url ASC); the url
-# tie-break mirrors the Redis zset lexicographic member order on score ties
-# (storages/RedisFutureStorage.scala:50 zrangeWithScores).
-ORDER_COLS = ("depth", "neg_score", "url")
-
 
 def sort_key(depth: int, score: int, url: str) -> tuple[int, int, str]:
-    """Total order of frontier tasks; shared by oracle and engine tests."""
+    """Total order of frontier tasks, ORDER BY (depth ASC, score DESC, url
+    ASC); shared by oracle and engine tests. The url tie-break mirrors the
+    Redis zset lexicographic member order on score ties
+    (storages/RedisFutureStorage.scala:50 zrangeWithScores)."""
     return (depth, -score, url)

@@ -11,9 +11,15 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
              (depth, -score, url) is derived on read by crawl_log()     F5/F8
   fetched  = pages ⋈ broadcast(popped) with bucket partition pruning and
              the cursor predicate pushed to the parquet scan              J9/F12/S2
-  links    = mapInPandas outlink extraction → canonicalize → redirects    P3/P8
-  new      = robots longest-prefix filter → bloom → exact anti-join vs
-             url_seen (bloom-negative candidates are new)                D1-D4
+  links    = mapInPandas outlink extraction → canonicalize → redirects;
+             the distinct (src, dst) links join the batch once, for each
+             source's url_hash, depth, OPIC cash and out-degree          P3/P8
+  cand     = ONE groupBy(dst) per round: min parent depth and OPIC gain
+             sum(cash div outdeg); the robots verdict is a per-row column
+             (the host's rule list, broadcast-joined, longest matching
+             prefix by array_max) — no row multiplication               A15
+  new      = allowed candidates → bloom → exact anti-join vs url_seen
+             (bloom-negative candidates are new)                         D1-D4
   frontier' = merge-on-read delta: reinserted ∪ new → frontier_ins
              (banded), OPIC cash → frontier_gains; the round's crawl_log
              rows are its equality deletes (popped (url, attempt) keys).
@@ -86,6 +92,17 @@ _WS = "[" + "".join(
 _STRIP = rf"\A{_WS}+|{_WS}+\z"
 
 
+def text_col(html_str):
+    """A page's visible text, as ``extract_text_scalar`` gives it: every tag
+    becomes one space, every whitespace run one space, then strip. Runs are
+    Python's whitespace (``_WS``), not Java's ASCII ``\\s``, so after the
+    collapse ``F.trim``, which strips spaces only, strips what ``str.strip()``
+    strips."""
+    return F.trim(
+        F.regexp_replace(F.regexp_replace(html_str, "<[^>]*>", " "), _WS + "+", " ")
+    )
+
+
 def _host_col(url):
     return F.substring_index(F.substring_index(url, "://", -1), "/", 1)
 
@@ -154,7 +171,13 @@ class CrawlEngine:
                     f"would silently miss pages — pass a matching config"
                 )
         self.redirects = s.read.parquet(os.path.join(fx, "redirects.parquet")).cache()
-        self.robots = s.read.parquet(os.path.join(fx, "robots.parquet")).cache()
+        # one row per host: (host, rules array<struct<prefix, allow>>)
+        self.robots = (
+            s.read.parquet(os.path.join(fx, "robots.parquet"))
+            .groupBy("host")
+            .agg(F.collect_list(F.struct("prefix", "allow")).alias("rules"))
+            .cache()
+        )
         self.politeness = s.read.parquet(os.path.join(fx, "politeness.parquet")).cache()
         # D, the longest crawl delay any host can have: a fetch more than
         # D-1 rounds old can no longer hold a host back, so the crawl-delay
@@ -188,44 +211,42 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- robots filter
 
-    def _robots_join(self, df: DataFrame, url_col: str):
-        """Broadcast-join candidate urls against per-host robots rules and
-        return ``(joined_df, rule_col)`` where ``max(rule_col)`` per url picks
-        the longest matching prefix (ties → disallow wins; no match → null →
-        allow). Exposed as a join + agg-expression pair so callers can fuse
-        robots evaluation into an aggregation they already do over the same
-        keys — one shuffle instead of two. No UDF (north rule lists robots;
-        the reference's closest analog is the 340-pattern shortener predicate,
-        utils/RedisUrlEnlarger.scala:40-48, which SURVEY.md P7 likewise maps
-        to a broadcast join)."""
-        u = F.col(url_col)
-        df = df.withColumn("_host", _host_col(u)).withColumn(
-            "_path",
-            F.expr(
-                f"substring(substring_index({url_col}, '://', -1),"
-                f" instr(substring_index({url_col}, '://', -1), '/'))"
-            ),
+    def _with_robots(self, df: DataFrame, url_col: str) -> DataFrame:
+        """``df`` plus its robots verdict ``allowed``, one row in, one row
+        out. The host's rule list arrives by a broadcast join on host; the
+        verdict is the rule with the longest prefix of the url's path (on
+        equal length a disallow wins; no match: allowed), picked by
+        ``array_max`` over ``(length, deny, allow)`` structs, which does not
+        depend on the list's order. The path is ``/`` when nothing follows
+        the host, as in ``path_of_scalar``. No UDF (north rule lists robots;
+        the reference's closest analog is the 340-pattern shortener
+        predicate, utils/RedisUrlEnlarger.scala:40-48, which SURVEY.md P7
+        likewise maps to a broadcast join)."""
+        rest = F.substring_index(F.col(url_col), "://", -1)
+        slash = F.instr(rest, "/")
+        rules = F.broadcast(
+            self.robots.select(F.col("host").alias("_host"), F.col("rules").alias("_rules"))
         )
-        r = F.broadcast(self.robots)
-        j = df.join(r, df._host == r.host, "left").drop("host")
-        matching = F.col("prefix").isNotNull() & F.col("_path").startswith(F.col("prefix"))
-        rule = F.when(
-            matching,
-            F.struct(
-                F.length("prefix").alias("plen"),
-                (~F.col("allow")).alias("deny"),
-                F.col("allow").alias("allow"),
-            ),
-        )  # otherwise null — ignored by max()
-        return j, rule
-
-    def _robots_allow(self, df: DataFrame, url_col: str = "url") -> DataFrame:
-        """Longest-prefix robots verdict per url: ``(url_col, allowed)``."""
-        j, rule = self._robots_join(df, url_col)
-        grouped = j.groupBy(url_col).agg(F.max(rule).alias("best"))
-        return grouped.withColumn(
-            "allowed", F.coalesce(F.col("best.allow"), F.lit(True))
-        ).drop("best")
+        verdict = F.array_max(
+            F.transform(
+                F.filter("_rules", lambda x: F.col("_path").startswith(x["prefix"])),
+                lambda x: F.struct(
+                    F.length(x["prefix"]).alias("plen"),
+                    (~x["allow"]).alias("deny"),
+                    x["allow"].alias("allow"),
+                ),
+            )
+        )
+        return (
+            df.withColumn("_host", _host_col(F.col(url_col)))
+            .withColumn(
+                "_path",
+                F.when(slash > 0, rest.substr(slash, F.length(rest))).otherwise(F.lit("/")),
+            )
+            .join(rules, "_host", "left")
+            .withColumn("allowed", F.coalesce(verdict["allow"], F.lit(True)))
+            .drop("_host", "_path", "_rules")
+        )
 
     # ---------------------------------------------------------- frontier view
 
@@ -349,7 +370,7 @@ class CrawlEngine:
         ).where(F.col("url") != "")
         self._n_seed_lines = raw.count()
         seeds = raw.distinct()
-        allowed = self._robots_allow(seeds).where("allowed").select("url")
+        allowed = self._with_robots(seeds, "url").where("allowed").select("url")
         fr = (
             allowed.withColumn("url_hash", murmur3_64_udf("url"))
             .withColumn("host", _host_col(F.col("url")))
@@ -632,9 +653,19 @@ class CrawlEngine:
             .drop("short_url", "long_url", "href")
             .where(F.col("dst") != F.col("src_url"))
         )
+        # each distinct (src, dst) link carries its source's url_hash, depth
+        # and OPIC cash from the batch (src urls ARE popped urls: one
+        # broadcast join) and the source's out-degree (a count window over
+        # src_url, whose partitioning the link dedup shares)
+        sources = popped.select(
+            F.col("url").alias("src_url"), "url_hash", "depth", "score"
+        )
         outlinks = (
-            links.groupBy("src_url", "dst")
+            links.repartition("src_url")
+            .groupBy("src_url", "dst")
             .agg(F.min("anchor").alias("anchor"))
+            .join(F.broadcast(sources), "src_url")
+            .withColumn("outdeg", F.count("*").over(Window.partitionBy("src_url")))
             .localCheckpoint()  # one Arrow extraction pass, many consumers
         )
 
@@ -643,13 +674,8 @@ class CrawlEngine:
         # seen_partitions (same modulus family as url_seen/docs) so the
         # analytics tier's per-source scans (J1 1-hop, J5 adjacency collect)
         # partition-prune instead of reading the full append-only edge
-        # history — the last state table that had no pruning story (VERDICT
-        # r4 #7). The hash comes from the popped batch (src urls ARE the
-        # popped urls), so no recompute and no Python crossing.
-        edges_new = outlinks.join(
-            F.broadcast(popped.select(F.col("url").alias("src_url"), "url_hash")),
-            "src_url",
-        ).select(
+        # history (VERDICT r4 #7); the hash is the source's, from the batch.
+        edges_new = outlinks.select(
             "src_url",
             F.col("dst").alias("dst_url"),
             "anchor",
@@ -671,15 +697,7 @@ class CrawlEngine:
                 docs_scan = docs_all
             first_fetch = first_fetch.join(docs_scan.select("url"), "url", "left_anti")
         docs_new = (
-            first_fetch.withColumn("html_str", F.decode("latest_html", "UTF-8"))
-            .withColumn(
-                "text",
-                F.trim(
-                    F.regexp_replace(
-                        F.regexp_replace("html_str", "<[^>]*>", " "), "\\s+", " "
-                    )
-                ),
-            )
+            first_fetch.withColumn("text", text_col(F.decode("latest_html", "UTF-8")))
             .select(
                 "url",
                 F.lit(r).alias("round"),
@@ -689,34 +707,19 @@ class CrawlEngine:
             )
         )
 
-        # ---- OPIC gains (integer cash, order-independent) ---------------------
-        outdeg = outlinks.groupBy("src_url").agg(F.count("*").alias("outdeg"))
-        gains = (
-            outlinks.join(outdeg, "src_url")
-            .join(popped.select(F.col("url").alias("src_url"), "score"), "src_url")
-            .withColumn("gain", F.expr("score div outdeg"))
-            .groupBy("dst")
-            .agg(F.sum("gain").alias("gain"))
-        )
-
-        # ---- candidate scheduling: ONE fused aggregation computes, per distinct
-        # candidate url, both the min parent depth and the winning robots rule —
-        # robots evaluation rides the dedup shuffle of the outlink set, then the
-        # bloom flag is attached in the same pass before a single
-        # materialization. Fewer passes over the candidate set is exactly what
-        # matters at 10^10 candidates/round.
-        cand0 = outlinks.join(
-            popped.select(F.col("url").alias("src_url"), F.col("depth").alias("pdepth")),
-            "src_url",
-        ).select("dst", "pdepth")
-        j, rule = self._robots_join(cand0, "dst")
-        cand = (
-            j.groupBy("dst")
-            .agg(F.min("pdepth").alias("parent_depth"), F.max(rule).alias("best"))
-            .withColumn("allowed", F.coalesce(F.col("best.allow"), F.lit(True)))
-            .drop("best")
-            .withColumn("url_hash", murmur3_64_udf("dst"))
-            .withColumn("bucket", F.pmod("url_hash", F.lit(cfg.seen_partitions)))
+        # ---- candidates: one aggregation per distinct outlink target gives
+        # its min parent depth and its OPIC gain (integer cash, so the sum
+        # is order-independent); the robots verdict, hash and seen bucket
+        # are per-row columns on top, and the bloom flag is attached before
+        # the one materialization
+        cand = self._with_robots(
+            outlinks.groupBy("dst").agg(
+                F.min("depth").alias("parent_depth"),
+                F.sum(F.expr("score div outdeg")).alias("gain"),
+            ),
+            "dst",
+        ).withColumn("url_hash", murmur3_64_udf("dst")).withColumn(
+            "bucket", F.pmod("url_hash", F.lit(cfg.seen_partitions))
         )
 
         # bucket → shard path from the committed manifest: O(1) resolution
@@ -726,7 +729,7 @@ class CrawlEngine:
             check = make_seen_check_fn(bucket_paths)
             flagged = cand.groupBy("bucket").applyInPandas(
                 check,
-                "dst string, parent_depth int, allowed boolean,"
+                "dst string, parent_depth int, gain long, allowed boolean,"
                 " url_hash long, bucket int, maybe_seen boolean",
             ).localCheckpoint()
         else:
@@ -809,7 +812,7 @@ class CrawlEngine:
         # gains immediately (their log round r is their per-row gains
         # watermark); every other live row picks round-r gains up from the
         # log when it is next read.
-        gains_u = gains.withColumnRenamed("dst", "url")
+        gains_u = flagged.select(F.col("dst").alias("url"), "gain")
         ins_rows = (
             reinserted.unionByName(new_rows)
             .join(gains_u, "url", "left")
@@ -987,7 +990,7 @@ class CrawlEngine:
             # because it needs the post-update occupancy. The saturation
             # check is pure driver arithmetic over the manifest's occupancy
             # map — no shard I/O unless a rebuild actually fires.
-            if self.use_filters and cfg.bloom_autogrow:
+            if self.use_filters:
                 sat_geom = {
                     b: grown_geometry(n, cfg)
                     for b, (n, m) in bloom_load.items()

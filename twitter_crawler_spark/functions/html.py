@@ -17,9 +17,6 @@ Text extraction contract (byte-identical invariant):
 
 from __future__ import annotations
 
-import hashlib
-
-import numpy as np
 import pandas as pd
 
 _LINK_RE = r'<a\s+href="([^"]*)"\s*>([^<]*)</a>'
@@ -50,12 +47,6 @@ def extract_text(html_str: pd.Series) -> pd.Series:
     s = s.str.replace(_TAG_RE, " ", regex=True)
     s = s.str.replace(r"\s+", " ", regex=True).str.strip()
     return s
-
-
-def sha256_series(text: pd.Series) -> pd.Series:
-    return text.map(
-        lambda t: hashlib.sha256(t.encode("utf-8")).hexdigest() if t is not None else None
-    )
 
 
 # ---- scalar twins for the pure-Python oracle ------------------------------

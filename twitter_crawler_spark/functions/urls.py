@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
@@ -139,13 +138,6 @@ def canonicalize_udf(href: pd.Series, base_url: pd.Series) -> pd.Series:
 
 def host_of_scalar(url: str) -> str:
     return url.split("://", 1)[1].split("/", 1)[0]
-
-
-def host_of(url_series: pd.Series) -> pd.Series:
-    """Vectorized host extraction from a canonical url."""
-    return (
-        url_series.astype("string").str.split("://", n=1).str[1].str.split("/", n=1).str[0]
-    )
 
 
 def path_of_scalar(url: str) -> str:

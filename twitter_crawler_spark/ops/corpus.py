@@ -155,8 +155,7 @@ def sql_dedup_ngram_jaccard(d: str) -> str:
     normalization and re-runs its regex per element (the lm_perplexity
     CollapseProject trap: O(len²) per doc, 541 s for 64×20k-char docs in
     the doc_fingerprint case)."""
-    norm = ("regexp_replace(lower(text), '[^a-z0-9]+', ' ')" if d == "spark"
-            else "regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')")
+    norm = E.alnum_text("text", d)
     # two-level explode (258-char segments, stride 256, 2-char overlap) for
     # the same carried-wide-row reason as lm_perplexity: the DISTINCT is an
     # aggregate keyed on a slice of the parent string, so the parent must be
@@ -851,10 +850,12 @@ def sql_token_count(d: str) -> str:
     """Whitespace tokens vs BPE-ish regex tokens (letters / digits / single
     punct) — the two token-count estimators a data pipeline reports."""
     toks = E.tokens("text", d)
+    # no lower(): case does not change where a letter run ends, and
+    # lowercasing non-ASCII differs between the engines (see E.alnum_text)
     if d == "spark":
-        bpe = "size(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))"
+        bpe = "size(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]', 0))"
     else:
-        bpe = "len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]'))"
+        bpe = "len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]'))"
     return f"""
 SELECT doc_id,
        {E.arr_size(toks, d)} AS ws_tokens,
@@ -881,8 +882,7 @@ def sql_doc_fingerprint(d: str) -> str:
     is the descending [1, 0] trap while DuckDB's generate_series is empty —
     a latent oracle divergence no fixture doc hit, now gone)."""
     full = E.str_hash("text", d)
-    norm = ("regexp_replace(lower(text), '[^a-z0-9]+', ' ')" if d == "spark"
-            else "regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')")
+    norm = E.alnum_text("text", d)
     gram_hash = E.str_hash("gram", d)
     if d == "spark":
         eg = ("SELECT doc_id, substring(s, pos, 8) AS gram FROM nrm"
@@ -1305,15 +1305,14 @@ def sql_lm_perplexity(d: str) -> str:
     2 chars of overlap, so every global position appears exactly once).
     Prefix counts come from the already-tiny trigram table (one SUM over
     ≤ alphabet³ rows), not a second corpus pass."""
+    norm = E.alnum_text("text", d)
     if d == "spark":
-        norm = "regexp_replace(lower(text), '[^a-z0-9]+', ' ')"
         seg = ("SELECT doc_id, substring(s, off, 258) AS seg FROM t"
                " LATERAL VIEW explode(sequence(1, greatest(length(s) - 2, 1), 256)) AS off"
                " WHERE length(s) >= 3")
         expl = ("SELECT doc_id, substring(seg, pos, 3) AS tri FROM seg"
                 " LATERAL VIEW explode(sequence(1, length(seg) - 2)) AS pos")
     else:
-        norm = "regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')"
         seg = ("SELECT doc_id, s[off:off+257] AS seg FROM t,"
                " UNNEST(generate_series(1, greatest(length(s) - 2, 1), 256)) AS uo(off)"
                " WHERE length(s) >= 3")

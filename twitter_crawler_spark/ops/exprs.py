@@ -47,22 +47,23 @@ def _b(j: int) -> int:
 # ---------------------------------------------------------------------------
 
 
-def tokens(col: str, d: str) -> str:
-    """Lowercased ASCII alnum tokens of a text column (array<string>).
+def alnum_text(col: str, d: str) -> str:
+    """A text column lowercased, each run of non-ASCII-alnum characters one
+    space.
 
     Non-ASCII characters become separators BEFORE lowercasing: the engines
     lowercase some of them differently (Spark turns U+0130 'İ' into 'i' plus
     a combining dot, DuckDB into a bare 'i'), so lowercasing first would
-    split such a word into two tokens in Spark and one in DuckDB."""
+    split such a word in two in Spark and keep it whole in DuckDB."""
+    flags = "" if d == "spark" else ", 'g'"
+    return f"lower(regexp_replace({col}, '[^A-Za-z0-9]+', ' '{flags}))"
+
+
+def tokens(col: str, d: str) -> str:
+    """Lowercased ASCII alnum tokens of a text column (array<string>)."""
     if d == "spark":
-        return (
-            f"filter(split(lower(regexp_replace({col}, '[^A-Za-z0-9]+', ' ')), ' '),"
-            f" t -> t != '')"
-        )
-    return (
-        f"list_filter(string_split(lower(regexp_replace({col}, '[^A-Za-z0-9]+', ' ', 'g')),"
-        f" ' '), t -> t != '')"
-    )
+        return f"filter(split({alnum_text(col, d)}, ' '), t -> t != '')"
+    return f"list_filter(string_split({alnum_text(col, d)}, ' '), t -> t != '')"
 
 
 def distinct(arr: str, d: str) -> str:

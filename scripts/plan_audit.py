@@ -17,7 +17,11 @@ the 100 TB design depends on:
 * the crawl fetch join broadcasts the popped batch over the bucket-pruned
   pages scan, neither the pop dataflow nor the crawl_log() view that
   derives the pop order has an unpartitioned window, and the exact
-  dedup tier's ``url_seen`` scan partition-prunes to candidate buckets.
+  dedup tier's ``url_seen`` scan partition-prunes to candidate buckets;
+* the extract → candidates dataflow crosses into Python once before the
+  bloom check: exactly one ``MapInPandas`` and no ``ArrowEvalPython`` in
+  the plan a round runs (a cached relation's plan, which runs once per
+  engine, is left out of the count).
 
 Run: python scripts/plan_audit.py  (writes PLANS.md at repo root)
 """
@@ -83,6 +87,20 @@ def _fmt(df) -> str:
     )
 
 
+def _round_tree(plan: str) -> str:
+    """The node tree of a formatted plan without the subtrees under an
+    ``InMemoryRelation``: a cached plan runs when the cache fills, not each
+    time the plan runs."""
+    out, cut = [], None
+    for line in plan.split("\n\n", 1)[0].splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in line else None
+        out.append(line)
+    return "\n".join(out)
+
+
 def main() -> None:
     import __spark_entry__ as entrymod
     from twitter_crawler_spark.config import CrawlConfig
@@ -90,8 +108,10 @@ def main() -> None:
     spark = get_spark(cores=8, shuffle_partitions=8,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     qs = entrymod.queries()
-    # (name, plan, wants, bans, waived: {pattern: reason})
+    # (name, plan, wants, bans, waived: {pattern: reason}); a section may
+    # also pin how many nodes match a pattern in its plans' round trees
     sections: list[tuple[str, str, list[str], list[str], dict[str, str]]] = []
+    counts: dict[str, dict[str, int]] = {}
 
     # 1. every catalog query: universal bans + declared wants/extras
     for name in sorted(qs):
@@ -155,6 +175,24 @@ def main() -> None:
             {},
         )
     )
+
+    # 4b. extract → candidates → bloom check: the links cross into Python
+    # once (one MapInPandas extracts, canonicalizes and hashes them) before
+    # the bloom FlatMapGroupsInPandas; no ArrowEvalPython UDF column. The
+    # REAL engine methods over a real fetch of the seed pages.
+    cand_fetch = (
+        eng._pages().join(F.broadcast(frontier.select("url")), "url")
+        .select("url", "html")
+    )
+    cand_plan = _fmt(eng._flag(
+        eng._candidates(eng._outlinks(cand_fetch, frontier)), eng.store.bloom_paths()
+    ))
+    sections.append(
+        ("crawl_candidates", cand_plan, ["FlatMapGroupsInPandas"], [], {})
+    )
+    counts["crawl_candidates"] = {
+        r"MapInPandas \(\d+\)": 1, r"ArrowEvalPython \(\d+\)": 0,
+    }
 
     # 5. the merge-on-read frontier due scan: the banded base (and any ins
     # log) must partition-prune to due bands — the band filter has to reach
@@ -220,6 +258,12 @@ def main() -> None:
             status.append(f"no-{b}={'VIOLATED' if bad else 'OK'}")
             if bad:
                 failures.append((name, f"banned:{b}"))
+        for pat, n in counts.get(name, {}).items():
+            got = [len(re.findall(pat, _round_tree(p))) for p in plans]
+            ok = all(g == n for g in got)
+            status.append(f"{pat}×{n}={'OK' if ok else f'GOT {got}'}")
+            if not ok:
+                failures.append((name, f"count:{pat}"))
         out.append(f"## {name}\n\nrequired: {', '.join(status)}\n")
         for pat, reason in waived.items():
             out.append(f"waived `{pat}`: {reason}\n")
@@ -227,7 +271,8 @@ def main() -> None:
             out.append("```\n" + p.strip()[:4000] + "\n```\n")
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
-    print(f"audited {len(sections)} plans ({len(qs)} catalog queries + 5 engine flows)")
+    print(f"audited {len(sections)} plans ({len(qs)} catalog queries + "
+          f"{len(sections) - len(qs)} engine flows)")
     print("FAILURES:", failures or "none")
     sys.exit(1 if failures else 0)
 

@@ -5,6 +5,8 @@ semantics; see twitter_crawler_spark/oracle/frontier_oracle.py)."""
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 
 from tests.conftest import TEST_CFG
@@ -114,3 +116,44 @@ def test_init_state_leaves_nothing_cached(spark, fixture_dir, tmp_path):
     assert eng.store.committed_round() == -1
     assert cache.numCachedEntries() == entries
     assert set(jsc.getPersistentRDDs().keySet()) == rdds
+
+
+def test_round_leaves_nothing_persisted(spark, fixture_dir, tmp_path):
+    """A round frees its local checkpoints when it ends: past the engine's
+    cached static inputs (all built by round 0), rounds add no persisted
+    RDD, so a long crawl does not accumulate executor storage."""
+    eng = CrawlEngine(spark, fixture_dir, str(tmp_path / "s"), TEST_CFG)
+    jsc = spark.sparkContext._jsc
+    eng.run(max_rounds=1)
+    rdds = set(jsc.getPersistentRDDs().keySet())
+    eng.run(max_rounds=3)
+    assert eng.store.committed_round() == 2
+    assert set(jsc.getPersistentRDDs().keySet()) <= rdds
+
+
+def test_round_that_pops_nothing(spark, tmp_path):
+    """A round whose frontier holds only rows due in a later round pops and
+    fetches nothing, commits, and frees what it checkpointed; the crawl goes
+    on and equals the oracle's. Here the seeds link nowhere and are
+    revisited two rounds after their first fetch, so round 1 is empty."""
+    from twitter_crawler_spark.fixtures.webgen import generate_web
+
+    fx = str(tmp_path / "fx")
+    generate_web(fx, seed=11, n_pages=60, n_hosts=6, n_shorteners=2, n_seeds=4,
+                 span_rounds=4, mean_outdeg=0, pages_buckets=TEST_CFG.pages_buckets)
+    cfg = dataclasses.replace(TEST_CFG, max_rounds=4, intervals=(0, 7200, 18000, 68400))
+    want = FrontierOracle(fx, cfg).run()
+    assert {c["round"] for c in want.crawl_order} == {0, 2, 3}
+
+    eng = CrawlEngine(spark, fx, str(tmp_path / "s"), cfg)
+    jsc = spark.sparkContext._jsc
+    eng.run(max_rounds=1)
+    rdds = set(jsc.getPersistentRDDs().keySet())
+    eng.run()
+    assert eng.store.committed_round() == 3
+    assert set(jsc.getPersistentRDDs().keySet()) <= rdds
+    assert _engine_log(eng) == [
+        (c["round"], c["seq"], c["url"], c["host"], c["depth"], c["score"], c["attempt"])
+        for c in want.crawl_order
+    ]
+    assert {r.url for r in eng.url_seen().collect()} == want.url_seen

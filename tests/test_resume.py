@@ -226,6 +226,55 @@ def test_uncommitted_merge_round_resumes(spark, fixture_dir, tmp_path_factory,
         assert resumed.store.log_gens(tbl) == one.store.log_gens(tbl) == [3]
 
 
+def _assert_equals_oneshot(resumed, one):
+    assert _trace(resumed) == _trace(one)
+    for view in ("url_seen", "edges", "docs"):
+        got = sorted(tuple(r) for r in getattr(resumed, view)().collect())
+        want = sorted(tuple(r) for r in getattr(one, view)().collect())
+        assert got == want, view
+    assert resumed.store.state("bloom_load") == one.store.state("bloom_load")
+
+
+@pytest.mark.parametrize("crash_round", [2, 3], ids=["ordinary", "merge"])
+def test_crash_in_seen_tier_resumes(spark, fixture_dir, tmp_path,
+                                    merge_oneshot, monkeypatch, crash_round):
+    """A round's writes all follow its seen tier. If the bloom check fails,
+    in an ordinary round or in a merge round, the round has written none
+    of its tables, so the resume runs it again and equals the one-shot
+    crawl."""
+    from twitter_crawler_spark.crawl import engine
+
+    state = str(tmp_path / "crashed")
+    CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=crash_round)
+
+    def failing_check_fn(bucket_paths):
+        def check(pdf):
+            raise RuntimeError("bloom check failed")
+
+        return check
+
+    monkeypatch.setattr(engine, "make_seen_check_fn", failing_check_fn)
+    eng = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    with pytest.raises(Exception, match="bloom check failed"):
+        eng.run(max_rounds=crash_round + 1)
+    monkeypatch.undo()
+    assert eng.store.committed_round() == crash_round - 1
+
+    k = crash_round
+    merge = (k - int(eng.store.state("frontier_base_round"))) >= MERGE_CFG.compact_every
+    assert merge == (crash_round == 3)
+    kind = "gen" if merge else "r"
+    outputs = [
+        f"crawl_log/r={k}", f"evictions/r={k}", f"edges/{kind}={k}", f"docs/{kind}={k}",
+        f"url_seen/{kind}={k}", f"bloom/r={k}", f"round_metrics/r={k}",
+    ] + ([f"frontier/r={k}"] if merge else [f"frontier_ins/r={k}", f"frontier_gains/r={k}"])
+    assert not any(os.path.exists(os.path.join(state, d)) for d in outputs), outputs
+
+    resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    resumed.run(max_rounds=MERGE_ROUNDS)
+    _assert_equals_oneshot(resumed, merge_oneshot)
+
+
 def test_state_reads_launch_no_jobs(spark, merge_oneshot):
     """Every state read passes its table's declared schema, so building the
     round's views of a committed snapshot — generations, tail rounds,
@@ -399,11 +448,6 @@ def test_cuckoo_era_state_resumes(spark, fixture_dir, tmp_path, merge_oneshot):
 
     resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
     resumed.run(max_rounds=MERGE_ROUNDS)
-    one = merge_oneshot
-    assert _trace(resumed) == _trace(one)
-    for view in ("url_seen", "edges", "docs"):
-        got = sorted(tuple(r) for r in getattr(resumed, view)().collect())
-        want = sorted(tuple(r) for r in getattr(one, view)().collect())
-        assert got == want, view
-    # the occupancy map is rewritten as [n, m] pairs
-    assert resumed.store.state("bloom_load") == one.store.state("bloom_load")
+    # the bloom_load comparison shows the occupancy map rewritten as
+    # [n, m] pairs
+    _assert_equals_oneshot(resumed, merge_oneshot)

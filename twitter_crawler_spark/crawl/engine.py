@@ -11,15 +11,19 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
              (depth, -score, url) is derived on read by crawl_log()     F5/F8
   fetched  = pages ⋈ broadcast(popped) with bucket partition pruning and
              the cursor predicate pushed to the parquet scan              J9/F12/S2
-  links    = mapInPandas outlink extraction → canonicalize → redirects;
-             the distinct (src, dst) links join the batch once, for each
+  links    = ONE mapInPandas pass extracts, canonicalizes and murmur3-
+             hashes the outlinks (dst, dst_hash); a redirected dst takes
+             the long url and its hash from the cached redirects; the
+             distinct (src, dst) links join the batch once, for each
              source's url_hash, depth, OPIC cash and out-degree          P3/P8
-  cand     = ONE groupBy(dst) per round: min parent depth and OPIC gain
-             sum(cash div outdeg); the robots verdict is a per-row column
-             (the host's rule list, broadcast-joined, longest matching
-             prefix by array_max) — no row multiplication               A15
+  cand     = ONE groupBy(dst) per round: min parent depth, OPIC gain
+             sum(cash div outdeg) and url_hash = min(dst_hash); the robots
+             verdict is a per-row column (the host's rule list, broadcast-
+             joined, longest matching prefix by array_max) — no row
+             multiplication, no Python crossing before the bloom check  A15
   new      = allowed candidates → bloom → exact anti-join vs url_seen
-             (bloom-negative candidates are new)                         D1-D4
+             (bloom-negative candidates are new); the round's counters
+             are observed on the checkpoints' own jobs                   D1-D4
   frontier' = merge-on-read delta: reinserted ∪ new → frontier_ins
              (banded), OPIC cash → frontier_gains; the round's crawl_log
              rows are its equality deletes (popped (url, attempt) keys).
@@ -63,7 +67,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -105,6 +109,65 @@ def text_col(html_str):
 
 def _host_col(url):
     return F.substring_index(F.substring_index(url, "://", -1), "/", 1)
+
+
+def _checkpoint(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
+    """``df.localCheckpoint()`` and the named aggregates ``metrics`` over
+    its rows, computed by the checkpoint's own job (an ``Observation``, a
+    new one per call): a round's counters cost no job of their own."""
+    obs = Observation()
+    out = df.observe(obs, *[c.alias(k) for k, c in metrics.items()]).localCheckpoint()
+    return out, obs.get
+
+
+def _release(df: DataFrame) -> None:
+    """Free the blocks of a local checkpoint. ``DataFrame.unpersist`` does
+    not: it drops cache-manager entries, while a checkpoint is the RDD its
+    plan (a ``LogicalRDD``) wraps, which stays persisted until the JVM
+    garbage-collects it. Any other frame (a round that pops nothing fetches
+    from a ``LocalRelation``) holds no blocks and is left as it is."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
+def make_extract_fn():
+    """The round's one Python pass over its fetched pages (``url``,
+    ``html``) → one row per link: ``src_url, dst, dst_hash, anchor``, with
+    ``dst`` the canonical target (a link that canonicalizes to nothing is
+    dropped) and ``dst_hash`` its murmur3_64: the links cross into Python
+    once before the bloom check (fusing Arrow UDF crossings: CIDR'22,
+    "Accelerating Python UDFs in Vectorized Query Execution").
+
+    The kernels are the ones this module names when the function is made,
+    ``canonicalize_udf`` and ``murmur3_64_udf`` through their ``.func``;
+    the returned closure ships them to the tasks by value, so a wrapper put
+    on those names (perfbench's tracer) runs in the workers."""
+    decode, links_of = decode_html, extract_links
+    canon, hash64 = canonicalize_udf.func, murmur3_64_udf.func
+
+    def extract(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            links = links_of(decode(pdf["html"]))
+            if not len(links):
+                continue
+            # level 0 of the match index is the page's row in the batch
+            src = pd.Series(pdf["url"].to_numpy()[links.index.get_level_values(0)])
+            dst = canon(pd.Series(links["href"].to_numpy()), src)
+            keep = dst.notna().to_numpy()
+            dst = dst[keep].reset_index(drop=True)
+            yield pd.DataFrame(
+                {
+                    "src_url": src.to_numpy()[keep],
+                    "dst": dst.to_numpy(),
+                    "dst_hash": hash64(dst).to_numpy(),
+                    "anchor": links["anchor"].to_numpy()[keep],
+                }
+            )
+
+    return extract
 
 
 def require_shared_state(master: str, state_dir: str, declared_shared: bool) -> None:
@@ -170,7 +233,14 @@ class CrawlEngine:
                     f"{self.cfg.pages_buckets}; the bucket-pruned fetch join "
                     f"would silently miss pages — pass a matching config"
                 )
-        self.redirects = s.read.parquet(os.path.join(fx, "redirects.parquet")).cache()
+        # a redirect target's hash is computed once per engine, when the
+        # cache fills: the round takes it with the target (coalesce), so no
+        # link is hashed after the redirect join
+        self.redirects = (
+            s.read.parquet(os.path.join(fx, "redirects.parquet"))
+            .withColumn("long_hash", murmur3_64_udf("long_url"))
+            .cache()
+        )
         # one row per host: (host, rules array<struct<prefix, allow>>)
         self.robots = (
             s.read.parquet(os.path.join(fx, "robots.parquet"))
@@ -554,6 +624,93 @@ class CrawlEngine:
             seen_scan.select(F.col("url").alias("dst")), "dst", "left_anti"
         )
 
+    # ------------------------------------------------------- extract → seen
+    # (factored so scripts/plan_audit.py audits the real candidate dataflow)
+
+    def _outlinks(self, fetched: DataFrame, popped: DataFrame) -> DataFrame:
+        """The batch's distinct (src, dst) links, each with its target's
+        hash ``dst_hash`` and its source's url_hash, depth, OPIC cash and
+        out-degree. The links come from one Arrow pass
+        (``make_extract_fn``); a redirected target takes the redirect's
+        long url and its hash, cached with the redirects. Sources ARE popped
+        urls (one broadcast join); the out-degree is a count window over
+        src_url, whose partitioning the link dedup shares."""
+        red = F.broadcast(self.redirects)
+        links = (
+            fetched.select("url", "html")
+            .mapInPandas(
+                make_extract_fn(), "src_url string, dst string, dst_hash long, anchor string"
+            )
+            .join(red, F.col("dst") == F.col("short_url"), "left")
+            .select(
+                "src_url",
+                F.coalesce("long_url", "dst").alias("dst"),
+                F.coalesce("long_hash", "dst_hash").alias("dst_hash"),
+                "anchor",
+            )
+            .where(F.col("dst") != F.col("src_url"))
+        )
+        sources = popped.select(
+            F.col("url").alias("src_url"), "url_hash", "depth", "score"
+        )
+        return (
+            links.repartition("src_url")
+            .groupBy("src_url", "dst")
+            .agg(F.min("anchor").alias("anchor"), F.min("dst_hash").alias("dst_hash"))
+            .join(F.broadcast(sources), "src_url")
+            .withColumn("outdeg", F.count("*").over(Window.partitionBy("src_url")))
+        )
+
+    def _candidates(self, outlinks: DataFrame) -> DataFrame:
+        """One aggregation per distinct outlink target gives its min parent
+        depth, its OPIC gain (integer cash, so the sum is order-independent)
+        and its ``url_hash``; the robots verdict and the seen bucket are
+        per-row columns on top."""
+        cand = outlinks.groupBy("dst").agg(
+            F.min("depth").alias("parent_depth"),
+            F.sum(F.expr("score div outdeg")).alias("gain"),
+            F.min("dst_hash").alias("url_hash"),
+        )
+        return self._with_robots(cand, "dst").withColumn(
+            "bucket", F.pmod("url_hash", F.lit(self.cfg.seen_partitions))
+        )
+
+    def _flag(self, cand: DataFrame, bucket_paths: dict[int, str]) -> DataFrame:
+        """``cand`` plus ``maybe_seen``, its bloom verdict (the shard of
+        each bucket, read in a grouped Arrow pass); without filters every
+        candidate goes to the exact tier."""
+        if not self.use_filters:
+            return cand.withColumn("maybe_seen", F.lit(True))
+        return cand.groupBy("bucket").applyInPandas(
+            make_seen_check_fn(bucket_paths),
+            "dst string, parent_depth int, gain long, allowed boolean,"
+            " url_hash long, bucket int, maybe_seen boolean",
+        )
+
+    def _seen_tier(
+        self, outlinks: DataFrame, seen_all: DataFrame, bucket_paths: dict[int, str]
+    ) -> tuple[DataFrame, DataFrame, dict]:
+        """Candidates → bloom → exact anti-join: the bloom-flagged
+        candidates and the round's new urls (both checkpointed) and their
+        counters. The flag checkpoint's job also counts the candidates, the
+        robots-blocked and the bloom negatives, and lists the buckets of the
+        bloom-positive slice, which prune the exact tier's seen scan."""
+        allowed, maybe = F.col("allowed"), F.col("maybe_seen")
+        flagged, fl = _checkpoint(
+            self._flag(self._candidates(outlinks), bucket_paths),
+            candidates=F.count(F.lit(1)),
+            blocked=F.count_if(~allowed),
+            bloom_neg=F.count_if(allowed & ~maybe),
+            exact_buckets=F.collect_set(F.when(allowed & maybe, F.col("bucket"))),
+        )
+        ok = flagged.where(allowed).drop("allowed")
+        fast_new = ok.where(~maybe).drop("maybe_seen")
+        need_exact = ok.where(maybe).drop("maybe_seen")
+        exact_new = self._exact_new(need_exact, seen_all, sorted(fl["exact_buckets"]))
+        new_urls, nu = _checkpoint(fast_new.unionByName(exact_new), new=F.count(F.lit(1)))
+        counts = {k: int(v) for k, v in {**fl, **nu}.items() if k != "exact_buckets"}
+        return flagged, new_urls, counts
+
     # ------------------------------------------------------------------ a round
 
     def _round(self, r: int) -> int:
@@ -577,24 +734,24 @@ class CrawlEngine:
         # The batch is tagged with its pages bucket (_b) and url_seen/docs
         # bucket (_sb) and checkpointed: it is consumed by five downstream
         # stages (durability comes from the snapshot store, not from this).
-        popped = (
+        # The checkpoint's job also gives the batch size and the bucket
+        # lists for fetch-join AND docs-anti-join partition pruning.
+        popped, pop = _checkpoint(
             self._pop_survivors(due_live, recent, t_r, r)
             .withColumn("_b", F.pmod("url_hash", F.lit(cfg.pages_buckets)))
-            .withColumn("_sb", F.pmod("url_hash", F.lit(cfg.seen_partitions)))
-            .localCheckpoint()
+            .withColumn("_sb", F.pmod("url_hash", F.lit(cfg.seen_partitions))),
+            n=F.count(F.lit(1)),
+            b=F.collect_set("_b"),
+            sb=F.collect_set("_sb"),
         )
-        # one job: per-(page-bucket, seen-bucket) counts → batch size and the
-        # bucket lists for fetch-join AND docs-anti-join partition pruning
-        pb_counts = popped.groupBy("_b", "_sb").count().collect()
-        n_popped = sum(int(row["count"]) for row in pb_counts)
+        n_popped = int(pop["n"])
 
         # ---- fetch join: bucket partition pruning + broadcast of the batch ----
         lang_ok = F.lit(True) if cfg.lang_filter is None else (F.col("lang") == cfg.lang_filter)
         if n_popped:
-            buckets = sorted({int(row["_b"]) for row in pb_counts})
             fetched = (
                 self._pages()
-                .where(F.col("bucket").isin(buckets))
+                .where(F.col("bucket").isin(sorted(pop["b"])))
                 .join(F.broadcast(popped.select("url", "last_cursor")), "url")
                 .where(
                     (F.col("ts_logical") <= t_r)
@@ -620,54 +777,7 @@ class CrawlEngine:
             .withColumn("n_results", F.coalesce("n_results", F.lit(0)))
             .withColumn("new_cursor", F.coalesce("new_cursor", "last_cursor"))
         ).localCheckpoint()
-
-        # ---- outlink extraction (one fused Arrow pass) + canonicalize --------
-        def _extract(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                html_str = decode_html(pdf["html"])
-                links = extract_links(html_str)
-                if not len(links):
-                    continue
-                src = pdf["url"].reset_index(drop=True)
-                links = links.reset_index(level=1, drop=True)
-                out = pd.DataFrame(
-                    {
-                        "src_url": src.iloc[links.index].to_numpy(),
-                        "href": links["href"].to_numpy(),
-                        "anchor": links["anchor"].to_numpy(),
-                    }
-                )
-                yield out
-
-        raw_links = fetched.select("url", "html").mapInPandas(
-            _extract, "src_url string, href string, anchor string"
-        )
-        red = F.broadcast(self.redirects)
-        links = (
-            raw_links.withColumn("dst", canonicalize_udf("href", "src_url"))
-            .where(F.col("dst").isNotNull())
-            .join(red, F.col("dst") == F.col("short_url"), "left")
-            .withColumn("dst", F.coalesce("long_url", "dst"))
-            .drop("short_url", "long_url", "href")
-            .where(F.col("dst") != F.col("src_url"))
-        )
-        # each distinct (src, dst) link carries its source's url_hash, depth
-        # and OPIC cash from the batch (src urls ARE popped urls: one
-        # broadcast join) and the source's out-degree (a count window over
-        # src_url, whose partitioning the link dedup shares)
-        sources = popped.select(
-            F.col("url").alias("src_url"), "url_hash", "depth", "score"
-        )
-        outlinks = (
-            links.repartition("src_url")
-            .groupBy("src_url", "dst")
-            .agg(F.min("anchor").alias("anchor"))
-            .join(F.broadcast(sources), "src_url")
-            .withColumn("outdeg", F.count("*").over(Window.partitionBy("src_url")))
-            .localCheckpoint()  # one Arrow extraction pass, many consumers
-        )
+        outlinks = self._outlinks(fetched, popped).localCheckpoint()
 
         # ---- edges + docs appends --------------------------------------------
         # edges is laid out bucketed by src_bucket = murmur3_64(src_url) %
@@ -690,7 +800,7 @@ class CrawlEngine:
         docs_all = self.store.read_log(s, "docs", prev)
         first_fetch = popped_res.where(F.col("n_results") > 0)
         if docs_all is not None:
-            pop_buckets = sorted({int(row["_sb"]) for row in pb_counts})
+            pop_buckets = sorted(pop["sb"])
             if pop_buckets and len(pop_buckets) < cfg.seen_partitions:
                 docs_scan = docs_all.where(F.col("bucket").isin(pop_buckets))
             else:
@@ -707,62 +817,14 @@ class CrawlEngine:
             )
         )
 
-        # ---- candidates: one aggregation per distinct outlink target gives
-        # its min parent depth and its OPIC gain (integer cash, so the sum
-        # is order-independent); the robots verdict, hash and seen bucket
-        # are per-row columns on top, and the bloom flag is attached before
-        # the one materialization
-        cand = self._with_robots(
-            outlinks.groupBy("dst").agg(
-                F.min("depth").alias("parent_depth"),
-                F.sum(F.expr("score div outdeg")).alias("gain"),
-            ),
-            "dst",
-        ).withColumn("url_hash", murmur3_64_udf("dst")).withColumn(
-            "bucket", F.pmod("url_hash", F.lit(cfg.seen_partitions))
-        )
-
+        # ---- seen tier -----------------------------------------------------------
+        seen_all = self.store.read_log(s, "url_seen", prev)
         # bucket → shard path from the committed manifest: O(1) resolution
         # per bucket inside tasks, regardless of how many rounds have run
         bucket_paths = self.store.bloom_paths() if self.use_filters else {}
-        if self.use_filters:
-            check = make_seen_check_fn(bucket_paths)
-            flagged = cand.groupBy("bucket").applyInPandas(
-                check,
-                "dst string, parent_depth int, gain long, allowed boolean,"
-                " url_hash long, bucket int, maybe_seen boolean",
-            ).localCheckpoint()
-        else:
-            flagged = cand.withColumn("maybe_seen", F.lit(True)).localCheckpoint()
-        # one job: candidate/robots/bloom counters off the checkpoint, per
-        # bucket — the bucket list of the bloom-positive slice drives
-        # partition pruning of the exact-tier seen scan below
-        stats = flagged.groupBy("allowed", "maybe_seen", "bucket").count().collect()
-        n_candidates = sum(int(row["count"]) for row in stats)
-        n_blocked = sum(int(row["count"]) for row in stats if not row["allowed"])
-        n_bloom_neg = sum(
-            int(row["count"]) for row in stats
-            if row["allowed"] and not row["maybe_seen"]
-        )
-        exact_buckets = sorted(
-            {int(row["bucket"]) for row in stats if row["allowed"] and row["maybe_seen"]}
-        )
-        ok = flagged.where("allowed").drop("allowed")
-        fast_new = ok.where(~F.col("maybe_seen")).drop("maybe_seen")
-        need_exact = ok.where("maybe_seen").drop("maybe_seen")
-        seen_all = self.store.read_log(s, "url_seen", prev)
-        exact_new = self._exact_new(need_exact, seen_all, exact_buckets)
-        new_urls = fast_new.unionByName(exact_new).localCheckpoint()
-        # one job: total + per-seen-partition new-url counts (metrics reuse)
-        part = F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("partition_id")
-        new_stats = {
-            int(row["partition_id"]): int(row["new_urls"])
-            for row in new_urls.groupBy(part).agg(
-                F.count("*").alias("new_urls")
-            ).collect()
-        }
-        n_new = sum(new_stats.values())
-        n_dupes = n_candidates - n_blocked - n_new
+        flagged, new_urls, seen_n = self._seen_tier(outlinks, seen_all, bucket_paths)
+        n_new = seen_n["new"]
+        n_dupes = seen_n["candidates"] - seen_n["blocked"] - n_new
 
         new_base = new_urls.select(
             F.col("dst").alias("url"),
@@ -901,11 +963,12 @@ class CrawlEngine:
             (evictions, "evictions"),
         ]
 
-        # ---- write round outputs + bloom update + remaining stats, all jobs
-        # over materialized checkpoints → submitted CONCURRENTLY from driver
-        # threads (Spark schedules independent jobs in parallel; wall time is
-        # the max, not the sum — the analog of parallel Iceberg table appends
-        # before one snapshot commit)
+        # ---- write round outputs + bloom update + per-partition stats, all
+        # jobs over materialized checkpoints → submitted CONCURRENTLY from
+        # driver threads (Spark schedules independent jobs in parallel; wall
+        # time is the max, not the sum — the analog of parallel Iceberg table
+        # appends before one snapshot commit)
+        part = F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("partition_id")
 
         def _bloom_task():
             # per-bucket shard versioning: only buckets with new urls get a
@@ -935,6 +998,14 @@ class CrawlEngine:
                 ).collect()
             }
 
+        def _new_stats_task():
+            return {
+                int(row["partition_id"]): int(row["new_urls"])
+                for row in new_urls.groupBy(part).agg(
+                    F.count("*").alias("new_urls")
+                ).collect()
+            }
+
         with ThreadPoolExecutor(max_workers=10) as pool:
             futs = [pool.submit(st.write_round, df, tbl, r) for df, tbl in writes]
             gen_futs = {
@@ -943,10 +1014,12 @@ class CrawlEngine:
             }
             fut_bloom = pool.submit(_bloom_task) if self.use_filters else None
             fut_stats = pool.submit(_pop_stats_task)
+            fut_new = pool.submit(_new_stats_task)
             for f in futs:
                 f.result()
             gen_paths = {tbl: f.result() for tbl, f in gen_futs.items()}
             pop_stats = fut_stats.result()
+            new_stats = fut_new.result()
             bloom_rows = fut_bloom.result() if fut_bloom is not None else []
         # fold this round's shard stats into the manifest's occupancy map
         # (bucket → [n, m]) — driver arithmetic only; the capacity policy
@@ -1032,7 +1105,7 @@ class CrawlEngine:
                 "bloom_buckets": len(bucket_paths) if self.use_filters else None,
             }
         )
-        # pop_stats / new_stats were collected above (fused jobs) — pure
+        # pop_stats / new_stats were collected in the write pool — pure
         # driver-side assembly from here
         rows = []
         total_hits = total_results = 0
@@ -1053,7 +1126,7 @@ class CrawlEngine:
         rows.append(
             (
                 r, -1, n_popped, total_hits, total_results,
-                n_new, n_dupes, n_blocked, n_evicted, n_bloom_neg,
+                n_new, n_dupes, seen_n["blocked"], n_evicted, seen_n["bloom_neg"],
                 0,  # cuckoo_rejected: no cuckoo tier (schemas.ROUND_METRICS)
                 wall_ms, lineage,
             )
@@ -1092,7 +1165,7 @@ class CrawlEngine:
         # in the snapshot store; relying on GC/ContextCleaner lets executor
         # storage accumulate across a long crawl
         for df in (popped, fetched, popped_res, outlinks, flagged, new_urls):
-            df.unpersist()
+            _release(df)
         return frontier_n
 
     # ------------------------------------------------------------------ outputs

@@ -28,6 +28,13 @@ def get_spark(
       no per-row Python, per BASELINE.json input_hint).
     * UTC session timezone: parquet timestamps must mean the same instant to
       Spark, DuckDB (the correctness oracle) and the fixture generator.
+    * Codegen cache sized to the crawl: a crawl round needs about 200
+      generated classes, and a whole ``crawl_compact`` run about 380
+      distinct ones. Spark's default cache holds 100, so its LRU evicted a
+      round's working set before the next round and every round compiled
+      it again. Janino compiles in ``crawl_compact`` rounds 1-4: 240/180/
+      238/181 with 100 entries, 83/30/42/16 with 1024 (BASELINE.md, "A
+      round compiles once").
     * ``local=False`` (the ``spark-submit`` path, jobs/crawl.py): no
       ``.master()`` call — the cluster manager from ``--master`` wins, and
       ``cores`` only sizes the default shuffle parallelism.
@@ -55,6 +62,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
+        # static conf: read once, when the session is created (see above)
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

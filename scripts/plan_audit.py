@@ -89,15 +89,22 @@ def _fmt(df) -> str:
 
 def _round_tree(plan: str) -> str:
     """The node tree of a formatted plan without the subtrees under an
-    ``InMemoryRelation``: a cached plan runs when the cache fills, not each
-    time the plan runs."""
-    out, cut = [], None
-    for line in plan.split("\n\n", 1)[0].splitlines():
+    ``InMemoryRelation`` (a cached plan runs when the cache fills, not each
+    time the plan runs), followed by the detail blocks of the nodes kept
+    (``(N) Exchange`` … ``Arguments: hashpartitioning(...)``)."""
+    tree, details = plan.split("\n\n", 1) if "\n\n" in plan else (plan, "")
+    out, cut, kept = [], None, set()
+    for line in tree.splitlines():
         depth = len(line) - len(line.lstrip(" :+-"))
         if cut is not None and depth > cut:
             continue
         cut = depth if "InMemoryRelation" in line else None
         out.append(line)
+        kept.update(re.findall(r"\((\d+)\)\s*$", line))
+    for block in details.split("\n\n"):
+        m = re.match(r"\s*\((\d+)\) ", block)
+        if m and m.group(1) in kept:
+            out.append(block.strip())
     return "\n".join(out)
 
 
@@ -185,13 +192,19 @@ def main() -> None:
         .select("url", "html")
     )
     cand_plan = _fmt(eng._flag(
-        eng._candidates(eng._outlinks(cand_fetch, frontier)), eng.store.bloom_paths()
+        eng._candidates(eng._outlinks(cand_fetch, frontier)),
+        eng.store.bloom_paths(), eng.store.bloom_dir(0),
     ))
     sections.append(
         ("crawl_candidates", cand_plan, ["FlatMapGroupsInPandas"], [], {})
     )
+    # two shuffles: the outlinks' on src_url, and the one on bucket that the
+    # candidate aggregation (by bucket, dst) and the bloom check's groups
+    # share, so no Exchange sits between the aggregation and the check
     counts["crawl_candidates"] = {
         r"MapInPandas \(\d+\)": 1, r"ArrowEvalPython \(\d+\)": 0,
+        r"\bExchange \(\d+\)": 2,
+        r"Arguments: hashpartitioning\(bucket#\d+L?, \d+\)": 1,
     }
 
     # 5. the merge-on-read frontier due scan: the banded base (and any ins

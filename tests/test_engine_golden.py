@@ -6,7 +6,10 @@ semantics; see twitter_crawler_spark/oracle/frontier_oracle.py)."""
 from __future__ import annotations
 
 import dataclasses
+import os
+import shutil
 
+import pandas as pd
 import pytest
 
 from tests.conftest import TEST_CFG
@@ -157,3 +160,27 @@ def test_round_that_pops_nothing(spark, tmp_path):
         for c in want.crawl_order
     ]
     assert {r.url for r in eng.url_seen().collect()} == want.url_seen
+
+
+def test_engine_construction_reads_inputs_without_inference(spark, fixture_dir, tmp_path):
+    """The static inputs are read under their declared schemas, so building
+    an engine launches at most the one job that finds the longest crawl
+    delay, and no footer-inference job. An input whose columns drift from
+    the declaration raises."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job() -> int:
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    j0 = last_job()
+    CrawlEngine(spark, fixture_dir, str(tmp_path / "s"), TEST_CFG)
+    assert last_job() - j0 <= 1
+
+    fx = str(tmp_path / "fx")
+    shutil.copytree(fixture_dir, fx)
+    pol_path = os.path.join(fx, "politeness.parquet")
+    pol = pd.read_parquet(pol_path)
+    pol["crawl_delay_rounds"] = pol["crawl_delay_rounds"].astype("int64")
+    pol.to_parquet(pol_path, index=False)
+    with pytest.raises(ValueError, match="declares"):
+        CrawlEngine(spark, fx, str(tmp_path / "s2"), TEST_CFG)

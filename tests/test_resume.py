@@ -143,8 +143,9 @@ def test_read_rounds_skips_schema_less_empty_dirs(spark, tmp_path_factory):
     """A zero-row PARTITIONED write leaves a round dir with only _SUCCESS —
     no part file, no schema. On a long crawl a table goes quiet for a whole
     compaction window (docs once first-fetches dry up), so the tail can be
-    ALL such dirs; reading it must yield None, not an AnalysisException
-    (found by scripts/long_crawl_stats.py at round ~24 of a 50-round run)."""
+    ALL such dirs; reading the rounds must yield None and reading the log
+    an empty frame, not an AnalysisException (found by
+    scripts/long_crawl_stats.py at round ~24 of a 50-round run)."""
     from twitter_crawler_spark.crawl.state import SnapshotStore
 
     st = SnapshotStore(str(tmp_path_factory.mktemp("state") / "s"))
@@ -152,7 +153,7 @@ def test_read_rounds_skips_schema_less_empty_dirs(spark, tmp_path_factory):
     st.write_round(empty, "docs", 3)
     st.write_round(empty, "docs", 4)
     assert st.read_rounds(spark, "docs", 4) is None
-    assert st.read_log(spark, "docs", 4) is None
+    assert st.read_log(spark, "docs", 4).count() == 0
     # a mixed tail (one quiet round, one data-bearing) still unions fine
     st.write_round(_docs_rows(spark, 2), "docs", 5)
     got = st.read_rounds(spark, "docs", 5)
@@ -247,7 +248,7 @@ def test_crash_in_seen_tier_resumes(spark, fixture_dir, tmp_path,
     state = str(tmp_path / "crashed")
     CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=crash_round)
 
-    def failing_check_fn(bucket_paths):
+    def failing_check_fn(*args):
         def check(pdf):
             raise RuntimeError("bloom check failed")
 
@@ -273,6 +274,39 @@ def test_crash_in_seen_tier_resumes(spark, fixture_dir, tmp_path,
     resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
     resumed.run(max_rounds=MERGE_ROUNDS)
     _assert_equals_oneshot(resumed, merge_oneshot)
+
+
+@pytest.mark.parametrize("crash_round", [2, 3], ids=["ordinary", "merge"])
+def test_crash_after_bloom_check_resumes(spark, fixture_dir, tmp_path,
+                                         merge_oneshot, crash_round):
+    """The bloom check writes the round's shards (``bloom/r=<k>``) before
+    the write pool starts. If the pool then fails, in an ordinary round or
+    in a merge round, those shards are uncommitted debris: the resume
+    removes them, checks against the committed shards again and equals the
+    one-shot crawl, ``bloom_load`` included."""
+    state = str(tmp_path / "crashed")
+    CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=crash_round)
+
+    eng = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    write_round, failed = eng.store.write_round, []
+
+    def fail_first_write(df, table, round_):
+        if round_ == crash_round and not failed:
+            failed.append(table)
+            raise RuntimeError("pool write failed")
+        return write_round(df, table, round_)
+
+    eng.store.write_round = fail_first_write
+    with pytest.raises(RuntimeError, match="pool write failed"):
+        eng.run(max_rounds=crash_round + 1)
+    assert eng.store.committed_round() == crash_round - 1
+    shards = os.path.join(state, "bloom", f"r={crash_round}")
+    assert os.path.isdir(shards) and os.listdir(shards), "the check wrote shards"
+
+    resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    resumed.run(max_rounds=MERGE_ROUNDS)
+    _assert_equals_oneshot(resumed, merge_oneshot)
+    assert resumed.store.bloom_map() == merge_oneshot.store.bloom_map()
 
 
 def test_state_reads_launch_no_jobs(spark, merge_oneshot):

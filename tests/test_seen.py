@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from twitter_crawler_spark.config import CrawlConfig
 from twitter_crawler_spark.crawl.seen import SeenShard, make_seen_check_fn, shard_path
 
 
@@ -57,13 +58,16 @@ def test_check_fn_classification(tmp_path):
     sh.add(added)
     d = str(tmp_path)
     sh.save(shard_path(d, 3))
-    check = make_seen_check_fn({3: shard_path(d, 3)})
+    check = make_seen_check_fn(
+        {3: shard_path(d, 3)}, str(tmp_path / "new"), CrawlConfig()
+    )
     fresh = rng.integers(-(2**62), 2**62, 300, dtype=np.int64)
     fresh = np.setdiff1d(fresh, added)
     pdf = pd.DataFrame(
         {
             "url_hash": np.concatenate([added, fresh]),
             "bucket": 3,
+            "allowed": True,
         }
     )
     out = check(pdf)
@@ -77,8 +81,48 @@ def test_check_fn_classification(tmp_path):
     assert not check(pdf.assign(bucket=4))["maybe_seen"].any()
 
 
+def test_check_then_insert_negatives_equals_add_all_new(tmp_path):
+    """The bloom check inserts only the allowed bloom-negative candidates
+    and writes the shard. Over random hashes, the written bits equal those
+    of adding every new url (the negatives plus the bloom-positive ones
+    the exact tier finds new): a bloom-positive key sets no new bit. A
+    robots-blocked candidate is never inserted, and a bucket whose
+    candidates are all bloom-positive gets no shard file."""
+    import pandas as pd
+
+    cfg = CrawlConfig(bloom_bits_per_partition=1 << 11, bloom_num_hashes=3)
+    rng = np.random.default_rng(11)
+    for trial in range(5):
+        seen = rng.integers(-(2**62), 2**62, 400, dtype=np.int64)
+        committed = SeenShard(cfg.bloom_bits_per_partition, cfg.bloom_num_hashes)
+        committed.add(seen)
+        old_dir, new_dir = tmp_path / f"old{trial}", tmp_path / f"new{trial}"
+        old_dir.mkdir()
+        committed.save(shard_path(str(old_dir), 5))
+        # candidates: duplicates of seen urls and fresh urls (a loaded
+        # 2048-bit shard gives the fresh ones many false positives)
+        fresh = np.setdiff1d(rng.integers(-(2**62), 2**62, 300, dtype=np.int64), seen)
+        cand = np.concatenate([rng.choice(seen, 100, replace=False), fresh])
+        allowed = rng.random(len(cand)) < 0.8
+        out = make_seen_check_fn({5: shard_path(str(old_dir), 5)}, str(new_dir), cfg)(
+            pd.DataFrame({"url_hash": cand, "bucket": 5, "allowed": allowed})
+        )
+        maybe = out["maybe_seen"].to_numpy()
+        assert 0 < (maybe & ~np.isin(cand, seen)).sum(), "false positives occur"
+        new_urls = cand[allowed & ~np.isin(cand, seen)]
+        want = SeenShard.load(shard_path(str(old_dir), 5))
+        want.add(new_urls)
+        got = SeenShard.load(shard_path(str(new_dir), 5))
+        assert (got.bits == want.bits).all() and got.m == want.m
+    # only bloom-positive candidates: the bits cannot change, no file
+    check = make_seen_check_fn({5: shard_path(str(old_dir), 5)}, str(tmp_path / "none"), cfg)
+    out = check(pd.DataFrame({"url_hash": seen[:50], "bucket": 5, "allowed": True}))
+    assert out["maybe_seen"].all()
+    assert not (tmp_path / "none").exists()
+
+
 def test_n_added_persists_and_legacy_load(tmp_path):
-    """The capacity policy's occupancy counter survives save/load, and
+    """A shard's n_added survives save/load, and
     legacy shard files still load: those that also carry a cuckoo array
     with a 6-element meta [m, k, cuckoo buckets, cuckoo slots, overflowed,
     n_added], and the oldest ones whose 5-element meta has no n_added."""

@@ -6,11 +6,17 @@ a generation write that produced no data files leaves nothing behind."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 import pytest
+from pyspark.sql.types import StructType
 
+from tests.conftest import TEST_CFG
+from twitter_crawler_spark import schemas
+from twitter_crawler_spark.crawl.engine import CrawlEngine
 from twitter_crawler_spark.crawl.state import SnapshotStore
+from twitter_crawler_spark.session import local_df
 
 
 def _evictions(spark, round_expr: str = "cast(1 as int)"):
@@ -75,3 +81,37 @@ def test_empty_generation_leaves_nothing(spark, tmp_path):
     assert st.write_gen(empty.union(spark.range(1).selectExpr(
         "id as url_hash", "'u' as url", "0 as first_round", "cast(id as int) as bucket",
     )), "url_seen", 5) == st.gen_dir("url_seen", 5)
+
+
+def test_local_df_plans_no_python_rdd(spark):
+    """``local_df`` plans a JVM-only relation: no rows give a projection of
+    ``range(0)``, rows give a ``LocalRelation``. Neither is the Python RDD
+    (``LogicalRDD``) that ``createDataFrame`` makes of an empty pandas
+    frame, which would start Python workers on every action."""
+    ddl = "url string, ts_logical long, html binary"
+    want = [(f.name, f.dataType) for f in StructType.fromDDL(ddl).fields]
+    for rows, root in (([], "Project"), ([("u", 7, b"x")], "LocalRelation")):
+        df = local_df(spark, rows, ddl)
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == root
+        assert "LogicalRDD" not in plan.toString()
+        assert [(f.name, f.dataType) for f in df.schema.fields] == want
+        assert [tuple(r) for r in df.collect()] == [(u, t, bytearray(h)) for u, t, h in rows]
+
+
+def test_log_without_rounds_reads_empty(spark, fixture_dir, tmp_path):
+    """A crawl that never evicts submits no ``evictions`` write, and its
+    evictions view is an empty frame of the declared schema (planned
+    JVM-only), not None; the other views read as usual."""
+    state = str(tmp_path / "s")
+    cfg = dataclasses.replace(TEST_CFG, evict_unproductive=False)
+    eng = CrawlEngine(spark, fixture_dir, state, cfg)
+    eng.run(max_rounds=3)
+    assert not os.path.exists(os.path.join(state, "evictions"))
+    ev = eng.evictions()
+    assert ev.count() == 0
+    assert [(f.name, f.dataType) for f in ev.schema.fields] == [
+        (f.name, f.dataType) for f in schemas.EVICTIONS.fields
+    ]
+    assert "LogicalRDD" not in ev._jdf.queryExecution().analyzed().toString()
+    assert eng.docs().count() > 0

@@ -21,4 +21,7 @@ Lucene index), re-imagined per BASELINE.json's north rule as:
 
 __version__ = "0.1.0"
 
+from twitter_crawler_spark import zipcache
 from twitter_crawler_spark.config import CrawlConfig  # noqa: F401
+
+zipcache.install_in_worker()

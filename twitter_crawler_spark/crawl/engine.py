@@ -10,20 +10,31 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
   popped   = salted two-stage per-host budget window; the crawl order
              (depth, -score, url) is derived on read by crawl_log()     F5/F8
   fetched  = pages ⋈ broadcast(popped) with bucket partition pruning and
-             the cursor predicate pushed to the parquet scan              J9/F12/S2
-  links    = ONE mapInPandas pass extracts, canonicalizes and murmur3-
+             the cursor predicate pushed to the parquet scan, grouped per
+             popped url into ONE checkpoint (popped_res): result count,
+             cursor, latest snapshot and every visible snapshot. The
+             batch is materialized once; nothing checkpoints ``fetched``
+             on its own                                                   J9/F12/S2
+  links    = ONE mapInPandas pass over popped_res's snapshots (exploded)
+             extracts, canonicalizes and murmur3-
              hashes the outlinks (dst, dst_hash); a redirected dst takes
              the long url and its hash from the cached redirects; the
              distinct (src, dst) links join the batch once, for each
              source's url_hash, depth, OPIC cash and out-degree          P3/P8
-  cand     = ONE groupBy(dst) per round: min parent depth, OPIC gain
+  cand     = ONE groupBy(bucket, dst) per round over the one shuffle on
+             the seen bucket: min parent depth, OPIC gain
              sum(cash div outdeg) and url_hash = min(dst_hash); the robots
              verdict is a per-row column (the host's rule list, broadcast-
              joined, longest matching prefix by array_max) — no row
              multiplication, no Python crossing before the bloom check  A15
   new      = allowed candidates → bloom → exact anti-join vs url_seen
-             (bloom-negative candidates are new); the round's counters
-             are observed on the checkpoints' own jobs                   D1-D4
+             (bloom-negative candidates are new). The bloom check groups
+             by bucket on the candidates' own shuffle, and it is also the
+             round's insert: it adds the allowed bloom negatives to the
+             shard it loaded and writes bloom/r=<r>/bucket=N.npz; the
+             manifest's bloom_load n grows by the new urls per bucket.
+             The round's counters are observed on the checkpoints' own
+             jobs, and a write observed to hold 0 rows is not submitted  D1-D4
   frontier' = merge-on-read delta: reinserted ∪ new → frontier_ins
              (banded), OPIC cash → frontier_gains; the round's crawl_log
              rows are its equality deletes (popped (url, attempt) keys).
@@ -67,8 +78,10 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.window import Window
 
 from twitter_crawler_spark import schemas
@@ -124,8 +137,8 @@ def _release(df: DataFrame) -> None:
     """Free the blocks of a local checkpoint. ``DataFrame.unpersist`` does
     not: it drops cache-manager entries, while a checkpoint is the RDD its
     plan (a ``LogicalRDD``) wraps, which stays persisted until the JVM
-    garbage-collects it. Any other frame (a round that pops nothing fetches
-    from a ``LocalRelation``) holds no blocks and is left as it is."""
+    garbage-collects it. Any other frame holds no blocks and is left as it
+    is."""
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() == "LogicalRDD":
         plan.rdd().unpersist(False)
@@ -237,28 +250,60 @@ class CrawlEngine:
         # cache fills: the round takes it with the target (coalesce), so no
         # link is hashed after the redirect join
         self.redirects = (
-            s.read.parquet(os.path.join(fx, "redirects.parquet"))
+            self._read_static("redirects")
             .withColumn("long_hash", murmur3_64_udf("long_url"))
             .cache()
         )
         # one row per host: (host, rules array<struct<prefix, allow>>)
         self.robots = (
-            s.read.parquet(os.path.join(fx, "robots.parquet"))
+            self._read_static("robots")
             .groupBy("host")
             .agg(F.collect_list(F.struct("prefix", "allow")).alias("rules"))
             .cache()
         )
-        self.politeness = s.read.parquet(os.path.join(fx, "politeness.parquet")).cache()
+        self.politeness = self._read_static("politeness").cache()
         # D, the longest crawl delay any host can have: a fetch more than
         # D-1 rounds old can no longer hold a host back, so the crawl-delay
-        # gate reads only the last D-1 crawl_log rounds
-        pol_max = self.politeness.agg(F.max("crawl_delay_rounds")).first()[0]
+        # gate reads only the last D-1 crawl_log rounds. A top-1 sort is
+        # one job; a global max aggregate would add a shuffle stage's job.
+        top = (
+            self.politeness.select("crawl_delay_rounds")
+            .orderBy(F.desc_nulls_last("crawl_delay_rounds"))
+            .first()
+        )
+        pol_max = top[0] if top is not None else None
         self.max_delay = max(self.cfg.default_crawl_delay, pol_max or 0)
         # seeds stay a PATH, not a driver list: init reads them with
         # spark.read.text so a 10^7-line seed file (the design-point hint)
         # is parsed executor-parallel instead of materializing through the
         # driver as a pandas frame (VERDICT r4 'What's wrong #3')
         self.seeds_path = os.path.join(fx, "seeds.txt")
+
+    def _read_static(self, name: str) -> DataFrame:
+        """The fixture input ``<name>.parquet`` (one file or a dir of part
+        files) under its declared schema (``schemas.STATIC_INPUTS``), so
+        the read runs no footer-inference job. The schema written in one
+        footer, read on the driver, must match the declaration in column
+        names and types (nullability aside): a drifted input raises here
+        instead of reading a missing column back as nulls."""
+        path = os.path.join(self.fx, f"{name}.parquet")
+        want = schemas.STATIC_INPUTS[name]
+        footer = path
+        if os.path.isdir(path):
+            footer = min(
+                os.path.join(root, f)
+                for root, _dirs, files in os.walk(path)
+                for f in files if not f.startswith(("_", "."))
+            )
+        got = from_arrow_schema(pq.read_schema(footer))
+        if [(f.name, f.dataType) for f in got.fields] != [
+            (f.name, f.dataType) for f in want.fields
+        ]:
+            raise ValueError(
+                f"{path} holds {got.simpleString()}, but the {name} input "
+                f"declares {want.simpleString()}"
+            )
+        return self.spark.read.schema(want).parquet(path)
 
     def _pages(self) -> DataFrame:
         """pages with partition column ``bucket`` (from the dir layout) and the
@@ -664,52 +709,72 @@ class CrawlEngine:
     def _candidates(self, outlinks: DataFrame) -> DataFrame:
         """One aggregation per distinct outlink target gives its min parent
         depth, its OPIC gain (integer cash, so the sum is order-independent)
-        and its ``url_hash``; the robots verdict and the seen bucket are
-        per-row columns on top."""
-        cand = outlinks.groupBy("dst").agg(
-            F.min("depth").alias("parent_depth"),
-            F.sum(F.expr("score div outdeg")).alias("gain"),
-            F.min("dst_hash").alias("url_hash"),
+        and its ``url_hash``; the robots verdict is a per-row column on top.
+        A target's seen ``bucket`` comes from its hash, which every link to
+        it carries, so the links are hash-partitioned by bucket and the
+        aggregation groups by ``(bucket, dst)``: the bloom check's
+        per-bucket groups (``_flag``) reuse that one shuffle."""
+        cand = (
+            outlinks.withColumn(
+                "bucket",
+                F.pmod("dst_hash", F.lit(self.cfg.seen_partitions)).cast("int"),
+            )
+            .repartition("bucket")
+            .groupBy("bucket", "dst")
+            .agg(
+                F.min("depth").alias("parent_depth"),
+                F.sum(F.expr("score div outdeg")).alias("gain"),
+                F.min("dst_hash").alias("url_hash"),
+            )
         )
-        return self._with_robots(cand, "dst").withColumn(
-            "bucket", F.pmod("url_hash", F.lit(self.cfg.seen_partitions))
-        )
+        return self._with_robots(cand, "dst")
 
-    def _flag(self, cand: DataFrame, bucket_paths: dict[int, str]) -> DataFrame:
+    def _flag(
+        self, cand: DataFrame, bucket_paths: dict[int, str], new_bloom_dir: str
+    ) -> DataFrame:
         """``cand`` plus ``maybe_seen``, its bloom verdict (the shard of
-        each bucket, read in a grouped Arrow pass); without filters every
-        candidate goes to the exact tier."""
+        each bucket, read in a grouped Arrow pass that also inserts the
+        bucket's new bloom negatives and writes its shard into
+        ``new_bloom_dir``); without filters every candidate goes to the
+        exact tier."""
         if not self.use_filters:
             return cand.withColumn("maybe_seen", F.lit(True))
         return cand.groupBy("bucket").applyInPandas(
-            make_seen_check_fn(bucket_paths),
+            make_seen_check_fn(bucket_paths, new_bloom_dir, self.cfg),
             "dst string, parent_depth int, gain long, allowed boolean,"
             " url_hash long, bucket int, maybe_seen boolean",
         )
 
     def _seen_tier(
-        self, outlinks: DataFrame, seen_all: DataFrame, bucket_paths: dict[int, str]
-    ) -> tuple[DataFrame, DataFrame, dict]:
+        self, outlinks: DataFrame, seen_all: DataFrame,
+        bucket_paths: dict[int, str], new_bloom_dir: str,
+    ) -> tuple[DataFrame, DataFrame, dict, list[int]]:
         """Candidates → bloom → exact anti-join: the bloom-flagged
-        candidates and the round's new urls (both checkpointed) and their
-        counters. The flag checkpoint's job also counts the candidates, the
-        robots-blocked and the bloom negatives, and lists the buckets of the
-        bloom-positive slice, which prune the exact tier's seen scan."""
+        candidates and the round's new urls (both checkpointed), their
+        counters and the buckets whose shard the bloom check wrote. The flag
+        checkpoint's job also counts the candidates, the robots-blocked and
+        the bloom negatives, and lists the buckets of the bloom-positive
+        slice, which prune the exact tier's seen scan, and of the allowed
+        bloom negatives, whose shards it wrote."""
         allowed, maybe = F.col("allowed"), F.col("maybe_seen")
         flagged, fl = _checkpoint(
-            self._flag(self._candidates(outlinks), bucket_paths),
+            self._flag(self._candidates(outlinks), bucket_paths, new_bloom_dir),
             candidates=F.count(F.lit(1)),
             blocked=F.count_if(~allowed),
             bloom_neg=F.count_if(allowed & ~maybe),
             exact_buckets=F.collect_set(F.when(allowed & maybe, F.col("bucket"))),
+            shard_buckets=F.collect_set(F.when(allowed & ~maybe, F.col("bucket"))),
         )
         ok = flagged.where(allowed).drop("allowed")
         fast_new = ok.where(~maybe).drop("maybe_seen")
         need_exact = ok.where(maybe).drop("maybe_seen")
         exact_new = self._exact_new(need_exact, seen_all, sorted(fl["exact_buckets"]))
         new_urls, nu = _checkpoint(fast_new.unionByName(exact_new), new=F.count(F.lit(1)))
-        counts = {k: int(v) for k, v in {**fl, **nu}.items() if k != "exact_buckets"}
-        return flagged, new_urls, counts
+        counts = {
+            k: int(v) for k, v in {**fl, **nu}.items()
+            if k not in ("exact_buckets", "shard_buckets")
+        }
+        return flagged, new_urls, counts, sorted(fl["shard_buckets"])
 
     # ------------------------------------------------------------------ a round
 
@@ -759,25 +824,37 @@ class CrawlEngine:
                     & lang_ok
                 )
                 .select("url", "ts_logical", "html")
-                .localCheckpoint()
             )
         else:
             fetched = local_df(s, [], "url string, ts_logical long, html binary")
 
         # per popped url its fetch result: count, cursor, latest snapshot html
-        # (null for a url that fetched nothing). One checkpoint serves the
-        # docs append, the reinsert/evict split and the pop stats.
+        # (null for a url that fetched nothing) and every visible snapshot
+        # (the extract pass reads them all). This one checkpoint holds the
+        # fetched batch: it serves the extract pass, the docs append, the
+        # reinsert/evict split and the pop stats, and its job counts the
+        # evictions and the reinserts.
         res = fetched.groupBy("url").agg(
             F.count("*").alias("n_results"),
             F.max("ts_logical").alias("new_cursor"),
             F.max_by("html", "ts_logical").alias("latest_html"),
+            F.collect_list("html").alias("htmls"),
         )
-        popped_res = (
+        evict_cond = (
+            (F.col("n_results") == 0)
+            & (F.col("attempt") >= 1)
+            & F.lit(cfg.evict_unproductive and not cfg.crawl_once)
+        )
+        retire_cond = F.col("attempt") + 1 >= cfg.max_attempts
+        popped_res, pr = _checkpoint(
             popped.join(res, "url", "left")
             .withColumn("n_results", F.coalesce("n_results", F.lit(0)))
-            .withColumn("new_cursor", F.coalesce("new_cursor", "last_cursor"))
-        ).localCheckpoint()
-        outlinks = self._outlinks(fetched, popped).localCheckpoint()
+            .withColumn("new_cursor", F.coalesce("new_cursor", "last_cursor")),
+            evicted=F.count_if(evict_cond),
+            reinsertable=F.count_if(~evict_cond & ~retire_cond),
+        )
+        snapshots = popped_res.select("url", F.explode("htmls").alias("html"))
+        outlinks, ol = _checkpoint(self._outlinks(snapshots, popped), links=F.count(F.lit(1)))
 
         # ---- edges + docs appends --------------------------------------------
         # edges is laid out bucketed by src_bucket = murmur3_64(src_url) %
@@ -798,14 +875,14 @@ class CrawlEngine:
         # popped batch occupies instead of shuffling the whole append-only
         # docs log every round (the largest log at the design point)
         docs_all = self.store.read_log(s, "docs", prev)
-        first_fetch = popped_res.where(F.col("n_results") > 0)
-        if docs_all is not None:
-            pop_buckets = sorted(pop["sb"])
-            if pop_buckets and len(pop_buckets) < cfg.seen_partitions:
-                docs_scan = docs_all.where(F.col("bucket").isin(pop_buckets))
-            else:
-                docs_scan = docs_all
-            first_fetch = first_fetch.join(docs_scan.select("url"), "url", "left_anti")
+        pop_buckets = sorted(pop["sb"])
+        if pop_buckets and len(pop_buckets) < cfg.seen_partitions:
+            docs_scan = docs_all.where(F.col("bucket").isin(pop_buckets))
+        else:
+            docs_scan = docs_all
+        first_fetch = popped_res.where(F.col("n_results") > 0).join(
+            docs_scan.select("url"), "url", "left_anti"
+        )
         docs_new = (
             first_fetch.withColumn("text", text_col(F.decode("latest_html", "UTF-8")))
             .select(
@@ -822,7 +899,9 @@ class CrawlEngine:
         # bucket → shard path from the committed manifest: O(1) resolution
         # per bucket inside tasks, regardless of how many rounds have run
         bucket_paths = self.store.bloom_paths() if self.use_filters else {}
-        flagged, new_urls, seen_n = self._seen_tier(outlinks, seen_all, bucket_paths)
+        flagged, new_urls, seen_n, shard_buckets = self._seen_tier(
+            outlinks, seen_all, bucket_paths, self.store.bloom_dir(r)
+        )
         n_new = seen_n["new"]
         n_dupes = seen_n["candidates"] - seen_n["blocked"] - n_new
 
@@ -838,12 +917,6 @@ class CrawlEngine:
         new_rows = self._schedule_rows(new_base, t_r)
 
         # ---- reinsert / evict / retire ------------------------------------------
-        evict_cond = (
-            (F.col("n_results") == 0)
-            & (F.col("attempt") >= 1)
-            & F.lit(cfg.evict_unproductive and not cfg.crawl_once)
-        )
-        retire_cond = F.col("attempt") + 1 >= cfg.max_attempts
         evictions = popped_res.where(evict_cond).select(
             "url", F.lit(r).alias("round")
         )
@@ -883,9 +956,15 @@ class CrawlEngine:
             .select(*[f.name for f in schemas.FRONTIER.fields])
         )
         # frontier size is maintained arithmetically in the manifest — no
-        # O(frontier) count job: inserts = reinsertable survivors (from the
-        # fused pop-stats agg below) + scheduled copies of new urls
+        # O(frontier) count job: inserts = reinsertable survivors (observed
+        # on the popped_res checkpoint) + scheduled copies of new urls
         sched_mult = cfg.max_attempts if cfg.fanout_revisits else 1
+        n_evicted = int(pr["evicted"])
+        if cfg.crawl_once or cfg.fanout_revisits:
+            n_reinserted = 0
+        else:
+            n_reinserted = int(pr["reinsertable"])
+        n_ins = n_reinserted + n_new * sched_mult
         base_round = int(self.store.state("frontier_base_round"))
         compact = cfg.compact_every > 0 and (r - base_round) >= cfg.compact_every
 
@@ -922,7 +1001,7 @@ class CrawlEngine:
                 .select(*[f.name for f in schemas.FRONTIER.fields])
                 .unionByName(ins_rows)
             )
-            writes = [(f_base.withColumn("band", self._band()), "frontier")]
+            writes = [(f_base.withColumn("band", self._band()), "frontier", None)]
             # leveled compaction of the append-only logs: MINOR folds only
             # the tail rounds since the newest generation (O(batch·K) bytes;
             # the 10^10-row url_seen history is NOT rewritten every K
@@ -946,11 +1025,11 @@ class CrawlEngine:
         else:
             # the O(batch) delta — the whole per-round write
             writes = [
-                (seen_new, "url_seen"),
-                (edges_new, "edges"),
-                (docs_new, "docs"),
-                (ins_rows.withColumn("band", self._band()), "frontier_ins"),
-                (gains_u, "frontier_gains"),
+                (seen_new, "url_seen", n_new),
+                (edges_new, "edges", ol["links"]),
+                (docs_new, "docs", None),
+                (ins_rows.withColumn("band", self._band()), "frontier_ins", n_ins),
+                (gains_u, "frontier_gains", seen_n["candidates"]),
             ]
         writes += [
             (
@@ -959,30 +1038,22 @@ class CrawlEngine:
                     "depth", "score", "attempt",
                 ),
                 "crawl_log",
+                n_popped,
             ),
-            (evictions, "evictions"),
+            (evictions, "evictions", n_evicted),
         ]
+        # a write whose row count the checkpoints observed to be 0 is not
+        # submitted: its table simply has no dir for the round, which every
+        # read treats as no rows (``None`` means the count is not known)
+        writes = [(df, tbl) for df, tbl, n in writes if n != 0]
 
-        # ---- write round outputs + bloom update + per-partition stats, all
-        # jobs over materialized checkpoints → submitted CONCURRENTLY from
-        # driver threads (Spark schedules independent jobs in parallel; wall
-        # time is the max, not the sum — the analog of parallel Iceberg table
-        # appends before one snapshot commit)
+        # ---- write round outputs + per-partition stats, all jobs over
+        # materialized checkpoints → submitted CONCURRENTLY from driver
+        # threads (Spark schedules independent jobs in parallel; wall time is
+        # the max, not the sum — the analog of parallel Iceberg table appends
+        # before one snapshot commit). The round's bloom shards were written
+        # by its bloom check.
         part = F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("partition_id")
-
-        def _bloom_task():
-            # per-bucket shard versioning: only buckets with new urls get a
-            # shard file this round; readers resolve each bucket via the
-            # manifest map (the superseded file is GC'd after the commit)
-            if n_new:
-                upd = make_seen_update_fn(bucket_paths, st.bloom_dir(r), cfg)
-                return (
-                    seen_new.select("url_hash", "bucket")
-                    .groupBy("bucket")
-                    .applyInPandas(upd, SHARD_STATS_SCHEMA)
-                    .collect()
-                )
-            return []
 
         def _pop_stats_task():
             return {
@@ -991,10 +1062,6 @@ class CrawlEngine:
                     F.count("*").alias("fetched"),
                     F.sum((F.col("n_results") > 0).cast("long")).alias("hits"),
                     F.sum("n_results").alias("results"),
-                    F.sum(evict_cond.cast("long")).alias("evicted"),
-                    F.sum(
-                        ((~evict_cond) & (~retire_cond)).cast("long")
-                    ).alias("reinsertable"),
                 ).collect()
             }
 
@@ -1012,7 +1079,6 @@ class CrawlEngine:
                 tbl: pool.submit(st.write_gen, src, tbl, r)
                 for tbl, (_major, src) in merges.items()
             }
-            fut_bloom = pool.submit(_bloom_task) if self.use_filters else None
             fut_stats = pool.submit(_pop_stats_task)
             fut_new = pool.submit(_new_stats_task)
             for f in futs:
@@ -1020,24 +1086,24 @@ class CrawlEngine:
             gen_paths = {tbl: f.result() for tbl, f in gen_futs.items()}
             pop_stats = fut_stats.result()
             new_stats = fut_new.result()
-            bloom_rows = fut_bloom.result() if fut_bloom is not None else []
-        # fold this round's shard stats into the manifest's occupancy map
-        # (bucket → [n, m]) — driver arithmetic only; the capacity policy
-        # below never loads a shard on the driver. An older state dir holds
-        # [n, m, ov] triples; ov, its cuckoo-overflow flag, is dropped.
+        # grow the manifest's occupancy map (bucket → [n, m]) by the round's
+        # new urls per bucket (partition_id is the seen bucket) — driver
+        # arithmetic only; the capacity policy below never loads a shard on
+        # the driver. A bucket's first shard has the configured geometry. An
+        # older state dir holds [n, m, ov] triples; ov, its cuckoo-overflow
+        # flag, is dropped.
         bloom_load = {
             int(k): v[:2] for k, v in (st.state("bloom_load", {}) or {}).items()
         }
-        for row in bloom_rows:
-            bloom_load[int(row["bucket"])] = [int(row["n_total"]), int(row["m_bits"])]
-        n_evicted = sum(int(row["evicted"]) for row in pop_stats.values())
-        if cfg.crawl_once or cfg.fanout_revisits:
-            n_reinserted = 0
-        else:
-            n_reinserted = sum(int(row["reinsertable"]) for row in pop_stats.values())
-        n_ins = n_reinserted + n_new * sched_mult
+        if self.use_filters:
+            for b, n in new_stats.items():
+                n0, m = bloom_load.get(b, [0, cfg.bloom_bits_per_partition])
+                bloom_load[b] = [n0 + n, m]
         frontier_n = int(st.state("frontier_count")) - n_popped + n_ins
         new_state: dict = {"frontier_count": frontier_n}
+        # buckets whose shard this round wrote: the bloom check's, then the
+        # capacity policy's rebuilds
+        bloom_touch = set(shard_buckets)
 
         major_done: list[str] = []
         if compact:
@@ -1079,20 +1145,20 @@ class CrawlEngine:
                         .applyInPandas(rebuild, SHARD_STATS_SCHEMA)
                         .collect()
                     )
-                    bloom_rows = list(bloom_rows) + rebuilt
                     for row in rebuilt:
+                        bloom_touch.add(int(row["bucket"]))
                         bloom_load[int(row["bucket"])] = [
                             int(row["n_total"]), int(row["m_bits"])
                         ]
 
         # bloom manifest map: buckets whose shard this round replaced
-        bloom_touch = [int(row["bucket"]) for row in bloom_rows]
         old_map = st.bloom_map()
         superseded = {b: old_map[b] for b in bloom_touch if b in old_map}
         if bloom_touch:
             bm = {str(k): v for k, v in old_map.items()}
-            bm.update({str(b): r for b in bloom_touch})
+            bm.update({str(b): r for b in sorted(bloom_touch)})
             new_state["bloom_map"] = bm
+        if self.use_filters:
             new_state["bloom_load"] = {str(k): v for k, v in bloom_load.items()}
 
         # ---- per-partition lineage + metrics --------------------------------------
@@ -1164,7 +1230,7 @@ class CrawlEngine:
         # free this round's localCheckpoint blocks eagerly — durability lives
         # in the snapshot store; relying on GC/ContextCleaner lets executor
         # storage accumulate across a long crawl
-        for df in (popped, fetched, popped_res, outlinks, flagged, new_urls):
+        for df in (popped, popped_res, outlinks, flagged, new_urls):
             _release(df)
         return frontier_n
 

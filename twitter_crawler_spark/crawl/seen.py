@@ -20,9 +20,13 @@ filter tier between the two has nothing left to prune (BASELINE.md,
 
 Shards are loaded *per bucket inside executor tasks* (``applyInPandas`` over
 a bucket-grouped DataFrame), so at 10^10 urls each task touches only its own
-~MBs-sized sidecar, never a global structure. Sidecars are versioned per
-bucket: round k writes ``bloom/r=k/bucket=N.npz`` ONLY for buckets k
-touched, and a reader resolves each bucket through the committed manifest's
+~MBs-sized sidecar, never a global structure. The round's bloom check is
+also its insert: having loaded a bucket's shard, it adds the allowed
+bloom-negative candidates (a bloom-positive new url sets no new bit) and
+writes the bucket's new shard, so no second pass over the new urls loads
+the shards again. Sidecars are versioned per bucket: round k writes
+``bloom/r=k/bucket=N.npz`` ONLY for buckets whose bits k changed, and a
+reader resolves each bucket through the committed manifest's
 ``bloom_map`` (bucket → newest round, one dict lookup — O(1) per bucket
 regardless of crawl length, no copy-forward of untouched shards and no
 newest-first filesystem probing). Superseded shard files are GC'd after each
@@ -30,6 +34,12 @@ commit, so the sidecar tree stays O(#buckets) files. Resume always reads
 filters consistent with the committed snapshot (SURVEY.md §7 hard part 3):
 the map lives in the atomically-replaced manifest, and uncommitted round
 dirs are removed by ``clean_uncommitted`` before any read.
+
+Shard occupancy (keys inserted per bucket, the capacity policy's input) is
+the manifest's ``bloom_load``: the driver grows a bucket's n by the round's
+new-url count in that bucket. It is the only authority. The ``n_added``
+field a shard file stores is no longer read for it, because the check
+inserts only the bloom negatives.
 """
 
 from __future__ import annotations
@@ -54,11 +64,11 @@ class SeenShard:
         self.m = bloom_bits
         self.k = num_hashes
         self.bits = bits if bits is not None else np.zeros(bloom_bits // 64, np.uint64)
-        # keys inserted over the shard's lifetime (callers pass distinct new
-        # urls, so this is exact) — the occupancy input to the capacity
-        # policy: compaction rebuilds a shard whose n_added/m load crossed
-        # CrawlConfig.bloom_max_load with doubled geometry (a saturated
-        # bloom degrades FP→1: correct but the pruning tier stops paying)
+        # keys added through this object and the shards it was loaded
+        # from. Exact for a shard built from url_seen (init, rebuild); the
+        # round's bloom check adds only its bloom-negative new urls, so a
+        # checked shard undercounts. The occupancy the capacity policy reads
+        # is the manifest's ``bloom_load``, never this field.
         self.n_added = int(n_added)
 
     # --- hashing: reuse the two murmur3_32 halves inside the 64-bit url_hash ---
@@ -123,23 +133,39 @@ def shard_path(bloom_dir: str, bucket: int) -> str:
     return os.path.join(bloom_dir, f"bucket={bucket}.npz")
 
 
-def make_seen_check_fn(bucket_paths: dict[int, str]):
+def make_seen_check_fn(bucket_paths: dict[int, str], new_bloom_dir: str, cfg):
     """applyInPandas fn over candidates grouped by ``bucket``: flag each
     candidate ``maybe_seen`` = bloom-positive, i.e. it needs the exact
     anti-join; a bloom-negative candidate is definitely new.
     ``bucket_paths`` is the committed manifest's bucket → shard-file map
     (SnapshotStore.bloom_paths) — one dict lookup per bucket, no filesystem
     probing. A bucket with no shard yet has an empty filter → everything is
-    definitely new."""
+    definitely new.
+
+    The check then inserts the bucket's allowed bloom-negative candidates
+    into the shard it has loaded and writes it as this round's shard
+    (``new_bloom_dir``). They are every new url that can set a bit: a
+    bloom-positive new url finds its k bits set already, so the shard ends
+    as if every new url were added. A bucket with no such candidate gets no
+    new file. Each call reads committed shards only, so a retried task
+    writes the same file again."""
 
     def check(pdf: pd.DataFrame) -> pd.DataFrame:
         maybe_seen = np.zeros(len(pdf), bool)
         if len(pdf):
-            p = bucket_paths.get(int(pdf["bucket"].iloc[0]))
+            bucket = int(pdf["bucket"].iloc[0])
+            p = bucket_paths.get(bucket)
             if p is not None:
-                maybe_seen = SeenShard.load(p).bloom_contains(
-                    pdf["url_hash"].to_numpy(np.int64)
-                )
+                shard = SeenShard.load(p)
+            else:
+                shard = SeenShard(cfg.bloom_bits_per_partition, cfg.bloom_num_hashes)
+            hashes = pdf["url_hash"].to_numpy(np.int64)
+            maybe_seen = shard.bloom_contains(hashes)
+            fresh = hashes[pdf["allowed"].to_numpy(bool) & ~maybe_seen]
+            if len(fresh):
+                shard.add(fresh)
+                os.makedirs(new_bloom_dir, exist_ok=True)
+                shard.save(shard_path(new_bloom_dir, bucket))
         pdf = pdf.copy()
         pdf["maybe_seen"] = maybe_seen
         return pdf
@@ -176,7 +202,9 @@ def make_seen_update_fn(bucket_paths: dict[int, str], new_bloom_dir: str, cfg):
     """applyInPandas fn over NEW urls grouped by ``bucket``: load the
     bucket's committed sidecar (manifest map lookup), add the new hashes,
     write this round's shard for JUST this bucket. Untouched buckets get no
-    new file this round, and the superseded file is GC'd after the commit."""
+    new file this round, and the superseded file is GC'd after the commit.
+    ``init_state`` builds the seed shards with it; a round's new urls reach
+    their shards through the bloom check (``make_seen_check_fn``)."""
 
     def shard_for(bucket: int) -> SeenShard:
         prev = bucket_paths.get(bucket)

@@ -73,6 +73,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from twitter_crawler_spark import schemas
+from twitter_crawler_spark.session import local_df
 
 # Every table a state dir can hold. The RETIRED ones are written by no
 # round any more (crawl_log is the one record of a round's pops, and host
@@ -325,14 +326,14 @@ class SnapshotStore:
         Disjoint by construction: gen g covers rounds (prev_gen, g]."""
         return [int(g) for g in self.state("log_gens", {}).get(table, [])]
 
-    def read_log(
-        self, spark: SparkSession, table: str, upto_round: int
-    ) -> DataFrame | None:
+    def read_log(self, spark: SparkSession, table: str, upto_round: int) -> DataFrame:
         """Current view of an append-only log: the leveled generation dirs
         (disjoint round ranges, manifest ``log_gens``) plus the rounds after
         the newest one. Listing and file count stay
         O(#generations + rounds-since-compaction), bounded by
-        ``max_log_gens`` and ``compact_every``."""
+        ``max_log_gens`` and ``compact_every``. A log with no data files
+        (``evictions`` of a crawl that never evicts) reads as an empty frame
+        of the declared schema, planned JVM-only."""
         gens = self.log_gens(table)
         parts = []
         for g in gens:
@@ -346,7 +347,7 @@ class SnapshotStore:
         if tail is not None:
             parts.append(tail)
         if not parts:
-            return None
+            return local_df(spark, [], schemas.store_schema(table))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)

@@ -166,6 +166,15 @@ POLITENESS = StructType(
 )
 
 
+# the fixture's static inputs (``<name>.parquet``), read under these
+# schemas; CrawlEngine checks each file's footer against its entry
+STATIC_INPUTS: dict[str, StructType] = {
+    "redirects": REDIRECTS,
+    "robots": ROBOTS,
+    "politeness": POLITENESS,
+}
+
+
 def _with_partition(schema: StructType, *cols: str) -> StructType:
     """``schema`` plus integer partition columns appended at the end (the
     layout's directory values — ``band=3``, ``bucket=5`` — read back as int)."""

@@ -79,23 +79,33 @@ def stop_spark() -> None:
 
 
 def local_df(spark: SparkSession, rows, schema):
-    """DataFrame from driver-local rows via pandas + Arrow → LocalTableScan.
+    """DataFrame from driver-local rows, planned without a Python RDD.
 
     ``spark.createDataFrame(list_of_tuples)`` takes the ``parallelize`` path:
     the rows become a Python RDD whose conversion re-launches a fleet of
     Python workers on EVERY action — measured 5-8 s per action for a 33-row
     frame at local[32], which made the per-round metrics write the single
-    most expensive crawl stage. The pandas route converts once, driver-side,
-    through Arrow and plans a LocalTableScan — pure JVM at action time.
+    most expensive crawl stage. Rows go through pandas + Arrow instead,
+    converted once on the driver into a ``LocalRelation`` (a LocalTableScan
+    at action time). An empty pandas frame would fall back to the
+    ``parallelize`` path (Spark 4.1 plans it as a ``LogicalRDD``), so no
+    rows give ``spark.range(0)`` with one typed null per column: a JVM-only
+    relation that the optimizer knows to be empty.
 
     ``schema`` may be a StructType, a DDL string ("a int, b string"), or a
     list of column names (the bare-minimum createDataFrame forms used here).
     """
     import pandas as pd
+    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    if not rows and isinstance(schema, StructType):
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
     names = schema.fieldNames() if isinstance(schema, StructType) else list(schema)
-    pdf = pd.DataFrame(list(rows), columns=names)
+    pdf = pd.DataFrame(rows, columns=names)
     return spark.createDataFrame(pdf, schema)

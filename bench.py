@@ -3,10 +3,12 @@
 Two parts:
 
 1. **Crawl bench** — the engine's own workload (BASELINE.md metric: URLs
-   scheduled+deduped per second per executor-equivalent). A deterministic
-   synthetic web (seed 42) is generated once and cached; the engine crawls
-   it for a fixed number of rounds and we count frontier-scheduling work
-   (new urls scheduled + duplicate candidates rejected + robots blocks).
+   scheduled+deduped per second per executor-equivalent): perfbench's
+   ``crawl_steady`` crawl, whose fixture (a deterministic synthetic web,
+   seed 42, 8000 pages), shape and per-round counters ``perfbench/crawl.py``
+   defines. The engine crawls it from a fresh state dir, round 0 and the
+   shape's timed rounds in one ``run()``, and we count frontier-scheduling
+   work (new urls scheduled + duplicate candidates rejected + robots blocks).
 2. **Query bench** — headline operators from __spark_entry__ timed at
    $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 
@@ -16,15 +18,15 @@ protocol notes), so single-shot timing is a coin flip. The query bench
 therefore runs REPS full interleaved passes over the query list and reports
 the per-query MIN plus all raw walls; the crawl section runs CRAWL_REPS
 times and reports the best run. Interleaving means a throttle burst poisons
-one pass, not one query — the same discipline as scripts/scaling_bench.py.
+one pass, not one query.
 
 Env knobs: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SF_DIR,
-TCS_BENCH_PAGES (fixture size, default 8000), TCS_BENCH_ROUNDS (default 6),
 TCS_BENCH_REPS (query passes, default 3), TCS_BENCH_CRAWL_REPS (default 2).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import shutil
@@ -32,6 +34,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.crawl import SHAPES, _engine_rounds, _fixture  # noqa: E402
 
 HEADLINE_QUERIES = [
     "tpch_q1",
@@ -46,57 +50,35 @@ HEADLINE_QUERIES = [
 ]
 
 
-def bench_crawl_once(spark, fx: str, rounds: int) -> tuple[float, dict]:
-    from twitter_crawler_spark.config import CrawlConfig
+# the crawl section's work counters, summed over the crawl's rounds
+WORK_COUNTERS = ("fetched", "new_urls", "dupes", "robots_blocked")
+
+
+def bench_crawl_once(spark, fx: str, shape, state: str) -> tuple[float, dict]:
+    """One crawl of ``shape`` over the fixture ``fx`` from a fresh state dir
+    ``state``: the wall of ``eng.run()`` (round 0 and the shape's timed
+    rounds) and the work counters summed over those rounds."""
     from twitter_crawler_spark.crawl.engine import CrawlEngine
 
-    state = f"/tmp/tcs_bench_state_{os.getpid()}"
     shutil.rmtree(state, ignore_errors=True)
-    eng = CrawlEngine(spark, fx, state, CrawlConfig(max_rounds=rounds))
+    cfg = dataclasses.replace(shape.cfg, max_rounds=shape.rounds + 1)
+    eng = CrawlEngine(spark, fx, state, cfg)
     t0 = time.time()
     eng.run()
     wall = time.time() - t0
-    m = (
-        eng.round_metrics()
-        .where("partition_id = -1")
-        .selectExpr(
-            "sum(fetched) f", "sum(new_urls) n", "sum(dupes) d", "sum(robots_blocked) b"
-        )
-        .collect()[0]
-    )
+    per_round = _engine_rounds(eng).values()
     shutil.rmtree(state, ignore_errors=True)
-    counters = {
-        "fetched": int(m.f),
-        "new_urls": int(m.n),
-        "dupes": int(m.d),
-        "robots_blocked": int(m.b),
-    }
-    return wall, counters
+    return wall, {k: sum(m[k] for m in per_round) for k in WORK_COUNTERS}
 
 
 def bench_crawl(spark, cores: int, reps: int) -> dict:
-    from twitter_crawler_spark.fixtures.webgen import generate_web
-
-    n_pages = int(os.environ.get("TCS_BENCH_PAGES", "8000"))
-    rounds = int(os.environ.get("TCS_BENCH_ROUNDS", "6"))
-    n_seeds = max(50, n_pages // 20)  # saturate the frontier early so the
-    # bench measures scheduling throughput, not frontier warm-up
-    fx = f"/tmp/tcs_bench_fx_p{n_pages}_s{n_seeds}"
-    if not os.path.exists(os.path.join(fx, "meta.json")):
-        shutil.rmtree(fx, ignore_errors=True)
-        generate_web(
-            fx,
-            seed=42,
-            n_pages=n_pages,
-            n_hosts=max(20, n_pages // 40),
-            n_seeds=n_seeds,
-            span_rounds=rounds,
-            mean_outdeg=10,
-        )
+    shape = SHAPES["crawl_steady"]
+    fx = _fixture(shape)
+    state = f"/tmp/tcs_bench_state_{os.getpid()}"
     walls: list[float] = []
     counters: dict = {}
     for i in range(reps):
-        wall, c = bench_crawl_once(spark, fx, rounds)
+        wall, c = bench_crawl_once(spark, fx, shape, state)
         walls.append(round(wall, 2))
         counters = c  # deterministic engine: counters are identical per rep
         print(f"# crawl rep {i + 1}/{reps}: {wall:.1f}s {c}", file=sys.stderr)
@@ -105,8 +87,8 @@ def bench_crawl(spark, cores: int, reps: int) -> dict:
         counters["new_urls"] + counters["dupes"] + counters["robots_blocked"]
     )
     return {
-        "pages": n_pages,
-        "rounds": rounds,
+        "pages": shape.fixture["n_pages"],
+        "rounds": shape.rounds + 1,
         "wall_s": best,
         "raw_walls_s": walls,
         **counters,

@@ -129,7 +129,8 @@ def main() -> None:
             bans = bans + _JVM_ONLY
         sections.append((name, plan, WANTS.get(name, []), bans, waived))
 
-    # 2. the fetch-join shape from the crawl engine (bucket pruning + broadcast)
+    # 2. the crawl fetch join (bucket pruning + broadcast of the batch): the
+    # REAL engine method over three of the fixture's pages buckets
     from twitter_crawler_spark.crawl.engine import CrawlEngine
     from twitter_crawler_spark.fixtures.webgen import generate_web
 
@@ -144,17 +145,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     frontier = eng._frontier_live(-1)
-    popped = frontier.limit(5).select("url", "last_cursor")
-    fetch = (
-        eng._pages()
-        .where(F.col("bucket").isin([0, 1, 2]))
-        .join(F.broadcast(popped), "url")
-        .where((F.col("ts_logical") <= 3600) & (F.col("ts_logical") > F.col("last_cursor")))
-        .select("url", "ts_logical", "html")
-    )
-    sections.append(
-        ("crawl_fetch_join", _fmt(fetch), ["BroadcastHashJoin", "PartitionFilters"], [], {})
-    )
+    sections.append((
+        "crawl_fetch_join", _fmt(eng._fetch(frontier.limit(5), [0, 1, 2], 3600)),
+        ["BroadcastHashJoin", "PartitionFilters"], [], {},
+    ))
 
     # 3. the crawl order: every window MUST be partitioned, both in the pop
     # (the REAL engine method; no round has run, so no host is held back)

@@ -1,29 +1,25 @@
 """Dev harness replicating the driver's correctness gate: run every
-__spark_entry__ query on Spark AND its DuckDB oracle at a given sf dir,
-compare row count, schema width and order-insensitive values."""
+__spark_entry__ query on Spark AND its DuckDB oracle at a given sf dir and
+compare them under ``perfbench.catalog.same_result`` (columns, row count,
+int-vs-float drift, order-insensitive values)."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
-import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from perfbench.catalog import same_result  # noqa: E402
 from twitter_crawler_spark.session import get_spark  # noqa: E402
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def _norm(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)]
-    df = df.round(6) if len(df) else df
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
 def main(sf_dir: str, only: list[str] | None = None) -> int:
@@ -57,38 +53,14 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error {type(e).__name__}: {e}")
             continue
-        a, b = _norm(sdf), _norm(odf)
-        if list(a.columns) != list(b.columns):
+        # same_result also fails an int column against a float one: the
+        # correctness gate hashes values by dtype, so equal values differ
+        reason = same_result(sdf, odf)
+        if reason is None:
+            print(f"OK    {name}: {len(sdf)} rows ({dt:.1f}s)")
+        else:
             failures.append(name)
-            print(f"FAIL  {name}: columns {list(a.columns)} vs {list(b.columns)}")
-            continue
-        if len(a) != len(b):
-            failures.append(name)
-            print(f"FAIL  {name}: rows {len(a)} vs {len(b)}")
-            continue
-        # The driver's value hash is dtype/rendering-sensitive: an int64 Spark
-        # column vs a float64 oracle column (DuckDB HUGEINT rendering) hashes
-        # differently even when values are equal. Replicate that strictness.
-        kind_drift = [
-            c for c in a.columns
-            if {a[c].dtype.kind, b[c].dtype.kind} == {"i", "f"}
-        ]
-        if kind_drift:
-            failures.append(name)
-            print(f"FAIL  {name}: int-vs-float dtype drift in {kind_drift} "
-                  f"(spark {[str(a[c].dtype) for c in kind_drift]} vs "
-                  f"oracle {[str(b[c].dtype) for c in kind_drift]})")
-            continue
-        try:
-            pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=False, rtol=0, atol=1e-9)
-            print(f"OK    {name}: {len(a)} rows ({dt:.1f}s)")
-        except AssertionError as e:
-            failures.append(name)
-            msg = str(e).splitlines()
-            print(f"FAIL  {name}: values differ — {msg[0] if msg else e}")
-            merged = a.compare(b) if a.shape == b.shape else None
-            if merged is not None and len(merged):
-                print(merged.head(5))
+            print(f"FAIL  {name}: {reason}")
     print("FAILURES:", failures or "none")
     return 1 if failures else 0
 

@@ -51,11 +51,12 @@ def _assert_bounded_listing(eng: CrawlEngine, cfg: CrawlConfig) -> None:
     """Post-run, post-GC invariant: every table the round loop RE-READS has a
     file/dir population bounded by the compaction geometry (compact_every K,
     max_log_gens G) — independent of how many rounds ran. This is the
-    listing/probe-cost contract behind scripts/long_crawl_stats.py's 50-round
-    receipt, pinned here on every compacting test run for free (pure
-    filesystem asserts). The loop also reads crawl_log — the frontier's
-    delete keys since the base and the host crawl-delay window — probing
-    at most max(K, D) of its round dirs (D the longest crawl delay) and
+    listing/probe-cost contract behind the 50-round receipt
+    (BENCH_SCALING.json ``long_crawl_50r``), pinned here on every
+    compacting test run for free (pure filesystem asserts). The loop also
+    reads crawl_log — the frontier's delete keys since the base and the
+    host crawl-delay window — probing at most max(K, D) of its round dirs
+    (D the longest crawl delay) and
     never listing the table; crawl_log,
     evictions and round_metrics are append-only OUTPUT logs that are never
     compacted, so their dir counts are exempt by design. The tables that

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import dataclasses
 import os
+import re
 import shutil
 
 import pandas as pd
@@ -160,6 +161,27 @@ def test_round_that_pops_nothing(spark, tmp_path):
         for c in want.crawl_order
     ]
     assert {r.url for r in eng.url_seen().collect()} == want.url_seen
+
+
+def test_bucket_pruning_rule(engine):
+    """The one rule a round prunes its bucketed scans by (pages, url_seen,
+    docs): an empty bucket list plans an empty relation that reads no file,
+    a partial list reaches the scan as a partition filter, and a list that
+    covers every bucket adds no filter."""
+    from twitter_crawler_spark.crawl.engine import _in_buckets
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for df, n in ((engine._pages(), TEST_CFG.pages_buckets),
+                  (engine.url_seen(), TEST_CFG.seen_partitions)):
+        empty = _in_buckets(df, [], n)
+        assert empty.inputFiles() == [] and empty.count() == 0
+        some = _in_buckets(df, [2, 0], n)
+        assert re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN \(0,2\)", plan(some))
+        assert {r.bucket for r in some.select("bucket").distinct().collect()} == {0, 2}
+        every = _in_buckets(df, range(n), n)
+        assert "PartitionFilters: []" in plan(every) and " IN (" not in plan(every)
 
 
 def test_engine_construction_reads_inputs_without_inference(spark, fixture_dir, tmp_path):

@@ -145,7 +145,7 @@ def test_read_rounds_skips_schema_less_empty_dirs(spark, tmp_path_factory):
     compaction window (docs once first-fetches dry up), so the tail can be
     ALL such dirs; reading the rounds must yield None and reading the log
     an empty frame, not an AnalysisException (found by
-    scripts/long_crawl_stats.py at round ~24 of a 50-round run)."""
+    the 50-round listing-cost receipt at round ~24)."""
     from twitter_crawler_spark.crawl.state import SnapshotStore
 
     st = SnapshotStore(str(tmp_path_factory.mktemp("state") / "s"))

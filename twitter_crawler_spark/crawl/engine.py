@@ -133,6 +133,18 @@ def _checkpoint(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
     return out, obs.get
 
 
+def _in_buckets(df: DataFrame, buckets, n_buckets: int) -> DataFrame:
+    """``df`` pruned to the ``buckets`` of its ``bucket`` partition column,
+    so the filter reaches the scan as a PartitionFilter and only those
+    buckets' files are read. A list that covers all ``n_buckets`` adds no
+    filter (an IN-list over 10^4-10^5 buckets bloats the plan for no
+    pruning); an empty one plans an empty relation that reads no file."""
+    buckets = sorted(buckets)
+    if len(buckets) >= n_buckets:
+        return df
+    return df.where(F.col("bucket").isin(buckets))
+
+
 def _release(df: DataFrame) -> None:
     """Free the blocks of a local checkpoint. ``DataFrame.unpersist`` does
     not: it drops cache-manager entries, while a checkpoint is the RDD its
@@ -656,21 +668,30 @@ class CrawlEngine:
         about half of the allowed candidates.
         ``seen_all`` is the round's url_seen view as of the committed round;
         a merge round folds the same view into its generation."""
-        if not exact_buckets:
-            seen_scan = seen_all.where(F.lit(False))
-        elif len(exact_buckets) >= self.cfg.seen_partitions:
-            # dense candidate slice occupies every bucket: an IN-list over
-            # 10^4-10^5 buckets bloats the plan for zero pruning benefit —
-            # the full scan is what the planner would do anyway
-            seen_scan = seen_all
-        else:
-            seen_scan = seen_all.where(F.col("bucket").isin(exact_buckets))
+        seen_scan = _in_buckets(seen_all, exact_buckets, self.cfg.seen_partitions)
         return need_exact.join(
             seen_scan.select(F.col("url").alias("dst")), "dst", "left_anti"
         )
 
-    # ------------------------------------------------------- extract → seen
-    # (factored so scripts/plan_audit.py audits the real candidate dataflow)
+    # ------------------------------------------------ fetch → extract → seen
+    # (factored so scripts/plan_audit.py audits the real round dataflow)
+
+    def _fetch(self, popped: DataFrame, buckets, t_r: int) -> DataFrame:
+        """The batch's snapshots ``(url, ts_logical, html)`` newer than each
+        url's cursor and no later than ``t_r``: the pages scan pruned to the
+        batch's pages ``buckets``, joined with the broadcast batch."""
+        cfg = self.cfg
+        lang_ok = F.lit(True) if cfg.lang_filter is None else (F.col("lang") == cfg.lang_filter)
+        return (
+            _in_buckets(self._pages(), buckets, cfg.pages_buckets)
+            .join(F.broadcast(popped.select("url", "last_cursor")), "url")
+            .where(
+                (F.col("ts_logical") <= t_r)
+                & (F.col("ts_logical") > F.col("last_cursor"))
+                & lang_ok
+            )
+            .select("url", "ts_logical", "html")
+        )
 
     def _outlinks(self, fetched: DataFrame, popped: DataFrame) -> DataFrame:
         """The batch's distinct (src, dst) links, each with its target's
@@ -812,21 +833,7 @@ class CrawlEngine:
         n_popped = int(pop["n"])
 
         # ---- fetch join: bucket partition pruning + broadcast of the batch ----
-        lang_ok = F.lit(True) if cfg.lang_filter is None else (F.col("lang") == cfg.lang_filter)
-        if n_popped:
-            fetched = (
-                self._pages()
-                .where(F.col("bucket").isin(sorted(pop["b"])))
-                .join(F.broadcast(popped.select("url", "last_cursor")), "url")
-                .where(
-                    (F.col("ts_logical") <= t_r)
-                    & (F.col("ts_logical") > F.col("last_cursor"))
-                    & lang_ok
-                )
-                .select("url", "ts_logical", "html")
-            )
-        else:
-            fetched = local_df(s, [], "url string, ts_logical long, html binary")
+        fetched = self._fetch(popped, pop["b"], t_r)
 
         # per popped url its fetch result: count, cursor, latest snapshot html
         # (null for a url that fetched nothing) and every visible snapshot
@@ -875,11 +882,7 @@ class CrawlEngine:
         # popped batch occupies instead of shuffling the whole append-only
         # docs log every round (the largest log at the design point)
         docs_all = self.store.read_log(s, "docs", prev)
-        pop_buckets = sorted(pop["sb"])
-        if pop_buckets and len(pop_buckets) < cfg.seen_partitions:
-            docs_scan = docs_all.where(F.col("bucket").isin(pop_buckets))
-        else:
-            docs_scan = docs_all
+        docs_scan = _in_buckets(docs_all, pop["sb"], cfg.seen_partitions)
         first_fetch = popped_res.where(F.col("n_results") > 0).join(
             docs_scan.select("url"), "url", "left_anti"
         )
@@ -947,14 +950,6 @@ class CrawlEngine:
         # gains immediately (their log round r is their per-row gains
         # watermark); every other live row picks round-r gains up from the
         # log when it is next read.
-        gains_u = flagged.select(F.col("dst").alias("url"), "gain")
-        ins_rows = (
-            reinserted.unionByName(new_rows)
-            .join(gains_u, "url", "left")
-            .withColumn("score", (F.col("score") + F.coalesce("gain", F.lit(0))).cast("long"))
-            .drop("gain")
-            .select(*[f.name for f in schemas.FRONTIER.fields])
-        )
         # frontier size is maintained arithmetically in the manifest — no
         # O(frontier) count job: inserts = reinsertable survivors (observed
         # on the popped_res checkpoint) + scheduled copies of new urls
@@ -967,6 +962,26 @@ class CrawlEngine:
         n_ins = n_reinserted + n_new * sched_mult
         base_round = int(self.store.state("frontier_base_round"))
         compact = cfg.compact_every > 0 and (r - base_round) >= cfg.compact_every
+        # the frontier rows the round writes: its inserts, or on a merge
+        # round the new base (the live view as of prev, minus this round's
+        # pops, plus the inserts); the round's gains fold into them once
+        gains_u = flagged.select(F.col("dst").alias("url"), "gain")
+        f_rows = reinserted.unionByName(new_rows)
+        if compact:
+            f_rows = (
+                self._frontier_live(prev)
+                .join(
+                    F.broadcast(popped.select("url", "attempt")),
+                    ["url", "attempt"], "left_anti",
+                )
+                .unionByName(f_rows)
+            )
+        f_rows = (
+            f_rows.join(gains_u, "url", "left")
+            .withColumn("score", (F.col("score") + F.coalesce("gain", F.lit(0))).cast("long"))
+            .select(*[f.name for f in schemas.FRONTIER.fields])
+            .withColumn("band", self._band())
+        )
 
         # ---- compaction (Iceberg rewrite_data_files analog) -------------------
         # every compact_every rounds the round writes a fresh frontier base
@@ -984,24 +999,7 @@ class CrawlEngine:
         log_gens = {k: list(v) for k, v in st.state("log_gens", {}).items()}
         merges: dict[str, tuple[bool, DataFrame]] = {}
         if compact:
-            # frontier: the live view as of prev, minus this round's pops,
-            # plus its gains, plus its inserts
-            f_base = (
-                self._frontier_live(prev)
-                .join(
-                    F.broadcast(popped.select("url", "attempt")),
-                    ["url", "attempt"], "left_anti",
-                )
-                .join(gains_u, "url", "left")
-                .withColumn(
-                    "score",
-                    (F.col("score") + F.coalesce("gain", F.lit(0))).cast("long"),
-                )
-                .drop("gain")
-                .select(*[f.name for f in schemas.FRONTIER.fields])
-                .unionByName(ins_rows)
-            )
-            writes = [(f_base.withColumn("band", self._band()), "frontier", None)]
+            writes = [(f_rows, "frontier", None)]
             # leveled compaction of the append-only logs: MINOR folds only
             # the tail rounds since the newest generation (O(batch·K) bytes;
             # the 10^10-row url_seen history is NOT rewritten every K
@@ -1028,7 +1026,7 @@ class CrawlEngine:
                 (seen_new, "url_seen", n_new),
                 (edges_new, "edges", ol["links"]),
                 (docs_new, "docs", None),
-                (ins_rows.withColumn("band", self._band()), "frontier_ins", n_ins),
+                (f_rows, "frontier_ins", n_ins),
                 (gains_u, "frontier_gains", seen_n["candidates"]),
             ]
         writes += [
@@ -1138,8 +1136,7 @@ class CrawlEngine:
                 if sat_geom:
                     rebuild = make_shard_rebuild_fn(st.bloom_dir(r), sat_geom, cfg)
                     rebuilt = (
-                        seen_all.unionByName(seen_new)
-                        .where(F.col("bucket").isin(sorted(sat_geom)))
+                        _in_buckets(seen_all.unionByName(seen_new), sat_geom, cfg.seen_partitions)
                         .select("url_hash", "bucket")
                         .groupBy("bucket")
                         .applyInPandas(rebuild, SHARD_STATS_SCHEMA)

@@ -62,7 +62,7 @@ def run_schedule_round(spark: SparkSession, n_urls: int, jvm_only: bool = False)
     apparent efficiency at local[8] is deflated — an artifact of local mode,
     not of the distributed plan. On a real cluster executor sizing provisions
     the Python workers explicitly, making their cost a constant factor. Both
-    variants are reported by scripts/scaling_bench.py.
+    variants are reported in BENCH_SCALING.json.
     """
     t0 = time.time()
     frontier = synthetic_frontier(spark, n_urls)

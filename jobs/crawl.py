@@ -12,6 +12,8 @@ session factory skips ``.master()``); in this sandbox the same command runs
 with ``--master local[N]``. The job is resumable: re-running with the same
 ``--state`` dir continues from the last committed snapshot (uncommitted
 round debris is cleaned first), with zero re-fetch of committed rounds.
+URL dedup always runs the bloom prefilter, then the exact anti-join over
+url_seen for the bloom positives; it has no switch.
 """
 
 from __future__ import annotations
@@ -35,8 +37,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--fanout-revisits", action="store_true")
     p.add_argument("--no-evict", action="store_true",
                    help="disable unproductive-url eviction")
-    p.add_argument("--no-filters", action="store_true",
-                   help="exact-only dedup (skip the bloom tier)")
     p.add_argument("--shuffle-partitions", type=int, default=None,
                    help="fixed shuffle partition count (size to the data, "
                         "not the executor count)")
@@ -70,8 +70,7 @@ def main(argv: list[str]) -> int:
         fanout_revisits=args.fanout_revisits,
         evict_unproductive=not args.no_evict,
     )
-    eng = CrawlEngine(spark, args.fixture, args.state, cfg,
-                      use_filters=not args.no_filters)
+    eng = CrawlEngine(spark, args.fixture, args.state, cfg)
     summary = eng.run()
     fetched = (
         eng.round_metrics()

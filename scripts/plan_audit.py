@@ -21,7 +21,9 @@ the 100 TB design depends on:
 * the extract → candidates dataflow crosses into Python once before the
   bloom check: exactly one ``MapInPandas`` and no ``ArrowEvalPython`` in
   the plan a round runs (a cached relation's plan, which runs once per
-  engine, is left out of the count).
+  engine, is left out of the count);
+* the live frontier right after a merge round, whose sidecar logs hold no
+  round, is the bare base scan: the empty reads drop out of the plan.
 
 Run: python scripts/plan_audit.py  (writes PLANS.md at repo root)
 """
@@ -151,10 +153,11 @@ def main() -> None:
     ))
 
     # 3. the crawl order: every window MUST be partitioned, both in the pop
-    # (the REAL engine method; no round has run, so no host is held back)
-    # and in the crawl_log() view that derives each round's pop order. The
-    # view needs committed rounds, so its plan is taken after section 6.
-    pop_plan = _fmt(eng._pop_survivors(frontier, None, 3600, 1))
+    # (the REAL engine method and host view; no round has run, so the view
+    # is empty and no host is held back) and in the crawl_log() view that
+    # derives each round's pop order. The view needs committed rounds, so
+    # its plan is taken after section 6.
+    pop_plan = _fmt(eng._pop_survivors(frontier, eng._recent_fetches(1), 3600, 1))
 
     # 4. the exact dedup tier: the url_seen scan must partition-prune to the
     # candidate slice's buckets (bucket is a partition column of the layout,
@@ -215,6 +218,24 @@ def main() -> None:
             {},
         )
     )
+
+    # 5b. the live frontier right after a merge round: its sidecar tail
+    # (frontier_ins, crawl_log deletes, frontier_gains) holds no round, and
+    # each empty read drops out of the plan — the view is the bare base
+    # scan, with no union, no anti-join and no gains join
+    merge_state = "/tmp/tcs_audit_merge_state"
+    shutil.rmtree(merge_state, ignore_errors=True)
+    merged = CrawlEngine(spark, fx, merge_state, CrawlConfig(max_rounds=1, compact_every=1))
+    merged.run(max_rounds=1)
+    assert merged.store.state("frontier_base_round") == 0, "round 0 merged"
+    sections.append((
+        "crawl_frontier_after_merge", _fmt(merged._frontier_live(0)),
+        [r"Location: [^\n]*frontier/r=0"],
+        ["frontier_ins", "frontier_gains", "crawl_log"], {},
+    ))
+    counts["crawl_frontier_after_merge"] = {
+        r"\bUnion\b": 0, r"LeftAnti": 0, r"Join": 0,
+    }
 
     # 6. the host crawl-delay gate: each host's last fetch round is
     # max(round) over the last D-1 crawl_log rounds (D the longest crawl

@@ -91,20 +91,6 @@ def test_lineage_present(engine):
     assert all(r.lineage and "inputs" in r.lineage for r in rows)
 
 
-def test_filterless_path_identical(spark, fixture_dir, tmp_path_factory, engine):
-    """The bloom prefilter tier must be semantics-free: the pure exact
-    anti-join path yields the identical crawl (SURVEY.md §5.4)."""
-    state = str(tmp_path_factory.mktemp("state_nf") / "s")
-    eng2 = CrawlEngine(spark, fixture_dir, state, TEST_CFG, use_filters=False)
-    eng2.run()
-    a = _engine_log(engine)
-    b = _engine_log(eng2)
-    assert a == b
-    seen_a = {r.url for r in engine.url_seen().collect()}
-    seen_b = {r.url for r in eng2.url_seen().collect()}
-    assert seen_a == seen_b
-
-
 def test_init_state_leaves_nothing_cached(spark, fixture_dir, tmp_path):
     """init_state caches the seed frontier while it writes round -1; once it
     returns, nothing it cached is still held in executor storage (in a

@@ -1,8 +1,10 @@
 """The snapshot store's declared-schema contract (crawl/state.py,
 schemas.STORE_TABLES): a write whose schema drifts from the declaration
 raises before any file is written, a dir whose layout lacks a declared
-partition column raises instead of reading that column back as nulls, and
-a generation write that produced no data files leaves nothing behind."""
+partition column raises instead of reading that column back as nulls, a
+generation write that produced no data files leaves nothing behind, and a
+read that finds no rows is a 0-row frame of the declared schema that the
+optimizer drops from a union."""
 
 from __future__ import annotations
 
@@ -84,16 +86,16 @@ def test_empty_generation_leaves_nothing(spark, tmp_path):
 
 
 def test_local_df_plans_no_python_rdd(spark):
-    """``local_df`` plans a JVM-only relation: no rows give a projection of
-    ``range(0)``, rows give a ``LocalRelation``. Neither is the Python RDD
-    (``LogicalRDD``) that ``createDataFrame`` makes of an empty pandas
-    frame, which would start Python workers on every action."""
+    """``local_df`` plans a ``LocalRelation``, with rows or without, never
+    the Python RDD (``LogicalRDD``) that ``createDataFrame`` makes of an
+    empty pandas frame, which would start Python workers on every
+    action."""
     ddl = "url string, ts_logical long, html binary"
     want = [(f.name, f.dataType) for f in StructType.fromDDL(ddl).fields]
-    for rows, root in (([], "Project"), ([("u", 7, b"x")], "LocalRelation")):
+    for rows in ([], [("u", 7, b"x")]):
         df = local_df(spark, rows, ddl)
         plan = df._jdf.queryExecution().analyzed()
-        assert plan.getClass().getSimpleName() == root
+        assert plan.getClass().getSimpleName() == "LocalRelation"
         assert "LogicalRDD" not in plan.toString()
         assert [(f.name, f.dataType) for f in df.schema.fields] == want
         assert [tuple(r) for r in df.collect()] == [(u, t, bytearray(h)) for u, t, h in rows]
@@ -115,3 +117,45 @@ def test_log_without_rounds_reads_empty(spark, fixture_dir, tmp_path):
     ]
     assert "LogicalRDD" not in ev._jdf.queryExecution().analyzed().toString()
     assert eng.docs().count() > 0
+
+
+def test_read_rounds_without_rows_is_empty_frame(spark, tmp_path):
+    """``read_rounds`` on a table with no dir, on a round range past the
+    last round and on a tail of ``_SUCCESS``-only dirs gives a 0-row frame
+    of the declared schema, with ``r`` or without it, and neither building
+    nor collecting it launches a job. Unioned onto a real read, it leaves
+    the optimized plan as it was."""
+    st = SnapshotStore(str(tmp_path / "s"))
+    docs = spark.range(2).selectExpr(
+        "cast(id as string) as url", "0 as round", "'t' as text",
+        "'h' as text_sha256", "cast(id as int) as bucket",
+    )
+    st.write_round(docs, "docs", 0)
+    st.write_round(docs.where("false"), "docs", 1)
+    st.write_round(docs.where("false"), "docs", 2)
+    assert sorted(os.listdir(st.round_dir("docs", 2))) == ["._SUCCESS.crc", "_SUCCESS"]
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job() -> int:
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    cases = {
+        "missing table": ("evictions", 3, None),
+        "past the last round": ("docs", 6, 3),
+        "empty-dir tail": ("docs", 2, 1),
+    }
+    for why, (tbl, upto, lo) in cases.items():
+        for drop_r in (True, False):
+            j0 = last_job()
+            df = st.read_rounds(spark, tbl, upto, min_round=lo, drop_r=drop_r)
+            assert df.collect() == [] and df.inputFiles() == [], why
+            assert last_job() == j0, why
+            want = schemas.store_schema(tbl, not drop_r)
+            assert [(f.name, f.dataType) for f in df.schema.fields] == [
+                (f.name, f.dataType) for f in want.fields
+            ], why
+    base = st.read_rounds(spark, "docs", 0)
+    both = base.unionByName(st.read_rounds(spark, "docs", 2, min_round=1))
+    assert (both._jdf.queryExecution().optimizedPlan().toString()
+            == base._jdf.queryExecution().optimizedPlan().toString())
+    assert both.count() == 2

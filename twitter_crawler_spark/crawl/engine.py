@@ -28,13 +28,16 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
              joined, longest matching prefix by array_max) — no row
              multiplication, no Python crossing before the bloom check  A15
   new      = allowed candidates → bloom → exact anti-join vs url_seen
-             (bloom-negative candidates are new). The bloom check groups
+             (bloom-negative candidates are new) — the one seen path, for
+             every config and every round. The bloom check groups
              by bucket on the candidates' own shuffle, and it is also the
              round's insert: it adds the allowed bloom negatives to the
              shard it loaded and writes bloom/r=<r>/bucket=N.npz; the
              manifest's bloom_load n grows by the new urls per bucket.
              The round's counters are observed on the checkpoints' own
-             jobs, and a write observed to hold 0 rows is not submitted  D1-D4
+             jobs, the per-partition ones (round_metrics) are one
+             aggregation over popped_res ∪ new in the write pool, and a
+             write observed to hold 0 rows is not submitted               D1-D4
   frontier' = merge-on-read delta: reinserted ∪ new → frontier_ins
              (banded), OPIC cash → frontier_gains; the round's crawl_log
              rows are its equality deletes (popped (url, attempt) keys).
@@ -59,7 +62,12 @@ records a pop. A state dir written before that (with ``frontier_del`` and
 round 0; those leftover dirs are never read again.
 
 State reads pass the declared schemas (schemas.STORE_TABLES, PAGES_LAYOUT),
-so building a round's views of the snapshot launches no Spark job.
+so building a round's views of the snapshot launches no Spark job. A read
+that finds no rows (a table no round wrote, a round range past the last
+round, a sidecar tail a merge just truncated) is a 0-row frame of the
+declared schema. The optimizer drops it from the joins and unions it
+feeds, so a stage has one code path, and right after a merge the live
+frontier plans as the bare base scan.
 
 Determinism invariant: crawl order is a pure function of the data — a
 round's pops are totally ordered by ``(depth, -score, url)`` (integer OPIC
@@ -122,6 +130,10 @@ def text_col(html_str):
 
 def _host_col(url):
     return F.substring_index(F.substring_index(url, "://", -1), "/", 1)
+
+
+# a round's per-partition counters, in round_metrics column order
+_COUNTERS = ("fetched", "hits", "results", "new_urls")
 
 
 def _checkpoint(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
@@ -222,7 +234,6 @@ class CrawlEngine:
         fixture_dir: str,
         state_dir: str,
         cfg: CrawlConfig | None = None,
-        use_filters: bool = True,
     ):
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
@@ -232,7 +243,6 @@ class CrawlEngine:
             os.environ.get("TCS_STATE_SHARED", "") == "1",
         )
         self.store = SnapshotStore(state_dir)
-        self.use_filters = use_filters
         self._load_static()
 
     # ------------------------------------------------------------------ inputs
@@ -401,7 +411,10 @@ class CrawlEngine:
         of logged gains with round > k — the partition column ``r`` IS the
         per-row gains watermark, no extra schema. The log spans at most
         ``compact_every`` rounds (compaction truncates it) and joins as a
-        per-url struct list folded by a JVM higher-order function.
+        per-url struct list folded by a JVM higher-order function. A
+        sidecar log with no rows after the base (every log, right after a
+        merge round) reads as an empty frame, which the optimizer drops:
+        then the view plans no union, no anti-join and no gains join.
 
         Join-side choices: the DELETE keys are O(batch x compact_every) by
         construction (each popped (url, attempt) appears once), and their
@@ -423,39 +436,34 @@ class CrawlEngine:
         g = int(st.state("frontier_base_round"))
         # every base row has all gains <= g folded in: its watermark is g
         base = st.read_state(s, "frontier", g).withColumn("r", F.lit(g))
-        ins = st.read_rounds(s, "frontier_ins", prev, min_round=g + 1, drop_r=False)
-        rows = base if ins is None else base.unionByName(ins)
+        rows = base.unionByName(
+            st.read_rounds(s, "frontier_ins", prev, min_round=g + 1, drop_r=False)
+        )
         if due_band is not None:
             rows = rows.where(F.col("band") <= due_band)
         rows = rows.withColumnRenamed("r", "_gthrough").drop("band")
-        pops = st.read_rounds(s, "crawl_log", prev, min_round=g + 1)
-        if pops is not None:
-            dels = pops.select("url", "attempt")
-            if self._del_rows() <= self.cfg.broadcast_del_rows_max:
-                dels = F.broadcast(dels)
-            rows = rows.join(dels, ["url", "attempt"], "left_anti")
+        dels = st.read_rounds(s, "crawl_log", prev, min_round=g + 1).select("url", "attempt")
+        if self._del_rows() <= self.cfg.broadcast_del_rows_max:
+            dels = F.broadcast(dels)
         gains = st.read_rounds(s, "frontier_gains", prev, min_round=g + 1, drop_r=False)
-        if gains is not None:
-            glist = gains.groupBy("url").agg(
-                F.collect_list(
-                    F.struct(F.col("r").alias("gr"), F.col("gain").alias("g"))
-                ).alias("_glist")
+        glist = gains.groupBy("url").agg(
+            F.collect_list(
+                F.struct(F.col("r").alias("gr"), F.col("gain").alias("g"))
+            ).alias("_glist")
+        )
+        pend = F.when(F.col("_glist").isNull(), F.lit(0).cast("long")).otherwise(
+            F.aggregate(
+                F.filter(F.col("_glist"), lambda e: e["gr"] > F.col("_gthrough")),
+                F.lit(0).cast("long"),
+                lambda acc, e: acc + e["g"],
             )
-            pend = F.when(F.col("_glist").isNull(), F.lit(0).cast("long")).otherwise(
-                F.aggregate(
-                    F.filter(
-                        F.col("_glist"), lambda e: e["gr"] > F.col("_gthrough")
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, e: acc + e["g"],
-                )
-            )
-            rows = (
-                rows.join(glist, "url", "left")
-                .withColumn("score", (F.col("score") + pend).cast("long"))
-                .drop("_glist")
-            )
-        return rows.select(*[f.name for f in schemas.FRONTIER.fields])
+        )
+        return (
+            rows.join(dels, ["url", "attempt"], "left_anti")
+            .join(glist, "url", "left")
+            .withColumn("score", (F.col("score") + pend).cast("long"))
+            .select(*[f.name for f in schemas.FRONTIER.fields])
+        )
 
     def _del_rows(self) -> int:
         """Delete keys since the frontier base: the rows the committed
@@ -465,19 +473,20 @@ class CrawlEngine:
         g = int(m["state"]["frontier_base_round"])
         return sum(h["popped"] for h in m["history"] if h["round"] > g)
 
-    def _recent_fetches(self, r: int) -> DataFrame | None:
+    def _recent_fetches(self, r: int) -> DataFrame:
         """``(host, last_fetch_round)`` for the hosts whose last fetch can
         still hold them back at round r. The gate is
         ``r >= last_fetch_round + delay`` with ``delay <= D``
         (``max_delay``), so a fetch before round r-D+1 never blocks and
         only the crawl_log rounds r-D+1 … r-1 are read; with D ≤ 1 that
-        range is empty, and the result is None."""
-        log = self.store.read_rounds(
-            self.spark, "crawl_log", r - 1, min_round=r - self.max_delay + 1
+        range is empty, and so is the result (it reads no file)."""
+        return (
+            self.store.read_rounds(
+                self.spark, "crawl_log", r - 1, min_round=r - self.max_delay + 1
+            )
+            .groupBy("host")
+            .agg(F.max("round").alias("last_fetch_round"))
         )
-        if log is None:
-            return None
-        return log.groupBy("host").agg(F.max("round").alias("last_fetch_round"))
 
     def frontier_live(self) -> DataFrame:
         """Public live-frontier view at the committed snapshot."""
@@ -524,20 +533,8 @@ class CrawlEngine:
         )
         self.store.write_round(fr.withColumn("band", self._band()), "frontier", -1)
         self.store.write_round(seen, "url_seen", -1)
-        bloom_map: dict[str, int] = {}
-        bloom_load: dict[str, list] = {}
-        if self.use_filters:
-            upd = make_seen_update_fn({}, self.store.bloom_dir(-1), cfg)
-            shard_rows = (
-                seen.groupBy("bucket")
-                .applyInPandas(upd, SHARD_STATS_SCHEMA)
-                .collect()
-            )
-            bloom_map = {str(int(row["bucket"])): -1 for row in shard_rows}
-            bloom_load = {
-                str(int(row["bucket"])): [int(row["n_total"]), int(row["m_bits"])]
-                for row in shard_rows
-            }
+        upd = make_seen_update_fn({}, self.store.bloom_dir(-1), cfg)
+        shard_rows = seen.groupBy("bucket").applyInPandas(upd, SHARD_STATS_SCHEMA).collect()
         self.store.commit(
             -1,
             {"seeds": self._n_seed_lines},
@@ -545,8 +542,11 @@ class CrawlEngine:
                 "frontier_base_round": -1,
                 "frontier_count": n0,
                 "log_gens": {},
-                "bloom_map": bloom_map,
-                "bloom_load": bloom_load,
+                "bloom_map": {str(int(row["bucket"])): -1 for row in shard_rows},
+                "bloom_load": {
+                    str(int(row["bucket"])): [int(row["n_total"]), int(row["m_bits"])]
+                    for row in shard_rows
+                },
             },
         )
         fr.unpersist()
@@ -580,12 +580,12 @@ class CrawlEngine:
         return [F.col("depth").asc(), F.col("score").desc(), F.col("url").asc()]
 
     def _pop_survivors(
-        self, frontier: DataFrame, recent: DataFrame | None, t_r: int, r: int
+        self, frontier: DataFrame, recent: DataFrame, t_r: int, r: int
     ) -> DataFrame:
         """Due filter + crawl-delay gate + salted per-host budget window.
         Budgets and delays come from the politeness table (config defaults
         for hosts absent from it), last fetch rounds from ``recent``
-        (``_recent_fetches``; None: no host is held back).
+        (``_recent_fetches``; a host it lacks is not held back).
 
         Hot-host skew: stage 1 ranks inside (host, salt) slices so no single
         task sorts a whole hot domain; stage 2 re-ranks the ≤ salt*budget
@@ -594,13 +594,10 @@ class CrawlEngine:
         takes every survivor (no global batch cap), so the round's crawl
         order is only ever derived on read (``crawl_log``)."""
         cfg = self.cfg
-        due = frontier.join(self.politeness, "host", "left")
-        if recent is None:
-            due = due.withColumn("last_fetch_round", F.lit(None).cast("int"))
-        else:
-            due = due.join(recent, "host", "left")
         due = (
-            due.withColumn("budget", F.coalesce("budget_per_round", F.lit(cfg.default_budget)))
+            frontier.join(self.politeness, "host", "left")
+            .join(recent, "host", "left")
+            .withColumn("budget", F.coalesce("budget_per_round", F.lit(cfg.default_budget)))
             .withColumn("delay", F.coalesce("crawl_delay_rounds", F.lit(cfg.default_crawl_delay)))
             .where(
                 (F.col("next_fetch_ts") <= t_r)
@@ -756,10 +753,7 @@ class CrawlEngine:
         """``cand`` plus ``maybe_seen``, its bloom verdict (the shard of
         each bucket, read in a grouped Arrow pass that also inserts the
         bucket's new bloom negatives and writes its shard into
-        ``new_bloom_dir``); without filters every candidate goes to the
-        exact tier."""
-        if not self.use_filters:
-            return cand.withColumn("maybe_seen", F.lit(True))
+        ``new_bloom_dir``)."""
         return cand.groupBy("bucket").applyInPandas(
             make_seen_check_fn(bucket_paths, new_bloom_dir, self.cfg),
             "dst string, parent_depth int, gain long, allowed boolean,"
@@ -813,6 +807,8 @@ class CrawlEngine:
         # leaves reset the estimate to real file sizes each round.
         # The due scan partition-prunes to bands ≤ t_r div band_ticks —
         # future-scheduled bands are never read.
+        # The crawl-delay window's last fetches are an empty frame while no
+        # crawl_log round falls inside it (round 0, or every delay 1).
         due_live = self._frontier_live(prev, due_band=t_r // cfg.band_ticks)
         recent = self._recent_fetches(r)
 
@@ -901,7 +897,7 @@ class CrawlEngine:
         seen_all = self.store.read_log(s, "url_seen", prev)
         # bucket → shard path from the committed manifest: O(1) resolution
         # per bucket inside tasks, regardless of how many rounds have run
-        bucket_paths = self.store.bloom_paths() if self.use_filters else {}
+        bucket_paths = self.store.bloom_paths()
         flagged, new_urls, seen_n, shard_buckets = self._seen_tier(
             outlinks, seen_all, bucket_paths, self.store.bloom_dir(r)
         )
@@ -1007,7 +1003,9 @@ class CrawlEngine:
             # merges them into one — the LSM size-tiering trade: the
             # O(total) rewrite is amortized over max_log_gens*compact_every
             # rounds while reads union ≤ max_log_gens+K dirs. The round's
-            # url_seen and docs views are the major merge's prior slice.
+            # url_seen and docs views are the major merge's prior slice; a
+            # minor merge's tail with no rows is an empty frame, which the
+            # union drops.
             views = {"url_seen": seen_all, "docs": docs_all}
             for tbl, delta in (("url_seen", seen_new), ("docs", docs_new),
                                ("edges", edges_new)):
@@ -1019,7 +1017,7 @@ class CrawlEngine:
                     prior = st.read_rounds(
                         s, tbl, prev, min_round=(gens[-1] + 1) if gens else None,
                     )
-                merges[tbl] = (major, delta if prior is None else prior.unionByName(delta))
+                merges[tbl] = (major, prior.unionByName(delta))
         else:
             # the O(batch) delta — the whole per-round write
             writes = [
@@ -1042,48 +1040,43 @@ class CrawlEngine:
         ]
         # a write whose row count the checkpoints observed to be 0 is not
         # submitted: its table simply has no dir for the round, which every
-        # read treats as no rows (``None`` means the count is not known)
+        # read gives as an empty frame (``None`` means the count is not known)
         writes = [(df, tbl) for df, tbl, n in writes if n != 0]
 
-        # ---- write round outputs + per-partition stats, all jobs over
+        # ---- write round outputs + per-partition counters, all jobs over
         # materialized checkpoints → submitted CONCURRENTLY from driver
         # threads (Spark schedules independent jobs in parallel; wall time is
         # the max, not the sum — the analog of parallel Iceberg table appends
         # before one snapshot commit). The round's bloom shards were written
-        # by its bloom check.
-        part = F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("partition_id")
+        # by its bloom check. The counters are one aggregation over the
+        # popped batch ∪ the new urls, each row counting toward its own
+        # columns, and one collect.
+        def counter_rows(df: DataFrame, **cols) -> DataFrame:
+            return df.select(
+                F.pmod("url_hash", F.lit(cfg.seen_partitions)).alias("partition_id"),
+                *[cols.get(c, F.lit(0)).cast("long").alias(c) for c in _COUNTERS],
+            )
 
-        def _pop_stats_task():
-            return {
-                int(row["partition_id"]): row
-                for row in popped_res.groupBy(part).agg(
-                    F.count("*").alias("fetched"),
-                    F.sum((F.col("n_results") > 0).cast("long")).alias("hits"),
-                    F.sum("n_results").alias("results"),
-                ).collect()
-            }
-
-        def _new_stats_task():
-            return {
-                int(row["partition_id"]): int(row["new_urls"])
-                for row in new_urls.groupBy(part).agg(
-                    F.count("*").alias("new_urls")
-                ).collect()
-            }
-
+        counters = (
+            counter_rows(
+                popped_res, fetched=F.lit(1), hits=F.col("n_results") > 0,
+                results=F.col("n_results"),
+            )
+            .unionByName(counter_rows(new_urls, new_urls=F.lit(1)))
+            .groupBy("partition_id")
+            .agg(*[F.sum(c).alias(c) for c in _COUNTERS])
+        )
         with ThreadPoolExecutor(max_workers=10) as pool:
             futs = [pool.submit(st.write_round, df, tbl, r) for df, tbl in writes]
             gen_futs = {
                 tbl: pool.submit(st.write_gen, src, tbl, r)
                 for tbl, (_major, src) in merges.items()
             }
-            fut_stats = pool.submit(_pop_stats_task)
-            fut_new = pool.submit(_new_stats_task)
+            fut_stats = pool.submit(counters.collect)
             for f in futs:
                 f.result()
             gen_paths = {tbl: f.result() for tbl, f in gen_futs.items()}
-            pop_stats = fut_stats.result()
-            new_stats = fut_new.result()
+            stats = {int(row["partition_id"]): row for row in fut_stats.result()}
         # grow the manifest's occupancy map (bucket → [n, m]) by the round's
         # new urls per bucket (partition_id is the seen bucket) — driver
         # arithmetic only; the capacity policy below never loads a shard on
@@ -1093,10 +1086,10 @@ class CrawlEngine:
         bloom_load = {
             int(k): v[:2] for k, v in (st.state("bloom_load", {}) or {}).items()
         }
-        if self.use_filters:
-            for b, n in new_stats.items():
+        for b, row in stats.items():
+            if row["new_urls"] > 0:
                 n0, m = bloom_load.get(b, [0, cfg.bloom_bits_per_partition])
-                bloom_load[b] = [n0 + n, m]
+                bloom_load[b] = [n0 + int(row["new_urls"]), m]
         frontier_n = int(st.state("frontier_count")) - n_popped + n_ins
         new_state: dict = {"frontier_count": frontier_n}
         # buckets whose shard this round wrote: the bloom check's, then the
@@ -1127,26 +1120,25 @@ class CrawlEngine:
             # because it needs the post-update occupancy. The saturation
             # check is pure driver arithmetic over the manifest's occupancy
             # map — no shard I/O unless a rebuild actually fires.
-            if self.use_filters:
-                sat_geom = {
-                    b: grown_geometry(n, cfg)
-                    for b, (n, m) in bloom_load.items()
-                    if n > cfg.bloom_max_load * m
-                }
-                if sat_geom:
-                    rebuild = make_shard_rebuild_fn(st.bloom_dir(r), sat_geom, cfg)
-                    rebuilt = (
-                        _in_buckets(seen_all.unionByName(seen_new), sat_geom, cfg.seen_partitions)
-                        .select("url_hash", "bucket")
-                        .groupBy("bucket")
-                        .applyInPandas(rebuild, SHARD_STATS_SCHEMA)
-                        .collect()
-                    )
-                    for row in rebuilt:
-                        bloom_touch.add(int(row["bucket"]))
-                        bloom_load[int(row["bucket"])] = [
-                            int(row["n_total"]), int(row["m_bits"])
-                        ]
+            sat_geom = {
+                b: grown_geometry(n, cfg)
+                for b, (n, m) in bloom_load.items()
+                if n > cfg.bloom_max_load * m
+            }
+            if sat_geom:
+                rebuild = make_shard_rebuild_fn(st.bloom_dir(r), sat_geom, cfg)
+                rebuilt = (
+                    _in_buckets(seen_all.unionByName(seen_new), sat_geom, cfg.seen_partitions)
+                    .select("url_hash", "bucket")
+                    .groupBy("bucket")
+                    .applyInPandas(rebuild, SHARD_STATS_SCHEMA)
+                    .collect()
+                )
+                for row in rebuilt:
+                    bloom_touch.add(int(row["bucket"]))
+                    bloom_load[int(row["bucket"])] = [
+                        int(row["n_total"]), int(row["m_bits"])
+                    ]
 
         # bloom manifest map: buckets whose shard this round replaced
         old_map = st.bloom_map()
@@ -1155,8 +1147,7 @@ class CrawlEngine:
             bm = {str(k): v for k, v in old_map.items()}
             bm.update({str(b): r for b in sorted(bloom_touch)})
             new_state["bloom_map"] = bm
-        if self.use_filters:
-            new_state["bloom_load"] = {str(k): v for k, v in bloom_load.items()}
+        new_state["bloom_load"] = {str(k): v for k, v in bloom_load.items()}
 
         # ---- per-partition lineage + metrics --------------------------------------
         wall_ms = int((time.time() - t0) * 1000)
@@ -1165,24 +1156,21 @@ class CrawlEngine:
                 "round": r,
                 "inputs": [st.round_dir("frontier", base_round), self.pages_path],
                 "frontier_logs_since": base_round,
-                "bloom_buckets": len(bucket_paths) if self.use_filters else None,
+                "bloom_buckets": len(bucket_paths),
             }
         )
-        # pop_stats / new_stats were collected in the write pool — pure
-        # driver-side assembly from here
+        # the counters were collected in the write pool — pure driver-side
+        # assembly from here
         rows = []
         total_hits = total_results = 0
-        for pid in sorted(set(pop_stats) | set(new_stats)):
-            p = pop_stats.get(pid)
-            fetched_n = int(p["fetched"]) if p else 0
-            hits_n = int(p["hits"]) if p else 0
-            results_n = int(p["results"]) if p else 0
+        for pid in sorted(stats):
+            fetched_n, hits_n, results_n, new_n = (int(stats[pid][c]) for c in _COUNTERS)
             total_hits += hits_n
             total_results += results_n
             rows.append(
                 (
                     r, pid, fetched_n, hits_n, results_n,
-                    new_stats.get(pid, 0), 0, 0, 0, 0, 0, wall_ms, lineage,
+                    new_n, 0, 0, 0, 0, 0, wall_ms, lineage,
                 )
             )
         # round-level totals on partition_id = -1

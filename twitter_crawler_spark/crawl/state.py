@@ -66,6 +66,7 @@ interface. All paths must be on a shared filesystem for a multi-node master
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -295,12 +296,16 @@ class SnapshotStore:
         upto_round: int,
         min_round: int | None = None,
         drop_r: bool = True,
-    ) -> DataFrame | None:
+    ) -> DataFrame:
         """Union of per-round appends with ``min_round <= r <= upto_round``
         (partition column ``r`` from the layout). The caller bounds
         ``min_round`` (e.g. to the frontier base round) so the scan probes
         and reads O(upto_round - min_round) dirs and never lists the table,
-        whose history (crawl_log's) may be the whole crawl."""
+        whose history (crawl_log's) may be the whole crawl. No rows — a
+        missing table, an empty range, a tail of empty dirs — read as a
+        0-row frame of the declared schema (``local_df``), which the
+        optimizer drops from the joins and unions it feeds, so callers
+        need no branch for it."""
         parts = schemas.STORE_TABLES[table][1]
         if min_round is None:
             dirs = [p for k, p in self._round_dirs(table) if k <= upto_round]
@@ -314,11 +319,12 @@ class SnapshotStore:
         # _SUCCESS (no part file): on a long crawl a table can go quiet for
         # a whole compaction window (e.g. docs once first-fetches dry up),
         # making every listed dir empty. They hold no rows, so they are
-        # skipped outright, and a tail of only such dirs reads as None.
+        # skipped outright, and a tail of only such dirs reads as no rows.
         dirs = [p for p in dirs if _has_data_files(p, parts)]
-        if not dirs:
-            return None
-        df = self._read(spark, table, dirs, os.path.join(self.root, table), True)
+        if dirs:
+            df = self._read(spark, table, dirs, os.path.join(self.root, table), True)
+        else:
+            df = local_df(spark, [], schemas.store_schema(table, True))
         return df.drop("r") if drop_r else df
 
     def log_gens(self, table: str) -> list[int]:
@@ -332,26 +338,19 @@ class SnapshotStore:
         the newest one. Listing and file count stay
         O(#generations + rounds-since-compaction), bounded by
         ``max_log_gens`` and ``compact_every``. A log with no data files
-        (``evictions`` of a crawl that never evicts) reads as an empty frame
-        of the declared schema, planned JVM-only."""
+        (``evictions`` of a crawl that never evicts) reads as its empty
+        tail: a 0-row frame of the declared schema, planned JVM-only."""
         gens = self.log_gens(table)
         parts = []
         for g in gens:
             gdir = self.gen_dir(table, g)
             _has_data_files(gdir, schemas.STORE_TABLES[table][1])
             parts.append(self._read(spark, table, [gdir], gdir, False))
-        tail = self.read_rounds(
+        parts.append(self.read_rounds(
             spark, table, upto_round,
             min_round=(gens[-1] + 1) if gens else None,
-        )
-        if tail is not None:
-            parts.append(tail)
-        if not parts:
-            return local_df(spark, [], schemas.store_schema(table))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        ))
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def read_state(self, spark: SparkSession, table: str, round_: int) -> DataFrame:
         """A base snapshot (``frontier`` at ``round_``), without the ``r``

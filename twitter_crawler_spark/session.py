@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the dir holding the package: the checkout, or the zip --py-files ships
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "twitter-crawler-spark",
@@ -38,7 +41,15 @@ def get_spark(
     * ``local=False`` (the ``spark-submit`` path, jobs/crawl.py): no
       ``.master()`` call — the cluster manager from ``--master`` wins, and
       ``cores`` only sizes the default shuffle parallelism.
+    * The Python workers import this package from the dir that holds it
+      (the checkout, or the ``--py-files`` zip): it goes first on their
+      ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, ahead of any value
+      ``extra_conf`` gives), so a driver started outside the checkout with
+      no ``PYTHONPATH`` of its own still runs its UDFs.
     """
+    extra_conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    extra_conf[key] = os.pathsep.join(filter(None, (_PKG_PARENT, extra_conf.get(key))))
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = SparkSession.builder.appName(app_name)
@@ -65,7 +76,7 @@ def get_spark(
         # static conf: read once, when the session is created (see above)
         .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -87,25 +98,30 @@ def local_df(spark: SparkSession, rows, schema):
     frame at local[32], which made the per-round metrics write the single
     most expensive crawl stage. Rows go through pandas + Arrow instead,
     converted once on the driver into a ``LocalRelation`` (a LocalTableScan
-    at action time). An empty pandas frame would fall back to the
+    at action time). An empty pandas frame (or list) would fall back to the
     ``parallelize`` path (Spark 4.1 plans it as a ``LogicalRDD``), so no
-    rows give ``spark.range(0)`` with one typed null per column: a JVM-only
-    relation that the optimizer knows to be empty.
+    rows give an empty ``LocalRelation`` built on the JVM side. The
+    optimizer's first pass drops it from every join and ``Union`` it
+    feeds, before any other rule runs, so the plan is the one written
+    without it. (A ``range(0)`` stays as a ``Union`` child; a ``false``
+    filter over typed nulls becomes empty only mid-optimization, and the
+    joins it removes leave ``CASE WHEN true`` projections and stacked
+    limits behind.)
 
     ``schema`` may be a StructType, a DDL string ("a int, b string"), or a
     list of column names (the bare-minimum createDataFrame forms used here).
     """
     import pandas as pd
-    from pyspark.sql import functions as F
+    from pyspark.sql import DataFrame
     from pyspark.sql.types import StructType
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     rows = list(rows)
     if not rows and isinstance(schema, StructType):
-        return spark.range(0).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
+        jss = spark._jsparkSession
+        jschema = jss.parseDataType(schema.json())
+        return DataFrame(jss.createDataFrame(spark._jvm.java.util.ArrayList(), jschema), spark)
     names = schema.fieldNames() if isinstance(schema, StructType) else list(schema)
     pdf = pd.DataFrame(rows, columns=names)
     return spark.createDataFrame(pdf, schema)

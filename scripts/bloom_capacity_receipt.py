@@ -65,7 +65,7 @@ def run(spark, fx: str, state: str, autogrow: bool) -> dict:
                 else None,
             }
         )
-    load = eng.store.state("bloom_load", {})
+    load = eng.store.snapshot().bloom_load
     totals = {
         k: sum(int(m[k]) for m in rows)
         for k in ("fetched", "new_urls", "dupes", "robots_blocked")
@@ -77,9 +77,9 @@ def run(spark, fx: str, state: str, autogrow: bool) -> dict:
         "per_round": per_round,
         "final_geometry": {
             b: {"n": v[0], "m_bits": v[1]}
-            for b, v in sorted(load.items(), key=lambda kv: int(kv[0]))
+            for b, v in sorted(load.items())
         },
-        "buckets_grown": sum(1 for v in load.values() if int(v[1]) > base_bits),
+        "buckets_grown": sum(1 for v in load.values() if v[1] > base_bits),
     }
 
 

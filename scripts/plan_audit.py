@@ -22,6 +22,8 @@ the 100 TB design depends on:
   bloom check: exactly one ``MapInPandas`` and no ``ArrowEvalPython`` in
   the plan a round runs (a cached relation's plan, which runs once per
   engine, is left out of the count);
+* the live frontier's due scan reads the base and the later rounds'
+  inserts as ONE ``frontier`` scan pruned to due bands, with no union;
 * the live frontier right after a merge round, whose sidecar logs hold no
   round, is the bare base scan: the empty reads drop out of the plan.
 
@@ -45,6 +47,8 @@ SF = "/root/testdata/sf0.01"
 # expression instead of a partition list
 UNPARTITIONED_WINDOW = r"windowspecdefinition\([^,)]+ (ASC|DESC)"
 UNIVERSAL_BANS = ["BatchEvalPython", "CartesianProduct", UNPARTITIONED_WINDOW]
+# a parquet scan of the frontier table (its detail block's file index)
+_FRONTIER_SCAN = r"Location: [^\n]*/frontier/r="
 
 # per-query REQUIRED physical properties
 WANTS: dict[str, list[str]] = {
@@ -143,10 +147,10 @@ def main() -> None:
 
     shutil.rmtree("/tmp/tcs_audit_state", ignore_errors=True)
     eng = CrawlEngine(spark, fx, "/tmp/tcs_audit_state", CrawlConfig(max_rounds=1))
-    eng.init_state()
+    snap = eng.init_state()
     from pyspark.sql import functions as F
 
-    frontier = eng._frontier_live(-1)
+    frontier = eng._frontier_live(snap)
     sections.append((
         "crawl_fetch_join", _fmt(eng._fetch(frontier.limit(5), [0, 1, 2], 3600)),
         ["BroadcastHashJoin", "PartitionFilters"], [], {},
@@ -168,7 +172,7 @@ def main() -> None:
         .withColumn("parent_depth", F.lit(0))
         .limit(7)
     )
-    seen_all = eng.store.read_log(spark, "url_seen", -1)
+    seen_all = eng._read_log("url_seen", snap)
     exact_plan = _fmt(eng._exact_new(need_exact, seen_all, [0, 3]))
     sections.append(
         (
@@ -190,7 +194,7 @@ def main() -> None:
     )
     cand_plan = _fmt(eng._flag(
         eng._candidates(eng._outlinks(cand_fetch, frontier)),
-        eng.store.bloom_paths(), eng.store.bloom_dir(0),
+        eng.store.bloom_paths(snap), eng.store.bloom_dir(0),
     ))
     sections.append(
         ("crawl_candidates", cand_plan, ["FlatMapGroupsInPandas"], [], {})
@@ -204,37 +208,23 @@ def main() -> None:
         r"Arguments: hashpartitioning\(bucket#\d+L?, \d+\)": 1,
     }
 
-    # 5. the merge-on-read frontier due scan: the banded base (and any ins
-    # log) must partition-prune to due bands — the band filter has to reach
-    # the parquet scan as a PartitionFilters entry, so a round never reads
-    # future-scheduled frontier rows (the 10^10-row full-scan killer)
-    due_plan = _fmt(eng._frontier_live(-1, due_band=0))
-    sections.append(
-        (
-            "crawl_frontier_due_scan",
-            due_plan,
-            [r"PartitionFilters: \[[^\]]*band"],
-            [UNPARTITIONED_WINDOW],
-            {},
-        )
-    )
-
-    # 5b. the live frontier right after a merge round: its sidecar tail
-    # (frontier_ins, crawl_log deletes, frontier_gains) holds no round, and
-    # each empty read drops out of the plan — the view is the bare base
-    # scan, with no union, no anti-join and no gains join
+    # 5b. the live frontier right after a merge round: no round after the
+    # base has inserts, crawl_log deletes or frontier_gains, and each empty
+    # read drops out of the plan — the view is the bare base scan (one
+    # frontier dir), with no anti-join and no gains join
     merge_state = "/tmp/tcs_audit_merge_state"
     shutil.rmtree(merge_state, ignore_errors=True)
     merged = CrawlEngine(spark, fx, merge_state, CrawlConfig(max_rounds=1, compact_every=1))
     merged.run(max_rounds=1)
-    assert merged.store.state("frontier_base_round") == 0, "round 0 merged"
+    merged_snap = merged.store.snapshot()
+    assert merged_snap.frontier_base_round == 0, "round 0 merged"
     sections.append((
-        "crawl_frontier_after_merge", _fmt(merged._frontier_live(0)),
+        "crawl_frontier_after_merge", _fmt(merged._frontier_live(merged_snap)),
         [r"Location: [^\n]*frontier/r=0"],
-        ["frontier_ins", "frontier_gains", "crawl_log"], {},
+        ["frontier_gains", "crawl_log"], {},
     ))
     counts["crawl_frontier_after_merge"] = {
-        r"\bUnion\b": 0, r"LeftAnti": 0, r"Join": 0,
+        r"\bUnion\b": 0, r"LeftAnti": 0, r"Join": 0, _FRONTIER_SCAN: 1,
     }
 
     # 6. the host crawl-delay gate: each host's last fetch round is
@@ -244,7 +234,8 @@ def main() -> None:
     # rounds first so the window holds crawl_log dirs.
     assert eng.max_delay >= 2, "the audit fixture has a host with delay > 1"
     eng.run(max_rounds=2)
-    gate_plan = _fmt(eng._recent_fetches(eng.store.committed_round() + 1))
+    snap = eng.store.snapshot()
+    gate_plan = _fmt(eng._recent_fetches(snap.committed_round + 1))
     sections.append(
         (
             "crawl_host_gate",
@@ -254,6 +245,25 @@ def main() -> None:
             {},
         )
     )
+    # 5. the merge-on-read frontier due scan, on a snapshot with inserts
+    # after its base: the base and the inserts are one frontier scan (no
+    # union), and it must partition-prune to due bands — the band filter
+    # has to reach the parquet scan as a PartitionFilters entry, so a round
+    # never reads future-scheduled frontier rows (the 10^10-row full-scan
+    # killer)
+    assert any(k > snap.frontier_base_round for k, _ in eng.store._round_dirs("frontier")), \
+        "the audit snapshot holds frontier inserts after its base"
+    t_r = (snap.committed_round + 1) * eng.cfg.round_tick
+    sections.append(
+        (
+            "crawl_frontier_due_scan",
+            _fmt(eng._frontier_live(snap, due_band=t_r // eng.cfg.band_ticks)),
+            [r"PartitionFilters: \[[^\]]*band"],
+            [UNPARTITIONED_WINDOW],
+            {},
+        )
+    )
+    counts["crawl_frontier_due_scan"] = {r"\bUnion\b": 0, _FRONTIER_SCAN: 1}
     sections.append(
         (
             "crawl_pop_order",

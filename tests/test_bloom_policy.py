@@ -62,13 +62,13 @@ def test_autogrow_preserves_goldens_and_fires(spark, tiny_fixture, tmp_path_fact
                         CrawlConfig(**TINY))
     grown.run()
     assert _goldens(fixed) == _goldens(grown)
-    load = grown.store.state("bloom_load", {})
+    load = grown.store.snapshot().bloom_load
     base_bits = TINY["bloom_bits_per_partition"]
     assert any(int(v[1]) > base_bits for v in load.values()), (
         "tiny shards never saturated — the policy path was not exercised"
     )
     # fixed geometry never grows
-    fload = fixed.store.state("bloom_load", {})
+    fload = fixed.store.snapshot().bloom_load
     assert all(int(v[1]) == base_bits for v in fload.values())
 
 
@@ -85,4 +85,4 @@ def test_resume_across_rebuild_boundary(spark, tiny_fixture, tmp_path_factory):
 
     assert _goldens(single) == _goldens(resumed)
     # the resumed run sees the same final occupancy map as the single run
-    assert single.store.state("bloom_load") == resumed.store.state("bloom_load")
+    assert single.store.snapshot().bloom_load == resumed.store.snapshot().bloom_load

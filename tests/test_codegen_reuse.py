@@ -28,6 +28,6 @@ def test_round_reuses_compiled_code(spark, fixture_dir, tmp_path):
     eng.run(max_rounds=3)
     c0 = compiles.getCount()
     eng.run(max_rounds=4)
-    assert eng.store.committed_round() == 3
+    assert eng.store.snapshot().committed_round == 3
     round3 = compiles.getCount() - c0
     assert round3 <= DEFAULT_CACHE_ROUND3_COMPILES // 3, round3

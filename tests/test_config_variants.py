@@ -59,32 +59,31 @@ def _assert_bounded_listing(eng: CrawlEngine, cfg: CrawlConfig) -> None:
     (D the longest crawl delay) and
     never listing the table; crawl_log,
     evictions and round_metrics are append-only OUTPUT logs that are never
-    compacted, so their dir counts are exempt by design. The tables that
-    crawl_log replaced (frontier_del, hosts, hosts_new, hosts_touch) are
-    never written."""
+    compacted, so their dir counts are exempt by design. The retired tables
+    (frontier_del, hosts, hosts_new, hosts_touch, which crawl_log replaced,
+    and frontier_ins, whose rows frontier now holds) are never written."""
     import os
 
     st = eng.store
-    r_final = st.committed_round()
-    base = int(st.state("frontier_base_round"))
-    since_base = r_final - base
+    snap = st.snapshot()
+    base = snap.frontier_base_round
+    since_base = snap.committed_round - base
     assert since_base < cfg.compact_every  # compaction actually ran on time
 
     def round_dirs(tbl: str) -> list[int]:
         return [k for k, _ in st._round_dirs(tbl)]
 
-    # base table: exactly the one base snapshot dir survives GC
-    assert round_dirs("frontier") == [base]
+    # frontier: the one base dir survives GC, then the insert rounds after it
+    fr = round_dirs("frontier")
+    assert fr[0] == base and len(fr) - 1 <= since_base and all(k > base for k in fr[1:]), fr
     for tbl in RETIRED_TABLES:
         assert not os.path.exists(os.path.join(st.root, tbl)), tbl
-    # sidecar logs: only rounds after the base fold
-    for tbl in ("frontier_ins", "frontier_gains"):
-        rs = round_dirs(tbl)
-        assert len(rs) <= since_base and all(k > base for k in rs), (tbl, rs)
+    # gains log: only rounds after the base fold
+    rs = round_dirs("frontier_gains")
+    assert len(rs) <= since_base and all(k > base for k in rs), rs
     # leveled logs: <= G generation dirs + the tail rounds since the newest
-    gens = st.state("log_gens", {})
     for tbl in ("url_seen", "docs", "edges"):
-        g = [int(x) for x in gens.get(tbl, [])]
+        g = snap.log_gens.get(tbl, [])
         troot = os.path.join(st.root, tbl)
         gen_dirs = [d for d in os.listdir(troot) if d.startswith("gen=")] \
             if os.path.isdir(troot) else []
@@ -98,7 +97,7 @@ def _assert_bounded_listing(eng: CrawlEngine, cfg: CrawlConfig) -> None:
     on_disk = set()
     for root, _dirs, files in os.walk(st.bloom_root):
         on_disk.update(os.path.join(root, f) for f in files)
-    referenced = set(st.bloom_paths().values())
+    referenced = set(st.bloom_paths(snap).values())
     assert on_disk == referenced, (on_disk - referenced, referenced - on_disk)
     assert len(on_disk) <= cfg.seen_partitions
 
@@ -110,7 +109,7 @@ def test_variant_matches_oracle(spark, fixture_dir, tmp_path_factory, name):
     state = str(tmp_path_factory.mktemp(f"var_{name}") / "s")
     eng = CrawlEngine(spark, fixture_dir, state, cfg)
     eng.run()
-    if int(eng.store.state("frontier_base_round", -1)) >= 0:
+    if eng.store.snapshot().frontier_base_round >= 0:
         # at least one compaction folded during this run
         _assert_bounded_listing(eng, cfg)
     got = [

@@ -208,5 +208,6 @@ def test_frontier_del_rows_tracks_pops(engine):
     compaction in this run (compact_every > max_rounds) the count must
     equal total pops, i.e. every crawl_log row."""
     m = engine.round_metrics().where("partition_id = -1").toPandas()
-    assert engine.store.state("frontier_base_round") == -1
-    assert engine._del_rows() == int(m.fetched.sum()) == engine.crawl_log().count() > 0
+    snap = engine.store.snapshot()
+    assert snap.frontier_base_round == -1
+    assert snap.del_rows == int(m.fetched.sum()) == engine.crawl_log().count() > 0

@@ -103,9 +103,18 @@ def test_init_state_leaves_nothing_cached(spark, fixture_dir, tmp_path):
         df.count()
     entries, rdds = cache.numCachedEntries(), set(jsc.getPersistentRDDs().keySet())
     eng.init_state()
-    assert eng.store.committed_round() == -1
+    assert eng.store.snapshot().committed_round == -1
     assert cache.numCachedEntries() == entries
     assert set(jsc.getPersistentRDDs().keySet()) == rdds
+
+
+def test_zero_max_rounds_runs_no_round(spark, fixture_dir, tmp_path):
+    """``max_rounds=0`` initialises the state and runs no round, in the
+    engine and in the oracle alike."""
+    eng = CrawlEngine(spark, fixture_dir, str(tmp_path / "s"), TEST_CFG)
+    assert eng.run(max_rounds=0)["rounds"] == []
+    assert eng.store.snapshot().committed_round == -1
+    assert FrontierOracle(fixture_dir, TEST_CFG).run(max_rounds=0).crawl_order == []
 
 
 def test_round_leaves_nothing_persisted(spark, fixture_dir, tmp_path):
@@ -117,7 +126,7 @@ def test_round_leaves_nothing_persisted(spark, fixture_dir, tmp_path):
     eng.run(max_rounds=1)
     rdds = set(jsc.getPersistentRDDs().keySet())
     eng.run(max_rounds=3)
-    assert eng.store.committed_round() == 2
+    assert eng.store.snapshot().committed_round == 2
     assert set(jsc.getPersistentRDDs().keySet()) <= rdds
 
 
@@ -140,7 +149,7 @@ def test_round_that_pops_nothing(spark, tmp_path):
     eng.run(max_rounds=1)
     rdds = set(jsc.getPersistentRDDs().keySet())
     eng.run()
-    assert eng.store.committed_round() == 3
+    assert eng.store.snapshot().committed_round == 3
     assert set(jsc.getPersistentRDDs().keySet()) <= rdds
     assert _engine_log(eng) == [
         (c["round"], c["seq"], c["url"], c["host"], c["depth"], c["score"], c["attempt"])

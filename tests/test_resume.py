@@ -39,7 +39,7 @@ def test_resume_equals_single_run(spark, fixture_dir, tmp_path_factory):
     two = str(tmp_path_factory.mktemp("resume") / "interrupted")
     eng2a = CrawlEngine(spark, fixture_dir, two, TEST_CFG)
     eng2a.run(max_rounds=2)
-    assert eng2a.store.committed_round() == 1
+    assert eng2a.store.snapshot().committed_round == 1
 
     # fresh instance = process restart; must pick up from the snapshot
     eng2b = CrawlEngine(spark, fixture_dir, two, TEST_CFG)
@@ -100,14 +100,16 @@ def test_resume_across_compaction_boundary(spark, fixture_dir, tmp_path_factory)
     d2 = {r.url: r.text_sha256 for r in eng2.docs().collect()}
     assert d1 == d2
     for eng in (eng1, eng2):
-        assert eng.store.state("frontier_base_round") >= 0, "compaction ran"
-        assert eng.frontier_live().count() == eng.store.state("frontier_count")
+        snap = eng.store.snapshot()
+        assert snap.frontier_base_round >= 0, "compaction ran"
+        assert eng.frontier_live().count() == snap.frontier_count
     # folded round dirs are GC'd: only the base generation + tail remain
-    base = eng1.store.state("frontier_base_round")
-    frontier_dirs = sorted(os.listdir(os.path.join(one, "frontier")))
-    assert frontier_dirs == [f"r={base}"]
+    snap = eng1.store.snapshot()
+    base = snap.frontier_base_round
+    frontier_rounds = sorted(int(d[2:]) for d in os.listdir(os.path.join(one, "frontier")))
+    assert frontier_rounds[0] == base and all(k > base for k in frontier_rounds[1:])
     seen_dirs = sorted(os.listdir(os.path.join(one, "url_seen")))
-    seen_gens = eng1.store.log_gens("url_seen")
+    seen_gens = snap.log_gens.get("url_seen", [])
     assert seen_gens, "url_seen compacted at least once"
     for g in seen_gens:
         assert f"gen={g}" in seen_dirs
@@ -126,7 +128,7 @@ def test_uncommitted_debris_discarded(spark, fixture_dir, tmp_path_factory):
     state = str(tmp_path_factory.mktemp("resume") / "debris")
     eng = CrawlEngine(spark, fixture_dir, state, TEST_CFG)
     eng.run(max_rounds=2)
-    committed = eng.store.committed_round()
+    committed = eng.store.snapshot().committed_round
     # simulate a crash mid-round: orphan round dir the manifest never saw
     orphan = eng.store.round_dir("crawl_log", committed + 1)
     os.makedirs(orphan, exist_ok=True)
@@ -134,7 +136,7 @@ def test_uncommitted_debris_discarded(spark, fixture_dir, tmp_path_factory):
         f.write("not parquet")
     eng2 = CrawlEngine(spark, fixture_dir, state, TEST_CFG)
     eng2.run(max_rounds=3)
-    assert eng2.store.committed_round() == 2
+    assert eng2.store.snapshot().committed_round == 2
     # the junk file must be gone (round re-ran cleanly)
     assert not os.path.exists(os.path.join(orphan, "part-junk.parquet"))
 
@@ -154,7 +156,7 @@ def test_read_rounds_skips_schema_less_empty_dirs(spark, tmp_path_factory):
     st.write_round(empty, "docs", 4)
     tail = st.read_rounds(spark, "docs", 4)
     assert tail.count() == 0 and tail.inputFiles() == []
-    assert st.read_log(spark, "docs", 4).count() == 0
+    assert st.read_log(spark, "docs", 4, []).count() == 0
     # a mixed tail (one quiet round, one data-bearing) still unions fine
     st.write_round(_docs_rows(spark, 2), "docs", 5)
     assert st.read_rounds(spark, "docs", 5).count() == 2
@@ -195,22 +197,23 @@ def test_uncommitted_merge_round_resumes(spark, fixture_dir, tmp_path_factory,
     eng = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
     commit = eng.store.commit
 
-    def commit_unless_merge(round_, info=None, state=None):
+    def commit_unless_merge(prev, round_, info, **state):
         if round_ == 1:
             raise RuntimeError("crash before the merge round's commit")
-        commit(round_, info, state)
+        return commit(prev, round_, info, **state)
 
     eng.store.commit = commit_unless_merge
     with pytest.raises(RuntimeError, match="merge round"):
         eng.run(max_rounds=2)
-    assert eng.store.committed_round() == 0
+    snap = eng.store.snapshot()
+    assert snap.committed_round == 0
     for tbl in COMPACTED:
         dirs = os.listdir(os.path.join(state, tbl))
         assert "gen=1" in dirs and "r=1" not in dirs, (tbl, sorted(dirs))
-        assert eng.store.log_gens(tbl) == []
+        assert tbl not in snap.log_gens
 
     resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
-    removed = resumed.store.clean_uncommitted()
+    removed = resumed.store.clean_uncommitted(snap.committed_round)
     assert {f"{tbl}/gen=1" for tbl in COMPACTED} <= set(removed)
     for tbl in COMPACTED:
         assert "gen=1" not in os.listdir(os.path.join(state, tbl))
@@ -224,7 +227,53 @@ def test_uncommitted_merge_round_resumes(spark, fixture_dir, tmp_path_factory,
         assert got == want, view
     # the major merge at round 3 left one generation per compacted log
     for tbl in COMPACTED:
-        assert resumed.store.log_gens(tbl) == one.store.log_gens(tbl) == [3]
+        assert resumed.store.snapshot().log_gens[tbl] == one.store.snapshot().log_gens[tbl] == [3]
+
+
+def test_run_parses_manifest_once(spark, fixture_dir, tmp_path, monkeypatch):
+    """``run`` parses the manifest once, however many rounds it runs: each
+    round reads the snapshot the previous commit returned, and a commit
+    builds the next snapshot from what it wrote."""
+    import types
+
+    from twitter_crawler_spark.crawl import state as state_mod
+
+    parses = []
+
+    def load(f):
+        parses.append(f.name)
+        return json.load(f)
+
+    eng = CrawlEngine(spark, fixture_dir, str(tmp_path / "s"), MERGE_CFG)
+    eng.run(max_rounds=0)  # round -1 only: the next run reads a manifest
+    monkeypatch.setattr(state_mod, "json", types.SimpleNamespace(load=load, dump=json.dump))
+    assert eng.run(max_rounds=3)["rounds"] == [0, 1, 2]
+    assert len(parses) == 1, parses
+    for r in (3, 4):
+        eng.run(max_rounds=r + 1)
+        assert len(parses) == r - 1, parses
+
+
+def test_frontier_ins_layout_resumes(spark, fixture_dir, tmp_path, merge_oneshot):
+    """A state dir written while an ordinary round kept its frontier
+    inserts in a ``frontier_ins`` table resumes unchanged: recovery moves
+    each committed ``frontier_ins/r=<k>`` dir to ``frontier/r=<k>``, and
+    discards an uncommitted one with the rest of the crash debris."""
+    state = str(tmp_path / "ins")
+    CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=3)
+    eng = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    snap = eng.store.snapshot()
+    moved = [k for k, _ in eng.store._round_dirs("frontier") if k > snap.frontier_base_round]
+    assert moved == [2], moved
+    os.makedirs(os.path.join(state, "frontier_ins"))
+    for k in moved:
+        os.rename(eng.store.round_dir("frontier", k), eng.store.round_dir("frontier_ins", k))
+    debris = eng.store.round_dir("frontier_ins", 3)
+    shutil.copytree(eng.store.round_dir("frontier_ins", 2), debris)
+
+    eng.run(max_rounds=MERGE_ROUNDS)
+    assert not os.path.exists(os.path.join(state, "frontier_ins"))
+    _assert_equals_oneshot(eng, merge_oneshot)
 
 
 def _assert_equals_oneshot(resumed, one):
@@ -233,7 +282,7 @@ def _assert_equals_oneshot(resumed, one):
         got = sorted(tuple(r) for r in getattr(resumed, view)().collect())
         want = sorted(tuple(r) for r in getattr(one, view)().collect())
         assert got == want, view
-    assert resumed.store.state("bloom_load") == one.store.state("bloom_load")
+    assert resumed.store.snapshot().bloom_load == one.store.snapshot().bloom_load
 
 
 @pytest.mark.parametrize("crash_round", [2, 3], ids=["ordinary", "merge"])
@@ -259,16 +308,17 @@ def test_crash_in_seen_tier_resumes(spark, fixture_dir, tmp_path,
     with pytest.raises(Exception, match="bloom check failed"):
         eng.run(max_rounds=crash_round + 1)
     monkeypatch.undo()
-    assert eng.store.committed_round() == crash_round - 1
+    snap = eng.store.snapshot()
+    assert snap.committed_round == crash_round - 1
 
     k = crash_round
-    merge = (k - int(eng.store.state("frontier_base_round"))) >= MERGE_CFG.compact_every
+    merge = (k - snap.frontier_base_round) >= MERGE_CFG.compact_every
     assert merge == (crash_round == 3)
     kind = "gen" if merge else "r"
     outputs = [
         f"crawl_log/r={k}", f"evictions/r={k}", f"edges/{kind}={k}", f"docs/{kind}={k}",
-        f"url_seen/{kind}={k}", f"bloom/r={k}", f"round_metrics/r={k}",
-    ] + ([f"frontier/r={k}"] if merge else [f"frontier_ins/r={k}", f"frontier_gains/r={k}"])
+        f"url_seen/{kind}={k}", f"bloom/r={k}", f"round_metrics/r={k}", f"frontier/r={k}",
+    ] + ([] if merge else [f"frontier_gains/r={k}"])
     assert not any(os.path.exists(os.path.join(state, d)) for d in outputs), outputs
 
     resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
@@ -299,26 +349,29 @@ def test_crash_after_bloom_check_resumes(spark, fixture_dir, tmp_path,
     eng.store.write_round = fail_first_write
     with pytest.raises(RuntimeError, match="pool write failed"):
         eng.run(max_rounds=crash_round + 1)
-    assert eng.store.committed_round() == crash_round - 1
+    assert eng.store.snapshot().committed_round == crash_round - 1
     shards = os.path.join(state, "bloom", f"r={crash_round}")
     assert os.path.isdir(shards) and os.listdir(shards), "the check wrote shards"
 
     resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
     resumed.run(max_rounds=MERGE_ROUNDS)
     _assert_equals_oneshot(resumed, merge_oneshot)
-    assert resumed.store.bloom_map() == merge_oneshot.store.bloom_map()
+    assert resumed.store.snapshot().bloom_map == merge_oneshot.store.snapshot().bloom_map
 
 
 def test_state_reads_launch_no_jobs(spark, merge_oneshot):
     """Every state read passes its table's declared schema, so building the
     round's views of a committed snapshot — generations, tail rounds,
-    sidecar logs, the frontier base and the host crawl-delay view —
+    sidecar logs, the frontier and the host crawl-delay view —
     launches no Spark job (a schema-less parquet read runs one
     footer-inference job per call)."""
     eng = merge_oneshot
-    st, prev = eng.store, eng.store.committed_round()
-    assert st.log_gens("url_seen") and st._round_dirs("frontier_ins"), \
-        "the snapshot holds generations and sidecar logs"
+    st = eng.store
+    snap = st.snapshot()
+    prev = snap.committed_round
+    assert snap.log_gens["url_seen"] and any(
+        k > snap.frontier_base_round for k, _ in st._round_dirs("frontier")
+    ), "the snapshot holds generations and frontier inserts after its base"
     tracker = spark.sparkContext.statusTracker()
 
     def last_job() -> int:
@@ -326,11 +379,11 @@ def test_state_reads_launch_no_jobs(spark, merge_oneshot):
 
     j0 = last_job()
     for tbl in ("url_seen", "docs", "edges", "crawl_log", "round_metrics"):
-        st.read_log(spark, tbl, prev)
-    for tbl in ("frontier_ins", "frontier_gains", "crawl_log"):
+        st.read_log(spark, tbl, prev, snap.log_gens.get(tbl, []))
+    for tbl in ("frontier", "frontier_gains", "crawl_log"):
         st.read_rounds(spark, tbl, prev, drop_r=False)
-    eng._frontier_live(prev)
-    eng._frontier_live(prev, due_band=0)
+    eng._frontier_live(snap)
+    eng._frontier_live(snap, due_band=0)
     eng._recent_fetches(prev + 1)
     eng._pages()
     assert last_job() == j0
@@ -346,7 +399,7 @@ def test_empty_compacted_log_registers_no_generation(spark, fixture_dir,
     state = str(tmp_path_factory.mktemp("merge") / "empty")
     eng = CrawlEngine(spark, fixture_dir, state, cfg)
     eng.run(max_rounds=1)
-    assert eng.store.state("log_gens") == {"url_seen": [0]}
+    assert eng.store.snapshot().log_gens == {"url_seen": [0]}
     for tbl in ("docs", "edges"):
         troot = os.path.join(state, tbl)
         assert not os.path.isdir(troot) or not os.listdir(troot), os.listdir(troot)
@@ -372,7 +425,8 @@ def test_host_gate_reads_only_delay_window(spark, fixture_dir, tmp_path,
     never compacted, so neither the host view nor the frontier's delete
     keys may list its root: they probe their round dirs by number."""
     eng = merge_oneshot
-    r = eng.store.committed_round() + 1
+    snap = eng.store.snapshot()
+    r = snap.committed_round + 1
     assert eng.max_delay == 3 and r > 3
     log_root = os.path.join(eng.store.root, "crawl_log")
     real_listdir = os.listdir
@@ -384,7 +438,7 @@ def test_host_gate_reads_only_delay_window(spark, fixture_dir, tmp_path,
 
     monkeypatch.setattr(os, "listdir", listdir)
     files = eng._recent_fetches(r).inputFiles()
-    eng._frontier_live(r - 1)
+    eng._frontier_live(snap)
     monkeypatch.undo()
     assert _log_rounds(files) == set(range(r - eng.max_delay + 1, r))
 
@@ -436,7 +490,7 @@ def test_pre_crawl_log_layout_resumes(spark, fixture_dir, tmp_path,
     for d, pdf in legacy.items():
         os.makedirs(os.path.join(state, d))
         pdf.to_parquet(os.path.join(state, d, "part-0.parquet"), index=False)
-    m = eng.store.manifest()
+    m = eng.store.snapshot().manifest
     m["state"].update(hosts_base_round=1, frontier_del_rows=0)
     with open(eng.store._manifest_path, "w") as f:
         json.dump(m, f)
@@ -461,18 +515,19 @@ def test_cuckoo_era_state_resumes(spark, fixture_dir, tmp_path, merge_oneshot):
     state = str(tmp_path / "cuckoo_era")
     CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=3)
     st = CrawlEngine(spark, fixture_dir, state, MERGE_CFG).store
-    paths = st.bloom_paths()
+    paths = st.bloom_paths(st.snapshot())
     assert paths, "the crawl wrote bloom shards"
     ov_bucket = min(paths)
     for b, p in paths.items():
         with np.load(p) as z:
-            m, k, n_added = (int(x) for x in z["meta"])
+            m, k = (int(x) for x in z["meta"])
             bits = z["bits"]
+        # the last meta field, the shard's key count, was never read on load
         np.savez_compressed(
             p, bits=bits, cuckoo=np.zeros((1 << 12, 4), np.uint16),
-            meta=np.array([m, k, 1 << 12, 4, int(b == ov_bucket), n_added]),
+            meta=np.array([m, k, 1 << 12, 4, int(b == ov_bucket), 1 << 10]),
         )
-    man = st.manifest()
+    man = st.snapshot().manifest
     man["state"]["bloom_load"] = {
         b: [n, m, int(b) == ov_bucket]
         for b, (n, m) in man["state"]["bloom_load"].items()

@@ -46,7 +46,7 @@ def test_save_load_roundtrip(tmp_path):
     sh.save(p)
     back = SeenShard.load(p)
     assert (back.bits == sh.bits).all()
-    assert (back.m, back.k, back.n_added) == (sh.m, sh.k, sh.n_added)
+    assert (back.m, back.k) == (sh.m, sh.k)
 
 
 def test_check_fn_classification(tmp_path):
@@ -121,28 +121,24 @@ def test_check_then_insert_negatives_equals_add_all_new(tmp_path):
     assert not (tmp_path / "none").exists()
 
 
-def test_n_added_persists_and_legacy_load(tmp_path):
-    """A shard's n_added survives save/load, and
-    legacy shard files still load: those that also carry a cuckoo array
-    with a 6-element meta [m, k, cuckoo buckets, cuckoo slots, overflowed,
-    n_added], and the oldest ones whose 5-element meta has no n_added."""
+def test_legacy_shard_meta_loads(tmp_path):
+    """Legacy shard files still load, reading m and k from the front of
+    their meta: those with a key count [m, k, n_added], those that also
+    carry a cuckoo array with a 6-element meta [m, k, cuckoo buckets,
+    cuckoo slots, overflowed, n_added], and the oldest ones whose 5-element
+    meta has no key count."""
     rng = np.random.default_rng(5)
     keys = rng.integers(-(2**62), 2**62, 1234, dtype=np.int64)
     sh = _shard()
     sh.add(keys)
-    assert sh.n_added == 1234
-    p = str(tmp_path / "bucket=0.npz")
-    sh.save(p)
-    back = SeenShard.load(p)
-    assert back.n_added == 1234 and back.m == sh.m
     cuckoo = np.ones((1 << 10, 4), np.uint16)
-    for meta, n_added in (([sh.m, sh.k, 1 << 10, 4, 1, 1234], 1234),
-                          ([sh.m, sh.k, 1 << 10, 4, 1], 0)):
+    for meta in ([sh.m, sh.k, 1234], [sh.m, sh.k, 1 << 10, 4, 1, 1234],
+                 [sh.m, sh.k, 1 << 10, 4, 1]):
         legacy = str(tmp_path / f"legacy{len(meta)}.npz")
-        np.savez_compressed(legacy, bits=sh.bits, cuckoo=cuckoo,
-                            meta=np.array(meta))
+        extra = {"cuckoo": cuckoo} if len(meta) > 3 else {}
+        np.savez_compressed(legacy, bits=sh.bits, meta=np.array(meta), **extra)
         old = SeenShard.load(legacy)
-        assert (old.m, old.k, old.n_added) == (sh.m, sh.k, n_added)
+        assert (old.m, old.k) == (sh.m, sh.k)
         assert old.bloom_contains(keys).all()
 
 
@@ -189,7 +185,7 @@ def test_rebuild_fn_restores_fp_rate(tmp_path):
     stats = rebuild(pd.DataFrame({"bucket": 7, "url_hash": keys}))
     assert int(stats["n_total"].iloc[0]) == len(keys)
     grown = SeenShard.load(shard_path(str(tmp_path), 7))
-    assert grown.m == geom[7] and grown.n_added == len(keys)
+    assert grown.m == geom[7]
     assert grown.bloom_contains(keys).all()  # still no false negatives
     fp_grown = grown.bloom_contains(probe).mean()
     assert fp_grown < 0.05 < fp_small

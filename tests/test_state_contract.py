@@ -49,7 +49,7 @@ def test_write_schema_drift_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="declared"):
         st.write_round(seen, "url_seen", 0)
     st.write_round(seen.withColumn("bucket", seen.bucket.cast("int")), "url_seen", 0)
-    assert st.read_log(spark, "url_seen", 0).count() == 4
+    assert st.read_log(spark, "url_seen", 0, []).count() == 4
 
 
 def test_legacy_layout_raises(spark, tmp_path):
@@ -65,7 +65,7 @@ def test_legacy_layout_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="src_bucket"):
         st.read_rounds(spark, "edges", 0)
     with pytest.raises(ValueError, match="src_bucket"):
-        st.read_log(spark, "edges", 0)
+        st.read_log(spark, "edges", 0, [])
     # the same rows in the declared layout read back whole
     st.write_round(legacy, "edges", 1)
     got = st.read_rounds(spark, "edges", 1, min_round=1).collect()

@@ -45,11 +45,11 @@ def test_seed_whitespace_matches_oracle(spark, fixture_dir, tmp_path):
     assert len(oracle.seeds) == len(urls) + 4
     assert not any(oracle.allowed(u) for u in oracle.seeds[-2:])
     eng = CrawlEngine(spark, fx, str(tmp_path / "s"), TEST_CFG)
-    eng.init_state()
-    assert eng.store.manifest()["history"][0]["seeds"] == len(oracle.seeds)
+    snap = eng.init_state()
+    assert snap.manifest["history"][0]["seeds"] == len(oracle.seeds)
     frontier = {r.url for r in eng.frontier_live().select("url").collect()}
     want = {u for u in oracle.seeds if oracle.allowed(u)}
-    assert frontier == want and len(frontier) == eng.store.state("frontier_count")
+    assert frontier == want and len(frontier) == snap.frontier_count
 
     eng.run(max_rounds=1)
     got = [(r.seq, r.url, r.score) for r in eng.crawl_log().orderBy("seq").collect()]
@@ -69,13 +69,14 @@ def test_del_rows_gate_boundaries(spark, fixture_dir, tmp_path):
     means no anti-join at all, a count at the cap is hinted, one over it is
     not."""
     eng = CrawlEngine(spark, fixture_dir, str(tmp_path / "s"), TEST_CFG)
-    eng.init_state()
-    assert eng._del_rows() == 0
-    plan = eng._frontier_live(-1)._jdf.queryExecution().optimizedPlan().toString()
+    snap = eng.init_state()
+    assert snap.del_rows == 0
+    plan = eng._frontier_live(snap)._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftAnti" not in plan
     eng.run(max_rounds=2)
-    n = eng._del_rows()
+    snap = eng.store.snapshot()
+    n = snap.del_rows
     assert n == eng.crawl_log().count() > 0
     for cap, hinted in ((n, True), (n - 1, False), (0, False)):
         eng.cfg = dataclasses.replace(TEST_CFG, broadcast_del_rows_max=cap)
-        assert _hinted(eng._frontier_live(1)) is hinted, cap
+        assert _hinted(eng._frontier_live(snap)) is hinted, cap

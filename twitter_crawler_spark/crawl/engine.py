@@ -38,12 +38,14 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
              jobs, the per-partition ones (round_metrics) are one
              aggregation over popped_res ∪ new in the write pool, and a
              write observed to hold 0 rows is not submitted               D1-D4
-  frontier' = merge-on-read delta: reinserted ∪ new → frontier_ins
-             (banded), OPIC cash → frontier_gains; the round's crawl_log
-             rows are its equality deletes (popped (url, attempt) keys).
-             NO rewrite of the 10^10-row base — the live view is
-             base ∪ ins ∖ crawl_log keys with gains folded at read, and the
-             due scan partition-prunes to due next_fetch_ts bands       F1/F3/F4/A15
+  frontier' = merge-on-read delta: reinserted ∪ new → frontier/r=<r>
+             (banded, beside the base's frontier/r=<g>), OPIC cash →
+             frontier_gains; the round's crawl_log rows are its equality
+             deletes (popped (url, attempt) keys). NO rewrite of the
+             10^10-row base — the live view is the frontier rounds from
+             the base on ∖ crawl_log keys with gains folded at read: one
+             frontier scan, which partition-prunes to due next_fetch_ts
+             bands                                                       F1/F3/F4/A15
   compact  = every K rounds the round writes a fresh banded frontier base
              in place of its sidecar deltas, and folds url_seen/docs/edges
              (prior slice ∪ the round's own rows) into leveled generation
@@ -53,7 +55,9 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
              the round's one concurrent write pool: a merge round has a
              single write phase, like any other round
   commit   = parquet round dirs + versioned bloom sidecars + atomic
-             manifest replace (Iceberg snapshot analog)                   C1/C4
+             manifest replace (Iceberg snapshot analog); the commit
+             returns the snapshot it wrote, which the next round reads:
+             ``run`` parses the manifest once                             C1/C4
 
 crawl_log is the one record of what a round popped: the frontier's delete
 log and the host crawl-delay gate are both read from it, so no other table
@@ -101,7 +105,7 @@ from twitter_crawler_spark.crawl.seen import (
     make_seen_update_fn,
     make_shard_rebuild_fn,
 )
-from twitter_crawler_spark.crawl.state import SnapshotStore
+from twitter_crawler_spark.crawl.state import Snapshot, SnapshotStore
 from twitter_crawler_spark.functions.hashing import murmur3_64_udf
 from twitter_crawler_spark.functions.html import decode_html, extract_links
 from twitter_crawler_spark.functions.urls import canonicalize_udf
@@ -399,17 +403,20 @@ class CrawlEngine:
             F.pmod("url_hash", F.lit(self.cfg.seen_partitions)).cast("int").alias(name)
         )
 
-    def _frontier_live(self, prev: int, due_band: int | None = None) -> DataFrame:
-        """Merge-on-read live frontier as of committed round ``prev``:
-        banded base ∪ frontier_ins appends, minus the (url, attempt) keys of
-        the crawl_log rounds after the base (equality-delete semantics; a
-        key is inserted at most once and popped at most once, since attempts
-        only grow per url), with pending OPIC gains folded into ``score``.
+    def _frontier_live(self, snap: Snapshot, due_band: int | None = None) -> DataFrame:
+        """Merge-on-read live frontier as of the committed snapshot
+        ``snap``: the ``frontier`` rounds from the base ``g`` on (the base
+        and every later round's inserts, one banded scan), minus the
+        (url, attempt) keys of the crawl_log rounds after the base
+        (equality-delete semantics; a key is inserted at most once and
+        popped at most once, since attempts only grow per url), with
+        pending OPIC gains folded into ``score``.
 
-        Gains fold: a row written at round k has all gains ≤ k applied (the
-        writer folds that round's gains in), so its pending cash is the sum
-        of logged gains with round > k — the partition column ``r`` IS the
-        per-row gains watermark, no extra schema. The log spans at most
+        Gains fold: a row written at round k (the base's at g) has all
+        gains ≤ k applied (the writer folds that round's gains in), so its
+        pending cash is the sum of logged gains with round > k — the
+        partition column ``r`` IS the per-row gains watermark, no extra
+        schema. The log spans at most
         ``compact_every`` rounds (compaction truncates it) and joins as a
         per-url struct list folded by a JVM higher-order function. A
         sidecar log with no rows after the base (every log, right after a
@@ -419,7 +426,7 @@ class CrawlEngine:
         Join-side choices: the DELETE keys are O(batch x compact_every) by
         construction (each popped (url, attempt) appears once), and their
         count is the manifest's per-round ``popped`` sum since the base
-        (``_del_rows``) — so the broadcast decision is a SIZE-GATED hint,
+        (``snap.del_rows``) — so the broadcast decision is a SIZE-GATED hint,
         not a blind one (VERDICT r4 #2): up to
         ``CrawlConfig.broadcast_del_rows_max`` the keys broadcast (hinted
         — skipping the due-slice shuffle AQE's demote-to-broadcast path
@@ -433,17 +440,13 @@ class CrawlEngine:
         x compact_every) — tens of millions of rows at the design point,
         far too big to broadcast — deliberately unhinted always."""
         st, s = self.store, self.spark
-        g = int(st.state("frontier_base_round"))
-        # every base row has all gains <= g folded in: its watermark is g
-        base = st.read_state(s, "frontier", g).withColumn("r", F.lit(g))
-        rows = base.unionByName(
-            st.read_rounds(s, "frontier_ins", prev, min_round=g + 1, drop_r=False)
-        )
+        prev, g = snap.committed_round, snap.frontier_base_round
+        rows = st.read_rounds(s, "frontier", prev, min_round=g, drop_r=False)
         if due_band is not None:
             rows = rows.where(F.col("band") <= due_band)
         rows = rows.withColumnRenamed("r", "_gthrough").drop("band")
         dels = st.read_rounds(s, "crawl_log", prev, min_round=g + 1).select("url", "attempt")
-        if self._del_rows() <= self.cfg.broadcast_del_rows_max:
+        if snap.del_rows <= self.cfg.broadcast_del_rows_max:
             dels = F.broadcast(dels)
         gains = st.read_rounds(s, "frontier_gains", prev, min_round=g + 1, drop_r=False)
         glist = gains.groupBy("url").agg(
@@ -465,14 +468,6 @@ class CrawlEngine:
             .select(*[f.name for f in schemas.FRONTIER.fields])
         )
 
-    def _del_rows(self) -> int:
-        """Delete keys since the frontier base: the rows the committed
-        rounds after it popped, summed from the manifest history (every
-        round since round 0 records its ``popped`` count)."""
-        m = self.store.manifest()
-        g = int(m["state"]["frontier_base_round"])
-        return sum(h["popped"] for h in m["history"] if h["round"] > g)
-
     def _recent_fetches(self, r: int) -> DataFrame:
         """``(host, last_fetch_round)`` for the hosts whose last fetch can
         still hold them back at round r. The gate is
@@ -490,14 +485,14 @@ class CrawlEngine:
 
     def frontier_live(self) -> DataFrame:
         """Public live-frontier view at the committed snapshot."""
-        return self._frontier_live(self.store.committed_round())
+        return self._frontier_live(self.store.snapshot())
 
     # ------------------------------------------------------------------ init
 
-    def init_state(self) -> None:
+    def init_state(self) -> Snapshot:
         """Round -1 snapshot: banded frontier base from seeds
         (robots-filtered), url_seen = scheduled seeds, fresh bloom shards +
-        manifest bucket map."""
+        manifest bucket map. Returns the committed snapshot."""
         cfg, s = self.cfg, self.spark
         # executor-parallel seed ingest (S1): text lines → stripped non-blank
         # urls; at 10^7 seeds this is a distributed scan, never a driver list
@@ -533,41 +528,44 @@ class CrawlEngine:
         )
         self.store.write_round(fr.withColumn("band", self._band()), "frontier", -1)
         self.store.write_round(seen, "url_seen", -1)
-        upd = make_seen_update_fn({}, self.store.bloom_dir(-1), cfg)
+        upd = make_seen_update_fn(self.store.bloom_dir(-1), cfg)
         shard_rows = seen.groupBy("bucket").applyInPandas(upd, SHARD_STATS_SCHEMA).collect()
-        self.store.commit(
-            -1,
-            {"seeds": self._n_seed_lines},
-            state={
-                "frontier_base_round": -1,
-                "frontier_count": n0,
-                "log_gens": {},
-                "bloom_map": {str(int(row["bucket"])): -1 for row in shard_rows},
-                "bloom_load": {
-                    str(int(row["bucket"])): [int(row["n_total"]), int(row["m_bits"])]
-                    for row in shard_rows
-                },
+        snap = self.store.commit(
+            None, -1, {"seeds": self._n_seed_lines},
+            frontier_base_round=-1,
+            frontier_count=n0,
+            log_gens={},
+            bloom_map={int(row["bucket"]): -1 for row in shard_rows},
+            bloom_load={
+                int(row["bucket"]): [int(row["n_total"]), int(row["m_bits"])]
+                for row in shard_rows
             },
         )
         fr.unpersist()
+        return snap
 
     # ------------------------------------------------------------------ run
 
     def run(self, max_rounds: int | None = None) -> dict:
-        cfg = self.cfg
-        max_rounds = max_rounds or cfg.max_rounds
-        if self.store.committed_round() is None:
-            self.init_state()
+        """Run rounds up to (not including) ``max_rounds`` from the
+        committed snapshot, initialising the state dir if it has none. The
+        manifest is parsed once; each round reads the snapshot the previous
+        commit returned."""
+        if max_rounds is None:
+            max_rounds = self.cfg.max_rounds
+        snap = self.store.snapshot()
+        if snap is None:
+            snap = self.init_state()
         else:
-            self.store.clean_uncommitted()
-        start = self.store.committed_round() + 1
+            self.store.clean_uncommitted(snap.committed_round)
+        start = snap.committed_round + 1
         summary = {"rounds": [], "start_round": start}
         for r in range(start, max_rounds):
-            frontier_n = self._round(r)
+            snap = self._round(r, snap)
             summary["rounds"].append(r)
-            if frontier_n == 0:
+            if snap.frontier_count == 0:
                 break
-        summary["final_round"] = self.store.committed_round()
+        summary["final_round"] = snap.committed_round
         return summary
 
     # ------------------------------------------------------------------ pop
@@ -793,11 +791,13 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------ a round
 
-    def _round(self, r: int) -> int:
+    def _round(self, r: int, snap: Snapshot) -> Snapshot:
+        """Round ``r`` over the committed snapshot ``snap`` (round r-1);
+        returns the snapshot its commit wrote."""
         cfg, s = self.cfg, self.spark
         t0 = time.time()
         t_r = r * cfg.round_tick
-        prev = r - 1
+        prev = snap.committed_round
         # State is ALWAYS re-read from the committed parquet snapshot, never
         # carried as an in-memory DataFrame across rounds: a carried plan
         # (even a local checkpoint) propagates Catalyst sizeInBytes estimates
@@ -809,7 +809,7 @@ class CrawlEngine:
         # future-scheduled bands are never read.
         # The crawl-delay window's last fetches are an empty frame while no
         # crawl_log round falls inside it (round 0, or every delay 1).
-        due_live = self._frontier_live(prev, due_band=t_r // cfg.band_ticks)
+        due_live = self._frontier_live(snap, due_band=t_r // cfg.band_ticks)
         recent = self._recent_fetches(r)
 
         # ---- pop: due filter + crawl-delay + salted per-host budget window ----
@@ -848,13 +848,20 @@ class CrawlEngine:
             & (F.col("attempt") >= 1)
             & F.lit(cfg.evict_unproductive and not cfg.crawl_once)
         )
-        retire_cond = F.col("attempt") + 1 >= cfg.max_attempts
+        # a popped row goes back into the frontier unless it is evicted or
+        # retired; crawl_once and fan-out never reinsert (fan-out inserted
+        # every attempt's copy up front)
+        reinsert_cond = (
+            ~evict_cond
+            & (F.col("attempt") + 1 < cfg.max_attempts)
+            & F.lit(not cfg.crawl_once and not cfg.fanout_revisits)
+        )
         popped_res, pr = _checkpoint(
             popped.join(res, "url", "left")
             .withColumn("n_results", F.coalesce("n_results", F.lit(0)))
             .withColumn("new_cursor", F.coalesce("new_cursor", "last_cursor")),
             evicted=F.count_if(evict_cond),
-            reinsertable=F.count_if(~evict_cond & ~retire_cond),
+            reinserted=F.count_if(reinsert_cond),
         )
         snapshots = popped_res.select("url", F.explode("htmls").alias("html"))
         outlinks, ol = _checkpoint(self._outlinks(snapshots, popped), links=F.count(F.lit(1)))
@@ -877,7 +884,7 @@ class CrawlEngine:
         # url_seen, so this first-fetch anti-join prunes to the buckets the
         # popped batch occupies instead of shuffling the whole append-only
         # docs log every round (the largest log at the design point)
-        docs_all = self.store.read_log(s, "docs", prev)
+        docs_all = self._read_log("docs", snap)
         docs_scan = _in_buckets(docs_all, pop["sb"], cfg.seen_partitions)
         first_fetch = popped_res.where(F.col("n_results") > 0).join(
             docs_scan.select("url"), "url", "left_anti"
@@ -894,10 +901,10 @@ class CrawlEngine:
         )
 
         # ---- seen tier -----------------------------------------------------------
-        seen_all = self.store.read_log(s, "url_seen", prev)
+        seen_all = self._read_log("url_seen", snap)
         # bucket → shard path from the committed manifest: O(1) resolution
         # per bucket inside tasks, regardless of how many rounds have run
-        bucket_paths = self.store.bloom_paths()
+        bucket_paths = self.store.bloom_paths(snap)
         flagged, new_urls, seen_n, shard_buckets = self._seen_tier(
             outlinks, seen_all, bucket_paths, self.store.bloom_dir(r)
         )
@@ -921,10 +928,7 @@ class CrawlEngine:
         )
         intervals_arr = F.array(*[F.lit(int(x)) for x in cfg.intervals])
         reinserted = (
-            popped_res.where(
-                ~evict_cond & ~retire_cond
-                & F.lit(not cfg.crawl_once and not cfg.fanout_revisits)
-            )
+            popped_res.where(reinsert_cond)
             .select(
                 "url", "url_hash", "host", "depth",
                 F.when(F.col("n_results") > 0, F.lit(0))
@@ -941,22 +945,19 @@ class CrawlEngine:
         # The round never rewrites the frontier base: its crawl_log rows are
         # the equality deletes (on (url, attempt) — under fan-out, popping
         # one copy must not remove the url's other scheduled copies), the
-        # reinserted + new rows become banded inserts, and the OPIC cash
-        # becomes a gains-log append. Rows written here fold this round's
-        # gains immediately (their log round r is their per-row gains
-        # watermark); every other live row picks round-r gains up from the
-        # log when it is next read.
+        # reinserted + new rows become banded inserts (round r of the
+        # frontier table, beside its base), and the OPIC cash becomes a
+        # gains-log append. Rows written here fold this round's gains
+        # immediately (their round r is their per-row gains watermark);
+        # every other live row picks round-r gains up from the log when it
+        # is next read.
         # frontier size is maintained arithmetically in the manifest — no
         # O(frontier) count job: inserts = reinsertable survivors (observed
         # on the popped_res checkpoint) + scheduled copies of new urls
         sched_mult = cfg.max_attempts if cfg.fanout_revisits else 1
         n_evicted = int(pr["evicted"])
-        if cfg.crawl_once or cfg.fanout_revisits:
-            n_reinserted = 0
-        else:
-            n_reinserted = int(pr["reinsertable"])
-        n_ins = n_reinserted + n_new * sched_mult
-        base_round = int(self.store.state("frontier_base_round"))
+        n_ins = int(pr["reinserted"]) + n_new * sched_mult
+        base_round = snap.frontier_base_round
         compact = cfg.compact_every > 0 and (r - base_round) >= cfg.compact_every
         # the frontier rows the round writes: its inserts, or on a merge
         # round the new base (the live view as of prev, minus this round's
@@ -965,7 +966,7 @@ class CrawlEngine:
         f_rows = reinserted.unionByName(new_rows)
         if compact:
             f_rows = (
-                self._frontier_live(prev)
+                self._frontier_live(snap)
                 .join(
                     F.broadcast(popped.select("url", "attempt")),
                     ["url", "attempt"], "left_anti",
@@ -992,7 +993,7 @@ class CrawlEngine:
         seen_new = new_base.select(
             "url_hash", "url", F.lit(r).alias("first_round"), self._seen_bucket(),
         )
-        log_gens = {k: list(v) for k, v in st.state("log_gens", {}).items()}
+        log_gens = dict(snap.log_gens)
         merges: dict[str, tuple[bool, DataFrame]] = {}
         if compact:
             writes = [(f_rows, "frontier", None)]
@@ -1012,7 +1013,7 @@ class CrawlEngine:
                 gens = log_gens.get(tbl, [])
                 major = len(gens) + 1 > cfg.max_log_gens
                 if major:
-                    prior = views[tbl] if tbl in views else st.read_log(s, tbl, prev)
+                    prior = views[tbl] if tbl in views else self._read_log(tbl, snap)
                 else:
                     prior = st.read_rounds(
                         s, tbl, prev, min_round=(gens[-1] + 1) if gens else None,
@@ -1024,7 +1025,7 @@ class CrawlEngine:
                 (seen_new, "url_seen", n_new),
                 (edges_new, "edges", ol["links"]),
                 (docs_new, "docs", None),
-                (f_rows, "frontier_ins", n_ins),
+                (f_rows, "frontier", n_ins),
                 (gains_u, "frontier_gains", seen_n["candidates"]),
             ]
         writes += [
@@ -1080,18 +1081,13 @@ class CrawlEngine:
         # grow the manifest's occupancy map (bucket → [n, m]) by the round's
         # new urls per bucket (partition_id is the seen bucket) — driver
         # arithmetic only; the capacity policy below never loads a shard on
-        # the driver. A bucket's first shard has the configured geometry. An
-        # older state dir holds [n, m, ov] triples; ov, its cuckoo-overflow
-        # flag, is dropped.
-        bloom_load = {
-            int(k): v[:2] for k, v in (st.state("bloom_load", {}) or {}).items()
-        }
+        # the driver. A bucket's first shard has the configured geometry.
+        bloom_load = dict(snap.bloom_load)
         for b, row in stats.items():
             if row["new_urls"] > 0:
                 n0, m = bloom_load.get(b, [0, cfg.bloom_bits_per_partition])
                 bloom_load[b] = [n0 + int(row["new_urls"]), m]
-        frontier_n = int(st.state("frontier_count")) - n_popped + n_ins
-        new_state: dict = {"frontier_count": frontier_n}
+        frontier_n = snap.frontier_count - n_popped + n_ins
         # buckets whose shard this round wrote: the bloom check's, then the
         # capacity policy's rebuilds
         bloom_touch = set(shard_buckets)
@@ -1106,8 +1102,6 @@ class CrawlEngine:
                 log_gens[tbl] = [r] if major else log_gens.get(tbl, []) + [r]
                 if major:
                     major_done.append(tbl)
-            new_state["frontier_base_round"] = r
-            new_state["log_gens"] = log_gens
             # ---- bloom capacity policy (VERDICT r4 #2): a bucket whose
             # lifetime-insert load n/m crossed bloom_max_load is REBUILT
             # here from the authoritative url_seen rows (the round's view as
@@ -1141,13 +1135,8 @@ class CrawlEngine:
                     ]
 
         # bloom manifest map: buckets whose shard this round replaced
-        old_map = st.bloom_map()
+        old_map = snap.bloom_map
         superseded = {b: old_map[b] for b in bloom_touch if b in old_map}
-        if bloom_touch:
-            bm = {str(k): v for k, v in old_map.items()}
-            bm.update({str(b): r for b in sorted(bloom_touch)})
-            new_state["bloom_map"] = bm
-        new_state["bloom_load"] = {str(k): v for k, v in bloom_load.items()}
 
         # ---- per-partition lineage + metrics --------------------------------------
         wall_ms = int((time.time() - t0) * 1000)
@@ -1189,8 +1178,8 @@ class CrawlEngine:
         st.write_round(metrics_df, "round_metrics", r)
 
         # ---- atomic snapshot commit ---------------------------------------------------
-        st.commit(
-            r,
+        committed = st.commit(
+            snap, r,
             {
                 "popped": n_popped,
                 "new_urls": n_new,
@@ -1198,7 +1187,11 @@ class CrawlEngine:
                 "wall_ms": wall_ms,
                 "compacted": compact,
             },
-            state=new_state,
+            frontier_base_round=r if compact else base_round,
+            frontier_count=frontier_n,
+            log_gens=log_gens,
+            bloom_map={**old_map, **{b: r for b in sorted(bloom_touch)}},
+            bloom_load=bloom_load,
         )
         # ---- post-commit GC (idempotent: only removes data the committed
         # manifest can no longer reference) -------------------------------------
@@ -1206,7 +1199,7 @@ class CrawlEngine:
             st.gc_bloom(superseded)
         if compact:
             st.gc_rounds_below("frontier", r)
-            for tbl in ("frontier_ins", "frontier_gains", "url_seen", "docs", "edges"):
+            for tbl in ("frontier_gains", "url_seen", "docs", "edges"):
                 st.gc_rounds_below(tbl, r + 1)
             # generation dirs are GC'd only after a MAJOR merge supersedes
             # them; minor compactions leave prior generations live
@@ -1217,9 +1210,17 @@ class CrawlEngine:
         # storage accumulate across a long crawl
         for df in (popped, popped_res, outlinks, flagged, new_urls):
             _release(df)
-        return frontier_n
+        return committed
 
     # ------------------------------------------------------------------ outputs
+
+    def _read_log(self, table: str, snap: Snapshot | None = None) -> DataFrame:
+        """``table``'s log as of ``snap``; by default a fresh snapshot of
+        the committed state, as every public view reads it."""
+        snap = snap or self.store.snapshot()
+        return self.store.read_log(
+            self.spark, table, snap.committed_round, snap.log_gens.get(table, [])
+        )
 
     def crawl_log(self) -> DataFrame:
         """Every committed pop as ``(round, seq, url, host, depth, score,
@@ -1228,30 +1229,23 @@ class CrawlEngine:
         window is partitioned by round, so each round sorts only its own
         batch. A crawl_log dir that still stores a ``seq`` column reads the
         same, since the declared schema leaves that column out."""
-        log = self.store.read_log(
-            self.spark, "crawl_log", self.store.committed_round()
-        )
         w = Window.partitionBy("round").orderBy(*self._order_cols())
-        return log.select(
+        return self._read_log("crawl_log").select(
             "round", (F.row_number().over(w) - 1).alias("seq"),
             "url", "host", "depth", "score", "attempt",
         )
 
     def url_seen(self) -> DataFrame:
-        return self.store.read_log(self.spark, "url_seen", self.store.committed_round())
+        return self._read_log("url_seen")
 
     def edges(self) -> DataFrame:
-        return self.store.read_log(self.spark, "edges", self.store.committed_round())
+        return self._read_log("edges")
 
     def docs(self) -> DataFrame:
-        return self.store.read_log(
-            self.spark, "docs", self.store.committed_round()
-        ).drop("bucket")
+        return self._read_log("docs").drop("bucket")
 
     def evictions(self) -> DataFrame:
-        return self.store.read_log(self.spark, "evictions", self.store.committed_round())
+        return self._read_log("evictions")
 
     def round_metrics(self) -> DataFrame:
-        return self.store.read_log(
-            self.spark, "round_metrics", self.store.committed_round()
-        )
+        return self._read_log("round_metrics")

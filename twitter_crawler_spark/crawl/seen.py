@@ -37,9 +37,8 @@ dirs are removed by ``clean_uncommitted`` before any read.
 
 Shard occupancy (keys inserted per bucket, the capacity policy's input) is
 the manifest's ``bloom_load``: the driver grows a bucket's n by the round's
-new-url count in that bucket. It is the only authority. The ``n_added``
-field a shard file stores is no longer read for it, because the check
-inserts only the bloom negatives.
+new-url count in that bucket. It is the only authority; a shard file holds
+only its bits and geometry.
 """
 
 from __future__ import annotations
@@ -53,23 +52,11 @@ import pandas as pd
 class SeenShard:
     """Bloom bitmap for one url_hash bucket."""
 
-    def __init__(
-        self,
-        bloom_bits: int,
-        num_hashes: int,
-        bits: np.ndarray | None = None,
-        n_added: int = 0,
-    ):
+    def __init__(self, bloom_bits: int, num_hashes: int, bits: np.ndarray | None = None):
         assert bloom_bits % 64 == 0
         self.m = bloom_bits
         self.k = num_hashes
         self.bits = bits if bits is not None else np.zeros(bloom_bits // 64, np.uint64)
-        # keys added through this object and the shards it was loaded
-        # from. Exact for a shard built from url_seen (init, rebuild); the
-        # round's bloom check adds only its bloom-negative new urls, so a
-        # checked shard undercounts. The occupancy the capacity policy reads
-        # is the manifest's ``bloom_load``, never this field.
-        self.n_added = int(n_added)
 
     # --- hashing: reuse the two murmur3_32 halves inside the 64-bit url_hash ---
 
@@ -81,7 +68,7 @@ class SeenShard:
 
     # --- bloom -------------------------------------------------------------------
 
-    def bloom_add(self, hashes: np.ndarray) -> None:
+    def add(self, hashes: np.ndarray) -> None:
         h1, h2 = self._h12(hashes)
         for i in range(self.k):
             pos = (h1 + np.uint64(i) * h2) % np.uint64(self.m)
@@ -99,34 +86,23 @@ class SeenShard:
             out &= ((word >> (pos & np.uint64(63))) & np.uint64(1)).astype(bool)
         return out
 
-    def add(self, hashes: np.ndarray) -> None:
-        if len(hashes) == 0:
-            return
-        self.bloom_add(hashes)
-        self.n_added += len(hashes)
-
     # --- persistence ------------------------------------------------------------------
 
     def save(self, path: str) -> None:
         tmp = path + ".tmp.npz"  # np.savez requires/infers the suffix
         with open(tmp, "wb") as f:
             np.savez_compressed(
-                f, bits=self.bits, meta=np.array([self.m, self.k, self.n_added])
+                f, bits=self.bits, meta=np.array([self.m, self.k])
             )
         os.replace(tmp, path)
 
     @classmethod
     def load(cls, path: str) -> "SeenShard":
         z = np.load(path)
-        meta = [int(x) for x in z["meta"]]
-        # legacy shard files also hold a ``cuckoo`` array (never read here)
-        # and a meta of [m, k, cuckoo buckets, cuckoo slots, overflowed] plus
-        # n_added, which the oldest files lack
-        if len(meta) == 3:
-            n_added = meta[2]
-        else:
-            n_added = meta[5] if len(meta) > 5 else 0
-        return cls(meta[0], meta[1], bits=z["bits"], n_added=n_added)
+        # meta starts [m, k]; a legacy file's meta goes on (with a key count
+        # or cuckoo geometry) and it also holds a ``cuckoo`` array, neither
+        # read here
+        return cls(*(int(x) for x in z["meta"][:2]), bits=z["bits"])
 
 
 def shard_path(bloom_dir: str, bucket: int) -> str:
@@ -179,40 +155,33 @@ def make_seen_check_fn(bucket_paths: dict[int, str], new_bloom_dir: str, cfg):
 SHARD_STATS_SCHEMA = "bucket int, n_total long, m_bits long"
 
 
-def _write_shard_fn(new_bloom_dir: str, shard_for):
-    """applyInPandas fn over url hashes grouped by ``bucket``: add them to
-    ``shard_for(bucket)``, write the shard into this round's sidecar dir and
-    return the bucket's stats row. Runs inside executor tasks — each task
-    touches one shard file."""
+def _write_shard_fn(new_bloom_dir: str, bits_of, cfg):
+    """applyInPandas fn over url hashes grouped by ``bucket``: add them to a
+    fresh shard of ``bits_of(bucket)`` bits, write it into this round's
+    sidecar dir and return the bucket's stats row (``n_total`` the hashes
+    added). Runs inside executor tasks — each task touches one shard
+    file."""
 
     def write(pdf: pd.DataFrame) -> pd.DataFrame:
         bucket = int(pdf["bucket"].iloc[0])
-        shard = shard_for(bucket)
+        shard = SeenShard(bits_of(bucket), cfg.bloom_num_hashes)
         shard.add(pdf["url_hash"].to_numpy(np.int64))
         os.makedirs(new_bloom_dir, exist_ok=True)
         shard.save(shard_path(new_bloom_dir, bucket))
         return pd.DataFrame(
-            {"bucket": [bucket], "n_total": [shard.n_added], "m_bits": [shard.m]}
+            {"bucket": [bucket], "n_total": [len(pdf)], "m_bits": [shard.m]}
         )
 
     return write
 
 
-def make_seen_update_fn(bucket_paths: dict[int, str], new_bloom_dir: str, cfg):
-    """applyInPandas fn over NEW urls grouped by ``bucket``: load the
-    bucket's committed sidecar (manifest map lookup), add the new hashes,
-    write this round's shard for JUST this bucket. Untouched buckets get no
-    new file this round, and the superseded file is GC'd after the commit.
-    ``init_state`` builds the seed shards with it; a round's new urls reach
-    their shards through the bloom check (``make_seen_check_fn``)."""
-
-    def shard_for(bucket: int) -> SeenShard:
-        prev = bucket_paths.get(bucket)
-        if prev is not None:
-            return SeenShard.load(prev)
-        return SeenShard(cfg.bloom_bits_per_partition, cfg.bloom_num_hashes)
-
-    return _write_shard_fn(new_bloom_dir, shard_for)
+def make_seen_update_fn(new_bloom_dir: str, cfg):
+    """applyInPandas fn over the seed urls grouped by ``bucket``: build each
+    bucket's first shard, of the configured geometry, in the round -1
+    sidecar dir. ``init_state`` builds the seed shards with it; a round's
+    new urls reach their shards through the bloom check
+    (``make_seen_check_fn``)."""
+    return _write_shard_fn(new_bloom_dir, lambda bucket: cfg.bloom_bits_per_partition, cfg)
 
 
 def grown_geometry(n: int, cfg) -> int:
@@ -236,6 +205,4 @@ def make_shard_rebuild_fn(new_bloom_dir: str, geom: dict[int, int], cfg):
     exact rebuild from the authoritative url_seen table at the compaction
     commit — the same atomic point that rewrites the frontier base. The
     superseded small shard is GC'd post-commit like any replaced shard."""
-    return _write_shard_fn(
-        new_bloom_dir, lambda bucket: SeenShard(geom[bucket], cfg.bloom_num_hashes)
-    )
+    return _write_shard_fn(new_bloom_dir, lambda bucket: geom[bucket], cfg)

@@ -13,16 +13,17 @@ the same *semantics* on plain parquet + an atomically-replaced JSON manifest:
   rounds are invisible — resume after a crash re-runs the uncommitted round
   from the last committed state with zero re-fetch of committed rounds;
 * the **frontier is merge-on-read** (the Iceberg MERGE / delete-file
-  analog): a banded base (``frontier/r=<g>/band=<B>`` where band =
-  next_fetch_ts div band_ticks) plus per-round sidecar logs —
-  ``frontier_ins`` (inserted rows, banded) and ``frontier_gains`` (pending
-  OPIC cash). The equality deletes are the popped (url, attempt) keys of
-  the ``crawl_log`` rounds after the base: crawl_log is the one record of
-  a round's pops, so no separate delete log is written. A round writes
-  only its O(batch) delta; the live view is base ∪ ins ∖ crawl_log keys
-  with gains folded at read time. Periodic compaction
-  (``CrawlConfig.compact_every``) rewrites the base and truncates the logs,
-  exactly Iceberg's rewrite_data_files maintenance action;
+  analog): one banded table (``frontier/r=<k>/band=<B>`` where band =
+  next_fetch_ts div band_ticks) holding a base ``r=<g>`` and the rows each
+  later round inserted, ``r=<k>`` for k > g, plus the per-round sidecar
+  log ``frontier_gains`` (pending OPIC cash). The equality deletes are the
+  popped (url, attempt) keys of the ``crawl_log`` rounds after the base:
+  crawl_log is the one record of a round's pops, so no separate delete log
+  is written. A round writes only its O(batch) delta; the live view is the
+  ``frontier`` rounds from g on ∖ crawl_log keys, with gains folded at read
+  time. Periodic compaction (``CrawlConfig.compact_every``) rewrites the
+  base and truncates the logs, exactly Iceberg's rewrite_data_files
+  maintenance action;
 * append-only logs that the round loop reads (``url_seen``, ``docs``,
   ``edges``) compact into **leveled generations** (``<table>/gen=<g>`` dirs
   listed in the manifest's ``log_gens``): a minor compaction folds only the
@@ -44,6 +45,8 @@ the same *semantics* on plain parquet + an atomically-replaced JSON manifest:
   reads pass it to the parquet reader, so building a state view launches
   no footer-inference job, and a dir whose layout lacks a declared
   partition column raises instead of reading that column back as nulls;
+* the manifest is parsed into a frozen ``Snapshot`` once per crawl run;
+  each commit returns the snapshot it wrote, which the next round reads;
 * the bloom sidecar for each bucket is resolved through the
   manifest's ``bloom_map`` (bucket → newest committed round that wrote that
   bucket's shard) — O(1) per bucket, no newest-first filesystem probing;
@@ -56,7 +59,9 @@ the same *semantics* on plain parquet + an atomically-replaced JSON manifest:
   the hosts table (``hosts``, ``hosts_new``, ``hosts_touch``) still existed
   resumes unchanged: ``crawl_log`` holds every pop since round 0, and those
   dirs (and the manifest's ``hosts_base_round`` / ``frontier_del_rows``
-  keys) are never read again — dead bytes.
+  keys) are never read again — dead bytes. A state dir from when a
+  round's frontier inserts had a table of their own (``frontier_ins``)
+  has them moved into ``frontier`` by ``clean_uncommitted``.
 
 On a real cluster this class is swapped for ``spark.table("cat.db.t")`` +
 Iceberg ``MERGE INTO`` / snapshot IDs; the engine only touches this
@@ -66,6 +71,7 @@ interface. All paths must be on a shared filesystem for a multi-node master
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import json
 import os
@@ -77,12 +83,13 @@ from twitter_crawler_spark import schemas
 from twitter_crawler_spark.session import local_df
 
 # Every table a state dir can hold. The RETIRED ones are written by no
-# round any more (crawl_log is the one record of a round's pops, and host
-# state is derived from it), but a state dir from before that change still
-# holds them, so recovery clears their uncommitted rounds like any other
-# table's; perfbench/metrics.py also names a per-table write time after
-# every table listed here (0 for a retired one).
-RETIRED_TABLES = ("hosts", "frontier_del", "hosts_touch", "hosts_new")
+# round any more (crawl_log is the one record of a round's pops, host
+# state is derived from it, and a round's frontier inserts go to
+# ``frontier``), but a state dir from before those changes still holds
+# them, so recovery clears their uncommitted rounds like any other table's;
+# perfbench/metrics.py also names a per-table write time after every table
+# listed here (0 for a retired one).
+RETIRED_TABLES = ("hosts", "frontier_del", "hosts_touch", "hosts_new", "frontier_ins")
 STATE_TABLES = ("frontier", "hosts")
 LOG_TABLES = (
     "url_seen", "edges", "docs", "crawl_log", "round_metrics", "evictions",
@@ -126,51 +133,93 @@ def _check_schema(df: DataFrame, table: str) -> None:
         )
 
 
+@dataclasses.dataclass(frozen=True)
+class Snapshot:
+    """One committed snapshot: everything a round reads from the manifest,
+    parsed once. ``SnapshotStore.snapshot`` parses it from the file and
+    ``SnapshotStore.commit`` returns the one it wrote, so a crawl parses the
+    file once per ``run`` and the rounds hand the snapshot on. Bucket keys
+    are ints; ``bloom_load`` values are ``[n, m]`` pairs (an older state dir
+    stores ``[n, m, ov]`` triples, whose cuckoo-overflow flag ov is cut
+    here). Treat the maps as read-only: copy one before changing it."""
+
+    committed_round: int
+    # the round whose ``frontier/r=<g>`` dir is the frontier's base
+    frontier_base_round: int
+    frontier_count: int
+    # delete keys since the base: the rows the committed rounds after it
+    # popped, summed from the history (every round records ``popped``)
+    del_rows: int
+    # table → committed generation rounds, ascending (``read_log``)
+    log_gens: dict[str, list[int]]
+    # bucket → newest committed round holding that bucket's bloom shard
+    bloom_map: dict[int, int]
+    # bucket → [n, m]: keys inserted and bits (the capacity policy's input)
+    bloom_load: dict[int, list[int]]
+    # the parsed manifest, which the next commit extends
+    manifest: dict = dataclasses.field(repr=False, compare=False)
+
+    @classmethod
+    def parse(cls, m: dict) -> "Snapshot":
+        st = m["state"]
+        base = int(st["frontier_base_round"])
+        return cls(
+            committed_round=int(m["committed_round"]),
+            frontier_base_round=base,
+            frontier_count=int(st["frontier_count"]),
+            del_rows=sum(h["popped"] for h in m["history"] if h["round"] > base),
+            log_gens={t: [int(g) for g in gs] for t, gs in st.get("log_gens", {}).items()},
+            bloom_map={int(b): int(r) for b, r in st.get("bloom_map", {}).items()},
+            bloom_load={
+                int(b): [int(v[0]), int(v[1])] for b, v in st.get("bloom_load", {}).items()
+            },
+            manifest=m,
+        )
+
+
 class SnapshotStore:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    # --- manifest ---------------------------------------------------------
+    # --- manifest (the only reader and writer of _manifest.json) ----------
 
     @property
     def _manifest_path(self) -> str:
         return os.path.join(self.root, "_manifest.json")
 
-    def manifest(self) -> dict | None:
+    def snapshot(self) -> Snapshot | None:
+        """The committed snapshot, parsed from the manifest; None before
+        the first commit."""
         try:
             with open(self._manifest_path) as f:
-                return json.load(f)
+                return Snapshot.parse(json.load(f))
         except FileNotFoundError:
             return None
 
-    def committed_round(self) -> int | None:
-        m = self.manifest()
-        return None if m is None else m["committed_round"]
-
-    def state(self, key: str, default=None):
-        """Structured snapshot state carried by the manifest (base rounds,
-        counts, the bloom bucket map) — updated atomically with the commit."""
-        m = self.manifest() or {}
-        return m.get("state", {}).get(key, default)
-
-    def commit(self, round_: int, info: dict | None = None,
-               state: dict | None = None) -> None:
+    def commit(self, prev: Snapshot | None, round_: int, info: dict,
+               **state) -> Snapshot:
         """Atomic snapshot commit — the round's outputs become visible, and
-        the structured state (``state`` keys replace previous values) with
-        them. Nothing written this round is readable before this replace."""
-        m = self.manifest() or {"history": [], "state": {}}
-        m["committed_round"] = round_
-        m["history"] = m.get("history", []) + [
-            {"round": round_, **(info or {})}
-        ]
-        st = m.get("state", {})
-        st.update(state or {})
-        m["state"] = st
+        the snapshot fields named in ``state`` take their new values with
+        them. Nothing written this round is readable before this replace.
+        ``prev`` is the snapshot the round read (None for round -1); the
+        new one is built from what is written, with no re-read."""
+        m = prev.manifest if prev is not None else {"history": [], "state": {}}
+        m = {
+            **m,
+            "committed_round": round_,
+            "history": m["history"] + [{"round": round_, **info}],
+            # JSON object keys are strings: the bucket maps' int keys too
+            "state": {**m["state"], **{
+                k: {str(b): x for b, x in v.items()} if isinstance(v, dict) else v
+                for k, v in state.items()
+            }},
+        }
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(m, f)
         os.replace(tmp, self._manifest_path)
+        return Snapshot.parse(m)
 
     # --- paths ------------------------------------------------------------
 
@@ -189,20 +238,14 @@ class SnapshotStore:
 
     # --- bloom sidecar resolution (manifest map, O(1) per bucket) ---------
 
-    def bloom_map(self) -> dict[int, int]:
-        """bucket → newest committed round holding that bucket's shard."""
-        return {int(k): int(v) for k, v in self.state("bloom_map", {}).items()}
-
-    def bloom_paths(self) -> dict[int, str]:
-        """bucket → shard file path, resolved from the committed manifest.
-        One dict lookup per bucket inside executor tasks — no O(#rounds)
-        newest-first existence probing, no driver listdir of the history."""
+    def bloom_paths(self, snap: Snapshot) -> dict[int, str]:
+        """bucket → shard file path, resolved from the snapshot's
+        ``bloom_map``. One dict lookup per bucket inside executor tasks — no
+        O(#rounds) newest-first existence probing, no driver listdir of the
+        history."""
         from twitter_crawler_spark.crawl.seen import shard_path
 
-        return {
-            b: shard_path(self.bloom_dir(rd), b)
-            for b, rd in self.bloom_map().items()
-        }
+        return {b: shard_path(self.bloom_dir(rd), b) for b, rd in snap.bloom_map.items()}
 
     def gc_bloom(self, superseded: dict[int, int]) -> int:
         """Delete shard files that a newly COMMITTED round replaced (the old
@@ -327,20 +370,17 @@ class SnapshotStore:
             df = local_df(spark, [], schemas.store_schema(table, True))
         return df.drop("r") if drop_r else df
 
-    def log_gens(self, table: str) -> list[int]:
-        """Committed generation rounds for an append-only log (ascending).
-        Disjoint by construction: gen g covers rounds (prev_gen, g]."""
-        return [int(g) for g in self.state("log_gens", {}).get(table, [])]
-
-    def read_log(self, spark: SparkSession, table: str, upto_round: int) -> DataFrame:
+    def read_log(
+        self, spark: SparkSession, table: str, upto_round: int, gens: list[int],
+    ) -> DataFrame:
         """Current view of an append-only log: the leveled generation dirs
-        (disjoint round ranges, manifest ``log_gens``) plus the rounds after
-        the newest one. Listing and file count stay
+        ``gens`` (the snapshot's ``log_gens`` of the table: ascending and
+        disjoint by construction, gen g covering rounds (prev gen, g]) plus
+        the rounds after the newest one. Listing and file count stay
         O(#generations + rounds-since-compaction), bounded by
         ``max_log_gens`` and ``compact_every``. A log with no data files
         (``evictions`` of a crawl that never evicts) reads as its empty
         tail: a 0-row frame of the declared schema, planned JVM-only."""
-        gens = self.log_gens(table)
         parts = []
         for g in gens:
             gdir = self.gen_dir(table, g)
@@ -351,13 +391,6 @@ class SnapshotStore:
             min_round=(gens[-1] + 1) if gens else None,
         ))
         return functools.reduce(DataFrame.unionByName, parts)
-
-    def read_state(self, spark: SparkSession, table: str, round_: int) -> DataFrame:
-        """A base snapshot (``frontier`` at ``round_``), without the ``r``
-        column."""
-        path = self.round_dir(table, round_)
-        _has_data_files(path, schemas.STORE_TABLES[table][1])
-        return self._read(spark, table, [path], path, False)
 
     # --- GC (post-commit, idempotent) -------------------------------------
 
@@ -388,15 +421,21 @@ class SnapshotStore:
 
     # --- recovery ---------------------------------------------------------
 
-    def clean_uncommitted(self) -> list[str]:
-        """Drop round/generation directories newer than the committed round
-        (crash debris).
+    def clean_uncommitted(self, committed: int) -> list[str]:
+        """Drop round/generation directories newer than ``committed``, the
+        committed round (crash debris), and return them.
 
         This is what makes resume idempotent: an interrupted round leaves
         orphan ``r=k`` (or compaction ``gen=k``) dirs that the manifest never
         referenced.
+
+        A state dir written while an ordinary round kept its frontier
+        inserts in a table of their own has committed ``frontier_ins/r=<k>``
+        dirs: each moves to ``frontier/r=<k>``, where a round's inserts now
+        live beside the bases. The names never collide, since such a round
+        wrote no ``frontier`` dir and a merge round (or round -1) no
+        ``frontier_ins`` one.
         """
-        committed = self.committed_round()
         removed = []
         for table in STATE_TABLES + LOG_TABLES + ("bloom",):
             troot = os.path.join(self.root, table)
@@ -405,8 +444,12 @@ class SnapshotStore:
             for d in os.listdir(troot):
                 if not (d.startswith("r=") or d.startswith("gen=")):
                     continue
-                k = int(d.split("=", 1)[1])
-                if committed is None or k > committed:
+                if int(d.split("=", 1)[1]) > committed:
                     shutil.rmtree(os.path.join(troot, d))
                     removed.append(f"{table}/{d}")
+        ins = os.path.join(self.root, "frontier_ins")
+        if os.path.isdir(ins):
+            for d in os.listdir(ins):
+                os.rename(os.path.join(ins, d), os.path.join(self.root, "frontier", d))
+            os.rmdir(ins)
         return removed

@@ -132,7 +132,8 @@ class FrontierOracle:
 
     def run(self, max_rounds: int | None = None) -> OracleResult:
         cfg = self.cfg
-        max_rounds = max_rounds or cfg.max_rounds
+        if max_rounds is None:
+            max_rounds = cfg.max_rounds
         res = OracleResult()
         # keyed by (url, attempt): unique in the progressive schedule (one
         # row per url) AND under F6 fan-out (insert-time copies carry

@@ -191,7 +191,6 @@ PAGES_LAYOUT = _with_partition(PAGES, "bucket")
 # columns, in the order the engine writes them.
 STORE_TABLES: dict[str, tuple[StructType, tuple[str, ...]]] = {
     "frontier": (_with_partition(FRONTIER, "band"), ("band",)),
-    "frontier_ins": (_with_partition(FRONTIER, "band"), ("band",)),
     "frontier_gains": (FRONTIER_GAINS, ()),
     "url_seen": (_with_partition(URL_SEEN, "bucket"), ("bucket",)),
     "docs": (_with_partition(DOCS, "bucket"), ("bucket",)),

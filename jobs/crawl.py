@@ -30,7 +30,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                         "redirects/robots/politeness parquet")
     p.add_argument("--state", required=True,
                    help="snapshot-store dir (created if absent; reuse to resume)")
-    p.add_argument("--max-rounds", type=int, default=50)
+    p.add_argument("--max-rounds", type=int, default=None,
+                   help="stop before this round (default: CrawlConfig.max_rounds)")
     p.add_argument("--lang", default="ru",
                    help="lang filter ('' disables, mirroring setLang)")
     p.add_argument("--crawl-once", action="store_true")
@@ -64,14 +65,13 @@ def main(argv: list[str]) -> int:
     spark = get_spark(app_name="tcs-crawl", local=False,
                       shuffle_partitions=args.shuffle_partitions)
     cfg = CrawlConfig(
-        max_rounds=args.max_rounds,
         lang_filter=args.lang or None,
         crawl_once=args.crawl_once,
         fanout_revisits=args.fanout_revisits,
         evict_unproductive=not args.no_evict,
     )
     eng = CrawlEngine(spark, args.fixture, args.state, cfg)
-    summary = eng.run()
+    summary = eng.run(args.max_rounds)
     fetched = (
         eng.round_metrics()
         .where("partition_id = -1")

@@ -65,7 +65,7 @@ def run(spark, fx: str, state: str, autogrow: bool) -> dict:
                 else None,
             }
         )
-    load = eng.store.snapshot().bloom_load
+    load = eng.store.snapshot().bloom
     totals = {
         k: sum(int(m[k]) for m in rows)
         for k in ("fetched", "new_urls", "dupes", "robots_blocked")
@@ -76,10 +76,10 @@ def run(spark, fx: str, state: str, autogrow: bool) -> dict:
         "totals": totals,
         "per_round": per_round,
         "final_geometry": {
-            b: {"n": v[0], "m_bits": v[1]}
-            for b, v in sorted(load.items())
+            b: {"n": n, "m_bits": m}
+            for b, (_rd, n, m) in sorted(load.items())
         },
-        "buckets_grown": sum(1 for v in load.values() if v[1] > base_bits),
+        "buckets_grown": sum(1 for _rd, _n, m in load.values() if m > base_bits),
     }
 
 

@@ -62,14 +62,14 @@ def test_autogrow_preserves_goldens_and_fires(spark, tiny_fixture, tmp_path_fact
                         CrawlConfig(**TINY))
     grown.run()
     assert _goldens(fixed) == _goldens(grown)
-    load = grown.store.snapshot().bloom_load
+    load = grown.store.snapshot().bloom
     base_bits = TINY["bloom_bits_per_partition"]
-    assert any(int(v[1]) > base_bits for v in load.values()), (
+    assert any(m > base_bits for _rd, _n, m in load.values()), (
         "tiny shards never saturated — the policy path was not exercised"
     )
     # fixed geometry never grows
-    fload = fixed.store.snapshot().bloom_load
-    assert all(int(v[1]) == base_bits for v in fload.values())
+    fload = fixed.store.snapshot().bloom
+    assert all(m == base_bits for _rd, _n, m in fload.values())
 
 
 def test_resume_across_rebuild_boundary(spark, tiny_fixture, tmp_path_factory):
@@ -84,5 +84,5 @@ def test_resume_across_rebuild_boundary(spark, tiny_fixture, tmp_path_factory):
     resumed.run()  # picks up from the committed snapshot
 
     assert _goldens(single) == _goldens(resumed)
-    # the resumed run sees the same final occupancy map as the single run
-    assert single.store.snapshot().bloom_load == resumed.store.snapshot().bloom_load
+    # the resumed run sees the same final bloom records as the single run
+    assert single.store.snapshot().bloom == resumed.store.snapshot().bloom

@@ -11,7 +11,7 @@ import pytest
 from tests.conftest import TEST_CFG
 from twitter_crawler_spark.config import CrawlConfig
 from twitter_crawler_spark.crawl.engine import CrawlEngine
-from twitter_crawler_spark.crawl.state import RETIRED_TABLES
+from twitter_crawler_spark.crawl.state import COMPACTED_LOGS, RETIRED_TABLES
 from twitter_crawler_spark.oracle.frontier_oracle import FrontierOracle
 
 VARIANTS = {
@@ -82,7 +82,7 @@ def _assert_bounded_listing(eng: CrawlEngine, cfg: CrawlConfig) -> None:
     rs = round_dirs("frontier_gains")
     assert len(rs) <= since_base and all(k > base for k in rs), rs
     # leveled logs: <= G generation dirs + the tail rounds since the newest
-    for tbl in ("url_seen", "docs", "edges"):
+    for tbl in COMPACTED_LOGS:
         g = snap.log_gens.get(tbl, [])
         troot = os.path.join(st.root, tbl)
         gen_dirs = [d for d in os.listdir(troot) if d.startswith("gen=")] \
@@ -92,8 +92,8 @@ def _assert_bounded_listing(eng: CrawlEngine, cfg: CrawlConfig) -> None:
         rs = round_dirs(tbl)
         newest = g[-1] if g else base
         assert all(k > newest for k in rs) and len(rs) <= since_base, (tbl, rs)
-    # bloom sidecar: O(#buckets) files, every one referenced by the manifest
-    # map (superseded shards are GC'd per commit)
+    # bloom sidecar: O(#buckets) files, every one referenced by the
+    # snapshot's bloom records (superseded shards are GC'd per commit)
     on_disk = set()
     for root, _dirs, files in os.walk(st.bloom_root):
         on_disk.update(os.path.join(root, f) for f in files)

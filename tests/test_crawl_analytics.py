@@ -204,7 +204,7 @@ def test_edges_scan_prunes_on_src_bucket(engine):
 
 def test_frontier_del_rows_tracks_pops(engine):
     """The size-gated broadcast of the frontier's delete keys counts them
-    from the manifest history's per-round ``popped`` values: with no
+    in the snapshot's ``del_rows``, which each round grows by its pops: with no
     compaction in this run (compact_every > max_rounds) the count must
     equal total pops, i.e. every crawl_log row."""
     m = engine.round_metrics().where("partition_id = -1").toPandas()

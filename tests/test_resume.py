@@ -21,6 +21,7 @@ import pytest
 
 from tests.conftest import TEST_CFG
 from twitter_crawler_spark.crawl.engine import CrawlEngine
+from twitter_crawler_spark.crawl.state import COMPACTED_LOGS, Snapshot
 
 ROUNDS = 4
 
@@ -174,7 +175,7 @@ def _docs_rows(spark, n: int):
 # round 3 (max_log_gens=1), ordinary rounds 0, 2 and 4
 MERGE_CFG = dataclasses.replace(TEST_CFG, compact_every=2, max_log_gens=1)
 MERGE_ROUNDS = 5
-COMPACTED = ("url_seen", "docs", "edges")
+SNAPSHOT_KEYS = {f.name for f in dataclasses.fields(Snapshot)}
 
 
 @pytest.fixture(scope="module")
@@ -197,25 +198,25 @@ def test_uncommitted_merge_round_resumes(spark, fixture_dir, tmp_path_factory,
     eng = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
     commit = eng.store.commit
 
-    def commit_unless_merge(prev, round_, info, **state):
-        if round_ == 1:
+    def commit_unless_merge(snap):
+        if snap.committed_round == 1:
             raise RuntimeError("crash before the merge round's commit")
-        return commit(prev, round_, info, **state)
+        return commit(snap)
 
     eng.store.commit = commit_unless_merge
     with pytest.raises(RuntimeError, match="merge round"):
         eng.run(max_rounds=2)
     snap = eng.store.snapshot()
     assert snap.committed_round == 0
-    for tbl in COMPACTED:
+    for tbl in COMPACTED_LOGS:
         dirs = os.listdir(os.path.join(state, tbl))
         assert "gen=1" in dirs and "r=1" not in dirs, (tbl, sorted(dirs))
         assert tbl not in snap.log_gens
 
     resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
     removed = resumed.store.clean_uncommitted(snap.committed_round)
-    assert {f"{tbl}/gen=1" for tbl in COMPACTED} <= set(removed)
-    for tbl in COMPACTED:
+    assert {f"{tbl}/gen=1" for tbl in COMPACTED_LOGS} <= set(removed)
+    for tbl in COMPACTED_LOGS:
         assert "gen=1" not in os.listdir(os.path.join(state, tbl))
     resumed.run(max_rounds=MERGE_ROUNDS)
 
@@ -226,7 +227,7 @@ def test_uncommitted_merge_round_resumes(spark, fixture_dir, tmp_path_factory,
         want = sorted(tuple(r) for r in getattr(one, view)().collect())
         assert got == want, view
     # the major merge at round 3 left one generation per compacted log
-    for tbl in COMPACTED:
+    for tbl in COMPACTED_LOGS:
         assert resumed.store.snapshot().log_gens[tbl] == one.store.snapshot().log_gens[tbl] == [3]
 
 
@@ -282,7 +283,7 @@ def _assert_equals_oneshot(resumed, one):
         got = sorted(tuple(r) for r in getattr(resumed, view)().collect())
         want = sorted(tuple(r) for r in getattr(one, view)().collect())
         assert got == want, view
-    assert resumed.store.snapshot().bloom_load == one.store.snapshot().bloom_load
+    assert resumed.store.snapshot().bloom == one.store.snapshot().bloom
 
 
 @pytest.mark.parametrize("crash_round", [2, 3], ids=["ordinary", "merge"])
@@ -333,7 +334,7 @@ def test_crash_after_bloom_check_resumes(spark, fixture_dir, tmp_path,
     the write pool starts. If the pool then fails, in an ordinary round or
     in a merge round, those shards are uncommitted debris: the resume
     removes them, checks against the committed shards again and equals the
-    one-shot crawl, ``bloom_load`` included."""
+    one-shot crawl, the bloom records included."""
     state = str(tmp_path / "crashed")
     CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=crash_round)
 
@@ -356,7 +357,6 @@ def test_crash_after_bloom_check_resumes(spark, fixture_dir, tmp_path,
     resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
     resumed.run(max_rounds=MERGE_ROUNDS)
     _assert_equals_oneshot(resumed, merge_oneshot)
-    assert resumed.store.snapshot().bloom_map == merge_oneshot.store.snapshot().bloom_map
 
 
 def test_state_reads_launch_no_jobs(spark, merge_oneshot):
@@ -378,7 +378,7 @@ def test_state_reads_launch_no_jobs(spark, merge_oneshot):
         return max(tracker.getJobIdsForGroup(None), default=-1)
 
     j0 = last_job()
-    for tbl in ("url_seen", "docs", "edges", "crawl_log", "round_metrics"):
+    for tbl in (*COMPACTED_LOGS, "crawl_log", "round_metrics"):
         st.read_log(spark, tbl, prev, snap.log_gens.get(tbl, []))
     for tbl in ("frontier", "frontier_gains", "crawl_log"):
         st.read_rounds(spark, tbl, prev, drop_r=False)
@@ -490,10 +490,7 @@ def test_pre_crawl_log_layout_resumes(spark, fixture_dir, tmp_path,
     for d, pdf in legacy.items():
         os.makedirs(os.path.join(state, d))
         pdf.to_parquet(os.path.join(state, d, "part-0.parquet"), index=False)
-    m = eng.store.snapshot().manifest
-    m["state"].update(hosts_base_round=1, frontier_del_rows=0)
-    with open(eng.store._manifest_path, "w") as f:
-        json.dump(m, f)
+    _write_legacy_manifest(eng, hosts_base_round=1, frontier_del_rows=0)
 
     eng.run(max_rounds=MERGE_ROUNDS)
     assert _trace(eng) == _trace(merge_oneshot)
@@ -507,17 +504,21 @@ def test_pre_crawl_log_layout_resumes(spark, fixture_dir, tmp_path,
 def test_cuckoo_era_state_resumes(spark, fixture_dir, tmp_path, merge_oneshot):
     """A state dir written while the URL-seen test still had its cuckoo
     tier resumes unchanged: its shard files carry a ``cuckoo`` array and a
-    6-element meta, and its manifest's ``bloom_load`` holds [n, m, ov]
-    triples, one of them with ov (the cuckoo overflow flag) set. The resume
-    reads both, ignores ov, and equals the one-shot crawl."""
+    6-element meta, and its manifest has the older nested format (a round
+    history, the bloom record in two maps) whose ``bloom_load`` holds an
+    [n, m, ov] triple with ov (the cuckoo overflow flag) set. The resume
+    reads both, ignores ov, equals the one-shot crawl, bloom occupancy
+    included, and commits the flat format."""
     import numpy as np
 
     state = str(tmp_path / "cuckoo_era")
-    CrawlEngine(spark, fixture_dir, state, MERGE_CFG).run(max_rounds=3)
-    st = CrawlEngine(spark, fixture_dir, state, MERGE_CFG).store
+    eng = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
+    eng.run(max_rounds=3)
+    st = eng.store
     paths = st.bloom_paths(st.snapshot())
     assert paths, "the crawl wrote bloom shards"
-    ov_bucket = min(paths)
+    assert st.snapshot().del_rows > 0, "the legacy history's pops are summed"
+    ov_bucket = _write_legacy_manifest(eng)
     for b, p in paths.items():
         with np.load(p) as z:
             m, k = (int(x) for x in z["meta"])
@@ -527,16 +528,101 @@ def test_cuckoo_era_state_resumes(spark, fixture_dir, tmp_path, merge_oneshot):
             p, bits=bits, cuckoo=np.zeros((1 << 12, 4), np.uint16),
             meta=np.array([m, k, 1 << 12, 4, int(b == ov_bucket), 1 << 10]),
         )
-    man = st.snapshot().manifest
-    man["state"]["bloom_load"] = {
-        b: [n, m, int(b) == ov_bucket]
-        for b, (n, m) in man["state"]["bloom_load"].items()
-    }
-    with open(st._manifest_path, "w") as f:
-        json.dump(man, f)
 
     resumed = CrawlEngine(spark, fixture_dir, state, MERGE_CFG)
     resumed.run(max_rounds=MERGE_ROUNDS)
-    # the bloom_load comparison shows the occupancy map rewritten as
-    # [n, m] pairs
+    # the bloom comparison shows the triple's ov cut
     _assert_equals_oneshot(resumed, merge_oneshot)
+    with open(st._manifest_path) as f:
+        assert set(json.load(f)) == SNAPSHOT_KEYS, "the resume wrote the flat format"
+
+
+def _write_legacy_manifest(eng, **state) -> int:
+    """Rewrite ``eng``'s committed manifest in the older nested format: the
+    fields (and the extra keys ``state``) under ``state``, a per-round
+    ``history`` rebuilt from round_metrics, and the bloom record split into
+    ``bloom_map`` and ``bloom_load``, whose entry for the smallest bucket
+    is an [n, m, ov] triple with the cuckoo-overflow flag ov set. The
+    rewritten file parses to the same snapshot. Returns that bucket."""
+    snap = eng.store.snapshot()
+    with open(os.path.join(eng.fx, "seeds.txt")) as f:
+        seeds = sum(1 for line in f if line.strip())
+    history = [{"round": -1, "seeds": seeds}] + [
+        {"round": m.round, "popped": m.fetched, "new_urls": m.new_urls,
+         "wall_ms": m.wall_ms,
+         **{k: json.loads(m.lineage)[k] for k in ("frontier", "compacted")}}
+        for m in eng.round_metrics().where("partition_id = -1").orderBy("round").collect()
+    ]
+    ov_bucket = min(snap.bloom)
+    manifest = {
+        "committed_round": snap.committed_round,
+        "history": history,
+        "state": {
+            "frontier_base_round": snap.frontier_base_round,
+            "frontier_count": snap.frontier_count,
+            "log_gens": snap.log_gens,
+            "bloom_map": {str(b): rd for b, (rd, _n, _m) in snap.bloom.items()},
+            "bloom_load": {
+                str(b): [n, m, *([True] if b == ov_bucket else [])]
+                for b, (_rd, n, m) in snap.bloom.items()
+            },
+            **state,
+        },
+    }
+    with open(eng.store._manifest_path, "w") as f:
+        json.dump(manifest, f)
+    assert eng.store.snapshot() == snap
+    return ov_bucket
+
+
+def test_legacy_bloom_maps_must_agree():
+    """The older manifest's two bloom maps are read only together: a
+    bucket in one and not the other raises."""
+    m = {
+        "committed_round": 0, "history": [],
+        "state": {"frontier_base_round": -1, "frontier_count": 1,
+                  "bloom_map": {"0": -1, "1": 0}, "bloom_load": {"0": [1, 64]}},
+    }
+    with pytest.raises(ValueError, match="differ in buckets"):
+        Snapshot.parse(m)
+
+
+def test_manifest_is_the_snapshot(spark, fixture_dir, tmp_path):
+    """Every commit writes the snapshot and nothing else: the file's keys
+    are the ``Snapshot`` fields (no ``history``, ``state``, ``bloom_map``
+    or ``bloom_load``) and it parses back to the snapshot the commit
+    returned. ``del_rows`` is 0 at init and after each merge round, and
+    the crawl_log rows since the base after an ordinary round. The round's
+    lineage in round_metrics carries the rest of the per-round record: the
+    frontier size after the round (the live view's count) and whether the
+    round merged."""
+    eng = CrawlEngine(spark, fixture_dir, str(tmp_path / "s"), MERGE_CFG)
+    commit, snaps = eng.store.commit, []
+
+    def commit_and_read(snap):
+        out = commit(snap)
+        with open(eng.store._manifest_path) as f:
+            m = json.load(f)
+        assert set(m) == SNAPSHOT_KEYS, sorted(m)
+        assert Snapshot.parse(m) == out == snap
+        snaps.append(out)
+        return out
+
+    eng.store.commit = commit_and_read
+    for r in range(MERGE_ROUNDS):
+        eng.run(max_rounds=r + 1)
+        (lin,) = [json.loads(m.lineage) for m in eng.round_metrics()
+                  .where(f"partition_id = -1 and round = {r}").collect()]
+        assert lin["frontier"] == eng.frontier_live().count() == snaps[-1].frontier_count
+        assert lin["compacted"] == (snaps[-1].frontier_base_round == r)
+
+    assert [s.committed_round for s in snaps] == list(range(-1, MERGE_ROUNDS))
+    merged = [s.frontier_base_round == s.committed_round for s in snaps]
+    assert merged == [True, False, True, False, True, False]
+    pops = {m["round"]: m["count"] for m in eng.crawl_log().groupBy("round").count().collect()}
+    for s, merge in zip(snaps, merged):
+        if merge:
+            assert s.del_rows == 0, s
+        else:
+            since = range(s.frontier_base_round + 1, s.committed_round + 1)
+            assert s.del_rows == sum(pops[k] for k in since) > 0, s

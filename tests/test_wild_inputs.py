@@ -46,7 +46,6 @@ def test_seed_whitespace_matches_oracle(spark, fixture_dir, tmp_path):
     assert not any(oracle.allowed(u) for u in oracle.seeds[-2:])
     eng = CrawlEngine(spark, fx, str(tmp_path / "s"), TEST_CFG)
     snap = eng.init_state()
-    assert snap.manifest["history"][0]["seeds"] == len(oracle.seeds)
     frontier = {r.url for r in eng.frontier_live().select("url").collect()}
     want = {u for u in oracle.seeds if oracle.allowed(u)}
     assert frontier == want and len(frontier) == snap.frontier_count
@@ -64,8 +63,8 @@ def _hinted(df) -> bool:
 
 def test_del_rows_gate_boundaries(spark, fixture_dir, tmp_path):
     """The delete keys (crawl_log rows since the frontier base) broadcast
-    into the live-frontier anti-join only while their count, summed from
-    the manifest history, is at most ``broadcast_del_rows_max``: 0 keys
+    into the live-frontier anti-join only while their count, the
+    snapshot's ``del_rows``, is at most ``broadcast_del_rows_max``: 0 keys
     means no anti-join at all, a count at the cap is hinted, one over it is
     not."""
     eng = CrawlEngine(spark, fixture_dir, str(tmp_path / "s"), TEST_CFG)

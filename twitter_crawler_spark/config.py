@@ -107,10 +107,12 @@ class CrawlConfig:
     # listing costs to O(K), amortized rewrite cost to 1/K per round
     compact_every: int = 8
     # delete-key broadcast gate: the popped (url, attempt) keys since the
-    # frontier base (crawl_log rounds; their count is the manifest's popped
-    # sum) broadcast into the live-frontier anti-join only while they number
-    # at most this bound (~2M rows x ~50 B/key ≈ 100 MB, the practical
-    # ceiling); beyond it the join is unhinted and AQE decides
+    # frontier base (crawl_log rounds; their count is the snapshot's
+    # del_rows) broadcast into the live-frontier anti-join only while they
+    # number at most this bound (2x10^6 keys x ~50 B/key ≈ 100 MB, about
+    # the practical ceiling; the design point, ~10^5 pops per round x K=8
+    # rounds = 8x10^5 keys ≈ 40 MB, stays under it); beyond it the join is
+    # unhinted and AQE decides
     broadcast_del_rows_max: int = 2_000_000
     # leveled compaction for the append-only logs (url_seen/docs/edges): a
     # MINOR compaction folds only the K-round tail into a NEW generation dir

@@ -33,7 +33,7 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
              by bucket on the candidates' own shuffle, and it is also the
              round's insert: it adds the allowed bloom negatives to the
              shard it loaded and writes bloom/r=<r>/bucket=N.npz; the
-             manifest's bloom_load n grows by the new urls per bucket.
+             snapshot's bloom n grows by the new urls per bucket.
              The round's counters are observed on the checkpoints' own
              jobs, the per-partition ones (round_metrics) are one
              aggregation over popped_res ∪ new in the write pool, and a
@@ -55,9 +55,9 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
              the round's one concurrent write pool: a merge round has a
              single write phase, like any other round
   commit   = parquet round dirs + versioned bloom sidecars + atomic
-             manifest replace (Iceberg snapshot analog); the commit
-             returns the snapshot it wrote, which the next round reads:
-             ``run`` parses the manifest once                             C1/C4
+             manifest replace (Iceberg snapshot analog): the round builds
+             the next snapshot, the commit writes it as the manifest and
+             the next round reads it: ``run`` parses the manifest once   C1/C4
 
 crawl_log is the one record of what a round popped: the frontier's delete
 log and the host crawl-delay gate are both read from it, so no other table
@@ -84,6 +84,7 @@ evictions.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import time
@@ -105,7 +106,7 @@ from twitter_crawler_spark.crawl.seen import (
     make_seen_update_fn,
     make_shard_rebuild_fn,
 )
-from twitter_crawler_spark.crawl.state import Snapshot, SnapshotStore
+from twitter_crawler_spark.crawl.state import COMPACTED_LOGS, Snapshot, SnapshotStore
 from twitter_crawler_spark.functions.hashing import murmur3_64_udf
 from twitter_crawler_spark.functions.html import decode_html, extract_links
 from twitter_crawler_spark.functions.urls import canonicalize_udf
@@ -425,20 +426,22 @@ class CrawlEngine:
 
         Join-side choices: the DELETE keys are O(batch x compact_every) by
         construction (each popped (url, attempt) appears once), and their
-        count is the manifest's per-round ``popped`` sum since the base
-        (``snap.del_rows``) — so the broadcast decision is a SIZE-GATED hint,
-        not a blind one (VERDICT r4 #2): up to
+        count is the snapshot's ``del_rows`` (each round adds its pops, a
+        merge round resets it) — so the broadcast decision is a SIZE-GATED
+        hint, not a blind one (VERDICT r4 #2): up to
         ``CrawlConfig.broadcast_del_rows_max`` the keys broadcast (hinted
         — skipping the due-slice shuffle AQE's demote-to-broadcast path
         would still materialize map-side, measured ~1 s/round at the
         bench fixture); above it the join is left unhinted and the worst
         case is a shuffle keyed on (url, attempt) of the BAND-PRUNED due
-        slice, never the 10^10-row frontier base. At the design point
-        (~10^5 rows x K=8 rounds x ~100 B/row ≈ 100 MB ≈ near the
-        practical broadcast ceiling on 10^3 executors) the gate trips and
-        AQE owns the choice. The GAINS list is O(distinct outlink targets
-        x compact_every) — tens of millions of rows at the design point,
-        far too big to broadcast — deliberately unhinted always."""
+        slice, never the 10^10-row frontier base. At ~50 B per key the
+        default cap (2x10^6 keys) is ~100 MB, about the practical
+        broadcast ceiling. The design point (~10^5 pops per round x K=8
+        rounds = 8x10^5 keys ≈ 40 MB) stays under it, so its keys
+        broadcast; the gate trips only past 2.5x that (a larger batch or
+        K). The GAINS list is O(distinct outlink targets x compact_every)
+        — tens of millions of rows at the design point, far too big to
+        broadcast — deliberately unhinted always."""
         st, s = self.store, self.spark
         prev, g = snap.committed_round, snap.frontier_base_round
         rows = st.read_rounds(s, "frontier", prev, min_round=g, drop_r=False)
@@ -492,15 +495,13 @@ class CrawlEngine:
     def init_state(self) -> Snapshot:
         """Round -1 snapshot: banded frontier base from seeds
         (robots-filtered), url_seen = scheduled seeds, fresh bloom shards +
-        manifest bucket map. Returns the committed snapshot."""
+        the snapshot's bucket map. Returns the committed snapshot."""
         cfg, s = self.cfg, self.spark
         # executor-parallel seed ingest (S1): text lines → stripped non-blank
         # urls; at 10^7 seeds this is a distributed scan, never a driver list
-        raw = s.read.text(self.seeds_path).select(
+        seeds = s.read.text(self.seeds_path).select(
             F.regexp_replace("value", _STRIP, "").alias("url")
-        ).where(F.col("url") != "")
-        self._n_seed_lines = raw.count()
-        seeds = raw.distinct()
+        ).where(F.col("url") != "").distinct()
         allowed = self._with_robots(seeds, "url").where("allowed").select("url")
         fr = (
             allowed.withColumn("url_hash", murmur3_64_udf("url"))
@@ -530,17 +531,14 @@ class CrawlEngine:
         self.store.write_round(seen, "url_seen", -1)
         upd = make_seen_update_fn(self.store.bloom_dir(-1), cfg)
         shard_rows = seen.groupBy("bucket").applyInPandas(upd, SHARD_STATS_SCHEMA).collect()
-        snap = self.store.commit(
-            None, -1, {"seeds": self._n_seed_lines},
-            frontier_base_round=-1,
-            frontier_count=n0,
-            log_gens={},
-            bloom_map={int(row["bucket"]): -1 for row in shard_rows},
-            bloom_load={
-                int(row["bucket"]): [int(row["n_total"]), int(row["m_bits"])]
+        snap = self.store.commit(Snapshot(
+            committed_round=-1, frontier_base_round=-1, frontier_count=n0,
+            del_rows=0, log_gens={},
+            bloom={
+                int(row["bucket"]): (-1, int(row["n_total"]), int(row["m_bits"]))
                 for row in shard_rows
             },
-        )
+        ))
         fr.unpersist()
         return snap
 
@@ -761,7 +759,7 @@ class CrawlEngine:
     def _seen_tier(
         self, outlinks: DataFrame, seen_all: DataFrame,
         bucket_paths: dict[int, str], new_bloom_dir: str,
-    ) -> tuple[DataFrame, DataFrame, dict, list[int]]:
+    ) -> tuple[DataFrame, DataFrame, dict, set[int]]:
         """Candidates → bloom → exact anti-join: the bloom-flagged
         candidates and the round's new urls (both checkpointed), their
         counters and the buckets whose shard the bloom check wrote. The flag
@@ -787,7 +785,7 @@ class CrawlEngine:
             k: int(v) for k, v in {**fl, **nu}.items()
             if k not in ("exact_buckets", "shard_buckets")
         }
-        return flagged, new_urls, counts, sorted(fl["shard_buckets"])
+        return flagged, new_urls, counts, set(fl["shard_buckets"])
 
     # ------------------------------------------------------------------ a round
 
@@ -1008,8 +1006,8 @@ class CrawlEngine:
             # minor merge's tail with no rows is an empty frame, which the
             # union drops.
             views = {"url_seen": seen_all, "docs": docs_all}
-            for tbl, delta in (("url_seen", seen_new), ("docs", docs_new),
-                               ("edges", edges_new)):
+            deltas = {"url_seen": seen_new, "docs": docs_new, "edges": edges_new}
+            for tbl in COMPACTED_LOGS:
                 gens = log_gens.get(tbl, [])
                 major = len(gens) + 1 > cfg.max_log_gens
                 if major:
@@ -1018,7 +1016,7 @@ class CrawlEngine:
                     prior = st.read_rounds(
                         s, tbl, prev, min_round=(gens[-1] + 1) if gens else None,
                     )
-                merges[tbl] = (major, prior.unionByName(delta))
+                merges[tbl] = (major, prior.unionByName(deltas[tbl]))
         else:
             # the O(batch) delta — the whole per-round write
             writes = [
@@ -1078,19 +1076,19 @@ class CrawlEngine:
                 f.result()
             gen_paths = {tbl: f.result() for tbl, f in gen_futs.items()}
             stats = {int(row["partition_id"]): row for row in fut_stats.result()}
-        # grow the manifest's occupancy map (bucket → [n, m]) by the round's
-        # new urls per bucket (partition_id is the seen bucket) — driver
-        # arithmetic only; the capacity policy below never loads a shard on
-        # the driver. A bucket's first shard has the configured geometry.
-        bloom_load = dict(snap.bloom_load)
+        # grow each bucket's bloom record (round, n, m) by the round's new
+        # urls in it (partition_id is the seen bucket) — driver arithmetic
+        # only; the capacity policy below never loads a shard on the driver.
+        # The bloom check wrote a round-r shard for every bucket with an
+        # allowed bloom negative (each one a new url; in a bucket with no
+        # shard yet every new url is one), and a bucket's first shard has
+        # the configured geometry.
+        bloom = dict(snap.bloom)
         for b, row in stats.items():
             if row["new_urls"] > 0:
-                n0, m = bloom_load.get(b, [0, cfg.bloom_bits_per_partition])
-                bloom_load[b] = [n0 + int(row["new_urls"]), m]
+                rd, n, m = bloom.get(b, (r, 0, cfg.bloom_bits_per_partition))
+                bloom[b] = (r if b in shard_buckets else rd, n + int(row["new_urls"]), m)
         frontier_n = snap.frontier_count - n_popped + n_ins
-        # buckets whose shard this round wrote: the bloom check's, then the
-        # capacity policy's rebuilds
-        bloom_touch = set(shard_buckets)
 
         major_done: list[str] = []
         if compact:
@@ -1112,11 +1110,11 @@ class CrawlEngine:
             # geometry doubles each rebuild, so a bucket is rebuilt O(log n)
             # times over the whole crawl. It runs after the write pool
             # because it needs the post-update occupancy. The saturation
-            # check is pure driver arithmetic over the manifest's occupancy
-            # map — no shard I/O unless a rebuild actually fires.
+            # check is pure driver arithmetic over the bloom records — no
+            # shard I/O unless a rebuild actually fires.
             sat_geom = {
                 b: grown_geometry(n, cfg)
-                for b, (n, m) in bloom_load.items()
+                for b, (_rd, n, m) in bloom.items()
                 if n > cfg.bloom_max_load * m
             }
             if sat_geom:
@@ -1129,16 +1127,11 @@ class CrawlEngine:
                     .collect()
                 )
                 for row in rebuilt:
-                    bloom_touch.add(int(row["bucket"]))
-                    bloom_load[int(row["bucket"])] = [
-                        int(row["n_total"]), int(row["m_bits"])
-                    ]
-
-        # bloom manifest map: buckets whose shard this round replaced
-        old_map = snap.bloom_map
-        superseded = {b: old_map[b] for b in bloom_touch if b in old_map}
+                    bloom[int(row["bucket"])] = (r, int(row["n_total"]), int(row["m_bits"]))
 
         # ---- per-partition lineage + metrics --------------------------------------
+        # round_metrics is the one per-round record: the lineage also
+        # carries the frontier size after the round and whether it merged
         wall_ms = int((time.time() - t0) * 1000)
         lineage = json.dumps(
             {
@@ -1146,6 +1139,8 @@ class CrawlEngine:
                 "inputs": [st.round_dir("frontier", base_round), self.pages_path],
                 "frontier_logs_since": base_round,
                 "bloom_buckets": len(bucket_paths),
+                "frontier": frontier_n,
+                "compacted": compact,
             }
         )
         # the counters were collected in the write pool — pure driver-side
@@ -1178,28 +1173,25 @@ class CrawlEngine:
         st.write_round(metrics_df, "round_metrics", r)
 
         # ---- atomic snapshot commit ---------------------------------------------------
-        committed = st.commit(
-            snap, r,
-            {
-                "popped": n_popped,
-                "new_urls": n_new,
-                "frontier": frontier_n,
-                "wall_ms": wall_ms,
-                "compacted": compact,
-            },
+        committed = st.commit(dataclasses.replace(
+            snap,
+            committed_round=r,
             frontier_base_round=r if compact else base_round,
             frontier_count=frontier_n,
+            del_rows=0 if compact else snap.del_rows + n_popped,
             log_gens=log_gens,
-            bloom_map={**old_map, **{b: r for b in sorted(bloom_touch)}},
-            bloom_load=bloom_load,
-        )
+            bloom=bloom,
+        ))
         # ---- post-commit GC (idempotent: only removes data the committed
-        # manifest can no longer reference) -------------------------------------
+        # manifest can no longer reference): the shards this round replaced
+        superseded = {
+            b: rd for b, (rd, _n, _m) in snap.bloom.items() if bloom[b][0] == r
+        }
         if superseded:
             st.gc_bloom(superseded)
         if compact:
             st.gc_rounds_below("frontier", r)
-            for tbl in ("frontier_gains", "url_seen", "docs", "edges"):
+            for tbl in ("frontier_gains", *COMPACTED_LOGS):
                 st.gc_rounds_below(tbl, r + 1)
             # generation dirs are GC'd only after a MAJOR merge supersedes
             # them; minor compactions leave prior generations live

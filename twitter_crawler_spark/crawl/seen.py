@@ -26,8 +26,8 @@ bloom-negative candidates (a bloom-positive new url sets no new bit) and
 writes the bucket's new shard, so no second pass over the new urls loads
 the shards again. Sidecars are versioned per bucket: round k writes
 ``bloom/r=k/bucket=N.npz`` ONLY for buckets whose bits k changed, and a
-reader resolves each bucket through the committed manifest's
-``bloom_map`` (bucket → newest round, one dict lookup — O(1) per bucket
+reader resolves each bucket through the committed snapshot's
+``bloom`` record (bucket → newest round, one dict lookup — O(1) per bucket
 regardless of crawl length, no copy-forward of untouched shards and no
 newest-first filesystem probing). Superseded shard files are GC'd after each
 commit, so the sidecar tree stays O(#buckets) files. Resume always reads
@@ -35,10 +35,10 @@ filters consistent with the committed snapshot (SURVEY.md §7 hard part 3):
 the map lives in the atomically-replaced manifest, and uncommitted round
 dirs are removed by ``clean_uncommitted`` before any read.
 
-Shard occupancy (keys inserted per bucket, the capacity policy's input) is
-the manifest's ``bloom_load``: the driver grows a bucket's n by the round's
-new-url count in that bucket. It is the only authority; a shard file holds
-only its bits and geometry.
+Shard occupancy (keys inserted per bucket and bits, the capacity policy's
+input) is the rest of that record, ``(round, n, m)``: the driver grows a
+bucket's n by the round's new-url count in that bucket. It is the only
+authority; a shard file holds only its bits and geometry.
 """
 
 from __future__ import annotations
@@ -150,8 +150,8 @@ def make_seen_check_fn(bucket_paths: dict[int, str], new_bloom_dir: str, cfg):
 
 
 # applyInPandas output schema shared by the update and rebuild fns (and the
-# engine call sites): per-bucket stats the driver folds into the manifest's
-# bloom_map (shard version) and bloom_load (capacity-policy occupancy) maps
+# engine call sites): per-bucket stats the driver folds into the snapshot's
+# bloom records (shard round, keys inserted, bits)
 SHARD_STATS_SCHEMA = "bucket int, n_total long, m_bits long"
 
 

@@ -83,12 +83,6 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-
-
 def local_df(spark: SparkSession, rows, schema):
     """DataFrame from driver-local rows, planned without a Python RDD.
 

@@ -14,10 +14,11 @@ the 100 TB design depends on:
   partitioned;
 * the corpus dedup/hash tier contains NO Python plan node of any kind
   (``ArrowEval``/``MapInPandas`` additionally banned — pure JVM HOFs);
-* the crawl fetch join broadcasts the popped batch over the bucket-pruned
-  pages scan, neither the pop dataflow nor the crawl_log() view that
-  derives the pop order has an unpartitioned window, and the exact
-  dedup tier's ``url_seen`` scan partition-prunes to candidate buckets;
+* the crawl fetch join broadcasts the popped batch over the pages scan,
+  with the language filter pushed to it; neither the pop dataflow nor the
+  crawl_log() view that derives the pop order has an unpartitioned window;
+  the exact dedup tier anti-joins the whole ``url_seen`` view, and neither
+  scan carries a bucket IN-list (a round's batch fills every bucket);
 * the extract → candidates dataflow crosses into Python once before the
   bloom check: exactly one ``MapInPandas`` and no ``ArrowEvalPython`` in
   the plan a round runs (a cached relation's plan, which runs once per
@@ -49,6 +50,8 @@ UNPARTITIONED_WINDOW = r"windowspecdefinition\([^,)]+ (ASC|DESC)"
 UNIVERSAL_BANS = ["BatchEvalPython", "CartesianProduct", UNPARTITIONED_WINDOW]
 # a parquet scan of the frontier table (its detail block's file index)
 _FRONTIER_SCAN = r"Location: [^\n]*/frontier/r="
+# a bucket IN-list filter, which only the capacity rebuild's scan carries
+_BUCKET_IN_LIST = r"bucket#\d+ IN \("
 
 # per-query REQUIRED physical properties
 WANTS: dict[str, list[str]] = {
@@ -135,8 +138,9 @@ def main() -> None:
             bans = bans + _JVM_ONLY
         sections.append((name, plan, WANTS.get(name, []), bans, waived))
 
-    # 2. the crawl fetch join (bucket pruning + broadcast of the batch): the
-    # REAL engine method over three of the fixture's pages buckets
+    # 2. the crawl fetch join (broadcast of the batch over the pages scan,
+    # the default config's language filter pushed to it): the REAL engine
+    # method
     from twitter_crawler_spark.crawl.engine import CrawlEngine
     from twitter_crawler_spark.fixtures.webgen import generate_web
 
@@ -152,8 +156,9 @@ def main() -> None:
 
     frontier = eng._frontier_live(snap)
     sections.append((
-        "crawl_fetch_join", _fmt(eng._fetch(frontier.limit(5), [0, 1, 2], 3600)),
-        ["BroadcastHashJoin", "PartitionFilters"], [], {},
+        "crawl_fetch_join", _fmt(eng._fetch(frontier.limit(5), 3600)),
+        ["BroadcastHashJoin", r"PushedFilters: \[[^\]]*EqualTo\(lang,ru\)"],
+        [_BUCKET_IN_LIST], {},
     ))
 
     # 3. the crawl order: every window MUST be partitioned, both in the pop
@@ -163,25 +168,19 @@ def main() -> None:
     # its plan is taken after section 6.
     pop_plan = _fmt(eng._pop_survivors(frontier, eng._recent_fetches(1), 3600, 1))
 
-    # 4. the exact dedup tier: the url_seen scan must partition-prune to the
-    # candidate slice's buckets (bucket is a partition column of the layout,
-    # so the IN-list must surface as a PartitionFilters entry, not a
-    # post-scan Filter). Audits the REAL engine method over the real layout.
+    # 4. the exact dedup tier: an anti-join against the whole url_seen view
+    # (the bloom-positive slice falls into every bucket each round, so a
+    # bucket IN-list would prune nothing). Audits the REAL engine method
+    # over the real layout.
     need_exact = (
         frontier.select(F.col("url").alias("dst"))
         .withColumn("parent_depth", F.lit(0))
         .limit(7)
     )
     seen_all = eng._read_log("url_seen", snap)
-    exact_plan = _fmt(eng._exact_new(need_exact, seen_all, [0, 3]))
+    exact_plan = _fmt(eng._exact_new(need_exact, seen_all))
     sections.append(
-        (
-            "crawl_seen_exact_tier",
-            exact_plan,
-            [r"PartitionFilters: \[[^\]]*bucket", "LeftAnti"],
-            [],
-            {},
-        )
+        ("crawl_seen_exact_tier", exact_plan, ["LeftAnti"], [_BUCKET_IN_LIST], {})
     )
 
     # 4b. extract → candidates → bloom check: the links cross into Python

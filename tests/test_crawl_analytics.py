@@ -13,7 +13,8 @@ templates — a third representation):
 * exact dedup (sha256 group) over docs.text via the real sql_dedup_exact;
 * MinHash-LSH candidate pairs over docs.text via the real sql_lsh_pairs,
   against an independent numpy/python MinHash implementation that mirrors
-  the banding geometry AND the hot-bucket star-edge guard.
+  the banding geometry AND the hot-bucket star-edge guard;
+* S9 edge dump over the crawl's edges, and its TSV round trip.
 
 Also pins the round-5 edges layout: a per-source scan of the edges log
 partition-prunes on ``src_bucket`` (the receipt for VERDICT r4 #7).
@@ -37,6 +38,7 @@ from twitter_crawler_spark.ops.corpus import (
     sql_dedup_exact,
     sql_lsh_pairs,
 )
+from twitter_crawler_spark.ops.sinks import edge_dump, write_tsv
 
 MIN_OUTDEG = 3
 
@@ -190,6 +192,32 @@ def test_minhash_lsh_over_crawl_docs(spark, docs_pd):
     want = _py_minhash_pairs(pdf)
     assert got == want
     assert len(want) > 0  # the generated web has near-dup revisions
+
+
+def test_edge_dump_over_crawl_edges(spark, engine, edges_pd, tmp_path):
+    """S9: the edge dump is every crawled link as ``(src_url, dst_url,
+    ts)``, ts the round's logical clock, in ``(src, dst, ts)`` order, and
+    the TSV sink writes it so that it reads back unchanged."""
+    got = edge_dump(engine.edges())
+    want = (
+        edges_pd.assign(ts=edges_pd["round"] * TEST_CFG.round_tick)
+        [["src_url", "dst_url", "ts"]]
+        .sort_values(["src_url", "dst_url", "ts"])
+        .reset_index(drop=True)
+    )
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(got.toPandas(), want, check_dtype=False)
+
+    path = str(tmp_path / "edges_tsv")
+    write_tsv(got, path)
+    # one TSV file; its rows are compared as a set, since coalescing a
+    # sorted frame promises no row order
+    back = spark.read.schema(got.schema).option("sep", "\t").csv(path)
+    assert len(back.inputFiles()) == 1
+    pd.testing.assert_frame_equal(
+        back.toPandas().sort_values(["src_url", "dst_url", "ts"]).reset_index(drop=True),
+        want, check_dtype=False,
+    )
 
 
 def test_edges_scan_prunes_on_src_bucket(engine):

@@ -110,20 +110,35 @@ def test_require_shared_state_gate():
         require_shared_state("yarn", "/tmp/s", False)
 
 
-def test_bucket_geometry_mismatch_fails_fast(spark, tmp_path):
-    """A fixture written with one pages_buckets modulus driven by a config
-    with another would make the bucket-pruned fetch join silently skip due
-    pages (wrong results, no error) — the engine must refuse to construct."""
+def test_pages_modulus_need_not_match_config(spark, tmp_path):
+    """The fetch join reads every pages bucket, so a fixture written with
+    one pages_buckets modulus crawls under a config with another exactly
+    as the oracle does."""
+    import os
+
     from twitter_crawler_spark.config import CrawlConfig
     from twitter_crawler_spark.crawl.engine import CrawlEngine
     from twitter_crawler_spark.fixtures.webgen import generate_web
+    from twitter_crawler_spark.oracle.frontier_oracle import FrontierOracle
 
     fx = str(tmp_path / "fx")
     generate_web(fx, seed=13, n_pages=60, n_hosts=4, n_seeds=3,
                  span_rounds=2, pages_buckets=16)
-    with pytest.raises(ValueError, match="pages_buckets"):
-        CrawlEngine(spark, fx, str(tmp_path / "state"),
-                    CrawlConfig(max_rounds=1, pages_buckets=8))
+    assert len(os.listdir(os.path.join(fx, "pages"))) > 8
+    cfg = CrawlConfig(max_rounds=2, pages_buckets=8)
+    want = FrontierOracle(fx, cfg).run()
+    assert {c["round"] for c in want.crawl_order} == {0, 1}
+    eng = CrawlEngine(spark, fx, str(tmp_path / "state"), cfg)
+    eng.run()
+    got = [
+        (r.round, r.seq, r.url, r.host, r.depth, r.score, r.attempt)
+        for r in eng.crawl_log().orderBy("round", "seq").collect()
+    ]
+    assert got == [
+        (c["round"], c["seq"], c["url"], c["host"], c["depth"], c["score"], c["attempt"])
+        for c in want.crawl_order
+    ]
+    assert {r.url for r in eng.url_seen().collect()} == want.url_seen
 
 
 def test_info_transfer_matches_pandas(spark):

@@ -7,6 +7,8 @@ implementation paths must agree byte-for-byte.
 
 from __future__ import annotations
 
+import warnings
+
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -47,6 +49,20 @@ def test_enumerated_cases_vectorized():
     got = list(canonicalize_series(hrefs, bases))
     want = [c[1] for c in CASES]
     assert got == want
+
+
+def test_missing_href_raises_no_future_warning():
+    """A missing href (a link whose href attribute is absent) canonicalizes
+    to None, and building the relative-url masks from the object-dtype
+    hrefs asks pandas for no deprecated silent downcast."""
+    hrefs = pd.Series(["//cdn.com/lib.js", None, "/root.html", "rel.html", None])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        got = list(canonicalize_series(hrefs, pd.Series([BASE] * len(hrefs))))
+    assert got == [
+        "http://cdn.com/lib.js", None, "http://www.example.com/root.html",
+        "http://www.example.com/a/rel.html", None,
+    ]
 
 
 _href = st.one_of(

@@ -4,12 +4,12 @@ frontier's delete keys at its boundaries."""
 
 from __future__ import annotations
 
-import dataclasses
 import shutil
 
 import pandas as pd
 
 from tests.conftest import TEST_CFG
+from twitter_crawler_spark.crawl import engine
 from twitter_crawler_spark.crawl.engine import CrawlEngine
 from twitter_crawler_spark.oracle.frontier_oracle import FrontierOracle
 
@@ -61,10 +61,10 @@ def _hinted(df) -> bool:
     return "strategy=broadcast" in df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_del_rows_gate_boundaries(spark, fixture_dir, tmp_path):
+def test_del_rows_gate_boundaries(spark, fixture_dir, tmp_path, monkeypatch):
     """The delete keys (crawl_log rows since the frontier base) broadcast
     into the live-frontier anti-join only while their count, the
-    snapshot's ``del_rows``, is at most ``broadcast_del_rows_max``: 0 keys
+    snapshot's ``del_rows``, is at most ``BROADCAST_DEL_ROWS_MAX``: 0 keys
     means no anti-join at all, a count at the cap is hinted, one over it is
     not."""
     eng = CrawlEngine(spark, fixture_dir, str(tmp_path / "s"), TEST_CFG)
@@ -77,5 +77,5 @@ def test_del_rows_gate_boundaries(spark, fixture_dir, tmp_path):
     n = snap.del_rows
     assert n == eng.crawl_log().count() > 0
     for cap, hinted in ((n, True), (n - 1, False), (0, False)):
-        eng.cfg = dataclasses.replace(TEST_CFG, broadcast_del_rows_max=cap)
+        monkeypatch.setattr(engine, "BROADCAST_DEL_ROWS_MAX", cap)
         assert _hinted(eng._frontier_live(snap)) is hinted, cap

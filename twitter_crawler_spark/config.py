@@ -89,9 +89,10 @@ class CrawlConfig:
     cuckoo_target_load: float = 0.5
     # salting factor for the hot-host politeness window (SURVEY.md §2.4 skew note)
     host_salt: int = 8
-    # pages-table bucketing: pages parquet is laid out in
-    # bucket = murmur3_64(url) % pages_buckets subdirectories so the fetch join
-    # prunes partitions (Iceberg bucket-partition analog)
+    # Inert: the fetch join reads every pages bucket, so a fixture written
+    # with any pages modulus crawls the same, and nothing reads this field.
+    # It is kept only because the benchmark's configs (perfbench/crawl.py)
+    # still set it.
     pages_buckets: int = 16
     # frontier merge-on-read layout (Iceberg delete-file analog): the banded
     # base is partitioned by band = next_fetch_ts div (round_tick *
@@ -106,14 +107,6 @@ class CrawlConfig:
     # rounds (0 disables compaction); bounds sidecar-resolution and
     # listing costs to O(K), amortized rewrite cost to 1/K per round
     compact_every: int = 8
-    # delete-key broadcast gate: the popped (url, attempt) keys since the
-    # frontier base (crawl_log rounds; their count is the snapshot's
-    # del_rows) broadcast into the live-frontier anti-join only while they
-    # number at most this bound (2x10^6 keys x ~50 B/key ≈ 100 MB, about
-    # the practical ceiling; the design point, ~10^5 pops per round x K=8
-    # rounds = 8x10^5 keys ≈ 40 MB, stays under it); beyond it the join is
-    # unhinted and AQE decides
-    broadcast_del_rows_max: int = 2_000_000
     # leveled compaction for the append-only logs (url_seen/docs/edges): a
     # MINOR compaction folds only the K-round tail into a NEW generation dir
     # (O(batch·K) bytes — it never rewrites the ever-growing history); once a

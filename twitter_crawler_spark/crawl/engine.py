@@ -9,7 +9,7 @@ Round r (logical clock ``t_r = r * round_tick``), all stages DataFrame-native:
              the crawl_log rounds r-D+1 … r-1, D the largest delay)      F2/F7
   popped   = salted two-stage per-host budget window; the crawl order
              (depth, -score, url) is derived on read by crawl_log()     F5/F8
-  fetched  = pages ⋈ broadcast(popped) with bucket partition pruning and
+  fetched  = pages ⋈ broadcast(popped) over every pages bucket, with
              the cursor predicate pushed to the parquet scan, grouped per
              popped url into ONE checkpoint (popped_res): result count,
              cursor, latest snapshot and every visible snapshot. The
@@ -140,6 +140,15 @@ def _host_col(url):
 # a round's per-partition counters, in round_metrics column order
 _COUNTERS = ("fetched", "hits", "results", "new_urls")
 
+# delete-key broadcast gate: the popped (url, attempt) keys since the
+# frontier base (crawl_log rounds; their count is the snapshot's del_rows)
+# broadcast into the live-frontier anti-join only while they number at most
+# this bound (2x10^6 keys x ~50 B/key ≈ 100 MB, about the practical
+# ceiling; the design point, ~10^5 pops per round x K=8 rounds = 8x10^5
+# keys ≈ 40 MB, stays under it); beyond it the join is unhinted and AQE
+# decides
+BROADCAST_DEL_ROWS_MAX = 2_000_000
+
 
 def _checkpoint(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
     """``df.localCheckpoint()`` and the named aggregates ``metrics`` over
@@ -153,9 +162,10 @@ def _checkpoint(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
 def _in_buckets(df: DataFrame, buckets, n_buckets: int) -> DataFrame:
     """``df`` pruned to the ``buckets`` of its ``bucket`` partition column,
     so the filter reaches the scan as a PartitionFilter and only those
-    buckets' files are read. A list that covers all ``n_buckets`` adds no
-    filter (an IN-list over 10^4-10^5 buckets bloats the plan for no
-    pruning); an empty one plans an empty relation that reads no file."""
+    buckets' files are read: the capacity rebuild's scan of the saturated
+    buckets. A list that covers all ``n_buckets`` adds no filter (an
+    IN-list over 10^4-10^5 buckets bloats the plan for no pruning); an
+    empty one plans an empty relation that reads no file."""
     buckets = sorted(buckets)
     if len(buckets) >= n_buckets:
         return df
@@ -255,24 +265,6 @@ class CrawlEngine:
     def _load_static(self) -> None:
         s, fx = self.spark, self.fx
         self.pages_path = os.path.join(fx, "pages")
-        # Fail fast on a fixture/config bucket-geometry mismatch: the fetch
-        # join prunes pages partitions with bucket = murmur3_64(url) %
-        # cfg.pages_buckets, so if the fixture layout was written with a
-        # different modulus the engine would silently skip due pages (wrong
-        # results, not an error). The layout's modulus is recorded in
-        # meta.json at generation time — disagreement is a configuration
-        # bug, never a recoverable state.
-        meta_path = os.path.join(fx, "meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                fixture_buckets = json.load(f).get("pages_buckets")
-            if fixture_buckets is not None and fixture_buckets != self.cfg.pages_buckets:
-                raise ValueError(
-                    f"fixture at {fx} was generated with pages_buckets="
-                    f"{fixture_buckets} but CrawlConfig.pages_buckets="
-                    f"{self.cfg.pages_buckets}; the bucket-pruned fetch join "
-                    f"would silently miss pages — pass a matching config"
-                )
         # a redirect target's hash is computed once per engine, when the
         # cache fills: the round takes it with the target (coalesce), so no
         # link is hashed after the redirect join
@@ -333,18 +325,17 @@ class CrawlEngine:
         return self.spark.read.schema(want).parquet(path)
 
     def _pages(self) -> DataFrame:
-        """pages with partition column ``bucket`` (from the dir layout) and the
-        logical-seconds timestamp. Column pruning: ``text`` is NEVER read by
-        the crawl (the engine extracts its own; reading the golden column
-        would both cheat and double I/O). The declared schema spares the
-        footer-inference job."""
+        """pages with the logical-seconds timestamp. The ``bucket`` dirs of
+        the layout are read whole, whatever modulus wrote them. Column
+        pruning: ``text`` is NEVER read by the crawl (the engine extracts
+        its own; reading the golden column would both cheat and double
+        I/O). The declared schema spares the footer-inference job."""
         return (
             self.spark.read.schema(schemas.PAGES_LAYOUT)
             .option("basePath", self.pages_path)
             .parquet(self.pages_path)
             .select(
                 "url",
-                "bucket",
                 (F.col("warc_ts").cast("long") - F.lit(EPOCH_BASE)).alias("ts_logical"),
                 "lang",
                 "html",
@@ -429,7 +420,7 @@ class CrawlEngine:
         count is the snapshot's ``del_rows`` (each round adds its pops, a
         merge round resets it) — so the broadcast decision is a SIZE-GATED
         hint, not a blind one (VERDICT r4 #2): up to
-        ``CrawlConfig.broadcast_del_rows_max`` the keys broadcast (hinted
+        ``BROADCAST_DEL_ROWS_MAX`` the keys broadcast (hinted
         — skipping the due-slice shuffle AQE's demote-to-broadcast path
         would still materialize map-side, measured ~1 s/round at the
         bench fixture); above it the join is left unhinted and the worst
@@ -449,7 +440,7 @@ class CrawlEngine:
             rows = rows.where(F.col("band") <= due_band)
         rows = rows.withColumnRenamed("r", "_gthrough").drop("band")
         dels = st.read_rounds(s, "crawl_log", prev, min_round=g + 1).select("url", "attempt")
-        if snap.del_rows <= self.cfg.broadcast_del_rows_max:
+        if snap.del_rows <= BROADCAST_DEL_ROWS_MAX:
             dels = F.broadcast(dels)
         gains = st.read_rounds(s, "frontier_gains", prev, min_round=g + 1, drop_r=False)
         glist = gains.groupBy("url").agg(
@@ -519,10 +510,10 @@ class CrawlEngine:
             *[F.col(f.name).cast(f.dataType) for f in schemas.FRONTIER.fields]
         ).cache()
         n0 = fr.count()
-        # url_seen is laid out bucketed by url_hash % seen_partitions (like
-        # pages) so the exact dedup tier partition-prunes to candidate buckets
-        # instead of scanning the whole seen table every round — the SPJ
-        # layout SURVEY.md §4 custom item 1 specifies
+        # url_seen is laid out bucketed by url_hash % seen_partitions (the
+        # SPJ layout SURVEY.md §4 custom item 1 specifies): a bucket's bloom
+        # shard is built from its rows, and the capacity rebuild reads only
+        # the saturated buckets
         seen = fr.select(
             "url_hash", "url", F.lit(-1).alias("first_round"),
             self._seen_bucket(),
@@ -647,36 +638,32 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------ exact tier
 
-    def _exact_new(
-        self, need_exact: DataFrame, seen_all: DataFrame, exact_buckets: list[int]
-    ) -> DataFrame:
+    def _exact_new(self, need_exact: DataFrame, seen_all: DataFrame) -> DataFrame:
         """Final dedup arbiter (D1-D4 exact tier): anti-join the bloom-
-        positive candidate slice against ``url_seen``, PRUNED to the buckets
-        that slice actually occupies. ``url_seen`` is written partitioned by
-        ``bucket = url_hash % seen_partitions``, so the filter reaches the
-        scan as a PartitionFilter (plan-audited) and the scan reads only the
-        files of those buckets, never the full seen table. The slice is not
-        a small residue: it is every true duplicate plus the bloom's false
-        positives — on the 8k bench crawl it equals the round's duplicates,
-        about half of the allowed candidates.
+        positive candidate slice against the whole ``url_seen`` view. The
+        slice is not a small residue: it is every true duplicate plus the
+        bloom's false positives — on the 8k bench crawl it equals the
+        round's duplicates, about half of the allowed candidates — and it
+        falls into every seen bucket each round (BASELINE.md, "A round
+        reads its views whole"), so a bucket list would prune nothing.
         ``seen_all`` is the round's url_seen view as of the committed round;
         a merge round folds the same view into its generation."""
-        seen_scan = _in_buckets(seen_all, exact_buckets, self.cfg.seen_partitions)
         return need_exact.join(
-            seen_scan.select(F.col("url").alias("dst")), "dst", "left_anti"
+            seen_all.select(F.col("url").alias("dst")), "dst", "left_anti"
         )
 
     # ------------------------------------------------ fetch → extract → seen
     # (factored so scripts/plan_audit.py audits the real round dataflow)
 
-    def _fetch(self, popped: DataFrame, buckets, t_r: int) -> DataFrame:
+    def _fetch(self, popped: DataFrame, t_r: int) -> DataFrame:
         """The batch's snapshots ``(url, ts_logical, html)`` newer than each
-        url's cursor and no later than ``t_r``: the pages scan pruned to the
-        batch's pages ``buckets``, joined with the broadcast batch."""
+        url's cursor and no later than ``t_r``: the pages scan joined with
+        the broadcast batch. The scan reads every pages bucket, since a
+        round's batch falls into all of them."""
         cfg = self.cfg
         lang_ok = F.lit(True) if cfg.lang_filter is None else (F.col("lang") == cfg.lang_filter)
         return (
-            _in_buckets(self._pages(), buckets, cfg.pages_buckets)
+            self._pages()
             .join(F.broadcast(popped.select("url", "last_cursor")), "url")
             .where(
                 (F.col("ts_logical") <= t_r)
@@ -764,28 +751,26 @@ class CrawlEngine:
         candidates and the round's new urls (both checkpointed), their
         counters and the buckets whose shard the bloom check wrote. The flag
         checkpoint's job also counts the candidates, the robots-blocked and
-        the bloom negatives, and lists the buckets of the bloom-positive
-        slice, which prune the exact tier's seen scan, and of the allowed
-        bloom negatives, whose shards it wrote."""
+        the bloom negatives, and lists the buckets of the allowed bloom
+        negatives, whose shards it wrote."""
         allowed, maybe = F.col("allowed"), F.col("maybe_seen")
         flagged, fl = _checkpoint(
             self._flag(self._candidates(outlinks), bucket_paths, new_bloom_dir),
             candidates=F.count(F.lit(1)),
             blocked=F.count_if(~allowed),
             bloom_neg=F.count_if(allowed & ~maybe),
-            exact_buckets=F.collect_set(F.when(allowed & maybe, F.col("bucket"))),
             shard_buckets=F.collect_set(F.when(allowed & ~maybe, F.col("bucket"))),
         )
         ok = flagged.where(allowed).drop("allowed")
         fast_new = ok.where(~maybe).drop("maybe_seen")
         need_exact = ok.where(maybe).drop("maybe_seen")
-        exact_new = self._exact_new(need_exact, seen_all, sorted(fl["exact_buckets"]))
-        new_urls, nu = _checkpoint(fast_new.unionByName(exact_new), new=F.count(F.lit(1)))
-        counts = {
-            k: int(v) for k, v in {**fl, **nu}.items()
-            if k not in ("exact_buckets", "shard_buckets")
-        }
-        return flagged, new_urls, counts, set(fl["shard_buckets"])
+        new_urls, nu = _checkpoint(
+            fast_new.unionByName(self._exact_new(need_exact, seen_all)),
+            new=F.count(F.lit(1)),
+        )
+        shard_buckets = set(fl.pop("shard_buckets"))
+        counts = {k: int(v) for k, v in {**fl, **nu}.items()}
+        return flagged, new_urls, counts, shard_buckets
 
     # ------------------------------------------------------------------ a round
 
@@ -811,23 +796,16 @@ class CrawlEngine:
         recent = self._recent_fetches(r)
 
         # ---- pop: due filter + crawl-delay + salted per-host budget window ----
-        # The batch is tagged with its pages bucket (_b) and url_seen/docs
-        # bucket (_sb) and checkpointed: it is consumed by five downstream
+        # The batch is checkpointed: it is consumed by five downstream
         # stages (durability comes from the snapshot store, not from this).
-        # The checkpoint's job also gives the batch size and the bucket
-        # lists for fetch-join AND docs-anti-join partition pruning.
+        # The checkpoint's job also gives the batch size.
         popped, pop = _checkpoint(
-            self._pop_survivors(due_live, recent, t_r, r)
-            .withColumn("_b", F.pmod("url_hash", F.lit(cfg.pages_buckets)))
-            .withColumn("_sb", F.pmod("url_hash", F.lit(cfg.seen_partitions))),
-            n=F.count(F.lit(1)),
-            b=F.collect_set("_b"),
-            sb=F.collect_set("_sb"),
+            self._pop_survivors(due_live, recent, t_r, r), n=F.count(F.lit(1))
         )
         n_popped = int(pop["n"])
 
-        # ---- fetch join: bucket partition pruning + broadcast of the batch ----
-        fetched = self._fetch(popped, pop["b"], t_r)
+        # ---- fetch join: broadcast of the batch over the pages scan ----
+        fetched = self._fetch(popped, t_r)
 
         # per popped url its fetch result: count, cursor, latest snapshot html
         # (null for a url that fetched nothing) and every visible snapshot
@@ -879,13 +857,12 @@ class CrawlEngine:
             self._seen_bucket("src_bucket"),
         )
         # docs is laid out bucketed by url_hash % seen_partitions exactly like
-        # url_seen, so this first-fetch anti-join prunes to the buckets the
-        # popped batch occupies instead of shuffling the whole append-only
-        # docs log every round (the largest log at the design point)
+        # url_seen; the first-fetch anti-join reads the whole docs view, as
+        # the popped batch falls into every bucket each round (BASELINE.md,
+        # "A round reads its views whole")
         docs_all = self._read_log("docs", snap)
-        docs_scan = _in_buckets(docs_all, pop["sb"], cfg.seen_partitions)
         first_fetch = popped_res.where(F.col("n_results") > 0).join(
-            docs_scan.select("url"), "url", "left_anti"
+            docs_all.select("url"), "url", "left_anti"
         )
         docs_new = (
             first_fetch.withColumn("text", text_col(F.decode("latest_html", "UTF-8")))

@@ -3,7 +3,7 @@
 Generates, from an explicit integer seed (never wall-clock):
 
 * ``pages/`` — parquet laid out in ``bucket=<murmur3_64(url) % B>/`` subdirs
-  (the Iceberg ``bucket(url)`` partition analog used for fetch-join pruning);
+  (the Iceberg ``bucket(url)`` partition analog; the crawl reads every bucket);
   one row per page *snapshot* ``(url, warc_ts, html, text, lang, bucket)``.
   Multiple snapshots per url appear over logical time — they drive the
   incremental-cursor semantics (the ``sinceId`` analog,

@@ -90,8 +90,8 @@ def canonicalize_series(href: pd.Series, base_url: pd.Series) -> pd.Series:
     is_abs = href.str.contains(_SCHEME_RE, regex=True, na=False)
     non_http = href.str.contains(_NON_HTTP_SCHEME_PAT, regex=True, na=False) & ~is_abs
     empty = href.isna() | (href == "") | non_http
-    is_proto_rel = href.str.startswith("//").fillna(False) & ~is_abs
-    is_root_rel = href.str.startswith("/").fillna(False) & ~is_proto_rel & ~is_abs
+    is_proto_rel = href.str.startswith("//", na=False) & ~is_abs
+    is_root_rel = href.str.startswith("/", na=False) & ~is_proto_rel & ~is_abs
     is_rel = ~(is_abs | is_proto_rel | is_root_rel | empty)
 
     base_scheme = base.str.split("://", n=1).str[0]

@@ -34,10 +34,6 @@ def _xor(a: str, b: str, d: str) -> str:
     return f"({a} ^ {b})" if d == "spark" else f"xor({a}, {b})"
 
 
-def _epoch(col: str, d: str) -> str:
-    return f"unix_timestamp({col})" if d == "spark" else f"cast(epoch({col}) as bigint)"
-
-
 # ---------------------------------------------------------------------------
 # dedup family
 # ---------------------------------------------------------------------------

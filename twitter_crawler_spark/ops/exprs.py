@@ -169,10 +169,6 @@ def minhash_j(hashes_col: str, j: int, d: str) -> str:
     return arr_min(permuted, d)
 
 
-def minhash_sig(hashes_col: str, d: str, k: int = MINHASH_K) -> list[str]:
-    return [minhash_j(hashes_col, j, d) for j in range(k)]
-
-
 def minhash_sig_col(hashes_col: str, d: str, k: int = MINHASH_K) -> str:
     """The whole k-wide MinHash signature as ONE array column.
 

@@ -310,23 +310,3 @@ class FrontierOracle:
             res.rounds_run = r + 1
 
         return res
-
-
-def write_golden(res: OracleResult, out_dir: str) -> None:
-    """Persist golden traces in the FIXTURES.md §5 formats."""
-    import json
-
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "crawl_order.jsonl"), "w") as f:
-        for row in res.crawl_order:
-            f.write(json.dumps(row) + "\n")
-    with open(os.path.join(out_dir, "url_seen.txt"), "w") as f:
-        f.write("\n".join(sorted(res.url_seen)) + "\n")
-    with open(os.path.join(out_dir, "edges.tsv"), "w") as f:
-        for s, d, r in sorted(res.edges):
-            f.write(f"{s}\t{d}\t{r}\n")
-    with open(os.path.join(out_dir, "text_sha.tsv"), "w") as f:
-        for u, h in sorted(res.text_sha().items()):
-            f.write(f"{u}\t{h}\n")
-    with open(os.path.join(out_dir, "evictions.txt"), "w") as f:
-        f.write("\n".join(res.evictions) + ("\n" if res.evictions else ""))
